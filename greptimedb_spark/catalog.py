@@ -86,6 +86,9 @@ class TableMeta:
     # not_null] per column (short legacy entries [name, spark_type] accepted).
     columns: list | None = None
     batch_no: int = 0  # ingest batch counter (strict write ordering)
+    # bumped by every meta or data rewrite: with table_id it tells a reader
+    # whether its binding is current (batch_no orders __seq, kept apart)
+    write_version: int = 0
     # unique per table INSTANCE (reference table id): DROP + CREATE under the
     # same name yields a new id, so flows bound to the old instance see no
     # data from the new one (sqlness flow/flow_rebuild)
@@ -302,11 +305,14 @@ class Catalog:
             .parquet(os.path.join(self._table_path(name), "data"))
         )
 
-    def _update_meta(self, name: str, **kv) -> None:
-        meta = self.meta(name)
+    def _update_meta(self, table: str, **kv) -> None:
+        """Rewrite the meta with ``kv`` applied and bump ``write_version``
+        (no ``kv``: after a data-only rewrite)."""
+        meta = self.meta(table)
         for k, v in kv.items():
             setattr(meta, k, v)
-        with open(os.path.join(self._table_path(name), _META_FILE), "w") as f:
+        meta.write_version += 1
+        with open(os.path.join(self._table_path(table), _META_FILE), "w") as f:
             f.write(meta.to_json())
 
     # -- read path -----------------------------------------------------------
@@ -584,10 +590,7 @@ class Catalog:
         if os.path.exists(self._table_path(new)):
             raise ValueError(f"table {new} already exists")
         shutil.move(self._table_path(old), self._table_path(new))
-        meta = self.meta(new)
-        meta.name = new
-        with open(os.path.join(self._table_path(new), _META_FILE), "w") as f:
-            f.write(meta.to_json())
+        self._update_meta(new, name=new)
 
     def delete(self, name: str, predicate, _from_logical: bool = False) -> int:
         """DELETE FROM t WHERE predicate — copy-on-write rewrite.
@@ -623,16 +626,16 @@ class Catalog:
         shutil.rmtree(data_path)
         if self._has_data(tmp):
             os.rename(tmp, data_path)
+            self._update_meta(name)
             return 0
         shutil.rmtree(tmp, ignore_errors=True)
+        kv = {}
         if not meta.columns:
             # everything deleted and no declared schema on file — record the
             # observed schema so subsequent reads serve an empty frame
             drop = {SEQ_COL, BUCKET_COL}
-            self._update_meta(
-                name,
-                columns=[[c, t] for c, t in df.dtypes if c not in drop],
-            )
+            kv["columns"] = [[c, t] for c, t in df.dtypes if c not in drop]
+        self._update_meta(name, **kv)
         return 0
 
     def read_series(self, name: str, raw: bool = False) -> DataFrame:
@@ -669,6 +672,7 @@ class Catalog:
             import shutil
 
             shutil.rmtree(data_path)
+            self._update_meta(name)
             return
         self.delete(
             name,
@@ -705,6 +709,7 @@ class Catalog:
 
         shutil.rmtree(data_path)
         os.rename(tmp, data_path)
+        self._update_meta(name)
 
     def list_tables(self) -> list[str]:
         return sorted(

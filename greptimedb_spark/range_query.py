@@ -125,6 +125,22 @@ class RangeAgg:
     fill: str | None = None       # None | 'NULL' | 'PREV' | 'LINEAR' | constant literal
 
 
+def _sort_keys(text: str) -> list[tuple[str, bool, bool]]:
+    """``k1 [ASC|DESC] [NULLS FIRST|LAST], ...`` → (expr, asc, nulls_first)
+    per key, with DataFusion's defaults: ASC → NULLS LAST, DESC → NULLS
+    FIRST."""
+    keys = []
+    for part in _split_top_level(text):
+        part = part.strip()
+        asc = not re.search(r"\bDESC\b", part, re.IGNORECASE)
+        nm = re.search(r"\bNULLS\s+(FIRST|LAST)\b", part, re.IGNORECASE)
+        nulls_first = (nm.group(1).upper() == "FIRST") if nm else not asc
+        kexpr = re.sub(r"(?i)\s+(ASC|DESC)\b", "",
+                       re.sub(r"(?i)\s+NULLS\s+(FIRST|LAST)\b", "", part)).strip()
+        keys.append((kexpr, asc, nulls_first))
+    return keys
+
+
 def _ordered_selector_sql(expr_text: str) -> str:
     """``first_value(x ORDER BY k1 [ASC|DESC] [NULLS FIRST|LAST], ...)`` →
     Spark column algebra (reference range special_aggr.sql; DataFusion
@@ -159,16 +175,7 @@ def _ordered_selector_sql(expr_text: str) -> str:
     if not om:
         return expr_text
     target = inner[:om.start()].strip()
-    keys = []
-    for part in _split_top_level(inner[om.end():]):
-        part = part.strip()
-        asc = not re.search(r"\bDESC\b", part, re.IGNORECASE)
-        nm = re.search(r"\bNULLS\s+(FIRST|LAST)\b", part, re.IGNORECASE)
-        nulls_first = (nm.group(1).upper() == "FIRST") if nm else not asc
-        kexpr = re.sub(r"(?i)\s+(ASC|DESC)\b", "",
-                       re.sub(r"(?i)\s+NULLS\s+(FIRST|LAST)\b", "", part)).strip()
-        keys.append((kexpr, asc, nulls_first))
-
+    keys = _sort_keys(inner[om.end():])
     fields = ", ".join(
         [f"{k} AS __k{i}" for i, (k, _, _) in enumerate(keys)]
         + [f"{target} AS __v"])
@@ -450,6 +457,20 @@ def parse_range_sql(sql: str) -> dict:
     )
     if not m_align:
         raise ValueError("not a RANGE query (missing ALIGN)")
+    # trailing ORDER BY / LIMIT [OFFSET] apply to the RANGE output; cut them
+    # off before the BY/FILL clauses are parsed (ORDER BY (x) is not BY (x))
+    limit = offset = None
+    m_limit = re.search(r"\bLIMIT\s+(\d+)(?:\s+OFFSET\s+(\d+))?\s*$", s,
+                        re.IGNORECASE)
+    if m_limit and m_limit.start() > m_align.end():
+        limit = int(m_limit.group(1))
+        offset = int(m_limit.group(2)) if m_limit.group(2) else None
+        s = s[:m_limit.start()].rstrip()
+    order = None
+    m_order = re.search(r"\bORDER\s+BY\b", s[m_align.end():], re.IGNORECASE)
+    if m_order:
+        order = s[m_align.end() + m_order.end():].strip()
+        s = s[:m_align.end() + m_order.start()].rstrip()
     # BY (...) needs balanced-paren extraction (BY (length(host)) is legal)
     by_text = None
     m_by = re.search(r"\bBY\s*\(", s[m_align.end():], re.IGNORECASE)
@@ -521,6 +542,9 @@ def parse_range_sql(sql: str) -> dict:
         "to": (m_align.group("to") or "").strip("'\"") or None,
         "by": by,
         "fill": m_fill.group(1) if m_fill else None,
+        "order": order,
+        "limit": limit,
+        "offset": offset,
     }
 
 
@@ -586,4 +610,23 @@ def range_sql(spark, sql: str, time_index: str = "ts", df: DataFrame | None = No
         match = next((a for e, a in by_specs if norm(e) == raw), None)
         col = F.col(match) if match else F.expr(raw)
         projs.append(col.alias(it["alias"]) if it["alias"] else col)
-    return out.select(*projs)
+    out = out.select(*projs)
+    if parts["order"]:
+        # a key is a BY expression (grouped on, maybe not selected), an
+        # output position, or an expression over the SELECT aliases
+        keys = []
+        for e, asc, nulls_first in _sort_keys(parts["order"]):
+            by_alias = next((a for b, a in by_specs if norm(b) == norm(e)), None)
+            col = (F.col(by_alias) if by_alias
+                   else F.col(out.columns[int(e) - 1]) if e.isdigit()
+                   else F.expr(e))
+            keys.append(getattr(col, ("asc" if asc else "desc") + "_nulls_"
+                                + ("first" if nulls_first else "last"))())
+        # the ordered result streams to one client anyway: one partition
+        # sorts it without orderBy's range-partition sampling job and stage
+        out = out.coalesce(1).sortWithinPartitions(*keys)
+    if parts["offset"]:
+        out = out.offset(parts["offset"])
+    if parts["limit"] is not None:
+        out = out.limit(parts["limit"])
+    return out

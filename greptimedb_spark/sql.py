@@ -24,6 +24,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -355,6 +356,23 @@ def _strip_line_comments(text: str) -> str:
 
 
 _SQ_STRING_RE = re.compile(r"'(?:[^']|'')*'")
+
+
+def _idents(text: str) -> set:
+    """Word tokens of SQL ``text`` outside single-quoted literals: the names
+    a statement may read a table or view by."""
+    return set(re.findall(r"\w+", _SQ_STRING_RE.sub(" ", text)))
+
+
+_BINDINGS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def _session_bindings(spark) -> dict:
+    """Catalog tables and user views bound as temp views in ``spark``:
+    name → (key, DataFrame). Shared by every GreptimeSQL on the session, as
+    its temp views are: a view one instance drops or pins (DROP TABLE, a
+    flow's watermark read) must not look current to another."""
+    return _BINDINGS.setdefault(spark, {})
 
 
 def _rawify_strings(text: str) -> str:
@@ -1123,6 +1141,15 @@ def _ts_unit(t: str) -> str:
         _ts_precision(t), "ms")
 
 
+# epoch integer → TIMESTAMP expression per _ts_unit
+_INT_TO_TS = {
+    "s": "timestamp_seconds({v})",
+    "ms": "timestamp_millis({v})",
+    "us": "timestamp_micros({v})",
+    "ns": "timestamp_micros(CAST({v} / 1000 AS BIGINT))",
+}
+
+
 class GreptimeSQL:
     """Session facade: spark.sql + dialect rewrites + PromQL metric registry.
 
@@ -1263,7 +1290,6 @@ class GreptimeSQL:
             new_meta.flush_batches = []
             new_meta.skip_wal_since = None
             self.catalog.create_table(new_meta, if_not_exists=bool(lm.group(1)))
-            self._refresh_table_view(new_meta.name)
             return self.spark.createDataFrame([], "result string")
         # CREATE parsed by paren-depth (trailing ENGINE=/WITH() clauses make
         # a single greedy regex mis-capture the column list)
@@ -1581,8 +1607,6 @@ class GreptimeSQL:
                     if grew:
                         self.catalog._update_meta(
                             phys, columns=newcols, tags=new_tags)
-                        self.catalog.read(phys).createOrReplaceTempView(phys)
-            self.catalog.read(name).createOrReplaceTempView(name)
             return self.spark.createDataFrame([], "result string")
         m = self._INSERT_RE.match(text.strip().rstrip(";"))
         if m:
@@ -1684,12 +1708,6 @@ class GreptimeSQL:
                                 "No valid default value can be built "
                                 f"automatically, column: {_e[0]}")
                 values_text = re.sub(r"\bDEFAULT\b", "NULL", values_text, flags=re.IGNORECASE)
-            int_to_ts = {
-                "s": "timestamp_seconds({v})",
-                "ms": "timestamp_millis({v})",
-                "us": "timestamp_micros({v})",
-                "ns": "timestamp_micros(CAST({v} / 1000 AS BIGINT))",
-            }
             if re.search(r"(?i)\bnow\s*\(", values_text):
                 # rows mixing now() and epoch-int literals in a timestamp
                 # position can't type-merge in VALUES/UNION — pre-coerce the
@@ -1705,7 +1723,7 @@ class GreptimeSQL:
                     is_int = [re.fullmatch(r"-?\d+L?", v) is not None
                               for v in vals]
                     if any(is_int) and not all(is_int):
-                        tpl = int_to_ts[_ts_unit(
+                        tpl = _INT_TO_TS[_ts_unit(
                             entry[2] if len(entry) > 2 else "timestamp")]
                         for a, ii in zip(args_per, is_int):
                             if ii:
@@ -1715,6 +1733,7 @@ class GreptimeSQL:
                 if changed:
                     values_text = ", ".join(
                         "(" + ", ".join(a) + ")" for a in args_per)
+            self._bind(_idents(values_text))  # scalar subqueries read tables
             try:
                 raw = self.spark.sql(f"SELECT * FROM VALUES {values_text}")
             except Exception:
@@ -1732,13 +1751,13 @@ class GreptimeSQL:
                 v = f"col{i + 1}"
                 if t == "timestamp":
                     if dict(raw.dtypes)[v] in ("bigint", "int", "smallint", "tinyint"):
-                        tpl = int_to_ts[_ts_unit(entry[2] if len(entry) > 2 else "timestamp")]
+                        tpl = _INT_TO_TS[_ts_unit(entry[2] if len(entry) > 2 else "timestamp")]
                         e = tpl.format(v=f"CAST({v} AS BIGINT)")
                     else:
                         # numeric STRINGS are epoch values in the declared
                         # precision too ('3' ≡ 3 — insert/mysql_insert.sql)
                         s0 = f"CAST({v} AS STRING)"
-                        tpl0 = int_to_ts[_ts_unit(
+                        tpl0 = _INT_TO_TS[_ts_unit(
                             entry[2] if len(entry) > 2 else "timestamp")]
                         e = (f"CASE WHEN {s0} RLIKE '^[+-]?[0-9]+$' THEN "
                              f"{tpl0.format(v=f'CAST({s0} AS BIGINT)')} "
@@ -1823,29 +1842,8 @@ class GreptimeSQL:
                     else:
                         exprs.append(f"CAST({v} AS {t}) AS `{c}`")
             df = raw.selectExpr(*exprs)
-            listed = {e[0] for e in cols}
-            if listed != {e[0] for e in full_cols}:
-                # column-list INSERT: unlisted columns take their declared
-                # DEFAULT (or NULL); emit in declared order so every parquet
-                # file shares one schema
-                fill = []
-                for entry in full_cols:
-                    c, t = entry[0], entry[1]
-                    if c in listed:
-                        fill.append(F.col(f"`{c}`"))
-                    else:
-                        d = _default_sql(entry)
-                        if (d and len(entry) > 2
-                                and str(entry[2]).lower().startswith("vector")):
-                            # vector DEFAULT literals pack to binary f32
-                            # (raw literal — CAST AS BINARY would utf8-encode)
-                            fill.append(
-                                F.expr(f"gt_vec_pack({entry[3]})").alias(c))
-                        else:
-                            fill.append(
-                                (F.expr(d).cast(t) if d else F.lit(None).cast(t)).alias(c)
-                            )
-                df = df.select(*fill)
+            if {e[0] for e in cols} != {e[0] for e in full_cols}:
+                df = _with_defaults(df, cols, full_cols)
             # explicit NULL into a NOT NULL column is rejected up front
             # (drop_col_not_null_next.sql). Gated on a literal NULL in the
             # statement text so the probe job doesn't tax the common path.
@@ -1860,8 +1858,6 @@ class GreptimeSQL:
                             "Invalid request to region, reason: column "
                             f"{c} is not null but input has null")
             self.catalog.insert(name, df)
-            self._refresh_table_view(name)
-            self._refresh_views()
             return self.spark.createDataFrame([], "result string")
         m = self._INSERT_SELECT_RE.match(text.strip().rstrip(";"))
         if m:
@@ -1883,12 +1879,6 @@ class GreptimeSQL:
             # positional mapping: select output column i → listed column i;
             # numeric sources into timestamp columns are epochs in the
             # column's declared precision (same rule as VALUES literals)
-            int_to_ts = {
-                "s": "timestamp_seconds({v})",
-                "ms": "timestamp_millis({v})",
-                "us": "timestamp_micros({v})",
-                "ns": "timestamp_micros(CAST({v} / 1000 AS BIGINT))",
-            }
             sel = []
             src_types = dict(src.dtypes)
             for i in range(len(cols)):
@@ -1897,7 +1887,7 @@ class GreptimeSQL:
                 if entry[1] == "timestamp" and src_types[scol] in (
                     "bigint", "int", "smallint", "tinyint", "double", "float",
                 ):
-                    tpl = int_to_ts[_ts_unit(entry[2] if len(entry) > 2 else "timestamp")]
+                    tpl = _INT_TO_TS[_ts_unit(entry[2] if len(entry) > 2 else "timestamp")]
                     sel.append(
                         F.expr(tpl.format(v=f"CAST(`{scol}` AS BIGINT)")).alias(entry[0])
                     )
@@ -1905,21 +1895,7 @@ class GreptimeSQL:
                     safe = scol.replace("`", "``")
                     sel.append(F.col(f"`{safe}`").cast(entry[1]).alias(entry[0]))
             picked = src.select(*sel)
-            listed = {e[0] for e in cols}
-            fill = []
-            for entry in full_cols:
-                c, t = entry[0], entry[1]
-                if c in listed:
-                    fill.append(F.col(c))
-                else:
-                    d = _default_sql(entry)
-                    if (d and len(entry) > 2
-                            and str(entry[2]).lower().startswith("vector")):
-                        fill.append(F.expr(f"gt_vec_pack({entry[3]})").alias(c))
-                    else:
-                        fill.append((F.expr(d).cast(t) if d else F.lit(None).cast(t)).alias(c))
-            self.catalog.insert(name, picked.select(*fill))
-            self._refresh_table_view(name)
+            self.catalog.insert(name, _with_defaults(picked, cols, full_cols))
             return self.spark.createDataFrame([], "result string")
         m = self._DROP_RE.match(text.strip().rstrip(";"))
         if m:
@@ -1946,7 +1922,7 @@ class GreptimeSQL:
                     self.spark.catalog.dropTempView(name)
                 else:
                     self.catalog.drop_table(name)
-                    self.spark.catalog.dropTempView(name)
+                    self._unbind(name)
             return self.spark.createDataFrame([], "result string")
         m = self._DELETE_RE.match(text.strip().rstrip(";"))
         if m:
@@ -1971,7 +1947,6 @@ class GreptimeSQL:
                 }[self._unit_of(name, meta.time_index)].format(c=meta.time_index)
                 pred2 = re.sub(rf"\b{meta.time_index}\b", f"({conv})", pred)
                 self.catalog.delete(name, pred2)
-            self._refresh_table_view(name)
             return self.spark.createDataFrame([], "result string")
         out = self._ddl_extended(text, text_q)
         if out is not None:
@@ -2675,7 +2650,6 @@ class GreptimeSQL:
                     self.catalog.delete(name, cond)
             else:
                 self.catalog.delete(name, "true")
-            self._refresh_table_view(name)
             return self._empty_ok()
         m = self._DESC_RE.match(stmt)
         if m:
@@ -2814,14 +2788,9 @@ class GreptimeSQL:
             return self._empty_ok()
         m = self._ALTER_RE.match(stmt_q)
         if m:
-            out = self._alter(
+            return self._alter(
                 self._resolve_table(_ident_case(m.group(1))), m.group(2).strip()
             )
-            # ALTER may rewrite the table's files (defaulted ADD COLUMN
-            # backfill, type changes) — registered views hold the old file
-            # listing in their captured plans (view/columns.sql)
-            self._refresh_views()
-            return out
         m = re.match(
             r"^\s*SHOW\s+REGION\s+(?:FROM|IN)\s+(\w+)\s*(?:(?:FROM|IN)\s+\w+\s*)?"
             r"(?:WHERE\s+Leader\s*=\s*'(\w+)')?\s*$", stmt, re.IGNORECASE)
@@ -3078,8 +3047,9 @@ class GreptimeSQL:
                         f"Expect {len(df.columns)} columns for view {name}, "
                         f"but found {len(cols)}")
                 df = df.toDF(*cols)
-            df.createOrReplaceTempView(name)
             self._views[name] = query
+            df.createOrReplaceTempView(name)
+            _session_bindings(self.spark)[name] = (self._view_key(name), df)
             self._view_cols = getattr(self, "_view_cols", {})
             if cols:
                 self._view_cols[name] = cols
@@ -3102,7 +3072,7 @@ class GreptimeSQL:
                     return self._empty_ok()
                 raise ValueError(f"view {name} does not exist")
             del self._views[name]
-            self.spark.catalog.dropTempView(name)
+            self._unbind(name)
             return self._empty_ok()
         sm = re.match(
             r"^\s*SELECT\s+((?:FLUSH|COMPACT)_TABLE|FLUSH_FLOW|BUILD_INDEX)"
@@ -3143,10 +3113,6 @@ class GreptimeSQL:
                     self.catalog.compact(t)
                 else:
                     self.catalog.flush_table(t)
-                # flush/compact may rewrite files (TTL expiry) — refresh the
-                # physical companion view of metric logical tables too
-                self._refresh_table_view(t)
-                self._refresh_views()
                 return _admin_result(0)
             if fn == "flush_flow":
                 return _admin_result(self._flush_flow(target))
@@ -3458,6 +3424,29 @@ class GreptimeSQL:
             sink_exists = False
         if not sink_exists and pending:
             sink_exists = True  # defer sink auto-create until sources exist
+        def create_sink(time_index: str, tags: list, entries: list) -> None:
+            # pre-quoted key: flow-created comments render as a quoted WITH
+            # option ('comment' = '…'). Always the generic string:
+            # flow_advance_ttl's goldens carry a newer per-flow-id comment
+            # one engine version can't emit alongside flow_basic's — that
+            # statement stays under known_diffs
+            self.catalog.create_table(TableMeta(
+                name=sink, time_index=time_index, tags=tags,
+                append_mode=False, columns=entries,
+                with_opts={"'comment'": "Auto created table by flow engine"},
+            ), if_not_exists=True)
+
+        def source_ts_decl() -> str:
+            # the sink's time index keeps the first source's precision
+            for t in sources:
+                try:
+                    sm = self.catalog.meta(t)
+                    e = next(c for c in sm.columns if c[0] == sm.time_index)
+                    return e[2] if len(e) > 2 else "timestamp(3)"
+                except Exception:
+                    continue
+            return "timestamp(3)"
+
         tql_value_col = None
         auto_sink = False
         tql_info = (self._tql_flow_schema(select_text)
@@ -3472,31 +3461,12 @@ class GreptimeSQL:
             tql_value_col = vname
             df = self.sql(select_text)
             labels = [c for c in df.columns if c not in ("ts", "value")]
-            ts_decl = "timestamp(3)"
-            for t in sources:
-                try:
-                    sm = self.catalog.meta(t)
-                    e = next(c for c in sm.columns if c[0] == sm.time_index)
-                    ts_decl = e[2] if len(e) > 2 else "timestamp(3)"
-                    break
-                except Exception:
-                    continue
+            ts_decl = source_ts_decl()
             val_e = [vname, "double", "Float64", None, False]
             ts_e = ["ts", "timestamp", ts_decl, None, True]
             lab_es = [[c, "string", "STRING", None, False] for c in labels]
-            entries = ([val_e, ts_e] + lab_es if value_first
-                       else [ts_e, val_e] + lab_es)
-            meta = TableMeta(
-                name=sink,
-                time_index="ts",
-                tags=labels,
-                append_mode=False,
-                columns=entries,
-                with_opts={"'comment'":
-                           "Auto created table by flow engine"},
-            )
-            self.catalog.create_table(meta, if_not_exists=True)
-            self.catalog.read(sink).createOrReplaceTempView(sink)
+            create_sink("ts", labels, [val_e, ts_e] + lab_es if value_first
+                        else [ts_e, val_e] + lab_es)
             sink_exists = True
             auto_sink = True
         if not sink_exists and (
@@ -3509,15 +3479,7 @@ class GreptimeSQL:
             # NULL, numeric values DOUBLE NULL, string labels as PRIMARY
             # KEY; no update_at/placeholder (flow_tql_cte.result)
             df = self.sql(select_text)
-            ts_decl = "timestamp(3)"
-            for t in sources:
-                try:
-                    sm = self.catalog.meta(t)
-                    e = next(c for c in sm.columns if c[0] == sm.time_index)
-                    ts_decl = e[2] if len(e) > 2 else "timestamp(3)"
-                    break
-                except Exception:
-                    continue
+            ts_decl = source_ts_decl()
             ts_cols = [c for c, t in df.dtypes if t.startswith("timestamp")]
             time_index = ts_cols[0] if ts_cols else "ts"
             entries, labels = [], []
@@ -3529,17 +3491,7 @@ class GreptimeSQL:
                     labels.append(c)
                 else:
                     entries.append([c, "double", "Float64", None, False])
-            meta = TableMeta(
-                name=sink,
-                time_index=time_index,
-                tags=labels,
-                append_mode=False,
-                columns=entries,
-                with_opts={"'comment'":
-                           "Auto created table by flow engine"},
-            )
-            self.catalog.create_table(meta, if_not_exists=True)
-            self.catalog.read(sink).createOrReplaceTempView(sink)
+            create_sink(time_index, labels, entries)
             sink_exists = True
             auto_sink = True
         if sink_exists and not auto_sink and not pending:
@@ -3669,22 +3621,7 @@ class GreptimeSQL:
             if not ts_cols:
                 entries.append(
                     ["__ts_placeholder", "timestamp", "timestamp(3)", None, False])
-            meta = TableMeta(
-                name=sink,
-                time_index=time_index,
-                tags=tags,
-                append_mode=False,
-                columns=entries,
-                # pre-quoted key: flow-created comments render as a quoted
-                # WITH option ('comment' = '…'). Always the generic string:
-                # flow_advance_ttl's goldens carry a newer per-flow-id
-                # comment one engine version can't emit alongside
-                # flow_basic's — that statement stays under known_diffs
-                with_opts={"'comment'":
-                           "Auto created table by flow engine"},
-            )
-            self.catalog.create_table(meta, if_not_exists=True)
-            self.catalog.read(sink).createOrReplaceTempView(sink)
+            create_sink(time_index, tags, entries)
         # batching vs streaming mode (reference determine_flow_type,
         # src/operator/src/statement/ddl.rs:796): pending → batching;
         # instant-ttl source → streaming (nothing is stored, consume the
@@ -3818,25 +3755,20 @@ class GreptimeSQL:
             except Exception:
                 cur = None
             if cur is None or cur.table_id != b["id"]:
-                out = self.catalog.read(fl["sink"])
-                out.createOrReplaceTempView(fl["sink"])
-                return out.count()
+                return self.catalog.read(fl["sink"]).count()
         is_tql = bool(re.search(r"(?i)\bTQL\s+EVAL\b", fl["select"]))
         if sources and not is_tql and now_override is None and all(
             self.catalog.meta(t).batch_no == b.get("seen", -1)
             for t, b in sources.items()
         ):
             # nothing new since the last flush — no dirty windows, no-op
-            out = self.catalog.read(fl["sink"])
-            out.createOrReplaceTempView(fl["sink"])
-            return out.count()
+            return self.catalog.read(fl["sink"]).count()
         for t, b in sources.items():
             # TQL flows recompute their whole eval window over the full
             # table — pre-creation rows included (flow_tql_cte.result);
             # SQL flows only see batches ingested after creation
-            self.catalog.read(
-                t, min_batch=0 if is_tql else b["wm"] + 1
-            ).createOrReplaceTempView(t)
+            self._pin(t, self.catalog.read(
+                t, min_batch=0 if is_tql else b["wm"] + 1))
         try:
             sel_text = fl["select"]
             if now_override is not None and not is_tql:
@@ -3903,10 +3835,8 @@ class GreptimeSQL:
                     b["wm"] = b["seen"]
         finally:
             for t in sources:
-                self.catalog.read(t).createOrReplaceTempView(t)
-        out = self.catalog.read(fl["sink"])
-        out.createOrReplaceTempView(fl["sink"])
-        return out.count()
+                self._unbind(t)
+        return self.catalog.read(fl["sink"]).count()
 
     def _describe(self, name: str):
         meta = self.catalog.meta(name)
@@ -4041,7 +3971,6 @@ class GreptimeSQL:
             if limit is not None:
                 df = df.limit(int(limit))
             self.catalog.insert(name, df)
-            self._refresh_table_view(name)
 
         if query is not None:
             write_one(self.sql(query), path)
@@ -4098,9 +4027,6 @@ class GreptimeSQL:
         Spark rejects the mixed-type comparison — rewrite the literal."""
         if self.catalog is None:
             return text
-        to_ts = {"s": "timestamp_seconds({v})", "ms": "timestamp_millis({v})",
-                 "us": "timestamp_micros({v})",
-                 "ns": "timestamp_micros(CAST({v} / 1000 AS BIGINT))"}
         referenced = [t for t in self.catalog.list_tables()
                       if re.search(rf"\b{re.escape(t)}\b", text)]
         for t in referenced:
@@ -4115,7 +4041,7 @@ class GreptimeSQL:
                     for t2 in referenced if t2 != t
                     for e2 in self._col_entries(t2)
                 )
-                tpl = to_ts[_ts_unit(e[2] if len(e) > 2 else "timestamp")]
+                tpl = _INT_TO_TS[_ts_unit(e[2] if len(e) > 2 else "timestamp")]
                 c = re.escape(e[0])
                 qual = rf"{re.escape(t)}\." if ambiguous else r"(?:\w+\.)?"
 
@@ -4145,7 +4071,7 @@ class GreptimeSQL:
             if not re.search(rf"\b{re.escape(vn)}\b", text):
                 continue
             try:
-                vcols = self.spark.table(vn).dtypes
+                vcols = self._bind([vn])[vn][1].dtypes
             except Exception:
                 continue
             names = [cname for cname, _ in vcols]
@@ -4450,14 +4376,10 @@ class GreptimeSQL:
         precision. Integer args keep the plain alias mapping."""
         ts_cols: set = set()
         for tm in re.finditer(r"\bFROM\s+`?(\w+)`?", text, re.IGNORECASE):
+            # catalog tables, user views and views registered straight with
+            # Spark (optimizer/windowed_sort_advance)
             try:
-                meta = self.catalog.meta(self._resolve_table(tm.group(1).lower()))
-                ts_cols |= {e[0] for e in (meta.columns or [])
-                            if str(e[1]).lower() == "timestamp"}
-                continue
-            except Exception:
-                pass
-            try:  # views registered straight with Spark (optimizer/windowed_sort_advance)
+                self._bind([tm.group(1)])
                 ts_cols |= {f.name for f in
                             self.spark.table(tm.group(1)).schema.fields
                             if f.dataType.typeName().startswith("timestamp")}
@@ -4583,34 +4505,78 @@ class GreptimeSQL:
             return f"`{safe}`"
         return re.sub(r"`([^`]+)`", _enc, seg)
 
-    def _refresh_table_view(self, name: str) -> None:
-        self.catalog.read(name).createOrReplaceTempView(name)
-        meta = self.catalog.meta(name)
-        phys = getattr(meta, "on_physical", None)
-        if phys is None and getattr(meta, "engine", "") == "metric":
-            phys = name  # flushing the physical table itself
-        if phys:
-            # logical metric writes/expiry land in the physical table — its
-            # view AND every sibling logical view hold the file listing
-            self.catalog.read(phys).createOrReplaceTempView(phys)
-            for s in self.catalog.list_tables():
-                if s not in (name, phys) and getattr(
-                        self.catalog.meta(s), "on_physical", None) == phys:
-                    self.catalog.read(s).createOrReplaceTempView(s)
+    # -- table binding: a statement resolves the catalog tables it names when
+    # it runs, as the reference's DummyTableProvider.scan does at plan time
+    # (src/query/src/dummy_catalog.rs). Writers only bump a table's write
+    # counter; the next statement naming the table re-reads it.
 
-    def _refresh_views(self):
-        """Re-plan registered views after a write: a view's captured plan
-        caches the parquet file listing of its base tables, so new files from
-        later inserts stay invisible until the view is re-registered."""
-        for vn, vq in getattr(self, "_views", {}).items():
-            try:
-                vdf = self.sql(vq)
-                cols = getattr(self, "_view_cols", {}).get(vn)
-                if cols and len(cols) == len(vdf.columns):
-                    vdf = vdf.toDF(*cols)
-                vdf.createOrReplaceTempView(vn)
-            except Exception:
-                pass
+    def _version(self, name: str) -> tuple:
+        """Binding key: catalog, table instance and write counter, plus the
+        physical table's key for a metric-engine logical table."""
+        meta = self.catalog.meta(name)
+        key = (self.catalog.base_path, meta.table_id, meta.write_version)
+        if meta.on_physical:
+            key += self._version(meta.on_physical)
+        return key
+
+    def _bind(self, names, _seen: tuple = ()) -> dict:
+        """Bind every catalog table and user view that ``names`` (word
+        tokens) may refer to, and return their bindings {name: (key, df)}.
+        A user view's key is the keys of the tables its query names, so a
+        write to a base table re-plans the view on its next read. A name this
+        catalog bound but no longer holds loses its view."""
+        if self.catalog is None:
+            return {}
+        reg = _session_bindings(self.spark)
+        tables = set(self.catalog.list_tables())
+        lower = {t.lower(): t for t in tables}
+        views = getattr(self, "_views", {})
+        scoped = f"__{getattr(self, '_current_db', 'public')}__"
+        out = {}
+        for tok in names:
+            # the same lookup as _resolve_table: exact, case-insensitive,
+            # then the current schema's scoped key
+            hits = {tok} & tables | {
+                lower.get(tok.lower()), lower.get(scoped + tok.lower())}
+            hits.discard(None)
+            for name in hits:
+                key, entry = self._version(name), reg.get(name)
+                if entry is None or entry[0] not in (key, ("pin", key)):
+                    df = self.catalog.read(name)
+                    df.createOrReplaceTempView(name)
+                    entry = reg[name] = (key, df)
+                out[name] = entry
+            if tok in views and tok not in _seen:
+                key = self._view_key(tok, _seen)
+                entry = reg.get(tok)
+                if entry is None or entry[0] != key:
+                    df = self.sql(views[tok])
+                    cols = getattr(self, "_view_cols", {}).get(tok)
+                    if cols and len(cols) == len(df.columns):
+                        df = df.toDF(*cols)
+                    df.createOrReplaceTempView(tok)
+                    entry = reg[tok] = (key, df)
+                out[tok] = entry
+            elif not hits and tok in reg and \
+                    reg[tok][0][:1] == (self.catalog.base_path,):
+                self._unbind(tok)  # dropped from this catalog since bound
+        return out
+
+    def _view_key(self, name: str, _seen: tuple = ()) -> tuple:
+        """A user view's binding key: its bound base names and their keys."""
+        base = self._bind(_idents(self._views[name]), _seen + (name,))
+        return tuple(sorted((n, e[0]) for n, e in base.items()))
+
+    def _pin(self, name: str, df: DataFrame) -> None:
+        """Bind ``name`` to ``df``, a filtered read of the table, until
+        ``_unbind`` (the flow watermark override). Views planned over a pin
+        carry its distinct key, so they re-plan once it is dropped."""
+        df.createOrReplaceTempView(name)
+        _session_bindings(self.spark)[name] = (("pin", self._version(name)), df)
+
+    def _unbind(self, name: str) -> None:
+        _session_bindings(self.spark).pop(name, None)
+        self.spark.catalog.dropTempView(name)
 
     def _register_info_schema(self, text: str) -> str:
         """Materialize information_schema.{tables,columns,views,
@@ -5463,8 +5429,6 @@ class GreptimeSQL:
             self.catalog.delete(
                 t, F.col(SEQ_COL) >= F.lit((floor + 1) << 33),
                 _from_logical=True)
-            self._refresh_table_view(t)
-        self._refresh_views()
 
     def _show_create_table(self, name: str):
         """Render the reference's SHOW CREATE TABLE output (reference
@@ -5763,8 +5727,6 @@ class GreptimeSQL:
                         ptags = list(pmeta.tags) + ([entry[0]] if is_pk else [])
                         self.catalog._update_meta(
                             phys, columns=pcols, tags=ptags)
-                        self.catalog.read(phys).createOrReplaceTempView(phys)
-            self.catalog.read(name).createOrReplaceTempView(name)
             return self._empty_ok()
         dm = re.match(r"DROP\s+COLUMN\s+(\"[^\"]+\"|\w+)\s*$", action, re.IGNORECASE)
         if dm:
@@ -5779,7 +5741,6 @@ class GreptimeSQL:
                     f"Not allowed to remove index column {col} "
                     f"from table {name}")
             self.catalog.drop_column(name, col)
-            self.catalog.read(name).createOrReplaceTempView(name)
             return self._empty_ok()
         rm = re.match(r"RENAME\s+(?:TO\s+)?(\"[^\"]+\"|'[^']+'|[\w👋]+)\s*$", action, re.IGNORECASE)
         if rm:
@@ -5794,11 +5755,7 @@ class GreptimeSQL:
                 raise ValueError(
                     f"Table already exists, table: greptime.public.{new}")
             self.catalog.rename_table(name, new)
-            try:
-                self.spark.catalog.dropTempView(name)
-            except Exception:
-                pass
-            self.catalog.read(new).createOrReplaceTempView(new)
+            self._unbind(name)
             return self._empty_ok()
         if re.match(r"MODIFY\s+COLUMN\s+", action, re.IGNORECASE):
             for clause in _split_columns(action):
@@ -5922,7 +5879,6 @@ class GreptimeSQL:
                     self.catalog.modify_column(name, col, _map_type(typ), typ)
                     continue
                 raise ValueError(f"unsupported MODIFY COLUMN clause {clause!r}")
-            self.catalog.read(name).createOrReplaceTempView(name)
             return self._empty_ok()
         sm = re.match(r"SET\s+'?([^'=\s]+)'?\s*=\s*(?:'([^']*)'|NULL)\s*$", action, re.IGNORECASE)
         if sm:
@@ -5979,10 +5935,8 @@ class GreptimeSQL:
                     # pre-toggle duplicate keys keep last-write only)
                     self.catalog.compact(name)
                 self.catalog._update_meta(name, append_mode=turning_on)
-                self.catalog.read(name).createOrReplaceTempView(name)
             elif key == "merge_mode":
                 self.catalog._update_meta(name, merge_mode=val or "last_row")
-                self.catalog.read(name).createOrReplaceTempView(name)
             elif key == "skip_wal" and (val or "").lower() == "true":
                 m0 = self.catalog.meta(name)
                 if getattr(m0, "skip_wal_since", None) is None:
@@ -6027,10 +5981,8 @@ class GreptimeSQL:
                 self.catalog._update_meta(name, ttl=None)
             elif key == "append_mode":
                 self.catalog._update_meta(name, append_mode=False)
-                self.catalog.read(name).createOrReplaceTempView(name)
             elif key == "merge_mode":
                 self.catalog._update_meta(name, merge_mode="last_row")
-                self.catalog.read(name).createOrReplaceTempView(name)
             meta = self.catalog.meta(name)
             opts = dict(meta.with_opts or {})
             opts.pop(key, None)
@@ -6204,6 +6156,23 @@ class GreptimeSQL:
         schema, it = cur
         return self.spark.createDataFrame(
             list(itertools.islice(it, n)), schema)
+
+    def _plan_table(self, df: DataFrame, analyze: bool,
+                    verbose: bool) -> DataFrame:
+        """THIS engine's plans for ``df`` as the (plan_type, plan) table the
+        reference's EXPLAIN goldens use: ``analyzed_plan`` (VERBOSE only),
+        ``logical_plan``, ``physical_plan``. Plan text is engine-specific by
+        nature (the sqlness battery pattern-skips these goldens on both
+        engines). ANALYZE runs the query first, so its physical plan is the
+        executed AQE-final one, mirroring the reference's plan-with-metrics
+        semantics."""
+        if analyze:
+            df.foreach(lambda _r: None)
+        qe = df._jdf.queryExecution()
+        rows = [("analyzed_plan", qe.analyzed().toString())] if verbose else []
+        rows += [("logical_plan", qe.optimizedPlan().toString()),
+                 ("physical_plan", qe.executedPlan().toString())]
+        return self.spark.createDataFrame(rows, "plan_type string, plan string")
 
     def sql_http(self, text: str, format: str = "greptimedb_v1", **kw):
         """Run one statement and render it in an HTTP ResponseFormat — the
@@ -6696,10 +6665,7 @@ class GreptimeSQL:
                         self.catalog.meta(t), "on_physical", None))
                     for t in victims:
                         self.catalog.drop_table(t)
-                        try:
-                            self.spark.catalog.dropTempView(t)
-                        except Exception:
-                            pass
+                        self._unbind(t)
             if self.catalog is not None:
                 self.catalog.db_options = dbs
             return self._empty_ok()
@@ -6892,50 +6858,22 @@ class GreptimeSQL:
                       text, re.IGNORECASE)
         if tm:
             # TQL EXPLAIN/ANALYZE (reference tql.rs): plan the SAME query the
-            # EVAL path would run and return THIS engine's plan as the
-            # (plan_type, plan) table DataFusion-style goldens use. Plan text
-            # is engine-specific by nature (the sqlness battery pattern-skips
-            # these goldens on both engines); the surface exists so the
-            # statement executes instead of erroring. ANALYZE runs the query
-            # first, so its physical plan reflects an executed (AQE-final)
-            # plan, mirroring the reference's plan-with-metrics semantics.
-            verbose = bool(tm.group(2))
-            analyze = tm.group(1).upper() == "ANALYZE"
+            # EVAL path would run
             rest = text[tm.end():].strip().rstrip(";")
             if not rest.startswith("("):
                 # reference default range (tql_parser.rs:251: ("0","0","5m"))
                 rest = "(0, 0, '5m') " + rest
-            df = self.sql("TQL EVAL " + rest)
-            if analyze:
-                df.foreach(lambda _r: None)
-            qe = df._jdf.queryExecution()
-            rows = []
-            if verbose:
-                rows.append(("analyzed_plan", qe.analyzed().toString()))
-            rows.append(("logical_plan", qe.optimizedPlan().toString()))
-            rows.append(("physical_plan", qe.executedPlan().toString()))
-            return self.spark.createDataFrame(
-                rows, "plan_type string, plan string")
+            return self._plan_table(self.sql("TQL EVAL " + rest),
+                                    tm.group(1).upper() == "ANALYZE",
+                                    bool(tm.group(2)))
         xm = re.match(
             r"^\s*EXPLAIN\s+(ANALYZE\s+)?(VERBOSE\s+)?(?=SELECT|WITH|VALUES)",
             text, re.IGNORECASE)
         if xm and (xm.group(1) or xm.group(2)):
             # Spark's parser lacks EXPLAIN ANALYZE / EXPLAIN VERBOSE — plan
-            # the inner query through the full dialect pipeline and return
-            # the reference's (plan_type, plan) table shape. ANALYZE
-            # executes first (AQE-final physical plan), like the
-            # DataFusion plan-with-metrics semantics.
-            df = self.sql(text[xm.end():])
-            if xm.group(1):
-                df.foreach(lambda _r: None)
-            qe = df._jdf.queryExecution()
-            rows = []
-            if xm.group(2):
-                rows.append(("analyzed_plan", qe.analyzed().toString()))
-            rows.append(("logical_plan", qe.optimizedPlan().toString()))
-            rows.append(("physical_plan", qe.executedPlan().toString()))
-            return self.spark.createDataFrame(
-                rows, "plan_type string, plan string")
+            # the inner query through the full dialect pipeline
+            return self._plan_table(self.sql(text[xm.end():]),
+                                    bool(xm.group(1)), bool(xm.group(2)))
         tql_groups = None
         m = re.match(r"^\s*TQL\s+EVAL\s*\(", text, re.IGNORECASE)
         if m:
@@ -6967,46 +6905,35 @@ class GreptimeSQL:
                 value_alias = alias_m.group(1)
                 promql = promql[: alias_m.start()]
             tables = dict(self.promql_tables)
-            if self.catalog is not None:
-                for t in self.catalog.list_tables():
-                    if t in tables:
-                        continue
-                    meta = self.catalog.meta(t)
-                    df = (
-                        self.spark.table(t)
-                        if self.spark.catalog.tableExists(t)
-                        else self.catalog.read(t)
-                    )
-                    fields = [
-                        c for c in df.columns
-                        if c not in meta.tags and c != meta.time_index
-                    ]
-                    if not fields:
-                        continue
-                    tables[t] = MetricTable(
-                        df, value_col=fields[0], time_index=meta.time_index,
-                        tags=meta.tags, fields=fields,
-                    )
+            # the catalog tables the expression names, label values included
+            # ({__name__="t"} names t)
+            bound = self._bind(set(re.findall(r"\w+", promql)))
+            for t, (_key, df) in bound.items():
+                if t in tables or t in getattr(self, "_views", {}):
+                    continue
+                meta = self.catalog.meta(t)
+                fields = [
+                    c for c in df.columns
+                    if c not in meta.tags and c != meta.time_index
+                ]
+                if not fields:
+                    continue
+                tables[t] = MetricTable(
+                    df, value_col=fields[0], time_index=meta.time_index,
+                    tags=meta.tags, fields=fields,
+                )
             # dotted label names ("service.name") break Spark column paths —
             # sanitize at the engine boundary, restore on output
             # (reference promql/string_identifier.sql)
             renames = {}
             for tname, mt in list(tables.items()):
-                if not any("." in t for t in mt.tags):
-                    continue
-                df2, new_tags = mt.df, []
-                for t in mt.tags:
-                    if "." in t:
-                        s = t.replace(".", "__")
-                        renames[t] = s
-                        df2 = df2.withColumnRenamed(t, s)
-                        new_tags.append(s)
-                    else:
-                        new_tags.append(t)
-                tables[tname] = MetricTable(
-                    df2, value_col=mt.value_col, time_index=mt.time_index,
-                    tags=new_tags, fields=mt.fields,
-                )
+                dotted = {t: t.replace(".", "__") for t in mt.tags if "." in t}
+                if dotted:
+                    renames.update(dotted)
+                    tables[tname] = MetricTable(
+                        mt.df.withColumnsRenamed(dotted), value_col=mt.value_col,
+                        time_index=mt.time_index, fields=mt.fields,
+                        tags=[dotted.get(t, t) for t in mt.tags])
             for orig, s in renames.items():
                 promql = promql.replace(f'"{orig}"', s).replace(orig, s)
             lookback_ms = _parse_step(lookback) if lookback else self.lookback_ms
@@ -7310,6 +7237,8 @@ class GreptimeSQL:
                 # strip the qualifier (range/nest.sql:70-75)
                 text = re.sub(rf"\b{re.escape(vname)}\s*\.\s*(\w)", r"\1",
                               text)
+        # the one binding step: every catalog table the final text names
+        self._bind(_idents(text))
         if re.search(r"\bALIGN\s+['(]", text, re.IGNORECASE):
             from greptimedb_spark.range_query import parse_range_sql, range_sql
 
@@ -7445,6 +7374,26 @@ def _tz_offset_ms(tz: str) -> int:
 
     off = dt.datetime(1970, 1, 1, tzinfo=ZoneInfo(tz)).utcoffset()
     return int(off.total_seconds() * 1000)
+
+
+def _with_defaults(df: DataFrame, cols: list, full_cols: list) -> DataFrame:
+    """Column-list INSERT: project ``df`` (holding ``cols``) onto every
+    declared column in declared order, so every parquet file shares one
+    schema; an unlisted column takes its DEFAULT, else NULL."""
+    listed = {e[0] for e in cols}
+    out = []
+    for entry in full_cols:
+        c, t = entry[0], entry[1]
+        d = _default_sql(entry)
+        if c in listed:
+            out.append(F.col(f"`{c}`"))
+        elif d and len(entry) > 2 and str(entry[2]).lower().startswith("vector"):
+            # vector DEFAULT literals pack to binary f32 (raw literal —
+            # CAST AS BINARY would utf8-encode)
+            out.append(F.expr(f"gt_vec_pack({entry[3]})").alias(c))
+        else:
+            out.append((F.expr(d).cast(t) if d else F.lit(None).cast(t)).alias(c))
+    return df.select(*out)
 
 
 def _default_sql(entry) -> str | None:

@@ -174,3 +174,60 @@ def test_range_two_aggs_in_one_expr(spark, host_df):
     got = {(r.host, int(r.ts.timestamp())): (r.d, r.m) for r in out.collect()}
     assert got[("host1", 0)] == (0, 0)
     assert got[("host1", 5)] == (None, 0)  # null agg propagates through arithmetic
+
+
+def _ordered(spark, host_df, sql):
+    host_df.createOrReplaceTempView("host")
+    return range_sql(spark, sql)
+
+
+def test_range_order_by_keys_and_directions(spark, host_df):
+    # ORDER BY after ALIGN … BY sorts the RANGE output (the parser's
+    # documented `[ORDER BY ...] [LIMIT n]` tail)
+    out = _ordered(
+        spark, host_df,
+        "SELECT ts, host, min(val) RANGE '5s' AS m FROM host ALIGN '5s' "
+        "BY (host) ORDER BY host DESC, ts")
+    assert "Sort" in out._jdf.queryExecution().optimizedPlan().toString()
+    rows = [(r.host, int(r.ts.timestamp())) for r in out.collect()]
+    assert rows == sorted(rows, key=lambda r: (-int(r[0][-1]), r[1]))
+    assert rows[0][0] == "host2" and rows[-1][0] == "host1"
+
+
+def test_range_order_by_alias_nulls_and_position(spark, host_df):
+    # DESC puts NULLs first (DataFusion default); NULLS LAST overrides it
+    sql = ("SELECT ts, host, min(val) RANGE '5s' AS m FROM host ALIGN '5s' "
+           "BY (host) ORDER BY m DESC")
+    vals = [r.m for r in _ordered(spark, host_df, sql).collect()]
+    assert vals[0] is None and vals[-1] == 0
+    vals = [r.m for r in _ordered(spark, host_df,
+                                  sql + " NULLS LAST").collect()]
+    assert vals[0] == 5 and vals[-1] is None
+    # output position 3 is the alias m
+    vals = [r.m for r in _ordered(
+        spark, host_df, sql.replace("ORDER BY m", "ORDER BY 3")
+        + " NULLS LAST").collect()]
+    assert vals[0] == 5
+
+
+def test_range_order_by_unselected_by_column(spark, host_df):
+    out = _ordered(
+        spark, host_df,
+        "SELECT ts, min(val) RANGE '5s' AS m FROM host ALIGN '5s' "
+        "BY (host) ORDER BY host DESC, ts")
+    assert out.columns == ["ts", "m"]
+    # host2's values (3..5) come before host1's (0..2)
+    vals = [r.m for r in out.collect() if r.m is not None]
+    assert vals == [3, 4, 5, 0, 1, 2]
+
+
+def test_range_limit_and_offset(spark, host_df):
+    base = ("SELECT ts, host, min(val) RANGE '5s' AS m FROM host ALIGN '5s' "
+            "BY (host)")
+    out = _ordered(spark, host_df, base + " ORDER BY host, ts LIMIT 1")
+    rows = out.collect()
+    assert len(rows) == 1
+    assert (rows[0].host, int(rows[0].ts.timestamp())) == ("host1", 0)
+    out = _ordered(spark, host_df, base + " ORDER BY host, ts LIMIT 2 OFFSET 1")
+    assert [int(r.ts.timestamp()) for r in out.collect()] == [5, 10]
+    assert len(_ordered(spark, host_df, base + " LIMIT 3").collect()) == 3
