@@ -26,15 +26,29 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from dataclasses import dataclass, field, asdict
 from typing import Iterable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 SEQ_COL = "__seq"
 BUCKET_COL = "__time_bucket"
+# __seq = batch_no << _BATCH_SHIFT | row number within the batch
+_BATCH_SHIFT = 33
+
+
+def batch_of() -> Column:
+    """The ingest batch number of a stored row (decodes ``__seq``)."""
+    return F.shiftright(F.col(SEQ_COL), _BATCH_SHIFT)
+
+
+def since_batch(n: int) -> Column:
+    """Stored rows of ingest batch ``n`` or later. A plain ``__seq``
+    comparison, so Parquet min/max statistics skip older files."""
+    return F.col(SEQ_COL) >= F.lit(n << _BATCH_SHIFT)
 
 
 class TableNotFoundError(ValueError):
@@ -67,6 +81,13 @@ def _ttl_interval(ttl: str) -> str:
     from greptimedb_spark.range_query import parse_duration_ms
 
     return f"INTERVAL {parse_duration_ms(ttl)} MILLISECOND"
+
+
+def _has_parquet(path: str) -> bool:
+    """Whether ``path`` (a table's data directory) holds any Parquet file."""
+    return any(f.endswith(".parquet")
+               for _root, _dirs, files in os.walk(path) for f in files)
+
 
 _META_FILE = "_greptime_meta.json"
 
@@ -199,8 +220,6 @@ class Catalog:
             raise TableNotFoundError(f"Table not found: {name}") from None
 
     def drop_table(self, name: str) -> None:
-        import shutil
-
         # a physical metric table refuses to drop while logical tables are
         # still attached (engine/create.rs physical-region busy check)
         for t in self.list_tables():
@@ -220,19 +239,16 @@ class Catalog:
     # -- write path ----------------------------------------------------------
 
     def insert(self, name: str, df: DataFrame) -> None:
-        """Append a batch. Adds the monotone ingest sequence and the physical
-        time-bucket partition column.
+        """Append a batch with its ingest sequence ``__seq`` (see ``_write``
+        for the file layout).
 
         Ordering: ``__seq = (batch_no << 33) | monotonically_increasing_id``.
         The per-table batch counter (persisted in the table meta) guarantees
         any later batch outranks every row of every earlier batch — matching
         the reference's strict ingest-order dedup (mito2 sequence numbers) —
-        while monotonically_increasing_id orders rows *within* a batch.
-
-        The batch is repartitioned on the bucket column before the
-        partitionBy write so each time-bucket directory receives one file per
-        batch instead of one per upstream partition (small-files fix; at
-        1000 executors this is the difference between p and p×buckets files)."""
+        while monotonically_increasing_id orders rows *within* a batch. It is
+        assigned on the input partitioning, before the write's exchange,
+        which decides the winner between duplicate keys of one batch."""
         meta = self.meta(name)
         if getattr(meta, "on_physical", None):
             # metric-engine logical write: rows land in the physical table
@@ -266,44 +282,14 @@ class Catalog:
             self.insert(meta.on_physical, df)
             return
         batch_no = meta.batch_no + 1
-        self._update_meta(name, batch_no=batch_no)
         if meta.columns:
             for entry in meta.columns:
                 p = self._cur_phys(meta, entry[0])
                 if p != entry[0] and entry[0] in df.columns:
                     df = df.withColumnRenamed(entry[0], p)
-        out = (
-            df.withColumn(
-                SEQ_COL,
-                F.lit(batch_no).cast("long") * F.lit(1 << 33)
-                + F.monotonically_increasing_id() % F.lit(1 << 33),
-            )
-            .withColumn(BUCKET_COL, F.date_trunc(meta.partition_granularity, F.col(meta.time_index)))
-        )
-        # explicit numPartitions: AQE must NOT coalesce the write exchange
-        # (with coalescePartitions.parallelismFirst=false a ~50MB batch would
-        # collapse to one advisory-sized partition = one serial write task —
-        # the exact r5 ingest bug, resurrected through AQE)
-        n_write = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        # Decision order (r11): the optimizer's size estimate first — it is a
-        # plan inspection (~10 ms), while df.rdd.getNumPartitions() pays a
-        # ~0.3 s py4j/RDD-conversion toll. A big batch repartitions regardless
-        # of its input partitioning (parallel encode + one file per bucket);
-        # only small batches need the partition probe to decide between
-        # "single partition: write as-is" and "many partitions: coalesce the
-        # bucket fan-out so each bucket gets one file per batch, not one per
-        # upstream partition".
-        try:
-            est = int(out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        except Exception:
-            est = 0
-        if est > (32 << 20) or df.rdd.getNumPartitions() > 1:
-            out = out.repartition(n_write, F.col(BUCKET_COL))
-        (
-            out.write.mode("append")
-            .partitionBy(BUCKET_COL)
-            .parquet(os.path.join(self._table_path(name), "data"))
-        )
+        seq = (F.lit(batch_no).cast("long") * F.lit(1 << _BATCH_SHIFT)
+               + F.monotonically_increasing_id() % F.lit(1 << _BATCH_SHIFT))
+        self._write(meta, df.withColumn(SEQ_COL, seq), batch_no=batch_no)
 
     def _update_meta(self, table: str, **kv) -> None:
         """Rewrite the meta with ``kv`` applied and bump ``write_version``
@@ -314,6 +300,54 @@ class Catalog:
         meta.write_version += 1
         with open(os.path.join(self._table_path(table), _META_FILE), "w") as f:
             f.write(meta.to_json())
+
+    # -- stored files: every access to a table's data/ goes through these --
+
+    def _scan(self, name: str) -> DataFrame | None:
+        """The stored rows as written (physical column names, ``__seq`` and
+        the bucket column), or None when the table has no file. Schemas are
+        merged: an ALTER generation's columns exist only in files written
+        after it, and a first-file schema would silently drop them."""
+        path = os.path.join(self._table_path(name), "data")
+        if not _has_parquet(path):
+            return None
+        return self.spark.read.option("mergeSchema", "true").parquet(path)
+
+    def _write(self, meta: TableMeta, df: DataFrame, replace: bool = False,
+               **kv) -> None:
+        """Store ``df`` (rows of table ``meta`` carrying ``__seq``) as one
+        file per time bucket, appended or, with ``replace``, written to a
+        sibling directory that is swapped in once the write has succeeded.
+        Then apply ``kv`` to the meta and bump ``write_version``. A
+        replacement without rows removes ``data/`` and records the observed
+        schema when the meta declares none, so reads still serve an empty
+        frame.
+
+        The bucket exchange has an explicit partition count: AQE would
+        coalesce an advisory-sized one, and a batch's buckets would then
+        share one serial write task."""
+        path = os.path.join(self._table_path(meta.name), "data")
+        n = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        bucket = F.date_trunc(meta.partition_granularity,
+                              F.col(_phys_name(meta.time_index)))
+        out = (df.withColumn(BUCKET_COL, bucket)
+               .repartition(n, F.col(BUCKET_COL))
+               .write.partitionBy(BUCKET_COL))
+        if not replace:
+            out.mode("append").parquet(path)
+        else:
+            tmp = path + ".rewrite"
+            out.mode("overwrite").parquet(tmp)
+            shutil.rmtree(path)
+            if _has_parquet(tmp):
+                os.rename(tmp, path)
+            else:
+                shutil.rmtree(tmp)
+                if not meta.columns:
+                    kv.setdefault("columns", [
+                        [c, t] for c, t in df.dtypes
+                        if c not in (SEQ_COL, BUCKET_COL)])
+        self._update_meta(meta.name, **kv)
 
     # -- read path -----------------------------------------------------------
 
@@ -335,12 +369,11 @@ class Catalog:
             tid = self._logical_table_id(meta)
             cols = [e[0] for e in (meta.columns or [])]
             return base.filter(F.col("__table_id") == tid).select(*cols)
-        data_path = os.path.join(self._table_path(name), "data")
-        if not self._has_data(data_path):
+        df = self._scan(name)
+        if df is None:
             return self._empty_df(meta)
-        df = self.spark.read.option("mergeSchema", "true").parquet(data_path)
         if min_batch is not None:
-            df = df.filter(F.col(SEQ_COL) >= min_batch * (1 << 33))
+            df = df.filter(since_batch(min_batch))
         hist = getattr(meta, "col_history", None) or {}
         if meta.columns:
             for entry in meta.columns:
@@ -387,7 +420,8 @@ class Catalog:
             )
 
             df = apply_sst_union_schema(
-                df, j2cols, getattr(meta, "flush_batches", []) or [], SEQ_COL)
+                df, j2cols, getattr(meta, "flush_batches", []) or [],
+                batch_of())
         if raw or meta.append_mode:
             df = df.drop(SEQ_COL, BUCKET_COL)
         else:
@@ -428,15 +462,6 @@ class Catalog:
                 out.append(F.lit(None).cast(styp).alias(cname))
         return df.select(*out)
 
-    @staticmethod
-    def _has_data(data_path: str) -> bool:
-        if not os.path.isdir(data_path):
-            return False
-        for root, _dirs, files in os.walk(data_path):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
-
     def _empty_df(self, meta: TableMeta) -> DataFrame:
         """Created-but-never-written table → empty frame with the declared
         schema (the reference serves these from region metadata alone)."""
@@ -457,8 +482,6 @@ class Catalog:
         region metadata and applies it to pre-alter SSTs at read — same
         observable result; the rewrite keeps read-side plans branch-free).
         At scale the rewrite is per-bucket and only for defaulted adds."""
-        import shutil
-
         meta = self.meta(name)
         cols = [list(c) for c in (meta.columns or [])]
         if any(c[0] == entry[0] for c in cols):
@@ -476,20 +499,17 @@ class Catalog:
         kv = {"columns": cols}
         if is_tag:
             kv["tags"] = meta.tags + [entry[0]]
-        self._update_meta(name, **kv)
         default = entry[3] if len(entry) > 3 else None
-        data_path = os.path.join(self._table_path(name), "data")
-        if default is not None and self._has_data(data_path):
-            # backfill the CURRENT generation's physical column: a re-added
-            # column (post-drop sentinel) renders from its fresh __gN name,
-            # so writing the base name would leave old rows NULL
-            phys = self._cur_phys(self.meta(name), entry[0])
-            df = self.spark.read.option("mergeSchema", "true").parquet(data_path)
-            df = df.withColumn(phys, F.expr(default).cast(entry[1]))
-            tmp = data_path + ".alter"
-            df.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-            shutil.rmtree(data_path)
-            os.rename(tmp, data_path)
+        df = self._scan(name) if default is not None else None
+        if df is None:
+            self._update_meta(name, **kv)
+            return
+        # backfill the CURRENT generation's physical column: a re-added
+        # column (post-drop sentinel) renders from its fresh __gN name, so
+        # writing the base name would leave old rows NULL
+        phys = self._cur_phys(meta, entry[0])
+        self._write(meta, df.withColumn(phys, F.expr(default).cast(entry[1])),
+                    replace=True, **kv)
 
     @staticmethod
     def _resolve_col(meta: TableMeta, col: str) -> str:
@@ -585,8 +605,6 @@ class Catalog:
         self._update_meta(name, columns=cols)
 
     def rename_table(self, old: str, new: str) -> None:
-        import shutil
-
         if os.path.exists(self._table_path(new)):
             raise ValueError(f"table {new} already exists")
         shutil.move(self._table_path(old), self._table_path(new))
@@ -600,8 +618,6 @@ class Catalog:
         At scale this would rewrite only the time-bucket partitions containing
         matches (predicate → partition pruning); here the table is rewritten
         whole. Reference: DELETE statement, src/sql/src/statements/delete.rs."""
-        import shutil
-
         meta = self.meta(name)
         if getattr(meta, "on_physical", None):
             # logical metric delete: scope the predicate to this table's rows
@@ -615,27 +631,12 @@ class Catalog:
             # the reference ignores DELETE FROM a physical metric table
             # ("Affected Rows: 0", basic.result:114-117)
             return 0
-        data_path = os.path.join(self._table_path(name), "data")
-        if not self._has_data(data_path):
+        df = self._scan(name)
+        if df is None:
             return 0
-        df = self.spark.read.parquet(data_path)
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        keep = df.filter(~F.coalesce(pred, F.lit(False)))
-        tmp = data_path + ".delete"
-        keep.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-        shutil.rmtree(data_path)
-        if self._has_data(tmp):
-            os.rename(tmp, data_path)
-            self._update_meta(name)
-            return 0
-        shutil.rmtree(tmp, ignore_errors=True)
-        kv = {}
-        if not meta.columns:
-            # everything deleted and no declared schema on file — record the
-            # observed schema so subsequent reads serve an empty frame
-            drop = {SEQ_COL, BUCKET_COL}
-            kv["columns"] = [[c, t] for c, t in df.dtypes if c not in drop]
-        self._update_meta(name, **kv)
+        self._write(meta, df.filter(~F.coalesce(pred, F.lit(False))),
+                    replace=True)
         return 0
 
     def read_series(self, name: str, raw: bool = False) -> DataFrame:
@@ -663,20 +664,12 @@ class Catalog:
             self._update_meta(
                 name, flush_batches=meta.flush_batches + [meta.batch_no])
         ttl = self._effective_ttl(meta)
-        if not ttl:
-            return
-        data_path = os.path.join(self._table_path(name), "data")
-        if not self._has_data(data_path):
-            return
-        if ttl.lower() == "instant":
-            import shutil
-
-            shutil.rmtree(data_path)
-            self._update_meta(name)
-            return
+        if not ttl or meta.on_physical:
+            return  # a logical table's rows live in its physical table
         self.delete(
             name,
-            F.col(_phys_name(meta.time_index))
+            F.lit(True) if ttl.lower() == "instant"
+            else F.col(_phys_name(meta.time_index))
             < F.current_timestamp() - F.expr(_ttl_interval(ttl)),
             _from_logical=True,  # engine-internal expiry, not a user DELETE
         )
@@ -690,26 +683,26 @@ class Catalog:
         """
         self.flush_table(name)
         meta = self.meta(name)
-        if meta.flush_batches:
-            # compaction merges all sealed SSTs into one segment
-            self._update_meta(name, flush_batches=[meta.flush_batches[-1]])
-            meta = self.meta(name)
-        data_path = os.path.join(self._table_path(name), "data")
-        if not self._has_data(data_path):
-            return
-        # mergeSchema: ALTER-generation columns may exist in a subset of the
-        # files — first-file schema would silently drop them
-        df = self.spark.read.option("mergeSchema", "true").parquet(data_path)
-        merged = merge_view(df, meta, keep_seq=True).withColumn(
-            BUCKET_COL, F.date_trunc(meta.partition_granularity, F.col(meta.time_index))
-        )
-        tmp = data_path + ".compact"
-        merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(tmp)
-        import shutil
+        # compaction merges all sealed SSTs into one segment
+        sealed = meta.flush_batches[-1:]
+        df = self._scan(name)
+        if df is None:
+            self._update_meta(name, flush_batches=sealed)
+        else:
+            self._write(meta, merge_view(df, meta, keep_seq=True),
+                        replace=True, flush_batches=sealed)
 
-        shutil.rmtree(data_path)
-        os.rename(tmp, data_path)
-        self._update_meta(name)
+    def stored_rows(self, name: str) -> DataFrame | None:
+        """Stored rows under their declared column names, each with its
+        ingest batch number in ``__batch`` (per-file statistics such as
+        information_schema.ssts); None when the table has no file."""
+        df = self._scan(name)
+        if df is None:
+            return None
+        ren = {_phys_name(e[0]): e[0] for e in self.meta(name).columns or []}
+        return df.withColumnsRenamed(
+            {p: c for p, c in ren.items() if p != c and p in df.columns}
+        ).withColumn("__batch", batch_of())
 
     def list_tables(self) -> list[str]:
         return sorted(
@@ -729,9 +722,10 @@ def merge_view(df: DataFrame, meta: TableMeta, keep_seq: bool = False) -> DataFr
     LastNonNull → per-field last(col, ignorenulls) over ingest order
                (reference dedup.rs LastNonNull / LastFieldsBuilder)
 
-    Single shuffle on the primary key either way; both window and groupBy
-    aggregate are partial-agg friendly, so this scales linearly with series
-    count rather than row count per partition.
+    Single shuffle on the primary key either way. The LastNonNull groupBy
+    aggregate is partial-agg friendly (each partition pre-merges its keys
+    before the shuffle); the LastRow ``row_number`` window is not, so every
+    stored row crosses the shuffle.
     """
     keys = [*meta.tags, meta.time_index]
     non_keys = [c for c in df.columns if c not in keys and c not in (SEQ_COL, BUCKET_COL)]

@@ -21,7 +21,7 @@ from __future__ import annotations
 import json
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
@@ -113,13 +113,13 @@ def _normalize(txts: pd.Series, sks: pd.Series) -> pd.Series:
 
 
 def apply_sst_union_schema(
-    df: DataFrame, cols: list[str], flush_batches: list[int], seq_col: str
+    df: DataFrame, cols: list[str], flush_batches: list[int], batch: Column
 ) -> DataFrame:
     """Replace each json2 column's variant with its per-segment normalized
-    form. ``flush_batches``: ingest batch numbers sealed at each flush (a
-    compaction collapses all sealed boundaries into the last one); rows past
-    the last boundary form the memtable segment."""
-    batch = F.shiftright(F.col(seq_col), 33)
+    form. ``batch``: each row's ingest batch number; ``flush_batches``:
+    ingest batch numbers sealed at each flush (a compaction collapses all
+    sealed boundaries into the last one); rows past the last boundary form
+    the memtable segment."""
     seg = F.lit(0)
     for b in flush_batches:
         seg = seg + (batch > F.lit(int(b))).cast("int")

@@ -348,7 +348,8 @@ def parse_loki_push(payloads: DataFrame, payload_col: str = "payload") -> DataFr
                 F.get(v, 1).cast("string").alias("line"),
                 F.when(ts_raw.try_cast("long").isNull(),
                        F.concat(F.lit("invalid loki timestamp: "),
-                                ts_raw)).cast("string").alias("err"),
+                                F.coalesce(ts_raw, F.lit("null"))))
+                .cast("string").alias("err"),
             )
 
         return F.transform(
@@ -435,21 +436,28 @@ _OTLP_DP = (f"struct<timeUnixNano:string,asDouble:double,asInt:string,"
 _OTLP_HIST_DP = (f"struct<timeUnixNano:string,count:string,sum:double,"
                  f"bucketCounts:array<string>,explicitBounds:array<double>,"
                  f"attributes:{_OTLP_ATTR}>")
+_OTLP_QUANTILE = "struct<quantile:double,value:double>"
 _OTLP_SUMM_DP = (
     f"struct<timeUnixNano:string,count:string,sum:double,"
-    f"quantileValues:array<struct<quantile:double,value:double>>,"
+    f"quantileValues:array<{_OTLP_QUANTILE}>,"
     f"attributes:{_OTLP_ATTR}>")
-_OTLP_SCHEMA = (
-    f"resourceMetrics array<struct<"
-    f"resource:struct<attributes:{_OTLP_ATTR}>,"
-    f"scopeMetrics:array<struct<metrics:array<struct<"
-    f"name:string,"
+_OTLP_METRIC = (
+    f"struct<name:string,"
     f"gauge:struct<dataPoints:array<{_OTLP_DP}>>,"
     f"sum:struct<dataPoints:array<{_OTLP_DP}>,isMonotonic:boolean>,"
     f"histogram:struct<dataPoints:array<{_OTLP_HIST_DP}>>,"
-    f"summary:struct<dataPoints:array<{_OTLP_SUMM_DP}>>"
-    f">>>>>>"
+    f"summary:struct<dataPoints:array<{_OTLP_SUMM_DP}>>>")
+_OTLP_SCOPE_METRICS = f"struct<metrics:array<{_OTLP_METRIC}>>"
+_OTLP_SCHEMA = (
+    f"resourceMetrics array<struct<"
+    f"resource:struct<attributes:{_OTLP_ATTR}>,"
+    f"scopeMetrics:array<{_OTLP_SCOPE_METRICS}>>>"
 )
+
+
+def _no_elems(elem_type: str):
+    """An empty ``array<elem_type>``: the fallback for an absent JSON array."""
+    return F.expr(f"CAST(array() AS array<{elem_type}>)")
 
 
 def _fmt_f64_tag(c):
@@ -501,7 +509,7 @@ def parse_otlp_metrics_json(
     row_t = (f"struct<table:string,tags:map<string,string>,"
              f"{TIME_INDEX}:timestamp,{VALUE_COL}:double,"
              f"metric_type:string,err:string>")
-    no_rows = F.expr(f"CAST(array() AS array<{row_t}>)")
+    no_rows = _no_elems(row_t)
     empty_attrs = F.expr(f"CAST(array() AS {_OTLP_ATTR})")
     empty_map = F.expr("CAST(map() AS map<string,string>)")
 
@@ -545,8 +553,7 @@ def parse_otlp_metrics_json(
 
         return F.when(
             m[kind].isNotNull(),
-            F.transform(F.coalesce(m[kind]["dataPoints"],
-                                   F.expr(f"CAST(array() AS array<{_OTLP_DP}>)")),
+            F.transform(F.coalesce(m[kind]["dataPoints"], _no_elems(_OTLP_DP)),
                         row),
         ).otherwise(no_rows)
 
@@ -561,8 +568,7 @@ def parse_otlp_metrics_json(
         def dp_rows(dp):
             tags = _tags(ra, dp["attributes"])
             err = _ts_err(dp["timeUnixNano"])
-            buckets = F.coalesce(dp["bucketCounts"],
-                                 F.expr("CAST(array() AS array<string>)"))
+            buckets = F.coalesce(dp["bucketCounts"], _no_elems("string"))
             bounds = dp["explicitBounds"]
 
             def bucket_row(cnt, idx):
@@ -599,7 +605,7 @@ def parse_otlp_metrics_json(
             m["histogram"].isNotNull(),
             F.flatten(F.transform(
                 F.coalesce(m["histogram"]["dataPoints"],
-                           F.expr(f"CAST(array() AS array<{_OTLP_HIST_DP}>)")),
+                           _no_elems(_OTLP_HIST_DP)),
                 dp_rows)),
         ).otherwise(no_rows)
 
@@ -626,8 +632,7 @@ def parse_otlp_metrics_json(
             return F.concat(
                 F.transform(
                     F.coalesce(dp["quantileValues"],
-                               F.expr("CAST(array() AS array<struct<"
-                                      "quantile:double,value:double>>)")),
+                               _no_elems(_OTLP_QUANTILE)),
                     q_row),
                 F.array(count_row),
                 F.when(dp["sum"].isNotNull(),
@@ -638,7 +643,7 @@ def parse_otlp_metrics_json(
             m["summary"].isNotNull(),
             F.flatten(F.transform(
                 F.coalesce(m["summary"]["dataPoints"],
-                           F.expr(f"CAST(array() AS array<{_OTLP_SUMM_DP}>)")),
+                           _no_elems(_OTLP_SUMM_DP)),
                 dp_rows)),
         ).otherwise(no_rows)
 
@@ -649,24 +654,9 @@ def parse_otlp_metrics_json(
     def _rm_rows(rm):
         ra = rm["resource"]["attributes"]
         return F.flatten(F.transform(
-            F.coalesce(rm["scopeMetrics"],
-                       F.expr(f"CAST(array() AS array<struct<metrics:array<"
-                              f"struct<name:string,"
-                              f"gauge:struct<dataPoints:array<{_OTLP_DP}>>,"
-                              f"sum:struct<dataPoints:array<{_OTLP_DP}>,"
-                              f"isMonotonic:boolean>,"
-                              f"histogram:struct<dataPoints:array<{_OTLP_HIST_DP}>>,"
-                              f"summary:struct<dataPoints:array<{_OTLP_SUMM_DP}>>"
-                              f">>>>)")),
+            F.coalesce(rm["scopeMetrics"], _no_elems(_OTLP_SCOPE_METRICS)),
             lambda sm: F.flatten(F.transform(
-                F.coalesce(sm["metrics"],
-                           F.expr(f"CAST(array() AS array<struct<name:string,"
-                                  f"gauge:struct<dataPoints:array<{_OTLP_DP}>>,"
-                                  f"sum:struct<dataPoints:array<{_OTLP_DP}>,"
-                                  f"isMonotonic:boolean>,"
-                                  f"histogram:struct<dataPoints:array<{_OTLP_HIST_DP}>>,"
-                                  f"summary:struct<dataPoints:array<{_OTLP_SUMM_DP}>>"
-                                  f">>)")),
+                F.coalesce(sm["metrics"], _no_elems(_OTLP_METRIC)),
                 lambda m: _metric_rows(ra, m)))))
 
     parsed = payloads.select(
@@ -698,12 +688,13 @@ _OTLP_LOGREC = (
     f"body:struct<stringValue:string>,attributes:{_OTLP_ATTR},"
     f"traceId:string,spanId:string,flags:int>"
 )
+_OTLP_SCOPE = "struct<name:string,version:string>"
+_OTLP_SCOPE_LOGS = (f"struct<scope:{_OTLP_SCOPE},"
+                    f"logRecords:array<{_OTLP_LOGREC}>>")
 _OTLP_LOGS_SCHEMA = (
     f"resourceLogs array<struct<"
     f"resource:struct<attributes:{_OTLP_ATTR}>,"
-    f"scopeLogs:array<struct<"
-    f"scope:struct<name:string,version:string>,"
-    f"logRecords:array<{_OTLP_LOGREC}>>>>>"
+    f"scopeLogs:array<{_OTLP_SCOPE_LOGS}>>>"
 )
 
 
@@ -766,13 +757,9 @@ def parse_otlp_logs_json(
             )
 
         return F.flatten(F.transform(
-            F.coalesce(rl["scopeLogs"],
-                       F.expr(f"CAST(array() AS array<struct<"
-                              f"scope:struct<name:string,version:string>,"
-                              f"logRecords:array<{_OTLP_LOGREC}>>>)")),
+            F.coalesce(rl["scopeLogs"], _no_elems(_OTLP_SCOPE_LOGS)),
             lambda sl: F.transform(
-                F.coalesce(sl["logRecords"],
-                           F.expr(f"CAST(array() AS array<{_OTLP_LOGREC}>)")),
+                F.coalesce(sl["logRecords"], _no_elems(_OTLP_LOGREC)),
                 lambda r: rec_row(sl, r))))
 
     all_rows = F.when(
@@ -1231,12 +1218,11 @@ _OTLP_SPAN = (
     f"kind:string,startTimeUnixNano:string,endTimeUnixNano:string,"
     f"attributes:{_OTLP_ATTR},status:struct<code:string,message:string>>"
 )
+_OTLP_SCOPE_SPANS = f"struct<scope:{_OTLP_SCOPE},spans:array<{_OTLP_SPAN}>>"
 _OTLP_TRACES_SCHEMA = (
     f"resourceSpans array<struct<"
     f"resource:struct<attributes:{_OTLP_ATTR}>,"
-    f"scopeSpans:array<struct<"
-    f"scope:struct<name:string,version:string>,"
-    f"spans:array<{_OTLP_SPAN}>>>>>"
+    f"scopeSpans:array<{_OTLP_SCOPE_SPANS}>>>"
 )
 
 
@@ -1317,13 +1303,9 @@ def parse_otlp_traces_json(
             )
 
         return F.flatten(F.transform(
-            F.coalesce(rs["scopeSpans"],
-                       F.expr(f"CAST(array() AS array<struct<"
-                              f"scope:struct<name:string,version:string>,"
-                              f"spans:array<{_OTLP_SPAN}>>>)")),
+            F.coalesce(rs["scopeSpans"], _no_elems(_OTLP_SCOPE_SPANS)),
             lambda ss: F.transform(
-                F.coalesce(ss["spans"],
-                           F.expr(f"CAST(array() AS array<{_OTLP_SPAN}>)")),
+                F.coalesce(ss["spans"], _no_elems(_OTLP_SPAN)),
                 lambda s: span_row(ss, s))))
 
     all_rows = F.when(

@@ -4977,17 +4977,14 @@ class GreptimeSQL:
         per partition region that received rows in that flush window
         (reference mito2 flush; information_schema/ssts.rs). The per-file
         stats (rows, series, ts range, memcomparable primary-key min/max) are
-        computed from the stored rows' ``__seq`` batch numbers against the
+        computed from the stored rows' ingest batch numbers against the
         table's recorded flush boundaries. Index metadata follows the
         reference's puffin blob layout model: Roaring bitmap of 18 bytes per
         distinct key, FST of 51 + key-bytes, 8-byte null bitmap (matches
         ssts.result goldens for 1- and 2-row SSTs)."""
         import datetime as _dt
-        import os as _os
         import struct as _struct
         import uuid as _uuid
-
-        from greptimedb_spark.catalog import SEQ_COL, _phys_name
 
         def _enc_pk(vals, types):
             out = b""
@@ -5009,8 +5006,8 @@ class GreptimeSQL:
             fbs = list(getattr(meta, "flush_batches", []) or [])
             if not fbs or getattr(meta, "on_physical", None):
                 continue
-            data_path = _os.path.join(self.catalog._table_path(t), "data")
-            if not self.catalog._has_data(data_path):
+            raw = self.catalog.stored_rows(t)
+            if raw is None:
                 continue
             tid = 1024 + i
             cols = meta.columns or []
@@ -5022,11 +5019,6 @@ class GreptimeSQL:
                                  .lower())
             parts = [(int(p[2][1:]), p[4]) for p in self._table_partitions()
                      if p[1] == t] or [(0, None)]
-            raw = self.spark.read.parquet(data_path)
-            ren = {_phys_name(e[0]): e[0] for e in cols}
-            for p, lg in ren.items():
-                if p != lg and p in raw.columns:
-                    raw = raw.withColumnRenamed(p, lg)
             sel = [c for c in ([meta.time_index] + meta.tags) if c in raw.columns]
             indexed = [(e[0], e[6]) for e in cols
                        if len(e) > 6 and isinstance(e[6], dict) and e[6]]
@@ -5034,8 +5026,8 @@ class GreptimeSQL:
             # per-file stats via TWO bounded aggregations (one per (flush
             # batch, region), one per flush batch) — never a full-row
             # collect; the driver only receives #batches x #regions rows
-            raw2 = raw.select(SEQ_COL, *sel)
-            seqb = F.shiftright(F.col(SEQ_COL), 33)
+            raw2 = raw.select("__batch", *sel)
+            seqb = F.col("__batch")
             fi_col = F.lit(None).cast("int")
             for fi in range(len(fbs) - 1, -1, -1):
                 lo_b = fbs[fi - 1] if fi else 0
@@ -5417,7 +5409,7 @@ class GreptimeSQL:
         max(skip_wal_since, last flush) — the WAL has nothing to replay for
         them (reference skip_wal option; sqlness common/skip_wal). All other
         tables recover fully, so restart is a no-op for them."""
-        from greptimedb_spark.catalog import SEQ_COL
+        from greptimedb_spark.catalog import since_batch
 
         for t in self.catalog.list_tables():
             meta = self.catalog.meta(t)
@@ -5427,8 +5419,7 @@ class GreptimeSQL:
             floor = max(since, meta.flush_batches[-1]
                         if meta.flush_batches else 0)
             self.catalog.delete(
-                t, F.col(SEQ_COL) >= F.lit((floor + 1) << 33),
-                _from_logical=True)
+                t, since_batch(floor + 1), _from_logical=True)
 
     def _show_create_table(self, name: str):
         """Render the reference's SHOW CREATE TABLE output (reference
@@ -7189,6 +7180,16 @@ class GreptimeSQL:
                 return re.sub(r'"([^"]+)"', r"`\1`", seg)
 
             text = _map_outside_strings(text, _idquotes)
+        temps = []  # this statement's materialized RANGE parts
+
+        def _materialize(body: str) -> str:
+            # an internal name: a CTE name or subquery alias used as the
+            # view name would shadow the catalog table bound under it
+            self._subq_no = getattr(self, "_subq_no", 0) + 1
+            temps.append(f"__range_sub_{self._subq_no}")
+            self.sql(body).createOrReplaceTempView(temps[-1])
+            return temps[-1]
+
         wm = re.match(r"\s*WITH\s+", text, re.IGNORECASE)
         if wm and re.search(r"\bALIGN\s+['(]", text, re.IGNORECASE):
             # RANGE query inside a CTE (reference cte/cte.sql): materialize
@@ -7200,8 +7201,12 @@ class GreptimeSQL:
                 if not nm:
                     break
                 inner, rem = _balanced_paren(rest[nm.end() - 1:])
-                self.sql(inner).createOrReplaceTempView(nm.group(1))
-                rem = rem.lstrip()
+                vname = _materialize(inner)
+                # later CTEs and the trailing SELECT read it by its name
+                ref = re.compile(rf"(?i)(\b(?:FROM|JOIN)\s+){nm.group(1)}\b"
+                                 rf"|\b{nm.group(1)}(?=\s*\.)")
+                rem = _map_outside_strings(rem, lambda seg: ref.sub(
+                    lambda m: (m.group(1) or "") + vname, seg)).lstrip()
                 if rem.startswith(","):
                     rest = rem[1:]
                     continue
@@ -7218,25 +7223,30 @@ class GreptimeSQL:
                 if not fm:
                     break
                 inner, rest = _balanced_paren(text[fm.end() - 1:])
-                # `FROM (…) alias` — the alias becomes the view name so
-                # alias-qualified columns keep resolving
                 am = re.match(r"\s*(?:AS\s+)?([A-Za-z_]\w*)", rest)
                 kw = {"align", "where", "group", "order", "limit", "by",
                       "fill", "to", "union", "on", "join", "left", "right",
                       "inner", "cross", "having"}
+                alias = None
                 if am and am.group(1).lower() not in kw:
-                    vname = am.group(1)
+                    alias = am.group(1)
                     rest = rest[am.end():]
-                else:
-                    self._subq_no = getattr(self, "_subq_no", 0) + 1
-                    vname = f"__range_sub_{self._subq_no}"
-                self.sql(inner).createOrReplaceTempView(vname)
-                text = text[: fm.start()] + f"FROM {vname}" + rest
-                # alias-qualified refs (tmp.val) resolve against the plain
-                # columns of the aggregated frame inside range_select —
-                # strip the qualifier (range/nest.sql:70-75)
-                text = re.sub(rf"\b{re.escape(vname)}\s*\.\s*(\w)", r"\1",
-                              text)
+                text = text[: fm.start()] + f"FROM {_materialize(inner)}" + rest
+                if alias:
+                    # alias-qualified refs (tmp.val) resolve against the
+                    # plain columns of the aggregated frame inside
+                    # range_select — strip the qualifier (range/nest.sql)
+                    text = re.sub(rf"\b{re.escape(alias)}\s*\.\s*(\w)",
+                                  r"\1", text)
+        try:
+            return self._run_final(text, time_index)
+        finally:
+            for v in temps:
+                self.spark.catalog.dropTempView(v)
+
+    def _run_final(self, text: str, time_index: str) -> DataFrame:
+        """Bind the tables the final rewritten ``text`` names and run it
+        through RANGE planning or Spark."""
         # the one binding step: every catalog table the final text names
         self._bind(_idents(text))
         if re.search(r"\bALIGN\s+['(]", text, re.IGNORECASE):

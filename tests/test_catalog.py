@@ -151,3 +151,91 @@ def test_drop_readd_never_modified_no_resurrection(spark, tmp_path):
         .selectExpr("timestamp_millis(t) AS ts", "v")
     cat.insert("dr", df2)
     assert {r.v for r in cat.read("dr").collect()} == {None, 9.0}
+
+
+def _files_per_bucket(cat, name):
+    """{bucket directory: parquet file count} of a table's stored files."""
+    import pathlib
+
+    data = pathlib.Path(cat.base_path) / name / "data"
+    return {d.name: len(list(d.glob("*.parquet")))
+            for d in data.iterdir() if d.is_dir()}
+
+
+def _influx_frame(spark):
+    from pyspark.sql import functions as F
+
+    from greptimedb_spark.sources import protocols
+
+    sec = 10**9
+    lines = spark.createDataFrame(
+        [(f"cpu,host=h{i % 3} usage={i}.5 "
+          f"{(1704067200 + (i % 2) * 86_400 + i) * sec}",)
+         for i in range(40)], "line string").repartition(4)
+    wide = protocols.influx_pivot(protocols.parse_influx_lines(lines), "cpu")
+    return wide.select(F.col(protocols.TIME_INDEX).alias("ts"),
+                       F.col("tags")["host"].alias("sensor_id"),
+                       F.col("usage").cast("double").alias("temperature"),
+                       F.lit(None).cast("double").alias("humidity"))
+
+
+@pytest.mark.parametrize("frame", ["one_partition", "four_partitions", "influx"])
+def test_one_file_per_bucket(cat, spark, frame):
+    """Every write stores one file per time bucket: an insert whatever its
+    input partitioning, and the DELETE and compaction rewrites."""
+    if frame == "influx":
+        df = _influx_frame(spark)
+    else:
+        rows = [(dt.datetime(2024, 1, 1 + i % 2, 0, 0, i), f"s{i % 3}",
+                 float(i), None) for i in range(40)]
+        df = spark.createDataFrame(rows, SCHEMA)
+        n = 1 if frame == "one_partition" else 4
+        df = df.repartition(n)
+        assert df.rdd.getNumPartitions() == n
+    meta = TableMeta(name=f"layout_{frame}", time_index="ts", tags=["sensor_id"])
+    cat.create_table(meta)
+    cat.insert(meta.name, df)
+    assert list(_files_per_bucket(cat, meta.name).values()) == [1, 1]
+    cat.insert(meta.name, df)
+    assert list(_files_per_bucket(cat, meta.name).values()) == [2, 2]
+    cat.delete(meta.name, "sensor_id = 's0'")
+    assert list(_files_per_bucket(cat, meta.name).values()) == [1, 1]
+    cat.insert(meta.name, df)
+    cat.compact(meta.name)
+    assert list(_files_per_bucket(cat, meta.name).values()) == [1, 1]
+    assert cat.read(meta.name).count() == 40
+
+
+@pytest.mark.parametrize("alter", ["add", "modify"])
+@pytest.mark.parametrize("rewrite", ["delete", "ttl"])
+def test_rewrite_keeps_later_generation(spark, tmp_path, alter, rewrite):
+    """A DELETE or TTL rewrite keeps the values of a column that only files
+    written after ALTER TABLE ... ADD/MODIFY COLUMN carry, here a later day
+    bucket than the older rows."""
+    day = dt.timedelta(days=1)
+    base = dt.datetime.combine(dt.date.today() - 8 * day, dt.time())
+    cat = Catalog(spark, str(tmp_path))
+    cat.create_table(TableMeta(
+        name="gen", time_index="ts", tags=["k"],
+        ttl="7 days" if rewrite == "ttl" else None,
+        columns=[["ts", "timestamp"], ["k", "string"], ["v", "double"]]))
+    cat.insert("gen", spark.createDataFrame(
+        [(base, "a", 1.0), (base + dt.timedelta(seconds=1), "b", 2.0)],
+        "ts timestamp, k string, v double"))
+    if alter == "add":
+        cat.add_column("gen", ["c", "double", "DOUBLE", None, False])
+        new = spark.createDataFrame([(base + 2 * day, "c", 3.0, 30.0)],
+                                    "ts timestamp, k string, v double, c double")
+        col, want = "c", {"b": None, "c": 30.0}
+    else:
+        cat.modify_column("gen", "v", "string", "STRING")
+        new = spark.createDataFrame([(base + 2 * day, "c", "x")],
+                                    "ts timestamp, k string, v string")
+        col, want = "v", {"b": "2.0", "c": "x"}
+    cat.insert("gen", new)
+    if rewrite == "delete":
+        cat.delete("gen", "k = 'a'")
+    else:
+        cat.flush_table("gen")  # expires a and b (older than 7 days)
+        want = {"c": want["c"]}
+    assert {r.k: r[col] for r in cat.read("gen").collect()} == want

@@ -194,6 +194,20 @@ def test_loki_push(spark):
     assert any("invalid loki timestamp: xyz" in e for e in errs)
 
 
+def test_loki_null_timestamp_quarantined(spark):
+    """A null timestamp and a null value pair are quarantined into ``err``,
+    never stored as a row with a NULL time index."""
+    df = spark.createDataFrame([Row(payload=(
+        '{"streams":[{"stream":{"a":"b"},'
+        '"values":[[null,"no ts"],null,["1663840496000000000","ok"]]}]}'))])
+    rows = proto.parse_loki_push(df).collect()
+    assert [r["line"] for r in rows if r["err"] is None] == ["ok"]
+    assert all(r[proto.TIME_INDEX] is not None
+               for r in rows if r["err"] is None)
+    assert [r["err"] for r in rows if r["err"] is not None] == [
+        "invalid loki timestamp: null"] * 2
+
+
 def test_elasticsearch_bulk(spark):
     body = ('{"create":{"_index":"logs"}}\n'
             '{"msg":"hello","level":"info"}\n'

@@ -231,3 +231,42 @@ def test_range_limit_and_offset(spark, host_df):
     out = _ordered(spark, host_df, base + " ORDER BY host, ts LIMIT 2 OFFSET 1")
     assert [int(r.ts.timestamp()) for r in out.collect()] == [5, 10]
     assert len(_ordered(spark, host_df, base + " LIMIT 3").collect()) == 3
+
+
+@pytest.fixture()
+def host_table(spark, tmp_path):
+    """A catalog table ``host`` (h, v = 1..10) behind the SQL front door."""
+    from greptimedb_spark.catalog import Catalog
+    from greptimedb_spark.sql import GreptimeSQL
+
+    g = GreptimeSQL(spark, catalog=Catalog(spark, str(tmp_path / "cat")))
+    g.sql("CREATE TABLE host (ts TIMESTAMP(3) TIME INDEX, "
+          "h STRING PRIMARY KEY, v DOUBLE)")
+    g.sql("INSERT INTO host VALUES " + ", ".join(
+        f"({i * 1000}, 'h{i % 2}', {float(i)})" for i in range(1, 11)))
+    yield g
+    g.sql("DROP TABLE host")
+
+
+def test_range_part_names_do_not_shadow_tables(host_table):
+    """A RANGE subquery aliased, or a CTE named, like a table does not
+    replace that table for later statements."""
+    g = host_table
+    sub = ("SELECT ts, h, max(v) RANGE '10s' AS m FROM "
+           "(SELECT ts, h, v * 100 AS v FROM host) host ALIGN '10s' BY (h)")
+    assert max(r.m for r in g.sql(sub).collect()) == 1000.0
+    assert g.sql("SELECT max(v) AS m FROM host").first().m == 10.0
+    cte = ("WITH host AS (SELECT ts, h, max(v) RANGE '10s' AS v FROM host "
+           "ALIGN '10s' BY (h)) SELECT count(*) AS n FROM host WHERE "
+           "host.v > 0")
+    assert g.sql(cte).first().n == 3
+    assert g.sql("SELECT count(*) AS n FROM host").first().n == 10
+
+
+def test_range_parts_leave_no_views(spark, host_table):
+    sub = ("SELECT ts, h, max(v) RANGE '10s' AS m FROM "
+           "(SELECT ts, h, v FROM host) ALIGN '10s' BY (h)")
+    for _ in range(3):
+        assert host_table.sql(sub).count() == 3
+    assert not [t.name for t in spark.catalog.listTables()
+                if t.name.startswith("__range")]
