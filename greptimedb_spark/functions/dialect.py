@@ -129,27 +129,11 @@ def register(spark) -> None:
         "RETURNS STRING RETURN CASE WHEN p IS NULL THEN NULL "
         "ELSE substring(s, greatest(p, 1)) END"
     )
-    # DataFusion to_unixtime: accepts ISO-8601 with 'Z'/offset suffixes,
-    # bare dates, surrounding whitespace, and numeric epoch passthrough
     # 2-arg regexp_extract = whole-match (group 0) in DataFusion
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION gt_regexp_extract0"
         "(s STRING, p STRING) RETURNS STRING "
         "RETURN regexp_extract(s, p, 0)"
-    )
-    # (reference datafusion to_unixtime; select/dummy.sql goldens)
-    spark.sql(
-        "CREATE OR REPLACE TEMPORARY FUNCTION gt_to_unixtime(x STRING) "
-        "RETURNS BIGINT RETURN CASE "
-        "WHEN try_cast(trim(x) AS DOUBLE) IS NOT NULL "
-        "THEN CAST(try_cast(trim(x) AS DOUBLE) AS BIGINT) "
-        "ELSE unix_seconds(coalesce("
-        "try_to_timestamp(trim(x)), "
-        "try_to_timestamp(trim(x), \"yyyy-MM-dd'T'HH:mm:ssXXX\"), "
-        "try_to_timestamp(trim(x), \"yyyy-MM-dd'T'HH:mm:ssX\"), "
-        "try_to_timestamp(trim(x), 'yyyy-MM-dd HH:mm:ssZ'), "
-        "try_to_timestamp(trim(x), 'yyyy-MM-dd HH:mm:ssXXX'), "
-        "try_to_timestamp(trim(x), 'yyyy-MM-dd'))) END"
     )
     # clamp family (reference scalars/math/clamp.rs) — pure min/max algebra;
     # min > max raises (function/arithmetic.sql golden), via raise_error in
@@ -181,4 +165,43 @@ def register(spark) -> None:
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION gt_btrim(s STRING, c STRING) "
         "RETURNS STRING RETURN trim(BOTH c FROM s)"
+    )
+    # DataFusion numeric trunc(x, d): truncate toward zero at 10^-d (d may
+    # be negative)
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY FUNCTION gt_trunc("
+        "x DOUBLE, d INT) RETURNS DOUBLE RETURN "
+        "CAST(CAST(x * POW(10, d) AS BIGINT) AS DOUBLE) / POW(10, d)"
+    )
+
+
+def register_zoned(spark) -> None:
+    """The pure-SQL helpers that read the session time zone.  A Spark SQL
+    temporary function keeps the zone it was created under, so
+    ``functions.register_all`` creates these again after the zone changes."""
+    # DataFusion to_unixtime: accepts ISO-8601 with 'Z'/offset suffixes,
+    # bare dates, surrounding whitespace, and numeric epoch passthrough
+    # (reference datafusion to_unixtime; select/dummy.sql goldens)
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY FUNCTION gt_to_unixtime(x STRING) "
+        "RETURNS BIGINT RETURN CASE "
+        "WHEN try_cast(trim(x) AS DOUBLE) IS NOT NULL "
+        "THEN CAST(try_cast(trim(x) AS DOUBLE) AS BIGINT) "
+        "ELSE unix_seconds(coalesce("
+        "try_to_timestamp(trim(x)), "
+        "try_to_timestamp(trim(x), \"yyyy-MM-dd'T'HH:mm:ssXXX\"), "
+        "try_to_timestamp(trim(x), \"yyyy-MM-dd'T'HH:mm:ssX\"), "
+        "try_to_timestamp(trim(x), 'yyyy-MM-dd HH:mm:ssZ'), "
+        "try_to_timestamp(trim(x), 'yyyy-MM-dd HH:mm:ssXXX'), "
+        "try_to_timestamp(trim(x), 'yyyy-MM-dd'))) END"
+    )
+    # DataFusion date_bin(interval, ts, origin): origin-aligned tumbling
+    # bucket; the interval width in ms is derived via origin+i
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY FUNCTION gt_date_bin("
+        "i INTERVAL DAY TO SECOND, t TIMESTAMP, o TIMESTAMP) "
+        "RETURNS TIMESTAMP RETURN timestamp_millis(unix_millis(o) "
+        "+ CAST(FLOOR((unix_millis(t) - unix_millis(o)) "
+        "/ (unix_millis(o + i) - unix_millis(o))) AS BIGINT) "
+        "* (unix_millis(o + i) - unix_millis(o)))"
     )

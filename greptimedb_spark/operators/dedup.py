@@ -142,18 +142,6 @@ def _perm_hash_sql(col: str, i: int) -> str:
     return f"({col} * {a}L + {b}L) & 4294967295L"
 
 
-def minhash_signature(shingle_col: Column, num_hashes: int = 128) -> Column:
-    """Expression form of the signature (for single-row/column use). The bulk
-    pipeline in minhash_lsh_pairs uses the explode+aggregate form instead —
-    array HOF lambdas are interpreted per element, aggregates are codegen'd."""
-    base = F.transform(shingle_col, lambda s: F.xxhash64(s).bitwiseAND(F.lit(0xFFFFFFFF)))
-
-    def perm(i: int):
-        return lambda h: _perm_hash(h, i)
-
-    return F.array(*[F.array_min(F.transform(base, perm(i))) for i in range(num_hashes)])
-
-
 def shingle_hashes(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
     """(id, h): DISTINCT 32-bit hashes of the k-word shingles of each doc.
 
@@ -240,9 +228,9 @@ def minhash_lsh_pairs(
     once per statement: build 0.38→0.15 s, execution byte-identical and
     unchanged (interleaved A/B min 0.99→0.79 s, med 1.17→0.96 s).
     Two statements, not one, because the per-doc profile must persist()
-    between them (below). The DataFrame twin of this pipeline lives in
-    shingle_hashes + _pairs_from_shingles and a parity test pins the two
-    formulations against each other.
+    between them (below). The q52 registry entry built on it must equal the
+    independently generated gate fixture (tests/fixtures/
+    oracle_q52_sf001.parquet) exactly — tests/test_perf_contracts.py.
 
     NOTE: registers two session temp views with a PER-CALL unique suffix
     (r11 VERDICT Wrong #3: fixed names raced concurrent calls in one
@@ -276,7 +264,7 @@ def minhash_lsh_pairs(
     single-statement shape, so the common case pays one extra tiny job and
     nothing else.
 
-    PERF EXPERIMENTS (r7, tools/bench_q52_variants.py, solo sf0.1): spilling
+    PERF EXPERIMENTS (r7, solo sf0.1): spilling
     sh to parquet and re-reading LOST to persist() (2.9s vs winner below);
     the real lever was scheduling width — AQE
     coalescePartitions.parallelismFirst=false (session default now) lets the
@@ -285,8 +273,14 @@ def minhash_lsh_pairs(
     anti-scale; the AQE route gets most of it and stays wide at 100TB.
     r11 (second pass): the row-form intersection (joining the exploded
     (id, h) relation on both sides of each candidate pair) was replaced by
-    the array-form verify — see _pairs_from_shingles for the measurements
-    and the scale argument.
+    the array-form verify, which makes the query ONE Spark job: each
+    candidate pair attaches both docs' distinct-hash arrays in the join that
+    fetches n_sh/sig, and |A∩B| = size(array_intersect(hs_a, hs_b)). The
+    candidate-pair relation then has one consumer, so AQE picks the join
+    strategy from runtime shuffle stats (the old eager pair-count job is
+    gone), and a doc's hashes cross the wire once per candidate pair as one
+    array row instead of as (id, h) rows through two exchanges. Solo A/B at
+    sf0.1 (interleaved min-of-10): 1.69 → 1.17 s min, 3.23 → 1.66 s median.
     """
     spark = df.sparkSession
     k = shingle_k
@@ -433,94 +427,6 @@ def _verify_pairs_hybrid(
         F.coalesce(F.col("__n_inter"), F.lit(0)),
     )
     return small_out.unionByName(big_out)
-
-
-def _pairs_from_shingles(
-    sh: DataFrame,
-    num_hashes: int = 128,
-    bands: int = 32,
-    jaccard_threshold: float = 0.5,
-    big_doc_hashes: int = 1 << 16,
-) -> DataFrame:
-    """DataFrame twin of minhash_lsh_pairs past the shingle stage: takes the
-    distinct (id, h) relation (cached, or re-read from columnar storage — see
-    tools/bench_q52_variants.py) and returns the verified pair set. The main
-    entry builds the same pipeline as SQL text (fewer py4j/analysis round
-    trips); a parity test pins the two formulations against each other.
-
-    r11 restructure (guide §2.4 — remove shuffles outright): the whole query
-    is now ONE Spark job. The old shape ran an eager pair-ids count() job
-    (to pick broadcast vs shuffle joins and to keep the band self-join from
-    re-executing under its two consumers) and verified |A∩B| by joining the
-    exploded (id, h) relation onto each side of every candidate pair —
-    2 exchanges + a (pair)-keyed aggregate + a 3-way final join. Now the
-    per-doc profile carries the distinct-hash ARRAY, each candidate pair
-    attaches the two arrays in the same join that fetches n_sh/sig, and
-    |A∩B| = size(array_intersect(hs_a, hs_b)) computed in place:
-
-    - the candidate-pair relation has exactly ONE consumer, so nothing needs
-      eager materialization and AQE picks the join strategy from runtime
-      shuffle stats (strictly better than the old static ≤1M-rows count
-      guard: the decision sees actual bytes, and the count job disappears);
-    - shuffle bytes DROP at scale: a doc's hash set crosses the wire once as
-      one 8-bytes-per-hash array row per candidate pair, where the row form
-      shipped the same hashes as (id, h) rows through two exchanges plus a
-      shuffled (pair, count) aggregate. A hot doc in m pairs replicates its
-      array m times — the row form replicated its rows m times through the
-      same joins, so the fan-out bound is unchanged (and the pair join is a
-      join, so AQE skew splitting still applies);
-    - solo A/B at sf0.1 (interleaved min-of-10, quiet-window): 1.69 → 1.17 s
-      min, 3.23 → 1.66 s median — and the tail tightens (worst rep 8.78 →
-      2.55 s) because fewer sequential stage barriers are exposed to host
-      load spikes.
-    """
-    # One grouped pass produces the per-doc shingle count, the minhash
-    # signature (num_hashes fixed-width ints — bounded row payload) and the
-    # distinct-hash array used by the exact verify.
-    # signature + banding as single expr() strings: one py4j call each
-    # instead of hundreds of Column-op round trips (see _perm_hash_sql)
-    per_doc = sh.groupBy("id").agg(
-        F.count(F.lit(1)).alias("n_sh"),
-        F.expr(
-            "array("
-            + ",".join(f"min({_perm_hash_sql('h', i)})" for i in range(num_hashes))
-            + ")"
-        ).alias("sig"),
-        F.collect_list("h").alias("hs"),
-    ).persist()  # consumed by banding and both sides of the pair join
-    # same big-doc guard as minhash_lsh_pairs (parity twin)
-    if per_doc.filter(F.col("n_sh") > big_doc_hashes).limit(1).count():
-        return _verify_pairs_hybrid(
-            per_doc, num_hashes, bands, jaccard_threshold, big_doc_hashes
-        )
-    band_exprs = _band_exprs_sql(num_hashes, bands)
-    banded = per_doc.select(
-        "id", F.explode(F.expr("array(" + ",".join(band_exprs) + ")")).alias("bucket")
-    )
-    a, b_ = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(b_, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-    out = (
-        cand.join(per_doc.select(F.col("id").alias("id_a"), F.col("n_sh").alias("na"),
-                                 F.col("sig").alias("sig_a"), F.col("hs").alias("hs_a")), "id_a")
-        .join(per_doc.select(F.col("id").alias("id_b"), F.col("n_sh").alias("nb"),
-                             F.col("sig").alias("sig_b"), F.col("hs").alias("hs_b")), "id_b")
-    )
-    n_inter = F.size(F.array_intersect("hs_a", "hs_b"))
-    matches = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")), lambda v: v == 1)
-    )
-    jacc = n_inter / (F.col("na") + F.col("nb") - n_inter)
-    return (
-        out.withColumn("jaccard", F.round(jacc, 6))
-        .withColumn("est_jaccard", F.round(matches / F.lit(num_hashes), 6))
-        .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "est_jaccard", "jaccard")
-    )
 
 
 # -- SimHash ---------------------------------------------------------------------

@@ -1477,8 +1477,3 @@ class PromQLEngine:
 
     def _scalar_to_vector(self, s: float, ctx: _Ctx) -> VectorResult:
         return VectorResult(self._grid(ctx).withColumn("value", F.lit(s)), [])
-
-    def _scalar_vector(self, s: float, ctx: _Ctx) -> VectorResult:
-        return VectorResult(
-            self._grid(ctx).withColumn("value", F.lit(s)), [], is_scalar=True
-        )

@@ -503,8 +503,7 @@ def parse_otlp_metrics_json(
     into every branch (q94: 16 scans / 16 from_json; q116: 18/18) — one
     logical parse cost 16 JSON parses of every payload. This form keeps
     exactly 1 (r12 A/B: row-multiset parity on the q94/q116 streams + edge
-    corpus, ~5x on both legs; harness tools/ab_otlp_r12.py keeps the old
-    form frozen).
+    corpus, ~5x on both legs; recorded in OPTIMIZATION_r12.md).
     """
     row_t = (f"struct<table:string,tags:map<string,string>,"
              f"{TIME_INDEX}:timestamp,{VALUE_COL}:double,"

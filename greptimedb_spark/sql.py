@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from greptimedb_spark.catalog import TableNotFoundError
+from greptimedb_spark.functions import register_all
 
 _ALIASES = {
     # greptime/datafusion name → spark name (same arity)
@@ -1176,26 +1177,7 @@ class GreptimeSQL:
         # session to UTC so a prior session's SET TIME_ZONE can't leak
         if spark.conf.get("spark.sql.session.timeZone", "UTC") != "UTC":
             spark.conf.set("spark.sql.session.timeZone", "UTC")
-        from greptimedb_spark.functions import dialect as dialect_fns
-        from greptimedb_spark.functions import ip as ip_fns
-        from greptimedb_spark.functions import json_fns
-        from greptimedb_spark.functions.sketch import register_udd
-
-        from greptimedb_spark.functions import register_all
-
-        from greptimedb_spark.functions import anomaly as anomaly_fns
-        from greptimedb_spark.functions import geo as geo_fns
-
-        register_udd(spark)
-        geo_fns.register(spark)
-        json_fns.register(spark)
-        ip_fns.register(spark)
-        dialect_fns.register(spark)
-        anomaly_fns.register(spark)
-        register_all(spark)  # text (matches_term) + vector packages
-
-    def register_metric(self, name: str, table) -> None:
-        self.promql_tables[name] = table
+        register_all(spark)
 
     # -- DDL/DML ----------------------------------------------------------
 
@@ -4415,12 +4397,6 @@ class GreptimeSQL:
             except Exception:
                 pass
 
-        from greptimedb_spark.functions.sketch import register_weighted_pct
-
-        if not getattr(self, "_apcw_done", False):
-            self._apcw_done = True
-            register_weighted_pct(self.spark)
-
         def lower(w, q, v):
             w, v = w.strip().strip('"'), v.strip().strip('"')
             e = (f"gt_apcw(array_sort(collect_list(CASE WHEN {v} IS NOT NULL "
@@ -6552,9 +6528,7 @@ class GreptimeSQL:
             self.spark.conf.set("spark.sql.session.timeZone", tz)
             # SQL temp functions (gt_to_unixtime, …) capture the session
             # zone at definition — re-register under the new zone
-            from greptimedb_spark.functions import dialect as _dialect
-
-            _dialect.register(self.spark)
+            register_all(self.spark)
             return self.spark.createDataFrame([], "result string")
         m = re.match(
             r"^\s*SET\s+(?:@@)?(?:SESSION\s+|LOCAL\s+)?(?:SESSION\.)?"
@@ -6741,26 +6715,7 @@ class GreptimeSQL:
                     flags=re.IGNORECASE),
             )
         if re.search(r"\bdate_bin\s*\(|\btrunc\s*\([^()]*,", text, re.IGNORECASE):
-            if not getattr(self, "_fns_done", False):
-                self._fns_done = True
-                # DataFusion date_bin(interval, ts, origin): origin-aligned
-                # tumbling bucket. Pure-SQL temporary function (stays inside
-                # codegen; the interval width in ms is derived via origin+i).
-                self.spark.sql(
-                    "CREATE OR REPLACE TEMPORARY FUNCTION gt_date_bin("
-                    "i INTERVAL DAY TO SECOND, t TIMESTAMP, o TIMESTAMP) "
-                    "RETURNS TIMESTAMP RETURN timestamp_millis(unix_millis(o) "
-                    "+ CAST(FLOOR((unix_millis(t) - unix_millis(o)) "
-                    "/ (unix_millis(o + i) - unix_millis(o))) AS BIGINT) "
-                    "* (unix_millis(o + i) - unix_millis(o)))"
-                )
-                # DataFusion numeric trunc(x, d): truncate toward zero at
-                # 10^-d (d may be negative)
-                self.spark.sql(
-                    "CREATE OR REPLACE TEMPORARY FUNCTION gt_trunc("
-                    "x DOUBLE, d INT) RETURNS DOUBLE RETURN "
-                    "CAST(CAST(x * POW(10, d) AS BIGINT) AS DOUBLE) / POW(10, d)"
-                )
+            # gt_date_bin / gt_trunc: functions/dialect.py
             text = re.sub(r"\bdate_bin\s*\(", "gt_date_bin(", text, flags=re.IGNORECASE)
             text = _fix_date_bin_args(text)
             text = re.sub(

@@ -147,27 +147,28 @@ def test_lsh_topk_evaluates_signature_udf_once_per_side(spark):
     assert n_py <= 6, f"signature UDF duplicated {n_py}x in plan"
 
 
-def test_minhash_sql_path_matches_dataframe_twin(spark):
-    """minhash_lsh_pairs builds its plan as SQL text (2 spark.sql calls);
-    shingle_hashes + _pairs_from_shingles is the DataFrame twin. The two
-    formulations must produce identical rows (including float rounding)."""
-    from greptimedb_spark.operators.dedup import (
-        _pairs_from_shingles,
-        minhash_lsh_pairs,
-        shingle_hashes,
-    )
-    from greptimedb_spark.queries import read
+def test_minhash_registry_entry_matches_oracle_fixture(spark, sf_dir):
+    """The q52 registry entry at the gate scale (sf0.01) equals the committed
+    fixture exactly, floats included. The fixture comes from an independent
+    generator (tools/gen_oracle_fixtures.py), so this pins the SQL-text
+    build's hashing, banding and verify against a second implementation."""
+    import os
 
-    docs = read(spark, SF, "documents")
-    kw = dict(num_hashes=32, bands=8, jaccard_threshold=0.2)
-    via_sql = minhash_lsh_pairs(docs, "doc_id", "text", shingle_k=3, **kw)
-    via_df = _pairs_from_shingles(shingle_hashes(docs, "doc_id", "text", 3), **kw)
-    assert via_sql.columns == via_df.columns
-    rows_sql = sorted(map(tuple, via_sql.collect()))
+    import pyarrow.parquet as pq
+
+    from greptimedb_spark.queries import all_queries
+
+    gate_dir = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.isdir(gate_dir):
+        pytest.skip("gate-scale testdata unavailable")
+    fixture = pq.read_table(os.path.join(
+        os.path.dirname(__file__), "fixtures", "oracle_q52_sf001.parquet"))
+    out = all_queries()["q52_minhash_lsh"].build(spark, gate_dir)
+    assert out.columns == fixture.column_names
+    got = sorted(map(tuple, out.collect()))
     spark.catalog.clearCache()
-    rows_df = sorted(map(tuple, via_df.collect()))
-    spark.catalog.clearCache()
-    assert rows_sql and rows_sql == rows_df
+    want = sorted(tuple(r.values()) for r in fixture.to_pylist())
+    assert got and got == want
 
 
 def test_minhash_pair_statement_hits_profile_cache(spark):

@@ -1,0 +1,183 @@
+-- Statement corpus for tools/diffcheck.py: a few representative statements
+-- per family, in the reference's sqlness style.  Each family runs on a fresh
+-- Catalog; a statement ends at a line ending in ';'.  Keep every statement
+-- deterministic: no wall-clock time, random values, paths or ids in results.
+
+-- family: dml
+CREATE TABLE host (ts TIMESTAMP(3) TIME INDEX, host STRING PRIMARY KEY, val BIGINT);
+INSERT INTO host VALUES (0, 'host1', 0), (5000, 'host1', NULL), (10000, 'host1', 1), (0, 'host2', 6), (5000, 'host2', 7), (10000, 'host2', NULL);
+SELECT * FROM host ORDER BY host, ts;
+INSERT INTO host VALUES (5000, 'host1', 50), (15000, 'host3', 3);
+SELECT host, count(*) AS n, sum(val) AS s FROM host GROUP BY host ORDER BY host;
+DELETE FROM host WHERE host = 'host2' AND ts = 5000;
+SELECT count(*) AS n FROM host;
+DELETE FROM host WHERE val > 10;
+SELECT host, ts, val FROM host ORDER BY host, ts;
+CREATE TABLE app_log (ts TIMESTAMP(3) TIME INDEX, app STRING, msg STRING, PRIMARY KEY (app)) WITH (append_mode = 'true');
+INSERT INTO app_log VALUES (1000, 'a', 'start'), (1000, 'a', 'start'), (2000, 'b', 'stop');
+SELECT app, msg, count(*) AS n FROM app_log GROUP BY app, msg ORDER BY app;
+CREATE TABLE lnn (ts TIMESTAMP(3) TIME INDEX, k STRING PRIMARY KEY, a BIGINT, b STRING) WITH (merge_mode = 'last_non_null');
+INSERT INTO lnn VALUES (1000, 'x', 1, 'one');
+INSERT INTO lnn (ts, k, a) VALUES (1000, 'x', 2);
+SELECT * FROM lnn;
+INSERT INTO host SELECT ts + INTERVAL '1' MINUTE, host, val FROM host WHERE host = 'host1';
+SELECT count(*) AS n, max(ts) AS last FROM host;
+TRUNCATE TABLE app_log;
+SELECT count(*) AS n FROM app_log;
+SELECT * FROM missing_table;
+DROP TABLE lnn;
+SHOW TABLES;
+
+-- family: alter
+CREATE TABLE metrics (ts TIMESTAMP(3) TIME INDEX, host STRING PRIMARY KEY, cpu DOUBLE);
+INSERT INTO metrics VALUES (1000, 'a', 1.5), (2000, 'b', 2.5);
+ALTER TABLE metrics ADD COLUMN mem DOUBLE;
+INSERT INTO metrics VALUES (3000, 'c', 3.5, 30.0);
+SELECT * FROM metrics ORDER BY ts;
+ALTER TABLE metrics ADD COLUMN disk BIGINT DEFAULT 7;
+SELECT host, disk FROM metrics ORDER BY host;
+ALTER TABLE metrics MODIFY COLUMN disk DOUBLE;
+SELECT host, disk FROM metrics ORDER BY host;
+DELETE FROM metrics WHERE host = 'a';
+SELECT host, mem, disk FROM metrics ORDER BY host;
+ALTER TABLE metrics DROP COLUMN mem;
+SELECT * FROM metrics ORDER BY ts;
+DESC TABLE metrics;
+ALTER TABLE metrics DROP COLUMN host;
+ALTER TABLE metrics RENAME metrics2;
+SELECT count(*) AS n FROM metrics2;
+
+-- family: ttl
+CREATE TABLE t_ttl (ts TIMESTAMP(3) TIME INDEX, k STRING PRIMARY KEY, v DOUBLE) WITH (ttl = '1d');
+INSERT INTO t_ttl VALUES ('1970-01-01 00:00:00', 'old', 1.0), ('2099-01-01 00:00:00', 'future', 2.0);
+ADMIN FLUSH_TABLE('t_ttl');
+SELECT k, v FROM t_ttl ORDER BY k;
+ALTER TABLE t_ttl SET 'ttl' = '7d';
+SHOW CREATE TABLE t_ttl;
+CREATE TABLE t_instant (ts TIMESTAMP(3) TIME INDEX, k STRING PRIMARY KEY, v DOUBLE) WITH (ttl = 'instant');
+INSERT INTO t_instant VALUES (1000, 'a', 1.0);
+SELECT count(*) AS n FROM t_instant;
+ADMIN FLUSH_TABLE('t_instant');
+SELECT count(*) AS n FROM t_instant;
+CREATE DATABASE ttl_db WITH (ttl = 'instant');
+CREATE TABLE t_forever (ts TIMESTAMP(3) TIME INDEX, v DOUBLE) WITH (ttl = 'forever');
+INSERT INTO t_forever VALUES (0, 1.0);
+SELECT count(*) AS n FROM t_forever;
+
+-- family: range
+CREATE TABLE host (ts TIMESTAMP(3) TIME INDEX, host STRING PRIMARY KEY, val BIGINT);
+INSERT INTO host VALUES (0, 'host1', 0), (5000, 'host1', NULL), (10000, 'host1', 1), (15000, 'host1', NULL), (20000, 'host1', 2), (0, 'host2', 3), (5000, 'host2', NULL), (10000, 'host2', 4), (15000, 'host2', NULL), (20000, 'host2', 5);
+SELECT ts, host, min(val) RANGE '5s' FROM host ALIGN '5s' ORDER BY host, ts;
+SELECT ts, host, min(val) RANGE '10s', max(val) RANGE '10s' FROM host ALIGN '5s' ORDER BY host, ts;
+SELECT ts, host, min(val) RANGE '5s' FILL NULL FROM host ALIGN '5s' ORDER BY host, ts;
+SELECT ts, host, min(val) RANGE '5s' FILL PREV FROM host ALIGN '5s' ORDER BY host, ts;
+SELECT ts, host, min(val) RANGE '5s' FILL LINEAR FROM host ALIGN '5s' ORDER BY host, ts;
+SELECT ts, host, min(val) RANGE '5s' FILL 6 FROM host ALIGN '5s' ORDER BY host, ts;
+SELECT ts, max(val) RANGE '5s' FROM host ALIGN '5s' BY () ORDER BY ts;
+SELECT ts, host, sum(val) RANGE '10s' FROM host ALIGN '5s' TO '1970-01-01T00:00:02' ORDER BY host, ts;
+SELECT ts, host, avg(val) RANGE '10s' AS a FROM host ALIGN '10s' ORDER BY a DESC, host, ts LIMIT 3;
+SELECT host, max(m) AS top FROM (SELECT ts, host, max(val) RANGE '10s' AS m FROM host ALIGN '10s') GROUP BY host ORDER BY host;
+WITH r AS (SELECT ts, host, count(val) RANGE '10s' AS n FROM host ALIGN '10s') SELECT host, sum(n) AS total FROM r GROUP BY host ORDER BY host;
+SELECT ts, min(val) RANGE '5s' FROM host ALIGN '0s';
+
+-- family: tql
+CREATE TABLE reqs (ts TIMESTAMP(3) TIME INDEX, job STRING, instance STRING, greptime_value DOUBLE, PRIMARY KEY (job, instance));
+INSERT INTO reqs VALUES (0, 'api', 'i1', 0), (60000, 'api', 'i1', 60), (120000, 'api', 'i1', 120), (180000, 'api', 'i1', 10), (240000, 'api', 'i1', 70), (0, 'api', 'i2', 5), (60000, 'api', 'i2', 10), (120000, 'api', 'i2', 20), (180000, 'api', 'i2', 40), (240000, 'api', 'i2', 80), (0, 'db', 'i1', 1), (120000, 'db', 'i1', 3), (240000, 'db', 'i1', 5);
+TQL EVAL (0, 240, '60s') reqs;
+TQL EVAL (0, 240, '60s') reqs{job="api"};
+TQL EVAL (60, 240, '60s') rate(reqs[2m]);
+TQL EVAL (60, 240, '60s') increase(reqs[2m]);
+TQL EVAL (0, 240, '60s') sum by (job) (reqs);
+TQL EVAL (0, 240, '60s') max_over_time(reqs[2m]);
+TQL EVAL (0, 240, '60s') topk(1, reqs);
+TQL EVAL (0, 240, '60s') avg(reqs) by (instance);
+TQL EVAL (240, 240, '1s') resets(reqs[5m]);
+TQL EVAL (0, 240, '60s') reqs offset 1m;
+
+-- family: flow
+CREATE TABLE src (ts TIMESTAMP(3) TIME INDEX, host STRING PRIMARY KEY, val DOUBLE);
+CREATE TABLE sink (cnt BIGINT, total DOUBLE, time_window TIMESTAMP(3) TIME INDEX, update_at TIMESTAMP(3));
+CREATE FLOW per_min SINK TO sink AS SELECT count(val) AS cnt, sum(val) AS total, date_bin(INTERVAL '1 minute', ts) AS time_window FROM src GROUP BY time_window;
+INSERT INTO src VALUES ('2024-01-01 00:00:00', 'a', 1.0), ('2024-01-01 00:00:30', 'b', 2.0), ('2024-01-01 00:01:10', 'a', 4.0);
+ADMIN FLUSH_FLOW('per_min');
+SELECT cnt, total, time_window FROM sink ORDER BY time_window;
+INSERT INTO src VALUES ('2024-01-01 00:01:20', 'c', 8.0);
+ADMIN FLUSH_FLOW('per_min');
+SELECT cnt, total, time_window FROM sink ORDER BY time_window;
+SELECT flow_name, sink_table_name FROM information_schema.flows;
+SHOW FLOWS;
+CREATE VIEW big AS SELECT host, val FROM src WHERE val > 1.5;
+SELECT * FROM big ORDER BY host, val;
+CREATE OR REPLACE VIEW big AS SELECT host, max(val) AS m FROM src GROUP BY host;
+SELECT * FROM big ORDER BY host;
+DROP VIEW big;
+SELECT * FROM big;
+DROP FLOW per_min;
+SHOW FLOWS;
+
+-- family: metric
+CREATE TABLE phy (ts TIMESTAMP TIME INDEX, val DOUBLE) ENGINE = metric WITH ("physical_metric_table" = "");
+CREATE TABLE cpu_m (ts TIMESTAMP TIME INDEX, val DOUBLE, host STRING PRIMARY KEY) ENGINE = metric WITH ("on_physical_table" = "phy");
+CREATE TABLE mem_m (ts TIMESTAMP TIME INDEX, val DOUBLE, host STRING, dc STRING, PRIMARY KEY (host, dc)) ENGINE = metric WITH ("on_physical_table" = "phy");
+INSERT INTO cpu_m (ts, val, host) VALUES ('2024-01-01 00:00:00', 1.0, 'a'), ('2024-01-01 00:00:01', 2.0, 'b');
+INSERT INTO mem_m (ts, val, host, dc) VALUES ('2024-01-01 00:00:00', 10.0, 'a', 'x');
+ALTER TABLE cpu_m ADD COLUMN dc STRING PRIMARY KEY;
+INSERT INTO cpu_m (ts, val, host, dc) VALUES ('2024-01-01 00:00:02', 3.0, 'a', 'y');
+SELECT * FROM cpu_m ORDER BY ts;
+SELECT host, dc, val FROM mem_m;
+DESC TABLE phy;
+INSERT INTO phy (ts, val) VALUES ('2024-01-01 00:00:00', 1.0);
+SELECT table_name, engine FROM information_schema.tables WHERE table_name IN ('phy', 'cpu_m', 'mem_m') ORDER BY table_name;
+TQL EVAL (1704067200, 1704067201, '1s') cpu_m;
+DROP TABLE cpu_m;
+SHOW TABLES;
+
+-- family: json2
+CREATE TABLE jt (ts TIMESTAMP(3) TIME INDEX, j JSON2) WITH (append_mode = 'true');
+CREATE TABLE jbad (ts TIMESTAMP(3) TIME INDEX, j JSON2);
+INSERT INTO jt VALUES (1, '{"a": 1, "b": {"c": "x"}}'), (2, '{"a": 2, "b": {"c": "y"}, "d": [1, 2]}'), (3, '{"a": null}');
+SELECT ts, j.a FROM jt ORDER BY ts;
+SELECT ts, j.b.c FROM jt ORDER BY ts;
+SELECT ts, CAST(j.a AS BIGINT) + 1 AS a1 FROM jt ORDER BY ts;
+SELECT count(*) AS n FROM jt WHERE j.b.c = 'y';
+SELECT ts, json_get_int(parse_json('{"k": 5}'), 'k') AS k FROM jt ORDER BY ts;
+
+-- family: information_schema
+CREATE TABLE is_t (ts TIMESTAMP(3) TIME INDEX, host STRING, dc STRING, v DOUBLE COMMENT 'value', PRIMARY KEY (host, dc));
+SELECT table_name, table_type FROM information_schema.tables WHERE table_schema = 'public' ORDER BY table_name;
+SELECT column_name, data_type, semantic_type FROM information_schema.columns WHERE table_name = 'is_t' ORDER BY column_name;
+SELECT constraint_name, column_name FROM information_schema.key_column_usage WHERE table_name = 'is_t' ORDER BY constraint_name, column_name;
+SELECT schema_name FROM information_schema.schemata ORDER BY schema_name;
+SHOW COLUMNS FROM is_t;
+SHOW CREATE TABLE is_t;
+SHOW DATABASES;
+USE information_schema;
+SELECT count(*) AS n FROM columns WHERE table_name = 'is_t';
+CREATE TABLE nope (ts TIMESTAMP TIME INDEX);
+USE public;
+
+-- family: functions
+CREATE TABLE f (ts TIMESTAMP(3) TIME INDEX, s STRING PRIMARY KEY, x DOUBLE, ip STRING, lat DOUBLE, lon DOUBLE, v STRING);
+INSERT INTO f VALUES (1000, 'hello world_test', 1.0, '192.168.1.10', 37.77, -122.41, '[1,2,3]'), (2000, 'café à paris', 5.0, '10.0.0.1', 48.85, 2.35, '[4,5,6]'), (3000, 'x', 3.0, '172.16.0.5', 35.68, 139.69, '[0,0,1]');
+SELECT s, initcap(s) AS c, replace(s, 'o', '0') AS r, substr(s, 2, 3) AS p FROM f ORDER BY s;
+SELECT to_unixtime('2024-01-01 00:00:00') AS u, date_format(ts, '%Y-%m-%d %H:%M:%S') AS d FROM f ORDER BY d;
+SELECT s, clamp(x, 2, 4) AS c, trunc(x * 1.2345, 2) AS t FROM f ORDER BY s;
+SELECT date_bin(INTERVAL '2 seconds', ts) AS b, count(*) AS n FROM f GROUP BY b ORDER BY b;
+SELECT s, geohash(lat, lon, 6) AS gh FROM f ORDER BY s;
+SELECT ip, ipv4_string_to_num(ip) AS n, ipv4_to_cidr(ip, 16) AS c, ipv4_in_range(ip, '10.0.0.0/8') AS r FROM f ORDER BY ip;
+SELECT json_get_string(parse_json('{"a": {"b": "c"}}'), 'a.b') AS g, json_path_exists(parse_json('{"a": 1}'), '$.a') AS e;
+SELECT uddsketch_calc(0.5, uddsketch_state(128, 0.01, x)) AS p50 FROM f;
+SELECT approx_percentile_cont(0.5) WITHIN GROUP (ORDER BY x) AS m FROM f;
+SELECT approx_percentile_cont_with_weight(x, 0.5) WITHIN GROUP (ORDER BY x) AS w FROM f;
+SELECT ts, anomaly_score_zscore(x) OVER (ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS z FROM f ORDER BY ts;
+SELECT ts, anomaly_score_mad(x) OVER (ORDER BY ts ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS m FROM f ORDER BY ts;
+SELECT s FROM f WHERE matches_term(s, 'world') ORDER BY s;
+SELECT s FROM f WHERE s @@ 'paris' ORDER BY s;
+SELECT vec_to_string(vec_add(parse_vec(v), parse_vec('[1,1,1]'))) AS a, vec_dot_product(parse_vec(v), parse_vec('[1,0,0]')) AS d FROM f ORDER BY ts;
+SELECT vec_l2sq_distance(parse_vec(v), parse_vec('[0,0,0]')) AS l2 FROM f ORDER BY ts;
+SET TIME_ZONE = '+08:00';
+SELECT to_unixtime('2024-01-01 00:00:00') AS u;
+SET TIME_ZONE = 'UTC';
+SELECT to_unixtime('2024-01-01 00:00:00') AS u;
+
+-- family: userbench (the 8 dashboard panels, from userbench/workloads.py)

@@ -3,9 +3,8 @@
 Replicates the sf0.1 events table k-fold in-flight (replica-unique event ids
 and shifted timestamps so per-payload work matches the real stream), renders
 the q94 OTLP/JSON gauge payloads AFTER replication, and times the parse with
-the noop sink at 1x/10x/100x for the new single-pass form, plus old-vs-new
-interleaved at 10x (the old 8-branch union re-parses every payload 8 times —
-the gap must WIDEN with scale since the parse is the job).
+the noop sink at 1x/10x/100x.  The old-vs-new interleaved 10x leg against the
+r11 8-branch union is recorded in SCALE_OTLP_r12.json and OPTIMIZATION_r12.md.
 
 Run SOLO. Writes SCALE_OTLP_r12.json.
 """
@@ -22,7 +21,6 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from greptimedb_spark.session import get_spark  # noqa: E402
 from greptimedb_spark.sources import protocols as proto  # noqa: E402
-from tools.ab_otlp_r12 import parse_otlp_metrics_json_union  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 OUT = os.environ.get("SPARK_GRAFT_SCALE_OTLP_OUT", "SCALE_OTLP_r12.json")
@@ -57,17 +55,10 @@ def time_leg(spark, fn, k: int, label: str):
 def main():
     spark = get_spark()
     n1 = payloads_at(spark, 1).count()
-    results = {"rows_x1": n1, "reps": REPS, "new": {}, "old": {}}
+    results = {"rows_x1": n1, "reps": REPS, "new": {}}
     for k in (1, 10, 100):
         results["new"][f"x{k}"] = time_leg(
             spark, proto.parse_otlp_metrics_json, k, "new")
-    # old-vs-new interleaved at 10x (old at 100x would be 8 parses of 10M
-    # payloads — the shape is already decided at 10x)
-    for rep in range(REPS):
-        results["old"].setdefault("x10", []).extend(
-            time_leg(spark, parse_otlp_metrics_json_union, 10, "old")[:1])
-        results["new"].setdefault("x10_interleaved", []).extend(
-            time_leg(spark, proto.parse_otlp_metrics_json, 10, "new-i")[:1])
     with open(OUT, "w") as f:
         json.dump(results, f, indent=1)
     print(json.dumps(results))
