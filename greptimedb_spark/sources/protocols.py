@@ -25,8 +25,10 @@ takes over. Semantics parity:
 
 Parsing influx lines is a character-level tokenizer (escapes make it
 non-regular), so it runs as an Arrow-batched ``mapInPandas`` — the slow path
-is confined to the ingest edge, one pass, no shuffle. OpenTSDB's
-whitespace-split grammar stays in pure column algebra.
+is confined to the ingest edge, with no shuffle. Each batch is parsed once:
+``influx_pivot`` materializes the parsed rows and learns the field keys in
+the same job, and the pivot and the write read the materialized rows.
+OpenTSDB's whitespace-split grammar stays in pure column algebra.
 """
 
 from __future__ import annotations
@@ -35,7 +37,8 @@ import math
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 TIME_INDEX = "greptime_timestamp"  # reference default time-index column name
@@ -223,23 +226,47 @@ def parse_influx_lines(
 
 
 def influx_pivot(parsed: DataFrame, table: str) -> DataFrame:
-    """One measurement's long-format rows → a wide table: tag columns stay in
-    the map, each field becomes a typed column (reference: one row-insert
-    schema per measurement, influxdb.rs:55-105). Field columns are typed by
-    their parsed type; conflicting types for one field key follow the
-    last-writer of the pivot aggregate (the reference rejects such batches)."""
-    rows = parsed.filter(F.col("err").isNull() & (F.col("table") == table))
-    keyed = rows.groupBy("tags", TIME_INDEX).pivot("field_key").agg(
-        F.first(
-            F.coalesce(
-                F.col("v_f64").cast("string"),
-                F.col("v_i64").cast("string"),
-                F.col("v_str"),
-                F.col("v_bool").cast("string"),
-            )
-        )
-    )
-    return keyed
+    """One measurement's long-format rows → a wide table (reference: one
+    row-insert schema per measurement, influxdb.rs:55-105): the tags stay in
+    the map, each field key becomes a string column, ordered by key. A field
+    given more than once for one (series, timestamp) in a batch takes
+    ``first``, which is an arbitrary one of them (the reference rejects such
+    batches).
+
+    The measurement's rows are materialized once (``localCheckpoint``,
+    eager) and the same job observes their distinct field keys, so the pivot
+    needs no discovery job and the caller's write reads the materialized rows
+    instead of parsing the batch again. Calling this runs the parse. The
+    materialized rows are released once the returned frame and every frame
+    derived from it are garbage collected. More distinct keys than
+    ``spark.sql.pivotMaxValues`` raise, as Spark's own discovery does."""
+    keys_seen = Observation()
+    rows = parsed.filter(
+        F.col("err").isNull() & (F.col("table") == table)
+    ).select(
+        "tags",
+        TIME_INDEX,
+        "field_key",
+        F.coalesce(
+            F.col("v_f64").cast("string"),
+            F.col("v_i64").cast("string"),
+            F.col("v_str"),
+            F.col("v_bool").cast("string"),
+        ).alias("v"),
+    ).observe(
+        # array_sort orders strings as Spark orders discovered pivot values
+        keys_seen, F.array_sort(F.collect_set("field_key")).alias("keys")
+    ).localCheckpoint(eager=True)
+    keys = keys_seen.get["keys"]
+    limit = int(parsed.sparkSession.conf.get("spark.sql.pivotMaxValues"))
+    if len(keys) > limit:
+        raise AnalysisException(
+            f"The pivot column field_key has more than {limit} distinct "
+            "values, this could indicate an error. If this was intended, set "
+            "spark.sql.pivotMaxValues to at least the number of distinct "
+            "values of the pivot column.")
+    return rows.groupBy("tags", TIME_INDEX).pivot("field_key", keys).agg(
+        F.first("v"))
 
 
 def parse_opentsdb_puts(lines: DataFrame, line_col: str = "line") -> DataFrame:
@@ -569,11 +596,19 @@ def parse_otlp_metrics_json(
             err = _ts_err(dp["timeUnixNano"])
             buckets = F.coalesce(dp["bucketCounts"], _no_elems("string"))
             bounds = dp["explicitBounds"]
+            # cumulative counts, one running sum per point; a NULL count
+            # makes it and every later bucket's count NULL
+            cums = F.aggregate(
+                buckets,
+                F.struct(F.lit(0.0).alias("s"),
+                         _no_elems("double").alias("a")),
+                lambda acc, x: F.struct(
+                    (acc["s"] + x.cast("double")).alias("s"),
+                    F.array_append(acc["a"], acc["s"] + x.cast("double"))
+                    .alias("a")),
+                lambda acc: acc["a"])
 
-            def bucket_row(cnt, idx):
-                cum = F.aggregate(F.slice(buckets, F.lit(1), idx + 1),
-                                  F.lit(0.0),
-                                  lambda a, x: a + x.cast("double"))
+            def bucket_row(cum, idx):
                 # le = explicit bound at idx, 'inf' for the one-past-last
                 # bucket; a malformed extra bucket gets NO le tag
                 # (metrics.rs:647-662)
@@ -594,7 +629,7 @@ def parse_otlp_metrics_json(
                                 dp["count"].try_cast("double"),
                                 "histogram", err)
             return F.concat(
-                F.transform(buckets, bucket_row),
+                F.transform(cums, bucket_row),
                 F.when(dp["sum"].isNotNull(),
                        F.array(sum_row)).otherwise(no_rows),
                 F.array(count_row),

@@ -111,6 +111,110 @@ def test_influx_pivot(spark):
     assert got["host2"]["cpu"] is None and got["host2"]["memory"] == "1027.0"
 
 
+def _pivot(spark, lines, table):
+    df = spark.createDataFrame([Row(line=l) for l in lines])
+    return proto.influx_pivot(proto.parse_influx_lines(df), table)
+
+
+@pytest.mark.parametrize("lines", [
+    ["m1,badtag novalue", "onlymeasurement", "cpu,h=a x=1 notatime"],
+    ["disk,h=a x=1 1", "disk,h=b y=2i 2"],
+], ids=["all_malformed", "other_measurement"])
+def test_influx_pivot_without_rows(spark, lines):
+    """No row of the measurement: the tags and the time index, no field
+    column, no row."""
+    wide = _pivot(spark, lines, "cpu")
+    assert wide.dtypes == [("tags", "map<string,string>"),
+                           (proto.TIME_INDEX, "timestamp")]
+    assert wide.count() == 0
+
+
+def test_influx_pivot_field_columns_sorted(spark):
+    """Field columns are strings in byte order of their keys, as Spark
+    orders discovered pivot values."""
+    wide = _pivot(spark, ["cpu,h=a x=1 1", "cpu,h=b y=2i,é=t 2",
+                          'cpu,h=b Z="s",a=1u 2'], "cpu")
+    assert wide.columns == ["tags", proto.TIME_INDEX, "Z", "a", "x", "y", "é"]
+    assert {t for _c, t in wide.dtypes[2:]} == {"string"}
+    got = {r["tags"]["h"]: r.asDict() for r in wide.collect()}
+    assert got["b"]["Z"] == "s" and got["b"]["a"] == "1"
+    assert got["b"]["é"] == "true" and got["a"]["x"] == "1.0"
+
+
+def test_influx_pivot_value_limit(spark):
+    """More distinct field keys than spark.sql.pivotMaxValues raise, with
+    the limit named; at the limit the batch pivots."""
+    from pyspark.errors import AnalysisException
+
+    key = "spark.sql.pivotMaxValues"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        with pytest.raises(AnalysisException, match="more than 3 distinct"):
+            _pivot(spark, ["cpu,h=a w=1,x=2,y=3,z=4 1"], "cpu")
+        assert _pivot(spark, ["cpu,h=a x=2,y=3,z=4 1"], "cpu").columns == [
+            "tags", proto.TIME_INDEX, "x", "y", "z"]
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_influx_pivot_parses_once(spark):
+    """The pivoted frame reads the materialized parse: running it, as the
+    write does, starts no Python parse worker."""
+    wide = _pivot(spark, ["cpu,h=a x=1 1", "cpu,h=b x=2 2"], "cpu")
+    plan = wide._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in plan, plan
+
+
+def test_influx_ingest_releases_materialized_rows(spark, tmp_path):
+    """Five parse -> pivot -> insert batches in one session leave at most
+    one materialized parse cached once both sides collect garbage, and no
+    temp view."""
+    import gc
+    import time
+
+    from pyspark.sql import functions as F
+
+    from greptimedb_spark.catalog import Catalog, TableMeta
+
+    sc = spark.sparkContext
+
+    def cached():
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    def views():
+        return sum(t.isTemporary for t in spark.catalog.listTables())
+
+    before_rdds, before_views = cached(), views()
+    cat = Catalog(spark, str(tmp_path))
+    cat.create_table(TableMeta(name="cpu", time_index="ts", tags=["host"]))
+    batches = []
+    for b in range(5):
+        batches.append(_pivot(spark, [
+            f"cpu,host=h{i % 7} usage={i}.5,idle={b}i "
+            f"{(1704067200 + b * 300 + i) * 10**9}" for i in range(200)],
+            "cpu"))
+        cat.insert("cpu", batches[-1].select(
+            F.col(proto.TIME_INDEX).alias("ts"),
+            F.col("tags")["host"].alias("host"),
+            F.col("usage").cast("double").alias("usage"),
+            F.col("idle").cast("long").alias("idle")))
+    # one materialized parse per batch, held while its frame is referenced
+    assert len(cached() - before_rdds) == 5
+    del batches
+    deadline = time.monotonic() + 30
+    while True:
+        gc.collect()
+        sc._jvm.System.gc()
+        left = cached() - before_rdds
+        if len(left) <= 1 or time.monotonic() > deadline:
+            break
+        time.sleep(0.5)
+    assert len(left) <= 1, left
+    assert views() == before_views
+    assert cat.read("cpu").count() == 5 * 200
+
+
 def test_opentsdb_put(spark):
     df = spark.createDataFrame([Row(line=l) for l in [
         "put sys.cpu.user 1663840496 42.5 host=web01 dc=lax",
@@ -659,3 +763,28 @@ def test_otlp_histogram_summary_shredding(spark):
     assert all(r[proto.TIME_INDEX].year == 2023 for r in rows)
     # gauge/sum number points still parse alongside (shared route)
     assert len(rows) == 9
+
+
+def test_otlp_histogram_64_buckets(spark):
+    """A 64-bucket point: each {name}_bucket row holds the running count up
+    to its bucket, under its explicit bound (then 'inf')."""
+    import json
+
+    counts = [(7 * i + 3) % 11 for i in range(64)]
+    bounds = [float(i + 1) for i in range(63)]
+    payload = json.dumps({"resourceMetrics": [{"scopeMetrics": [{"metrics": [
+        {"name": "lat", "histogram": {"dataPoints": [{
+            "timeUnixNano": "1700000000000000000",
+            "count": str(sum(counts)), "sum": 1.0,
+            "bucketCounts": [str(c) for c in counts],
+            "explicitBounds": bounds}]}}]}]}]})
+    rows = proto.parse_otlp_metrics_json(
+        spark.createDataFrame([(payload,)], "payload string")).collect()
+    got = {r.tags["le"]: r[proto.VALUE_COL]
+           for r in rows if r.table == "lat_bucket"}
+    want, running = {}, 0
+    for i, c in enumerate(counts):
+        running += c
+        want[str(i + 1) if i < 63 else "inf"] = float(running)
+    assert got == want
+    assert got["3"] == 3 + 10 + 6 and got["inf"] == sum(counts)

@@ -73,6 +73,53 @@ def test_influx_format_parse_roundtrip(table, tags, fields, ts):
         assert rows[0][8].value == (ts // 1000) * 1000
 
 
+
+# ---- mutated lines: malformed input is quarantined, never raised ----
+
+_SUFFIXES = ("i", "u", '"', "t")
+
+
+def _mutations(line: str):
+    """``line`` truncated at every position, with one '=' deleted, and with a
+    type suffix swapped: every 'i'/'u'/'"'/'t' replaced by each other one,
+    and each suffix appended to every token that ends in a digit."""
+    for p in range(len(line)):
+        yield line[:p]
+    for p, c in enumerate(line):
+        if c == "=":
+            yield line[:p] + line[p + 1:]
+        if c in _SUFFIXES:
+            for s in _SUFFIXES:
+                if s != c:
+                    yield line[:p] + s + line[p + 1:]
+        if c.isdigit() and (p + 1 == len(line) or line[p + 1] in ", "):
+            for s in _SUFFIXES:
+                yield line[:p + 1] + s + line[p + 1:]
+
+
+@settings(max_examples=150, deadline=None)
+@given(
+    table=_key,
+    tags=st.dictionaries(_key, _text, max_size=2),
+    fields=st.dictionaries(_key, _field_val, min_size=1, max_size=3),
+    ts=st.one_of(st.none(), st.integers(min_value=0, max_value=2**62)),
+)
+def test_influx_mutated_lines_parse_or_quarantine(table, tags, fields, ts):
+    """Every mutation of a well-formed line either parses (every row has no
+    ``err``) or yields exactly one err row whose other fields are None."""
+    line = format_influx_line(table, tags, fields, ts_ns=ts)
+    for m in _mutations(line):
+        rows = _parse_influx_line(m, "ns")
+        if not rows:
+            body = m.strip(" \t\r\n")
+            assert not body or body.startswith("#"), m
+        elif any(r[-1] is not None for r in rows):
+            assert len(rows) == 1, (m, rows)
+            assert isinstance(rows[0][-1], str), (m, rows)
+            assert all(v is None for v in rows[0][:-1]), (m, rows)
+        else:
+            assert all(r[0] and r[2] for r in rows), (m, rows)
+
 # ---- Splunk HEC batch parser (pure python: no Spark session needed) ----
 
 import json
