@@ -181,12 +181,6 @@ def token_count(col) -> Column:
     return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, r"\s+"))).cast("long")
 
 
-def bpe_ish_token_count(col) -> Column:
-    """BPE-ish subword proxy: word-chunks + digits + punctuation each count
-    (regexp token classes approximate a byte-level BPE's token count)."""
-    return F.regexp_count(_c(col), F.lit(r"[A-Za-z]{1,4}|[0-9]|[^A-Za-z0-9\s]")).cast("long")
-
-
 def punct_ratio(col) -> Column:
     n = F.length(_c(col))
     return F.when(n > 0, F.regexp_count(_c(col), F.lit(r"[^\w\s]")) / n).otherwise(F.lit(0.0))
@@ -200,47 +194,6 @@ def stopword_ratio(col) -> Column:
     n = F.size(toks)
     stop = F.size(F.filter(toks, lambda t: t.isin(_STOPWORDS)))
     return F.when(n > 0, stop / n).otherwise(F.lit(0.0))
-
-
-def mean_word_length(col) -> Column:
-    toks = F.split(F.trim(_c(col)), r"\s+")
-    total = F.aggregate(toks, F.lit(0).cast("long"), lambda acc, t: acc + F.length(t))
-    return F.when(F.size(toks) > 0, total / F.size(toks)).otherwise(F.lit(0.0))
-
-
-def quality_score(col) -> Column:
-    """Heuristic document quality in [0,1]: penalize too-short/too-long docs,
-    high punctuation, missing stopwords (C4/Gopher-style rule-of-thumb)."""
-    n_tok = token_count(col)
-    len_score = F.when((n_tok >= 10) & (n_tok <= 5000), F.lit(1.0)).otherwise(F.lit(0.3))
-    punct_score = F.when(punct_ratio(col) < 0.2, F.lit(1.0)).otherwise(F.lit(0.5))
-    stop_score = F.when(stopword_ratio(col) > 0.02, F.lit(1.0)).otherwise(F.lit(0.6))
-    return F.round(len_score * punct_score * stop_score, 4)
-
-
-# Tiny per-language marker vocabularies for n-gram-free language ID. Real
-# deployments would load fastText-style models via a pandas UDF; this is the
-# deterministic, dependency-free heuristic variant.
-_LANG_MARKERS = {
-    "en": ["the", "and", "is", "of", "to"],
-    "de": ["der", "und", "ist", "von", "das"],
-    "fr": ["le", "et", "est", "de", "la"],
-    "es": ["el", "y", "es", "de", "que"],
-    "zh": ["的", "是", "了", "在", "我"],
-}
-
-
-def detect_lang(col) -> Column:
-    """Marker-token language ID: pick the language with most marker hits."""
-    toks = F.split(F.lower(F.trim(_c(col))), r"\s+")
-    best_lang = F.lit("und")
-    best_score = F.lit(0)
-    for lang, markers in sorted(_LANG_MARKERS.items()):
-        score = F.size(F.filter(toks, lambda t: t.isin(markers)))
-        better = score > best_score
-        best_lang = F.when(better, F.lit(lang)).otherwise(best_lang)
-        best_score = F.when(better, score).otherwise(best_score)
-    return best_lang
 
 
 def fingerprint(col) -> Column:

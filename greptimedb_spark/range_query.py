@@ -36,6 +36,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from greptimedb_spark.sqltext import close_paren, split_top
+
 _UNITS_MS = {
     "ns": 1e-6, "us": 1e-3, "ms": 1, "s": 1000, "m": 60_000, "h": 3_600_000,
     "d": 86_400_000, "w": 7 * 86_400_000, "y": 365 * 86_400_000,
@@ -130,7 +132,7 @@ def _sort_keys(text: str) -> list[tuple[str, bool, bool]]:
     per key, with DataFusion's defaults: ASC → NULLS LAST, DESC → NULLS
     FIRST."""
     keys = []
-    for part in _split_top_level(text):
+    for part in split_top(text):
         part = part.strip()
         asc = not re.search(r"\bDESC\b", part, re.IGNORECASE)
         nm = re.search(r"\bNULLS\s+(FIRST|LAST)\b", part, re.IGNORECASE)
@@ -438,16 +440,10 @@ def parse_range_sql(sql: str) -> dict:
     # INTERVAL '1' hour))`): fold the balanced expression to an epoch-ms
     # offset before the flat ALIGN regex runs
     tm = re.search(r"(?i)\bTO\s*\(", s)
-    if tm:
-        start = s.index("(", tm.start())
-        depth, i = 0, start
-        while i < len(s):
-            depth += s[i] == "("
-            depth -= s[i] == ")"
-            i += 1
-            if depth == 0:
-                break
-        s = s[:tm.start()] + f"TO '{_fold_now_expr(s[start:i])}'" + s[i:]
+    end = close_paren(s, tm.end()) if tm else None
+    if end is not None:
+        s = (s[:tm.start()] + f"TO '{_fold_now_expr(s[tm.end() - 1:end + 1])}'"
+             + s[end + 1:])
     m_align = re.search(
         r"ALIGN\s+(?:'(?P<align>[^']+)'|"
         r"\(\s*(?P<align_p>(?=[^)]*INTERVAL)(?:[^()]|\([^()]*\))+)\))"
@@ -476,14 +472,7 @@ def parse_range_sql(sql: str) -> dict:
     m_by = re.search(r"\bBY\s*\(", s[m_align.end():], re.IGNORECASE)
     if m_by:
         start = m_align.end() + m_by.end()
-        depth, i = 1, start
-        while i < len(s) and depth:
-            if s[i] == "(":
-                depth += 1
-            elif s[i] == ")":
-                depth -= 1
-            i += 1
-        by_text = s[start:i - 1]
+        by_text = s[start:close_paren(s, start)]
     m_fill = re.search(r"\bFILL\s+(\S+)\s*(?:ORDER|LIMIT|$)", s[m_align.end():], re.IGNORECASE)
     m_from = re.search(r"FROM\s+(\w+)", s, re.IGNORECASE)
     m_where = re.search(r"WHERE\s+(.*?)\s+ALIGN", s, re.IGNORECASE | re.DOTALL)
@@ -491,7 +480,7 @@ def parse_range_sql(sql: str) -> dict:
 
     aggs: list[RangeAgg] = []
     items: list[dict] = []  # one per SELECT item, in order
-    select_list = _split_top_level(m_select.group(1)) if m_select else []
+    select_list = split_top(m_select.group(1)) if m_select else []
     for idx, item in enumerate(select_list):
         item = item.strip()
         alias_m = re.search(r"\s+AS\s+(\w+)\s*$", item, re.IGNORECASE)
@@ -532,7 +521,7 @@ def parse_range_sql(sql: str) -> dict:
             }
         )
 
-    by = _split_top_level(by_text) if by_text is not None else None
+    by = split_top(by_text) if by_text is not None else None
     return {
         "aggs": aggs,
         "items": items,
@@ -546,29 +535,6 @@ def parse_range_sql(sql: str) -> dict:
         "limit": limit,
         "offset": offset,
     }
-
-
-def _split_top_level(text: str) -> list[str]:
-    """Split a select list on commas not nested in parens/quotes."""
-    out, depth, cur, q = [], 0, "", None
-    for ch in text:
-        if q:
-            if ch == q:
-                q = None
-        elif ch in "'\"":
-            q = ch
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            out.append(cur)
-            cur = ""
-            continue
-        cur += ch
-    if cur.strip():
-        out.append(cur)
-    return out
 
 
 def range_sql(spark, sql: str, time_index: str = "ts", df: DataFrame | None = None,

@@ -34,6 +34,7 @@ OpenTSDB's whitespace-split grammar stays in pure column algebra.
 from __future__ import annotations
 
 import math
+import re
 from typing import Iterator
 
 import pandas as pd
@@ -77,6 +78,13 @@ def _scan_escaped(line: str, i: int, stops: str) -> tuple[str, int]:
     return "".join(out), i
 
 
+# line-protocol numbers are ASCII only: Python's int()/float() would also
+# take `_` separators, a leading `+`, non-ASCII digits and whitespace
+_INT_RE = re.compile(r"-?[0-9]+")
+_UINT_RE = re.compile(r"[0-9]+")
+_FLOAT_RE = re.compile(r"-?(?:[0-9]+(?:\.[0-9]*)?|\.[0-9]+)(?:[eE][-+]?[0-9]+)?")
+
+
 def _parse_field_value(raw: str):
     """(field_type, f64, i64, str, bool) for UNQUOTED field values per the
     line-protocol grammar (quoted strings are handled by the scanner)."""
@@ -85,11 +93,15 @@ def _parse_field_value(raw: str):
     if raw in ("f", "F", "false", "False", "FALSE"):
         return ("boolean", None, None, None, False)
     if raw.endswith("i"):
+        if not _INT_RE.fullmatch(raw, 0, len(raw) - 1):
+            raise ValueError(f"invalid integer field value: {raw}")
         v = int(raw[:-1])
         if not (-(1 << 63) <= v < (1 << 63)):
             raise ValueError(f"i64 field value out of range: {raw}")
         return ("int64", None, v, None, None)
     if raw.endswith("u"):
+        if not _UINT_RE.fullmatch(raw, 0, len(raw) - 1):
+            raise ValueError(f"invalid unsigned field value: {raw}")
         v = int(raw[:-1])
         # uint64 is spec-valid up to 2^64-1, but the output long column tops
         # out at i64::MAX — larger (or negative) values become err rows
@@ -98,7 +110,9 @@ def _parse_field_value(raw: str):
             raise ValueError(
                 f"u64 field value outside supported [0, i64::MAX]: {raw}")
         return ("uint64", None, v, None, None)
-    v = float(raw)  # raises ValueError on garbage -> caught by caller
+    if not _FLOAT_RE.fullmatch(raw):
+        raise ValueError(f"invalid float field value: {raw}")
+    v = float(raw)
     if math.isinf(v) or math.isnan(v):
         raise ValueError(f"non-finite field value: {raw}")
     return ("float64", v, None, None, None)
@@ -180,6 +194,8 @@ def _parse_influx_line(line: str, precision: str):
                 raise ValueError("invalid field separator")
             ts_raw = line[i:].strip(" \t\r\n")
             if ts_raw:
+                if not _INT_RE.fullmatch(ts_raw):
+                    raise ValueError(f"invalid timestamp: {ts_raw}")
                 ns = int(ts_raw) * _PRECISION_NS[precision]
                 # timestamp column is us-resolution (Spark TimestampType);
                 # the reference stores the declared precision — ns truncate
@@ -369,11 +385,13 @@ def parse_loki_push(payloads: DataFrame, payload_col: str = "payload") -> DataFr
     def _stream_rows(s):
         def row(v):
             ts_raw = F.get(v, 0)
+            ts = ts_raw.try_cast("long")
+            # a quarantined value carries nothing but its err
             return F.struct(
-                s["stream"].alias("labels"),
-                _ns_to_ts(ts_raw.try_cast("long")).alias(TIME_INDEX),
-                F.get(v, 1).cast("string").alias("line"),
-                F.when(ts_raw.try_cast("long").isNull(),
+                F.when(ts.isNotNull(), s["stream"]).alias("labels"),
+                _ns_to_ts(ts).alias(TIME_INDEX),
+                F.when(ts.isNotNull(), F.get(v, 1).cast("string")).alias("line"),
+                F.when(ts.isNull(),
                        F.concat(F.lit("invalid loki timestamp: "),
                                 F.coalesce(ts_raw, F.lit("null"))))
                 .cast("string").alias("err"),
@@ -540,13 +558,14 @@ def parse_otlp_metrics_json(
     empty_map = F.expr("CAST(map() AS map<string,string>)")
 
     def _mk_row(table, tags, ts_ns_str, value, mtype, err):
-        ts_ns = ts_ns_str.try_cast("long")
+        # a quarantined point carries nothing but its err
+        ok = err.isNull()
         return F.struct(
-            table.cast("string").alias("table"),
-            tags.alias("tags"),
-            _ns_to_ts(ts_ns).alias(TIME_INDEX),
-            value.cast("double").alias(VALUE_COL),
-            F.lit(mtype).alias("metric_type"),
+            F.when(ok, table.cast("string")).alias("table"),
+            F.when(ok, tags).alias("tags"),
+            F.when(ok, _ns_to_ts(ts_ns_str.try_cast("long"))).alias(TIME_INDEX),
+            F.when(ok, value.cast("double")).alias(VALUE_COL),
+            F.when(ok, F.lit(mtype)).alias("metric_type"),
             err.cast("string").alias("err"),
         )
 
@@ -555,6 +574,12 @@ def parse_otlp_metrics_json(
             ts_ns_str.try_cast("long").isNull(),
             F.concat(F.lit("invalid otlp timestamp: "),
                      F.coalesce(ts_ns_str, F.lit("null"))))
+
+    def _count_err(dp, counts):
+        # an OTLP count is a decimal string; a JSON null stays a NULL count
+        bad = F.exists(F.concat(F.array(dp["count"]), counts),
+                       lambda c: c.isNotNull() & c.try_cast("double").isNull())
+        return F.when(bad, F.lit("invalid otlp count"))
 
     def _tags(res_attrs, dp_attrs):
         # resource attrs + data-point attrs; data-point keys win on collision
@@ -593,8 +618,9 @@ def parse_otlp_metrics_json(
 
         def dp_rows(dp):
             tags = _tags(ra, dp["attributes"])
-            err = _ts_err(dp["timeUnixNano"])
             buckets = F.coalesce(dp["bucketCounts"], _no_elems("string"))
+            err = F.coalesce(_ts_err(dp["timeUnixNano"]),
+                             _count_err(dp, buckets))
             bounds = dp["explicitBounds"]
             # cumulative counts, one running sum per point; a NULL count
             # makes it and every later bucket's count NULL
@@ -603,8 +629,8 @@ def parse_otlp_metrics_json(
                 F.struct(F.lit(0.0).alias("s"),
                          _no_elems("double").alias("a")),
                 lambda acc, x: F.struct(
-                    (acc["s"] + x.cast("double")).alias("s"),
-                    F.array_append(acc["a"], acc["s"] + x.cast("double"))
+                    (acc["s"] + x.try_cast("double")).alias("s"),
+                    F.array_append(acc["a"], acc["s"] + x.try_cast("double"))
                     .alias("a")),
                 lambda acc: acc["a"])
 
@@ -648,7 +674,8 @@ def parse_otlp_metrics_json(
 
         def dp_rows(dp):
             tags = _tags(ra, dp["attributes"])
-            err = _ts_err(dp["timeUnixNano"])
+            err = F.coalesce(_ts_err(dp["timeUnixNano"]),
+                             _count_err(dp, _no_elems("string")))
 
             def q_row(qv):
                 qtags = F.map_concat(

@@ -31,6 +31,10 @@ from pyspark.sql import functions as F
 
 from greptimedb_spark.catalog import TableNotFoundError
 from greptimedb_spark.functions import register_all
+from greptimedb_spark.sqltext import (
+    close_paren, map_outside_strings, open_paren, rewrite_calls, split_top,
+    strip_comments,
+)
 
 _ALIASES = {
     # greptime/datafusion name → spark name (same arity)
@@ -212,6 +216,21 @@ def _bump_subus_literals(text: str) -> str:
 
 
 _TIME_CAST_RE = re.compile(r"::\s*TIME\b(?!\s*(STAMP|ZONE))", re.IGNORECASE)
+_SQ_STRING_RE = re.compile(r"'(?:[^']|'')*'")
+# the operand before `::TIME`: a (typed) literal, or a name or cast chain
+# ('x'::TIMESTAMP::TIME: the whole left chain — timestamp_tz.sql)
+_TIME_OPERAND_RE = re.compile(
+    rf"(?:\b(?:TIMESTAMP|DATE)\s*)?{_SQ_STRING_RE.pattern}$"
+    rf"|(?:{_SQ_STRING_RE.pattern}\s*::)?(?:[\w.`]*::)*[\w.`]*$", re.IGNORECASE)
+
+
+def _time_operand_start(head: str) -> int:
+    """Where the operand of a `::TIME` cast starts in ``head``, the text
+    before its `::`; a call's name belongs to a parenthesized operand."""
+    if head.endswith(")"):
+        j = open_paren(head, len(head) - 1) or 0
+        return re.search(r"[\w.]*$", head[:j]).start()
+    return _TIME_OPERAND_RE.search(head).start()
 
 
 def _rewrite_time_cast(text: str) -> str:
@@ -222,61 +241,11 @@ def _rewrite_time_cast(text: str) -> str:
         return ("regexp_replace(regexp_replace(date_format(" + x +
                 ", 'HH:mm:ss.SSSSSS'), '0+$', ''), '\\\\.$', '')")
 
-    while True:
-        m = _TIME_CAST_RE.search(text)
-        if not m:
-            return text
-        # operand ends right before '::' — a balanced paren group or a
-        # word/dotted/typed-literal chain
-        end = m.start()
-        i = end - 1
-        while i >= 0 and text[i].isspace():
-            i -= 1
-        if i >= 0 and text[i] == ")":
-            depth = 0
-            j = i
-            while j >= 0:
-                if text[j] == ")":
-                    depth += 1
-                elif text[j] == "(":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                j -= 1
-            # a preceding function name belongs to the operand
-            k = j - 1
-            while k >= 0 and (text[k].isalnum() or text[k] in "_."):
-                k -= 1
-            start = k + 1
-        elif i >= 0 and text[i] == "'":
-            j = text.rfind("'", 0, i)
-            k = j - 1
-            while k >= 0 and text[k].isspace():
-                k -= 1
-            kw = re.search(r"(\w+)$", text[:k + 1])
-            start = kw.start(1) if kw and kw.group(1).upper() in (
-                "TIMESTAMP", "DATE") else j
-        else:
-            start = i + 1
-            while True:
-                j = start - 1
-                while j >= 0 and (text[j].isalnum() or text[j] in "_.`"):
-                    j -= 1
-                start = j + 1
-                # chained cast ('x'::TIMESTAMP::TIME): the whole left cast
-                # chain is the operand (timestamp_tz.sql)
-                if start >= 2 and text[start - 2:start] == "::":
-                    p = start - 3
-                    while p >= 0 and text[p].isspace():
-                        p -= 1
-                    if p >= 0 and text[p] == "'":
-                        start = text.rfind("'", 0, p)
-                        break
-                    start -= 2
-                    continue
-                break
-        operand = text[start:end].strip()
-        text = text[:start] + fmt(operand) + text[m.end():]
+    while m := _TIME_CAST_RE.search(text):
+        head = text[:m.start()].rstrip()
+        start = _time_operand_start(head)
+        text = text[:start] + fmt(head[start:].strip()) + text[m.end():]
+    return text
 
 
 # PostgreSQL's standard pg_class / pg_namespace column layouts (public
@@ -311,54 +280,6 @@ _PG_CATALOG_DESC = {
 }
 
 
-def _strip_block_comments(text: str) -> str:
-    """Remove `/* ... */` block comments outside string literals."""
-    out, i, q, n = [], 0, None, len(text)
-    while i < n:
-        ch = text[i]
-        if q:
-            if ch == q:
-                q = None
-            out.append(ch)
-        elif ch in ("'", '"'):
-            q = ch
-            out.append(ch)
-        elif ch == "/" and text[i:i + 2] == "/*":
-            end = text.find("*/", i + 2)
-            i = (end + 2 if end != -1 else n)
-            continue
-        else:
-            out.append(ch)
-        i += 1
-    return "".join(out)
-
-
-def _strip_line_comments(text: str) -> str:
-    """Remove `-- ...` end-of-line comments outside string literals."""
-    out = []
-    for line in text.splitlines():
-        res, i, q = [], 0, None
-        while i < len(line):
-            ch = line[i]
-            if q:
-                if ch == q:
-                    q = None
-                res.append(ch)
-            elif ch in ("'", '"'):
-                q = ch
-                res.append(ch)
-            elif ch == "-" and line[i : i + 2] == "--":
-                break
-            else:
-                res.append(ch)
-            i += 1
-        out.append("".join(res))
-    return "\n".join(out)
-
-
-_SQ_STRING_RE = re.compile(r"'(?:[^']|'')*'")
-
-
 def _idents(text: str) -> set:
     """Word tokens of SQL ``text`` outside single-quoted literals: the names
     a statement may read a table or view by."""
@@ -387,18 +308,6 @@ def _rawify_strings(text: str) -> str:
         out.append(m.group(0).replace("\\", "\\\\"))
         pos = m.end()
     out.append(text[pos:])
-    return "".join(out)
-
-
-def _map_outside_strings(text: str, fn) -> str:
-    """Apply ``fn`` to the segments of ``text`` outside single-quoted SQL
-    string literals (which pass through untouched)."""
-    out, pos = [], 0
-    for m in _SQ_STRING_RE.finditer(text):
-        out.append(fn(text[pos:m.start()]))
-        out.append(m.group(0))
-        pos = m.end()
-    out.append(fn(text[pos:]))
     return "".join(out)
 
 
@@ -595,22 +504,15 @@ def _strip_double_paren_subquery(text: str) -> str:
     """`x IN ((SELECT …))` → `x IN (SELECT …)` — DataFusion tolerates the
     doubled parens (optimizer/filter_push_down.sql), Spark's parser does
     not. Removes the redundant inner paren pair only."""
-    while True:
-        m = re.search(r"\bIN\s*\(\s*\(\s*(?=SELECT\b)", text, re.IGNORECASE)
-        if not m:
-            return text
+    while m := re.search(r"\bIN\s*\(\s*\(\s*(?=SELECT\b)", text,
+                         re.IGNORECASE):
         # position of the INNER '(' and its matching ')'
         inner = text.rindex("(", m.start(), m.end())
-        depth, i = 1, inner + 1
-        while i < len(text) and depth:
-            if text[i] == "(":
-                depth += 1
-            elif text[i] == ")":
-                depth -= 1
-            i += 1
-        if depth:
-            return text
-        text = text[:inner] + text[inner + 1:i - 1] + text[i:]
+        end = close_paren(text, inner + 1)
+        if end is None:
+            break
+        text = text[:inner] + text[inner + 1:end] + text[end + 1:]
+    return text
 
 
 _SET_CMP_AGG = {  # (op, quantifier) → aggregate over the subquery column
@@ -636,14 +538,10 @@ def _rewrite_set_comparison(text: str) -> str:
         op = m.group(1)
         quant = "ANY" if m.group(2).upper() == "SOME" else m.group(2).upper()
         start = text.index("(", m.end(1))
-        depth, i = 1, start + 1
-        while i < len(text) and depth:
-            if text[i] == "(":
-                depth += 1
-            elif text[i] == ")":
-                depth -= 1
-            i += 1
-        sub = text[start + 1:i - 1].strip()
+        end = close_paren(text, start + 1)
+        if end is None:
+            return text
+        sub = text[start + 1:end].strip()
         if op == "=" and quant == "ANY":
             repl = f" IN ({sub})"
         elif op in ("!=", "<>") and quant == "ALL":
@@ -656,7 +554,7 @@ def _rewrite_set_comparison(text: str) -> str:
                           lambda sm: f"SELECT {agg}({sm.group(1)}) FROM",
                           sub, count=1)
             repl = f" {op} ({sub2})"
-        text = text[:m.start()] + repl + text[i:]
+        text = text[:m.start()] + repl + text[end + 1:]
 
 
 def _clamp_huge_limits(text: str) -> str:
@@ -692,60 +590,39 @@ def _rewrite_date_addsub(text: str) -> str:
     """DataFusion date_add/date_sub(expr, INTERVAL '…' | '…') with mixed
     year-month + day-time parts → chained native interval arithmetic (Spark
     can't mix the two field classes in one literal; chained '+' preserves
-    the date-in → date-out typing the goldens pin)."""
-    while True:
-        m = re.search(r"\bdate_(add|sub)\s*\(", text, re.IGNORECASE)
-        if not m:
-            return text
-        sign = "+" if m.group(1).lower() == "add" else "-"
-        inner, rest = _balanced_paren(text[m.end() - 1:])
-        depth = 0
-        split = -1
-        for i, ch in enumerate(inner):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                split = i
-        base, arg = inner[:split], inner[split + 1:].strip()
-        lm = re.fullmatch(r"(?:INTERVAL\s+)?'([^']*)'", arg, re.IGNORECASE)
-        if not lm:
-            return text  # column/complex arg — leave for Spark
-        totals: dict = {}
-        for num, unit in re.findall(
-                r"([-+]?\d+)\s*(year|month|week|day|hour|minute|second)s?",
-                lm.group(1), re.IGNORECASE):
-            tgt, mult = _IVAL_UNITS[unit.lower()]
-            totals[tgt] = totals.get(tgt, 0) + int(num) * mult
-        terms = "".join(
-            f" {sign} INTERVAL '{v}' {u}" for u, v in totals.items() if v
-        )
-        text = text[: m.start()] + f"({base}{terms})" + rest
+    the date-in → date-out typing the goldens pin). A column/complex
+    interval argument is left for Spark."""
+    def call(sign: str):
+        def fn(args: list[str]) -> str | None:
+            lm = len(args) > 1 and re.fullmatch(
+                r"(?:INTERVAL\s+)?'([^']*)'", args[-1].strip(), re.IGNORECASE)
+            if not lm:
+                return None
+            totals: dict = {}
+            for num, unit in re.findall(
+                    r"([-+]?\d+)\s*(year|month|week|day|hour|minute|second)s?",
+                    lm.group(1), re.IGNORECASE):
+                tgt, mult = _IVAL_UNITS[unit.lower()]
+                totals[tgt] = totals.get(tgt, 0) + int(num) * mult
+            terms = "".join(
+                f" {sign} INTERVAL '{v}' {u}" for u, v in totals.items() if v
+            )
+            return f"({','.join(args[:-1])}{terms})"
+        return fn
+
+    text = rewrite_calls(text, "date_add", call("+"))
+    return rewrite_calls(text, "date_sub", call("-"))
 
 
 def _rewrite_arrow_cast(text: str) -> str:
     """DataFusion arrow_cast(expr, 'Type') → CAST(expr AS mapped-type)."""
-    while True:
-        m = re.search(r"\barrow_cast\s*\(", text, re.IGNORECASE)
-        if not m:
-            return text
-        inner, rest = _balanced_paren(text[m.end() - 1:])
-        depth = 0
-        split = -1
-        for i, ch in enumerate(inner):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                split = i  # last top-level comma
-        expr, typ = inner[:split], inner[split + 1:].strip().strip("'\"")
-        text = (
-            text[: m.start()]
-            + f"CAST({expr} AS {_map_type(typ)})"
-            + rest
-        )
+    def fn(args: list[str]) -> str | None:
+        if len(args) < 2:
+            return None
+        typ = _map_type(args[-1].strip().strip("'\""))
+        return f"CAST({','.join(args[:-1])} AS {typ})"
+
+    return rewrite_calls(text, "arrow_cast", fn)
 
 
 def _rewrite_atat(text: str) -> str:
@@ -870,30 +747,6 @@ def _rewrite_colon_cast(text: str) -> str:
             out.append(m.group(0))
             pos = m.end()
     return "".join(out)
-
-
-def _split_top_level_tuples(text: str) -> list[str]:
-    """Split "(a, 'x'), (b, 'y')" into its top-level parenthesized tuples."""
-    out, depth, cur, instr = [], 0, "", None
-    for ch in text:
-        if instr:
-            cur += ch
-            if ch == instr:
-                instr = None
-            continue
-        if ch in ("'", '"'):
-            instr = ch
-            cur += ch
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        cur += ch
-        if depth == 0 and ch == ")":
-            out.append(cur.strip().lstrip(","). strip())
-            cur = ""
-    return [t for t in out if t]
 
 
 def _parse_time_arg(arg: str) -> int:
@@ -1061,6 +914,22 @@ def _fold_tql_time_expr(text: str) -> int:
     raise ValueError(f"unsupported now() multiple in {text!r}")
 
 
+# Spark UDF registration has no overloading, the reference's UDFs do: a
+# call of one of these names takes a registered name by its argument count
+_BY_ARITY = {
+    "ipv4_to_cidr": {1: "ipv4_to_cidr_auto", 2: "ipv4_to_cidr2"},
+    "ipv6_to_cidr": {1: "ipv6_to_cidr_auto", 2: "ipv6_to_cidr2"},
+    # 2-arg regexp_extract returns the WHOLE match in DataFusion (group 0);
+    # Spark's default group index is 1
+    "regexp_extract": {2: "gt_regexp_extract0"},
+    # DataFusion/Postgres string-function semantics (dialect.py)
+    "substring": {2: "gt_substr2", 3: "gt_substr"},
+    "substr": {2: "gt_substr2", 3: "gt_substr"},
+    "ltrim": {2: "gt_ltrim"}, "rtrim": {2: "gt_rtrim"}, "btrim": {2: "gt_btrim"},
+    # DataFusion 3-arg regexp_replace replaces the FIRST match only
+    "regexp_replace": {3: "gt_regexp_replace"},
+}
+
 _TYPE_MAP = {
     # greptime type → spark type (SURVEY.md §1.2)
     # int2/int4/int8 are Postgres width-in-BYTES aliases (reference
@@ -1074,6 +943,8 @@ _TYPE_MAP = {
     "float": "float", "float32": "float", "float4": "float",
     "double": "double", "float64": "double", "float8": "double",
     "string": "string", "varchar": "string", "text": "string", "char": "string",
+    # arrow string type names (arrow_cast(x, 'Utf8'), x::Utf8)
+    "utf8": "string", "largeutf8": "string", "utf8view": "string",
     "tinytext": "string", "mediumtext": "string", "longtext": "string",
     "binary": "binary", "varbinary": "binary", "bytea": "binary",
     "blob": "binary", "mediumblob": "binary", "longblob": "binary",
@@ -1285,13 +1156,15 @@ class GreptimeSQL:
             body = text_q.strip().rstrip(";")
             name = cm0.group(1)
             name = name[1:-1] if name[0] in "\"`" else name.lower()
-            cols_text, tail = _balanced_paren(body[cm0.end() - 1 :])
+            end = close_paren(body, cm0.end()) or len(body)
+            cols_text, tail = body[cm0.end():end], body[end + 1:]
             wm = re.search(r"WITH\s*\(", tail, re.IGNORECASE)
-            with_text = _balanced_paren(tail[wm.end() - 1 :])[0] if wm else None
+            with_text = (tail[wm.end():close_paren(tail, wm.end())]
+                         if wm else None)
         if m:
             cols, tags, time_index = [], [], None
             pk_sites = 0
-            for item in _split_columns(cols_text):
+            for item in split_top(cols_text):
                 item = item.strip()
                 if not item:
                     continue
@@ -1358,7 +1231,7 @@ class GreptimeSQL:
                     self._validate_fulltext_opts(idx6["fulltext"])
             opts = {}
             if with_text:
-                for kv in _split_quoted_csv(with_text):
+                for kv in split_top(with_text):
                     if "=" in kv:
                         k, v = kv.split("=", 1)
                         # option keys are case-insensitive, stored lowercase
@@ -1452,7 +1325,7 @@ class GreptimeSQL:
                                        r"\((.*)\)\s*$", psql)
                         return sorted(
                             re.sub(r"[\s`\"]+", " ", r).strip().lower()
-                            for r in (_split_top_args(m2.group(1))
+                            for r in (split_top(m2.group(1))
                                       if m2 else [])
                             if r.strip())
                     declared = _rule_set(partition_sql)
@@ -1610,7 +1483,7 @@ class GreptimeSQL:
                 # reference; Spark's INT literals overflow (456*456*456*456)
                 # lookbehinds keep fractional/exponent digits of float
                 # literals intact: `(2*3, 1.5)` must not become `(…, 1.5L)`
-                values_text = _map_outside_strings(
+                values_text = map_outside_strings(
                     values_text,
                     lambda seg: re.sub(
                         r"(?<![\d.eE])(?<![eE][+-])(\d+)\b(?![\dL.eE])",
@@ -1641,7 +1514,7 @@ class GreptimeSQL:
             values_text = re.sub(r",\s*\)", ")", values_text)  # trailing comma inside a tuple
             # MySQL-style double-quoted string literals in a VALUES tuple
             # (Spark parses "..." as identifiers); only outside '...' strings
-            values_text = _map_outside_strings(
+            values_text = map_outside_strings(
                 values_text,
                 lambda seg: re.sub(r'"((?:[^"\\]|\\.)*)"', r"'\1'", seg),
             )
@@ -1663,8 +1536,12 @@ class GreptimeSQL:
                 r"\1", values_text)
             # tuple arity must match the target column list exactly
             # (insert_default.result: 1004 "column count mismatch")
-            for _t in _split_top_level_tuples(values_text):
-                _n = len(_split_top_args(_t.strip()[1:-1]))
+            def _rows() -> list[list[str]]:
+                return [split_top(t.strip()[1:-1])
+                        for t in split_top(values_text)]
+
+            for _r in _rows():
+                _n = len(_r)
                 if _n != len(cols):
                     raise ValueError(
                         f"Invalid SQL, error: column count mismatch, "
@@ -1678,8 +1555,8 @@ class GreptimeSQL:
                 # cannot be synthesized (insert_default.result: 1004 "No
                 # valid default value can be built automatically")
                 _ti = self.catalog.meta(name).time_index
-                for _t in _split_top_level_tuples(values_text):
-                    for _j, _v in enumerate(_split_top_args(_t.strip()[1:-1])):
+                for _r in _rows():
+                    for _j, _v in enumerate(_r):
                         if _v.strip().upper() != "DEFAULT" or _j >= len(cols):
                             continue
                         _e = cols[_j]
@@ -1695,8 +1572,7 @@ class GreptimeSQL:
                 # position can't type-merge in VALUES/UNION — pre-coerce the
                 # int literals to the column's epoch unit (semantic_graph.sql
                 # graph_traces insert)
-                tuples = _split_top_level_tuples(values_text)
-                args_per = [_split_top_args(t.strip()[1:-1]) for t in tuples]
+                args_per = _rows()
                 changed = False
                 for j, entry in enumerate(cols):
                     if entry[1] != "timestamp" or j >= min(map(len, args_per), default=0):
@@ -1714,7 +1590,7 @@ class GreptimeSQL:
                                 changed = True
                 if changed:
                     values_text = ", ".join(
-                        "(" + ", ".join(a) + ")" for a in args_per)
+                        "(" + ",".join(a) + ")" for a in args_per)
             self._bind(_idents(values_text))  # scalar subqueries read tables
             try:
                 raw = self.spark.sql(f"SELECT * FROM VALUES {values_text}")
@@ -1723,7 +1599,7 @@ class GreptimeSQL:
                 # (e.g. parse_json(...)) re-express as UNION ALL SELECTs
                 selects = [
                     "SELECT " + t.strip()[1:-1]
-                    for t in _split_top_level_tuples(values_text)
+                    for t in split_top(values_text)
                 ]
                 raw = self.spark.sql(" UNION ALL ".join(selects))
             raw = raw.toDF(*[f"col{i + 1}" for i in range(len(cols))])
@@ -2544,22 +2420,19 @@ class GreptimeSQL:
             rest_after_close) returns the replacement text for the call plus
             everything after it."""
             pat = re.compile(rf"(?i)\b{name}\s*\(")
-            while True:
-                m = pat.search(txt)
-                if not m:
-                    return txt
-                inner, rest = _balanced_paren(txt[m.end() - 1:])
-                txt = txt[:m.start()] + render(inner, rest)
+            while m := pat.search(txt):
+                end = close_paren(txt, m.end())
+                if end is None:
+                    break
+                txt = txt[:m.start()] + render(txt[m.end():end],
+                                               txt[end + 1:])
+            return txt
 
         # array_lower(arr, 1) → 1; array_upper/array_length(arr, 1) → size
-        text = _each_call(text, "array_lower", lambda i, r: "1" + r)
-
-        def _size_of(i: str, r: str) -> str:
-            arr = re.sub(r",\s*1\s*$", "", i)
-            return f"size({arr})" + r
-
-        for fn in ("array_upper", "array_length"):
-            text = _each_call(text, fn, _size_of)
+        text = rewrite_calls(text, "array_lower", lambda a: "1")
+        text = rewrite_calls(
+            text, "array_upper|array_length",
+            lambda a: "size(" + re.sub(r",\s*1\s*$", "", ",".join(a)) + ")")
         # FROM-item `string_to_array(...) alias` → one-row subquery producing
         # the array column; expression-position occurrences become split()
         _KW = ("as", "and", "or", "then", "else", "end", "in", "on", "where")
@@ -2726,7 +2599,7 @@ class GreptimeSQL:
             body = _upper_keywords(views[m.group(1)].strip().rstrip(";"))
             # the reference re-renders through sqlparser, which spaces
             # binary operators (`n+1` → `n + 1`)
-            body = _map_outside_strings(
+            body = map_outside_strings(
                 body,
                 lambda s: re.sub(r"(\w)\s*([+\-*/])\s*(\w)", r"\1 \2 \3", s))
             prefix = getattr(self, "_view_prefix", {}).get(
@@ -3220,14 +3093,8 @@ class GreptimeSQL:
         hm = re.match(r"(?is)\s*TQL\s+EVAL\s*\(", s)
         if not hm:
             return None
-        depth, i = 1, hm.end()
-        while i < len(s) and depth:  # bounds may nest arbitrarily (now()-…)
-            if s[i] == "(":
-                depth += 1
-            elif s[i] == ")":
-                depth -= 1
-            i += 1
-        expr = s[i:].strip()
+        i = close_paren(s, hm.end())  # bounds may nest (now()-…)
+        expr = "" if i is None else s[i + 1:].strip()
         fm = re.match(r"(\w+)\s*\(", expr)
         if not fm:
             return None
@@ -3315,8 +3182,9 @@ class GreptimeSQL:
             # `now()`")
             tm = re.match(r"(?is)\s*TQL\s+EVAL\s*\(", select_text)
             if tm:
-                inner = _balanced_paren(select_text[tm.end() - 1:])[0]
-                bounds = _split_top_args(inner)[:2]
+                inner = select_text[tm.end():close_paren(select_text,
+                                                          tm.end())]
+                bounds = split_top(inner)[:2]
                 for b in bounds:
                     if not re.search(r"(?i)\bnow\s*\(", b):
                         raise ValueError(
@@ -3336,16 +3204,10 @@ class GreptimeSQL:
                 r'(?is)^\s*WITH\s+(?:"([^"]+)"|(\w+))\s*'
                 r"(?:\(\s*[^)]*?\s*\))?\s+AS\s*\(", s)
             ok = False
-            if hm:
-                depth, i = 1, hm.end()
-                while i < len(s) and depth:
-                    if s[i] == "(":
-                        depth += 1
-                    elif s[i] == ")":
-                        depth -= 1
-                    i += 1
-                body = s[hm.end():i - 1].strip()
-                rest = s[i:].strip()
+            i = close_paren(s, hm.end()) if hm else None
+            if i is not None:
+                body = s[hm.end():i].strip()
+                rest = s[i + 1:].strip()
                 rm = re.match(
                     r'(?is)^SELECT\s+\*\s+FROM\s+(?:"([^"]+)"|(\w+))\s*$',
                     rest)
@@ -4031,7 +3893,7 @@ class GreptimeSQL:
                     return (f"{m.group(1)} {m.group(2)} "
                             + tpl.format(v=m.group(3)))
 
-                text = _map_outside_strings(text, lambda seg: re.sub(
+                text = map_outside_strings(text, lambda seg: re.sub(
                     rf"({qual}`?{c}`?)\s*(<=|>=|!=|<>|=|<|>)\s*"
                     rf"(-?\d+)\b(?!\s*[\d.eE])",
                     repl, seg))
@@ -4041,7 +3903,7 @@ class GreptimeSQL:
                             + tpl.format(v=m.group(2)) + " AND "
                             + tpl.format(v=m.group(3)))
 
-                text = _map_outside_strings(text, lambda seg: re.sub(
+                text = map_outside_strings(text, lambda seg: re.sub(
                     rf"({qual}`?{c}`?)\s+BETWEEN\s+(-?\d+)\s+AND\s+"
                     rf"(-?\d+)\b(?!\s*[\d.eE])",
                     repl_between, seg, flags=re.IGNORECASE))
@@ -4078,7 +3940,7 @@ class GreptimeSQL:
                     return (f"{m.group(1)} {m.group(2)} "
                             f"timestamp_millis({m.group(3)})")
 
-                text = _map_outside_strings(text, lambda seg: re.sub(
+                text = map_outside_strings(text, lambda seg: re.sub(
                     rf"((?:\w+\.)?`?{c}`?)\s*(<=|>=|!=|<>|=|<|>)\s*"
                     rf"(-?\d+)\b(?!\s*[\d.eE])",
                     vrepl, seg))
@@ -4124,14 +3986,14 @@ class GreptimeSQL:
                 return (f"try_variant_get({m.group(1)}{c}, "
                         f"'{_vg_path(path)}', '{_map_type(m.group(3))}')")
 
-            text = _map_outside_strings(text, lambda seg: re.sub(
+            text = map_outside_strings(text, lambda seg: re.sub(
                 rf"((?:\w+\.)?)\b{re.escape(c)}"
                 rf"((?:\.[A-Za-z_]\w*|\[\d+\])+)\s*::\s*"
                 rf"(\w+(?:\(\s*\d+(?:\s*,\s*\d+)?\s*\))?)",
                 _tvg_dot, seg))
             # the early ::-cast rewrite may already have wrapped a dotted
             # path: CAST(data.did AS string) → typed variant get too
-            text = _map_outside_strings(text, lambda seg: re.sub(
+            text = map_outside_strings(text, lambda seg: re.sub(
                 rf"\bCAST\s*\(\s*((?:\w+\.)?)\b{re.escape(c)}"
                 rf"((?:\.[A-Za-z_]\w*|\[\d+\])+)\s+AS\s+"
                 rf"(\w+(?:\(\s*\d+(?:\s*,\s*\d+)?\s*\))?)\s*\)",
@@ -4144,7 +4006,7 @@ class GreptimeSQL:
                 return (f"json_get(CAST({m.group(1)}{c} AS STRING), "
                         f"'{path}')")
 
-            text = _map_outside_strings(text, lambda seg: pat.sub(repl, seg))
+            text = map_outside_strings(text, lambda seg: pat.sub(repl, seg))
             # direct json_* function calls on the variant column take the
             # canonical text form (the jsonb UDF family is string-based)
             text = re.sub(
@@ -4339,16 +4201,14 @@ class GreptimeSQL:
     def _rewrite_arrow_typeof(self, text: str) -> str:
         """arrow_typeof(expr) → the DataFusion type-name string, resolved by
         probing the expression's Spark schema (decimal_arithmetic.sql)."""
-        while True:
-            m = re.search(r"\barrow_typeof\s*\(", text, re.IGNORECASE)
-            if not m:
-                return text
-            inner, rest = _balanced_paren(text[m.end() - 1:])
+        def fn(args: list[str]) -> str | None:
             try:
-                dt = self.spark.sql(f"SELECT {inner}").schema[0].dataType
+                dt = self.spark.sql(f"SELECT {','.join(args)}").schema[0]
             except Exception:
-                return text
-            text = text[:m.start()] + f"'{_arrow_type_name(dt)}'" + rest
+                return None
+            return f"'{_arrow_type_name(dt.dataType)}'"
+
+        return rewrite_calls(text, "arrow_typeof", fn)
 
     def _rewrite_to_timestamp_prec(self, text: str) -> str:
         """to_timestamp_{seconds,millis,micros,nanos} over a TIMESTAMP
@@ -4841,7 +4701,7 @@ class GreptimeSQL:
             if pm:
                 cols = ", ".join(c.strip().strip('"`')
                                  for c in pm.group(1).split(","))
-                rules = [r.strip() for r in _split_columns(pm.group(2))
+                rules = [r.strip() for r in split_top(pm.group(2))
                          if r.strip()]
                 if not rules:
                     out.append((sch, t, "p0", cols, None))
@@ -5556,13 +5416,15 @@ class GreptimeSQL:
                 raise ValueError(
                     "Invalid SQL syntax: sql parser error: Expected "
                     "expression inside REPARTITION clause, found: )")
-            src_txt, rest = _balanced_paren("(" + body)
-            rest = rest.strip()
+            end = close_paren(body)
+            src_txt = body[:end]
+            rest = "" if end is None else body[end + 1:].strip()
             into_txt = None
             im = re.match(r"(?is)^INTO\s*\(", rest)
             if im:
-                into_txt, rest2 = _balanced_paren(rest[im.end() - 1:])
-                if rest2.strip().startswith(","):
+                end = close_paren(rest, im.end())
+                into_txt = rest[im.end():end]
+                if end is not None and rest[end + 1:].strip().startswith(","):
                     raise ValueError(
                         "Invalid SQL syntax: sql parser error: Expected "
                         "end of REPARTITION clause, found: ,")
@@ -5571,8 +5433,8 @@ class GreptimeSQL:
                 raise ValueError(
                     "Not supported: REPARTITION on logical tables")
             norm = lambda e: re.sub(r"\s+", " ", e.strip())
-            srcs = [norm(e) for e in _split_columns(src_txt) if e.strip()]
-            intos = ([norm(e) for e in _split_columns(into_txt)
+            srcs = [norm(e) for e in split_top(src_txt) if e.strip()]
+            intos = ([norm(e) for e in split_top(into_txt)
                       if e.strip()] if into_txt else [])
             parts = [(pc, rule) for sch, t, _p, pc, rule in
                      self._table_partitions() if t == name]
@@ -5612,7 +5474,7 @@ class GreptimeSQL:
             # two-phase: validate every clause, then apply — a failing clause
             # must leave the table unchanged (reference ALTER is atomic)
             parsed = []
-            for clause in _split_columns(am.group(1)):
+            for clause in split_top(am.group(1)):
                 clause = clause.strip()
                 clause = re.sub(r"^ADD\s+COLUMNS?\s+", "", clause, flags=re.IGNORECASE)
                 if_not_exists = bool(re.match(r"^IF\s+NOT\s+EXISTS\s+", clause, re.IGNORECASE))
@@ -5725,7 +5587,7 @@ class GreptimeSQL:
             self._unbind(name)
             return self._empty_ok()
         if re.match(r"MODIFY\s+COLUMN\s+", action, re.IGNORECASE):
-            for clause in _split_columns(action):
+            for clause in split_top(action):
                 clause = re.sub(r"^\s*MODIFY\s+COLUMN\s+", "", clause.strip(), flags=re.IGNORECASE)
                 sd = re.match(
                     r"(\"[^\"]+\"|\w+)\s+SET\s+DEFAULT\s+('(?:[^']*)'|[-+]?\d+(?:\.\d+)?|\w+(?:\([^)]*\))?)\s*$",
@@ -5969,30 +5831,11 @@ class GreptimeSQL:
         tests/cases/standalone/common/tql/tql-cte.sql; Spark handles the CTE
         column-alias list natively). TQL ANALYZE/EXPLAIN in a CTE is an
         error, as in the reference."""
-        if not re.search(r"\bAS\s*\(\s*TQL\b", text, re.IGNORECASE):
-            return text
-        while True:
-            m = re.search(r"\bAS\s*\(\s*TQL\b", text, re.IGNORECASE)
-            if not m:
-                return text
+        while m := re.search(r"\bAS\s*\(\s*TQL\b", text, re.IGNORECASE):
             start = text.index("(", m.start())
-            depth, i, q = 0, start, None
-            while i < len(text):
-                ch = text[i]
-                if q:
-                    if ch == q:
-                        q = None
-                elif ch in "'\"":
-                    q = ch
-                elif ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        break
-                i += 1
-            if depth != 0:
-                return text
+            i = close_paren(text, start + 1)
+            if i is None:
+                break
             body = text[start + 1:i]
             if re.match(r"\s*TQL\s+(ANALYZE|EXPLAIN)\b", body, re.IGNORECASE):
                 raise ValueError(
@@ -6013,6 +5856,7 @@ class GreptimeSQL:
                 dfr = dfr.select(cols[0], cols[-1], *cols[1:-1])
             dfr.createOrReplaceTempView(view)
             text = text[:start + 1] + f"SELECT * FROM {view}" + text[i:]
+        return text
 
     # -- PREPARE / EXECUTE / DEALLOCATE (prepare/mysql_prepare.sql) ----------
     # Server-side prepared statements: positional `?` placeholders bind the
@@ -6030,58 +5874,48 @@ class GreptimeSQL:
     def _bind_placeholders(body: str, args: list[str]) -> str:
         """Substitute `?` outside string literals with the argument literals,
         validating explicit int casts (the reference's early conversion)."""
-        out, q, n = [], None, 0
-        i = 0
-        while i < len(body):
-            ch = body[i]
-            if q:
-                if ch == q:
-                    q = None
-                out.append(ch)
-            elif ch in "'\"":
-                q = ch
-                out.append(ch)
-            elif ch == "?":
-                if n >= len(args):
+        n = 0
+
+        def bind(m: re.Match) -> str:
+            nonlocal n
+            if m.group() != "?":
+                return m.group()  # a double-quoted name or string
+            if n >= len(args):
+                raise ValueError(
+                    "Placeholder '?' was not provided a value for execution")
+            arg = args[n]
+            n += 1
+            tail = m.string[m.end():]
+            tm = re.match(r"\s*::\s*(\w+)", tail)
+            target = tm.group(1).upper() if tm else None
+            if target is None and re.search(r"(?is)CAST\s*\(\s*$",
+                                            m.string[:m.start()][-24:]):
+                # CAST(? AS T): the enclosing cast
+                am = re.match(r"\s*AS\s+(\w+)", tail)
+                target = am.group(1).upper() if am else None
+            if target in ("INT", "INTEGER", "BIGINT", "SMALLINT",
+                          "TINYINT") and arg.startswith("'"):
+                inner = arg.strip("'")
+                if not re.fullmatch(r"-?\d+", inner):
                     raise ValueError(
-                        "Placeholder '?' was not provided a value for execution")
-                arg = args[n]
-                n += 1
-                tail = body[i + 1:]
-                tm = re.match(r"\s*::\s*(\w+)", tail)
-                target = tm.group(1).upper() if tm else None
-                if target is None:
-                    # CAST(? AS T): look back for the enclosing cast
-                    back = "".join(out)[-24:]
-                    cm = re.search(r"(?is)CAST\s*\(\s*$", back)
-                    if cm:
-                        am = re.match(r"\s*AS\s+(\w+)", tail)
-                        target = am.group(1).upper() if am else None
-                if target in ("INT", "INTEGER", "BIGINT", "SMALLINT",
-                              "TINYINT") and arg.startswith("'"):
-                    inner = arg.strip("'")
-                    if not re.fullmatch(r"-?\d+", inner):
-                        raise ValueError(
-                            "Invalid request parameter: Unable to convert "
-                            f"{inner} to datatype Int32(Int32Type)")
-                out.append(arg)
-            else:
-                out.append(ch)
-            i += 1
+                        "Invalid request parameter: Unable to convert "
+                        f"{inner} to datatype Int32(Int32Type)")
+            return arg
+
+        out = map_outside_strings(
+            body, lambda seg: re.sub(r'"(?:[^"]|"")*"|\?', bind, seg))
         if n < len(args):
             # extra args are an error in the reference's binder
             raise ValueError(
                 f"Invalid request parameter: expected {n} parameters, "
                 f"got {len(args)}")
-        return "".join(out)
+        return out
 
     def _execute_stmt(self, name: str, using: str | None) -> DataFrame:
         prepared = getattr(self, "_prepared", {})
         if name not in prepared:
             raise ValueError(f"Prepared statement not found: {name}")
-        from greptimedb_spark.range_query import _split_top_level
-
-        args = [a.strip() for a in _split_top_level(using)] if using else []
+        args = [a.strip() for a in split_top(using)] if using else []
         return self.sql(self._bind_placeholders(prepared[name], args))
 
     @staticmethod
@@ -6202,8 +6036,7 @@ class GreptimeSQL:
                     f"received Timestamp for '{col}'")
 
     def sql(self, text: str, time_index: str = "ts") -> DataFrame:
-        text = _strip_block_comments(text)
-        text = _strip_line_comments(text)
+        text = strip_comments(text)
         cur_db = getattr(self, "_current_db", "public")
         if cur_db in ("information_schema", "pg_catalog") and re.match(
                 r"(?is)\s*(CREATE\s+TABLE|DROP\s+TABLE|ALTER\s+TABLE"
@@ -6332,7 +6165,7 @@ class GreptimeSQL:
         if re.search(r"(?i)\bgreptime_private\s*\.", text):
             # user tables under greptime_private share the single physical
             # schema, like every other database prefix
-            text = _map_outside_strings(
+            text = map_outside_strings(
                 text, lambda seg: re.sub(r"(?i)\bgreptime_private\s*\.\s*",
                                          "", seg))
         if "`" in text:
@@ -6340,7 +6173,7 @@ class GreptimeSQL:
             # (`tbl@suffix`, `tbl#suffix` — create.sql perftest cases) are
             # hex-encoded to a safe lowercase name; the original spelling is
             # kept for display (SHOW TABLES / SHOW CREATE)
-            text = _map_outside_strings(text, self._encode_odd_idents)
+            text = map_outside_strings(text, self._encode_odd_idents)
         if '""' in text and not re.match(r"\s*INSERT\b", text, re.IGNORECASE):
             # ANSI doubled-quote escapes inside quoted identifiers
             # ("COL""UMN" = identifier COL"UMN, keywords/escaped_quotes.sql)
@@ -6353,7 +6186,7 @@ class GreptimeSQL:
                         "`" + m.group(1).replace('""', '"') + "`")
                         if '""' in m.group(1) else m.group(0)),
                     seg)
-            text = _map_outside_strings(text, _esc)
+            text = map_outside_strings(text, _esc)
         if not re.match(r"(?is)\s*CREATE\s+(OR\s+REPLACE\s+)?FLOW\b", text):
             # CREATE FLOW keeps its WITH…TQL body verbatim — the flow
             # engine validates/evaluates it itself (flow_tql_cte.sql)
@@ -6368,17 +6201,17 @@ class GreptimeSQL:
             text = _fold_int_overflow(text)
         # DataFusion dialect: zero-arg count() = count(*), integer IF
         # conditions are nonzero-truth (jsonbench, function/expression)
-        text = _map_outside_strings(
+        text = map_outside_strings(
             text, lambda seg: re.sub(r"\bcount\s*\(\s*\)", "count(*)", seg,
                                      flags=re.IGNORECASE))
-        text = _map_outside_strings(
+        text = map_outside_strings(
             text, lambda seg: re.sub(r"\bIF\s*\(\s*(\(?-?\d+(?:\.\d+)?\)?)\s*,",
                                      r"IF((\1) <> 0,", seg,
                                      flags=re.IGNORECASE))
         if re.search(r"~\*?\s*'", text) and not re.match(r"\s*TQL\b", text,
                                                          re.IGNORECASE):
             text = _rewrite_pg_regex_ops(text)
-        text = _map_outside_strings(text, _rewrite_tablesample)
+        text = map_outside_strings(text, _rewrite_tablesample)
         text = _rewrite_literal_int_division(text)
         if re.search(r"\bINTERVAL\b\s*'|'\s*::\s*INTERVAL\b", text, re.IGNORECASE):
             # standalone interval algebra folds before ::INTERVAL casts are
@@ -6490,15 +6323,12 @@ class GreptimeSQL:
         if re.search(r"\bELT\s*\(", text, re.IGNORECASE):
             # MySQL ELT: 1-based pick, NULL outside range (mysql_compat.sql);
             # Spark's elt raises under ANSI — 0-based `get` returns NULL
-            while True:
-                em = re.search(r"\bELT\s*\(", text, re.IGNORECASE)
-                if not em:
-                    break
-                inner, rest = _balanced_paren(text[em.end() - 1:])
-                args = _split_top_args(inner)
-                text = (text[:em.start()]
-                        + f"get(array({', '.join(args[1:])}), ({args[0]}) - 1)"
-                        + rest)
+            def _elt(args: list[str]) -> str | None:
+                args = [a.strip() for a in args]
+                return (f"get(array({', '.join(args[1:])}), ({args[0]}) - 1)"
+                        if args else None)
+
+            text = rewrite_calls(text, "ELT", _elt)
         if re.search(r"\barrow_typeof\s*\(", text, re.IGNORECASE):
             text = self._rewrite_arrow_typeof(text)
         m = self._SET_TZ_RE.match(text.strip().rstrip(";"))
@@ -6708,7 +6538,7 @@ class GreptimeSQL:
         for d in set(getattr(self, "_databases", set())) | {"public", "greptime"}:
             # bare, double-quoted, or backticked schema prefixes all drop
             # (keywords_expressions: `"SCHEMA"."TABLE"`)
-            text = _map_outside_strings(
+            text = map_outside_strings(
                 text,
                 lambda seg: re.sub(
                     rf"(\"|`)?\b{re.escape(d)}(?(1)\1)\s*\.\s*", "", seg,
@@ -6716,15 +6546,19 @@ class GreptimeSQL:
             )
         if re.search(r"\bdate_bin\s*\(|\btrunc\s*\([^()]*,", text, re.IGNORECASE):
             # gt_date_bin / gt_trunc: functions/dialect.py
-            text = re.sub(r"\bdate_bin\s*\(", "gt_date_bin(", text, flags=re.IGNORECASE)
-            text = _fix_date_bin_args(text)
+            # DataFusion's 2-arg date_bin(i, t) defaults origin to epoch;
+            # the SQL UDF takes all 3 arguments
+            text = rewrite_calls(text, "date_bin", lambda a: (
+                "gt_date_bin(" + ",".join(a) + (
+                    ", TIMESTAMP '1970-01-01 00:00:00'" if len(a) == 2
+                    else "") + ")"))
             text = re.sub(
                 r"\btrunc\s*\(([^()]*,[^()]*)\)", r"gt_trunc(\1)", text, flags=re.IGNORECASE
             )
         # DataFusion tolerates a trailing comma before FROM and before a
         # closing paren (subquery select lists in the geo corpus)
         text = re.sub(r",(\s*)FROM\b", r"\1FROM", text, flags=re.IGNORECASE)
-        text = _map_outside_strings(
+        text = map_outside_strings(
             text, lambda seg: re.sub(r",(\s*)\)", r"\1)", seg))
         # MySQL-style single-quoted aliases → backticked identifiers
         text = re.sub(r"(\bAS\s+)'([^']+)'", r"\1`\2`", text, flags=re.IGNORECASE)
@@ -6825,8 +6659,9 @@ class GreptimeSQL:
         if m:
             # balanced extraction: args may be full expressions with commas
             # inside calls (tql/basic date_trunc('day', …) bounds)
-            inner, rest = _balanced_paren(text[m.end() - 1:])
-            args = _split_columns(inner)
+            end = close_paren(text, m.end())
+            args = split_top(text[m.end():end])
+            rest = "" if end is None else text[end + 1:]
             if len(args) >= 3:
                 tql_groups = (args[0], args[1], args[2],
                               args[3] if len(args) > 3 else None,
@@ -6904,8 +6739,6 @@ class GreptimeSQL:
 
             text = re.sub(r"\bmatches\s*\(\s*([\w.]+)\s*,\s*'((?:[^'])*)'\s*\)",
                           _m, text, flags=re.IGNORECASE)
-        # NOT via _map_outside_strings: arrow_cast args are string literals
-        # and the rewriter needs the full call text to balance parens
         text = _rewrite_arrow_cast(text)
         if re.search(r"(?i)\bunnest\s*\(", text):
             text = _rewrite_unnest_zip(text)
@@ -6929,9 +6762,9 @@ class GreptimeSQL:
             # RANGE queries keep ordered selectors verbatim: the range engine
             # lowers them null-preserving (range_query._ordered_selector_sql);
             # min_by/max_by would silently drop null-keyed rows
-            text = _map_outside_strings(text, _rewrite_ordered_value)
+            text = map_outside_strings(text, _rewrite_ordered_value)
         if re.search(r"\barray_agg\s*\(", text, re.IGNORECASE):
-            text = _map_outside_strings(text, _rewrite_array_agg)
+            text = map_outside_strings(text, _rewrite_array_agg)
         if re.search(r"\bdate_(add|sub)\s*\(", text, re.IGNORECASE):
             # before the interval rewrite: date_add/date_sub parse their own
             # INTERVAL argument
@@ -6940,7 +6773,7 @@ class GreptimeSQL:
             # RANGE queries keep their own interval grammar (range_query.py)
             text = _rewrite_interval_literals(text)
         if "[" in text and not re.match(r"^\s*TQL\b", text, re.IGNORECASE):
-            text = _map_outside_strings(text, _rewrite_bracket_arrays)
+            text = map_outside_strings(text, _rewrite_bracket_arrays)
         if ("." in text or re.search(r"\bjson_\w+\s*\(|\bDISTINCT\b|\bGROUP\s+BY\b",
                                      text, re.IGNORECASE)):
             text = self._rewrite_json2_paths(text)
@@ -7018,39 +6851,25 @@ class GreptimeSQL:
                      r"|(?<![\w.])median\s*\(",
                      text, re.IGNORECASE):
             text = self._rewrite_weighted_pct(text)
-        for f4 in ("ipv4_to_cidr", "ipv6_to_cidr"):
-            if re.search(rf"\b{f4}\s*\(", text, re.IGNORECASE):
-                text = _dispatch_arity(
-                    text, f4, {1: f"{f4}_auto", 2: f"{f4}2"})
-        dm_epoch = re.search(r"\bdate_part\s*\(\s*'epoch'\s*,", text,
-                             re.IGNORECASE)
-        if dm_epoch:
+        for fname, names in _BY_ARITY.items():
+            text = rewrite_calls(text, fname, lambda a, names=names: (
+                f"{names[len(a)]}({','.join(a)})" if len(a) in names
+                else None))
+        if re.search(r"\bdate_part\s*\(\s*'epoch'\s*,", text, re.IGNORECASE):
             # date_part('epoch', interval) = total seconds as f64
             # (DataFusion; jsonbench.sql activity_span) — CAST to BIGINT
             # truncates whole seconds, extract(SECOND) % 1 restores fraction
-            start = text.index("(", dm_epoch.start())
-            inner_full, rest = _balanced_paren(text[start:])
-            x = re.sub(r"(?is)^\s*'epoch'\s*,", "", inner_full).strip()
-            text = (text[:dm_epoch.start()]
-                    + f"(CAST(({x}) AS BIGINT) + "
-                    f"CAST(extract(SECOND FROM ({x})) % 1 AS DOUBLE))"
-                    + rest)
-        if re.search(r"\bregexp_extract\s*\(", text, re.IGNORECASE):
-            # 2-arg regexp_extract returns the WHOLE match in DataFusion
-            # (group 0); Spark's default group index is 1
-            text = _dispatch_arity(
-                text, "regexp_extract", {2: "gt_regexp_extract0"})
-        # DataFusion/Postgres string-function semantics (dialect.py)
-        if re.search(r"\b(substring|substr)\s*\(", text, re.IGNORECASE):
-            for sname in ("substring", "substr"):
-                text = _dispatch_arity(
-                    text, sname, {2: "gt_substr2", 3: "gt_substr"})
-        for tname in ("ltrim", "rtrim", "btrim"):
-            if re.search(rf"\b{tname}\s*\(\s*[^)]*,", text, re.IGNORECASE):
-                text = _dispatch_arity(text, tname, {2: f"gt_{tname}"})
+            def _epoch(args: list[str]) -> str | None:
+                if not args or args[0].strip().lower() != "'epoch'":
+                    return None
+                x = ",".join(args[1:]).strip()
+                return (f"(CAST(({x}) AS BIGINT) + "
+                        f"CAST(extract(SECOND FROM ({x})) % 1 AS DOUBLE))")
+
+            text = rewrite_calls(text, "date_part", _epoch)
         if re.search(r"\bconcat\s*\(", text, re.IGNORECASE):
             # DataFusion concat skips NULL arguments → concat_ws('', …)
-            text = _map_outside_strings(
+            text = map_outside_strings(
                 text,
                 lambda seg: re.sub(
                     r"\bconcat\s*\(", "concat_ws('',", seg, flags=re.IGNORECASE),
@@ -7059,10 +6878,6 @@ class GreptimeSQL:
             # chrono %-specifier formats → strftime shim
             text = re.sub(r"\bdate_format\s*\(", "gt_strftime(", text,
                           flags=re.IGNORECASE)
-        if re.search(r"\bregexp_replace\s*\(", text, re.IGNORECASE):
-            # DataFusion 3-arg regexp_replace replaces the FIRST match only
-            text = _dispatch_arity(
-                text, "regexp_replace", {3: "gt_regexp_replace"})
         if re.search(r"\bdate_(add|sub)\s*\(", text, re.IGNORECASE):
             text = _rewrite_date_addsub(text)
         if re.search(r"\banomaly_score_", text, re.IGNORECASE):
@@ -7083,34 +6898,17 @@ class GreptimeSQL:
             if cm and "," in re.sub(r"\([^)]*\)", "", cm.group(1)):
                 raise ValueError("This feature is not implemented: "
                                  "count_hash with multiple arguments")
-            text = _wrap_call(
-                text, "count_hash", "count(DISTINCT xxhash64(", "))")
+            text = rewrite_calls(text, "count_hash", lambda a: (
+                f"count(DISTINCT xxhash64({','.join(a)}))"))
         if re.search(r"\bINSERT\s*\(", text, re.IGNORECASE):
             # MySQL string INSERT(str,pos,len,new) — never INSERT INTO
             text = re.sub(r"\bINSERT\s*\(", "gt_mysql_insert(", text,
                           flags=re.IGNORECASE)
         if re.search(r"\bFIELD\s*\(", text, re.IGNORECASE):
             # MySQL FIELD(v, a, b, …) → 1-based index of v, 0 when absent
-            def _field(seg_inner):
-                depth = 0
-                split = -1
-                for i, ch in enumerate(seg_inner):
-                    if ch == "(":
-                        depth += 1
-                    elif ch == ")":
-                        depth -= 1
-                    elif ch == "," and depth == 0:
-                        split = i
-                        break
-                v, rest_args = seg_inner[:split], seg_inner[split + 1:]
-                return f"coalesce(array_position(array({rest_args}), {v}), 0)"
-
-            while True:
-                fm = re.search(r"\bFIELD\s*\(", text, re.IGNORECASE)
-                if not fm:
-                    break
-                inner, rest = _balanced_paren(text[fm.end() - 1:])
-                text = text[: fm.start()] + _field(inner) + rest
+            text = rewrite_calls(text, "FIELD", lambda a: (
+                f"coalesce(array_position(array({','.join(a[1:])}), {a[0]}), 0)"
+                if len(a) > 1 else None))
         text = _floats_to_double(text)
         if not re.match(r"^\s*INSERT", text, re.IGNORECASE):
             # ANSI quoted identifiers; generated-name identifiers
@@ -7134,7 +6932,7 @@ class GreptimeSQL:
                     seg)
                 return re.sub(r'"([^"]+)"', r"`\1`", seg)
 
-            text = _map_outside_strings(text, _idquotes)
+            text = map_outside_strings(text, _idquotes)
         temps = []  # this statement's materialized RANGE parts
 
         def _materialize(body: str) -> str:
@@ -7155,12 +6953,14 @@ class GreptimeSQL:
                 nm = re.match(r"\s*([A-Za-z_]\w*)\s+AS\s*\(", rest, re.IGNORECASE)
                 if not nm:
                     break
-                inner, rem = _balanced_paren(rest[nm.end() - 1:])
+                end = close_paren(rest, nm.end())
+                inner = rest[nm.end():end]
+                rem = "" if end is None else rest[end + 1:]
                 vname = _materialize(inner)
                 # later CTEs and the trailing SELECT read it by its name
                 ref = re.compile(rf"(?i)(\b(?:FROM|JOIN)\s+){nm.group(1)}\b"
                                  rf"|\b{nm.group(1)}(?=\s*\.)")
-                rem = _map_outside_strings(rem, lambda seg: ref.sub(
+                rem = map_outside_strings(rem, lambda seg: ref.sub(
                     lambda m: (m.group(1) or "") + vname, seg)).lstrip()
                 if rem.startswith(","):
                     rest = rem[1:]
@@ -7177,7 +6977,9 @@ class GreptimeSQL:
                 fm = re.search(r"\bFROM\s*\(", text, re.IGNORECASE)
                 if not fm:
                     break
-                inner, rest = _balanced_paren(text[fm.end() - 1:])
+                end = close_paren(text, fm.end())
+                inner = text[fm.end():end]
+                rest = "" if end is None else text[end + 1:]
                 am = re.match(r"\s*(?:AS\s+)?([A-Za-z_]\w*)", rest)
                 kw = {"align", "where", "group", "order", "limit", "by",
                       "fill", "to", "union", "on", "join", "left", "right",
@@ -7250,17 +7052,14 @@ def _rewrite_distinct_on(text: str) -> str:
         m = re.search(r"(?is)\bSELECT\s+DISTINCT\s+ON\s*\(", text)
         if not m:
             return text
-        keys, rest = _balanced_paren(text[text.index("(", m.end() - 2):])
+        close = close_paren(text, m.end())
+        if close is None:
+            return text
+        keys, rest = text[m.end():close], text[close + 1:]
         # scope ends at the enclosing ')' (subquery) or end of statement
-        depth, end = 0, len(rest)
-        for idx, ch in enumerate(rest):
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth < 0:
-                    end = idx
-                    break
+        end = close_paren(rest)
+        if end is None:
+            end = len(rest)
         body = rest[:end].rstrip().rstrip(";")
         bm = re.match(r"(?is)\s*(.*?)\s+FROM\s+(\w+)(\s+WHERE\s+.+?)?"
                       r"\s+ORDER\s+BY\s+(.+?)\s*$", body)
@@ -7274,28 +7073,6 @@ def _rewrite_distinct_on(text: str) -> str:
                 f"(PARTITION BY {keys} ORDER BY {order}) AS __don FROM "
                 f"{tbl}{where}) WHERE __don = 1 ORDER BY {keys}")
         text = text[:m.start()] + repl + rest[end:]
-
-
-def _split_quoted_csv(s: str) -> list[str]:
-    """Split on commas outside quotes (WITH option values may contain commas:
-    'greptime.semantic.entity.process.id' = 'service_name,host')."""
-    out, cur, q = [], [], None
-    for ch in s:
-        if q:
-            if ch == q:
-                q = None
-            cur.append(ch)
-        elif ch in "'\"":
-            q = ch
-            cur.append(ch)
-        elif ch == ",":
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        out.append("".join(cur))
-    return out
 
 
 def _ts_or_none(epoch):
@@ -7394,18 +7171,9 @@ _FLOW_KEYWORDS = (
 def _upper_keywords(sql: str) -> str:
     """Single-space the SQL and upper-case keywords outside string literals
     (the reference re-renders stored definitions from its AST this way)."""
-    parts = []
-    for i, seg in enumerate(re.split(r"('(?:[^']*)')", sql)):
-        if i % 2 == 1:
-            parts.append(seg)
-        else:
-            seg = re.sub(r"\s+", " ", seg)
-            seg = re.sub(
-                r"\b(" + "|".join(_FLOW_KEYWORDS) + r")\b",
-                lambda m: m.group(1).upper(), seg, flags=re.IGNORECASE,
-            )
-            parts.append(seg)
-    return "".join(parts).strip()
+    kw = re.compile(r"\b(" + "|".join(_FLOW_KEYWORDS) + r")\b", re.IGNORECASE)
+    return map_outside_strings(sql, lambda seg: kw.sub(
+        lambda m: m.group(1).upper(), re.sub(r"\s+", " ", seg))).strip()
 
 
 def _render_flow_def(name: str, sink: str, expire, select_text: str, opts=()) -> str:
@@ -7419,25 +7187,12 @@ def _render_flow_def(name: str, sink: str, expire, select_text: str, opts=()) ->
     )
     select_text = re.sub(r"\bgt_date_bin\s*\(", "date_bin(", select_text)
     select_text = re.sub(r"\bgt_trunc\s*\(", "trunc(", select_text)
-    parts = []
-    for i, seg in enumerate(re.split(r"('(?:[^']*)')", select_text)):
-        if i % 2 == 1:
-            parts.append(seg)
-        else:
-            seg = re.sub(r"\s+", " ", seg)
-            seg = re.sub(
-                r"\b(" + "|".join(_FLOW_KEYWORDS) + r")\b",
-                lambda m: m.group(1).upper(),
-                seg,
-                flags=re.IGNORECASE,
-            )
-            parts.append(seg)
     lines = [f"CREATE FLOW IF NOT EXISTS {name}", f"SINK TO public.{sink}"]
     if expire:
         lines.append(f"EXPIRE AFTER {expire}")
     if opts:
         lines.append("WITH (" + ", ".join(f"{k} = '{v}'" for k, v in opts) + ")")
-    lines.append("AS " + "".join(parts).strip())
+    lines.append("AS " + _upper_keywords(select_text))
     return "\n".join(lines)
 
 
@@ -7445,19 +7200,9 @@ def _floats_to_double(text: str) -> str:
     """Decimal literals are DOUBLE in the reference dialect (DataFusion
     Float64); Spark parses `30.0` as DECIMAL(3,1), whose division truncates.
     Rewrite float literals outside string literals to double casts."""
-    out = []
-    for i, seg in enumerate(re.split(r"('(?:[^']*)')", text)):
-        if i % 2 == 1:  # quoted string — untouched
-            out.append(seg)
-        else:
-            out.append(
-                re.sub(
-                    r"(?<![\w.])(\d+\.\d+(?:[eE][+-]?\d+)?)(?![\w.])",
-                    r"CAST(\1 AS DOUBLE)",
-                    seg,
-                )
-            )
-    return "".join(out)
+    return map_outside_strings(text, lambda seg: re.sub(
+        r"(?<![\w.])(\d+\.\d+(?:[eE][+-]?\d+)?)(?![\w.])",
+        r"CAST(\1 AS DOUBLE)", seg))
 
 
 def _rewrite_anomaly(text: str) -> str:
@@ -7471,10 +7216,15 @@ def _rewrite_anomaly(text: str) -> str:
         if not m:
             return text
         fn = m.group(1).lower()
-        inner, rest = _balanced_paren(text[m.end() - 1:])
+        end = close_paren(text, m.end())
+        if end is None:
+            return text
+        inner, rest = text[m.end():end], text[end + 1:]
         om = re.match(r"\s*OVER\s*\(", rest, re.IGNORECASE)
         if om:
-            win, rest2 = _balanced_paren(rest[om.end() - 1:])
+            end = close_paren(rest, om.end())
+            win = rest[om.end():end]
+            rest2 = "" if end is None else rest[end + 1:]
         else:
             # named window: `OVER w … WINDOW w AS (spec)` — inline the spec
             nm = re.match(r"\s*OVER\s+(\w+)", rest, re.IGNORECASE)
@@ -7484,7 +7234,7 @@ def _rewrite_anomaly(text: str) -> str:
                            re.IGNORECASE)
             if not wm:
                 return text
-            win, _ = _balanced_paren(text[wm.end() - 1:])
+            win = text[wm.end():close_paren(text, wm.end())]
             rest2 = rest[nm.end():]
         win = " ".join(win.split())
         if fn == "zscore":
@@ -7492,65 +7242,9 @@ def _rewrite_anomaly(text: str) -> str:
         elif fn == "mad":
             repl = mad_sql(inner.strip(), win)
         else:
-            depth = 0
-            split = -1
-            for i, ch in enumerate(inner):
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                elif ch == "," and depth == 0:
-                    split = i
-            repl = iqr_sql(
-                inner[:split].strip(), inner[split + 1:].strip(), win)
+            args = split_top(inner)
+            repl = iqr_sql(",".join(args[:-1]).strip(), args[-1].strip(), win)
         text = text[: m.start()] + repl + rest2
-
-
-def _wrap_call(text: str, fname: str, opener: str, closer: str) -> str:
-    """Rewrite every fname(args…) to opener + args + closer."""
-    out = []
-    i = 0
-    while True:
-        m = re.search(rf"\b{fname}\s*\(", text[i:], re.IGNORECASE)
-        if not m:
-            out.append(text[i:])
-            break
-        start = i + m.start()
-        open_paren = i + m.end() - 1
-        inner, rest = _balanced_paren(text[open_paren:])
-        out.append(text[i:start])
-        out.append(f"{opener}{inner}{closer}")
-        text = rest
-        i = 0
-    return "".join(out)
-
-
-def _dispatch_arity(text: str, fname: str, names: dict) -> str:
-    """Rewrite fname(args…) to names[argcount](args…) — Spark UDF
-    registration has no overloading, the reference's UDFs do."""
-    out = []
-    i = 0
-    while True:
-        m = re.search(rf"\b{fname}\s*\(", text[i:], re.IGNORECASE)
-        if not m:
-            out.append(text[i:])
-            break
-        start = i + m.start()
-        open_paren = i + m.end() - 1
-        inner, rest = _balanced_paren(text[open_paren:])
-        depth = commas = 0
-        for ch in inner:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                commas += 1
-        out.append(text[i:start])
-        out.append(f"{names.get(commas + 1, fname)}({inner})")
-        text = rest
-        i = 0
-    return "".join(out)
 
 
 def _is_metric_engine(meta) -> bool:
@@ -7560,35 +7254,6 @@ def _is_metric_engine(meta) -> bool:
     return (getattr(meta, "engine", "") == "metric"
             or bool(meta.sorted_columns)
             or bool(getattr(meta, "on_physical", None)))
-
-
-def _split_top_args(inner: str) -> list[str]:
-    """Split comma-separated args at paren depth 0 — quote-aware (parens and
-    commas inside string literals don't count: insert_invalid.sql inserts a
-    literal containing '(')."""
-    args, depth, cur, instr = [], 0, [], None
-    for ch in inner:
-        if instr:
-            cur.append(ch)
-            if ch == instr:
-                instr = None
-            continue
-        if ch in ("'", '"'):
-            instr = ch
-            cur.append(ch)
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            args.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        args.append("".join(cur).strip())
-    return args
 
 
 def _rewrite_unnest_zip(text: str) -> str:
@@ -7605,49 +7270,21 @@ def _rewrite_unnest_zip(text: str) -> str:
     if not m:
         return text
 
-    def _split(body):
-        items, depth, cur = [], 0, []
-        for ch in body:
-            if ch in "([":
-                depth += 1
-            elif ch in ")]":
-                depth -= 1
-            if ch == "," and depth == 0:
-                items.append("".join(cur).strip())
-                cur = []
-            else:
-                cur.append(ch)
-        if cur:
-            items.append("".join(cur).strip())
-        return items
-
     arrays, out_items = [], []
-    for item in _split(m.group(1)):
+
+    def element(args: list[str]) -> str:
+        arrays.append(",".join(args))
+        return f"try_element_at({arrays[-1]}, __gt_i)"
+
+    for item in (i.strip() for i in split_top(m.group(1))):
         sm = re.match(r"(?is)^unnest\s*\(\s*struct\s*\(", item)
-        if sm:
-            inner, rest = _balanced_paren(item[item.index("(", sm.end() - 1):])
-            if not rest.strip().rstrip(")").strip():
-                out_items.extend(_split(inner))
-                continue
-        while True:
-            nm = re.search(r"(?is)\bunnest\s*\(\s*unnest\s*\(", item)
-            if not nm:
-                break
-            item = (item[:nm.start()] + "unnest(flatten("
-                    + item[nm.end():])
-        res, pos = "", 0
-        while True:
-            um = re.search(r"(?is)\bunnest\s*\(", item[pos:])
-            if not um:
-                res += item[pos:]
-                break
-            op = pos + um.end() - 1
-            inner, rest = _balanced_paren(item[op:])
-            arrays.append(inner)
-            res += item[pos:pos + um.start()] + f"try_element_at({inner}, __gt_i)"
-            item = rest
-            pos = 0
-        out_items.append(res)
+        end = close_paren(item, sm.end()) if sm else None
+        if end is not None and not item[end + 1:].strip().rstrip(")").strip():
+            out_items.extend(i.strip() for i in split_top(item[sm.end():end]))
+            continue
+        item = re.sub(r"(?is)\bunnest\s*\(\s*unnest\s*\(", "unnest(flatten(",
+                      item)
+        out_items.append(rewrite_calls(item, "unnest", element))
     if not arrays:
         return "SELECT " + ", ".join(out_items)
     sizes = ", ".join(f"size({a})" for a in arrays)
@@ -7670,30 +7307,20 @@ def _rewrite_geo_path(text: str) -> str:
     way DataFusion unnests a struct."""
     def one(name: str, render) -> None:
         nonlocal text
-        while True:
-            m = re.search(rf"\b{name}\s*\(", text, re.IGNORECASE)
-            if not m:
-                return
-            inner, rest = _balanced_paren(text[m.end() - 1:])
-            args = _split_top_args(inner)
-            if len(args) != 3:
-                return
-            text = text[:m.start()] + render(*args) + rest
+        text = rewrite_calls(text, name, lambda a: (
+            render(*(x.strip() for x in a)) if len(a) == 3 else None))
 
     # UNNEST(geo_path(a,b,t)) first — consumes the geo_path call inside
-    while True:
-        um = re.search(r"\bUNNEST\s*\(\s*geo_path\s*\(", text, re.IGNORECASE)
-        if not um:
+    while um := re.search(r"\bUNNEST\s*\(\s*geo_path\s*\(", text,
+                          re.IGNORECASE):
+        end = close_paren(text, um.end())
+        args = [a.strip() for a in split_top(text[um.end():end])]
+        if end is None or len(args) != 3:
             break
-        open2 = text.index("(", um.end() - 1)
-        inner, rest = _balanced_paren(text[open2:])
-        # rest starts after geo_path's ')': expect the UNNEST ')'
-        rest = rest.lstrip()
+        # after geo_path's ')': expect the UNNEST ')'
+        rest = text[end + 1:].lstrip()
         if rest.startswith(")"):
             rest = rest[1:]
-        args = _split_top_args(inner)
-        if len(args) != 3:
-            break
         pts = _geo_sorted_points(*args)
         repl = (f"transform({pts}, s -> s.lat) AS lat, "
                 f"transform({pts}, s -> s.lng) AS lng")
@@ -7709,38 +7336,6 @@ def _rewrite_geo_path(text: str) -> str:
         f"s -> s.lat), 'lng', transform({_geo_sorted_points(a, b, t)}, "
         f"s -> s.lng))"))
     return text
-
-
-def _fix_date_bin_args(text: str) -> str:
-    """DataFusion's 2-arg date_bin(i, t) defaults origin to epoch; the SQL
-    UDF needs all 3 arguments — append it when missing."""
-    out = []
-    i = 0
-    while True:
-        m = re.search(r"gt_date_bin\s*\(", text[i:])
-        if not m:
-            out.append(text[i:])
-            break
-        start = i + m.start()
-        open_paren = i + m.end() - 1
-        inner, rest = _balanced_paren(text[open_paren:])
-        depth = 0
-        commas = 0
-        for ch in inner:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                commas += 1
-        out.append(text[i:start])
-        if commas == 1:
-            out.append(f"gt_date_bin({inner}, TIMESTAMP '1970-01-01 00:00:00')")
-        else:
-            out.append(f"gt_date_bin({inner})")
-        text = rest
-        i = 0
-    return "".join(out)
 
 
 def _ident_case(tok: str) -> str:
@@ -8181,30 +7776,14 @@ def _render_partition(raw: str) -> str:
         return raw
     cols = ", ".join(f'"{c.strip().strip(chr(34)).strip(chr(96))}"'
                      for c in m.group(1).split(","))
-    rules = [r.strip() for r in _split_commas_depth0(m.group(2))]
+    rules = [r.strip() for r in split_top(m.group(2))]
     # the reference re-renders rules from its AST with uppercase keywords
-    rules = [_map_outside_strings(
+    rules = [map_outside_strings(
         r, lambda seg: re.sub(r"\b(and|or|not)\b",
                               lambda km: km.group(1).upper(), seg,
                               flags=re.IGNORECASE)) for r in rules]
     body = ",\n".join(f"  {r.replace(chr(34), '').replace(chr(96), '')}" for r in rules if r)
     return f"PARTITION ON COLUMNS ({cols}) (\n{body}\n)"
-
-
-def _split_commas_depth0(s: str) -> list[str]:
-    out, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            out.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    out.append("".join(cur))
-    return out
 
 
 def _render_default(default: str | None) -> str:
@@ -8214,40 +7793,6 @@ def _render_default(default: str | None) -> str:
     if d.startswith("'") and d.endswith("'"):
         return d[1:-1]
     return d
-
-
-def _balanced_paren(s: str) -> tuple[str, str]:
-    """``s`` starts at '(' → (inner text, remainder after the matching ')')."""
-    depth = 0
-    for i, ch in enumerate(s):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return s[1:i], s[i + 1 :]
-    return s[1:], ""
-
-
-def _split_columns(text: str) -> list[str]:
-    # paren- AND quote-aware: a DEFAULT '[1.0, 2.0]' literal carries commas
-    out, depth, cur, in_str = [], 0, "", False
-    for ch in text:
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == "," and depth == 0:
-                out.append(cur)
-                cur = ""
-                continue
-        cur += ch
-    if cur.strip():
-        out.append(cur)
-    return out
 
 
 def _parse_step(step: str) -> int:

@@ -105,19 +105,6 @@ class FlowEngine:
         )
         q.awaitTermination()
 
-    def start_flow(self, name: str, processing_time: str = "10 seconds"):
-        """Continuous mode (reference batching-mode periodic evaluation)."""
-        flow = self.flows[name]
-        df = flow.transform(self._stream(flow))
-        return (
-            df.writeStream.format("parquet")
-            .option("path", flow.sink_path)
-            .option("checkpointLocation", flow.checkpoint)
-            .outputMode(flow.output_mode)
-            .trigger(processingTime=processing_time)
-            .start()
-        )
-
     def read_sink(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self.flows[name].sink_path)
 

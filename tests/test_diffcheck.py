@@ -38,7 +38,8 @@ def test_corpus_covers_every_family():
     families = [f for f, _ in dc.parse_corpus()]
     assert len(families) == len(set(families))
     for f in ("dml", "alter", "ttl", "range", "tql", "flow", "metric",
-              "json2", "information_schema", "functions", dc.USERBENCH):
+              "json2", "information_schema", "functions", "lexical",
+              dc.USERBENCH):
         assert f in families
 
 

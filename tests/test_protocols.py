@@ -5,6 +5,8 @@ Behavioral parity targets: reference influx conversion
 opentsdb codec (src/servers/src/opentsdb/codec.rs:38-183).
 """
 
+import re
+
 import pytest
 from pyspark.sql import Row
 
@@ -87,6 +89,25 @@ def test_influx_int_range_quarantined(spark):
     ok = [r for r in rows if r["err"] is None]
     assert {r["field_key"] for r in ok} == {"ok", "f"}
     assert [r["v_i64"] for r in ok if r["field_key"] == "ok"] == [2**63 - 1]
+
+
+def test_influx_numbers_are_ascii_grammar(spark):
+    """Digit separators, a leading '+' and non-ASCII digits are not line
+    protocol; Python's int()/float() would take them, so each of these lines
+    must be an err row, not a number."""
+    bad = ["m x=1_000i", "m x=\uff11\uff12i", "m x=+5i", "m x=1 1_000",
+           "m x=1_0", "m x=+1.5", "m x=1_2u", "m x=-1u", "m x=inf",
+           "m x=1 +5", "m x=1 \uff15"]
+    rows = _parse(spark, bad + ["m a=-5i,b=7u,c=-1.5e3,d=.5,e=2. 3000"])
+    errs = [r for r in rows if r["err"] is not None]
+    assert len(errs) == len(bad)
+    assert all(r["table"] is None and r["v_i64"] is None
+               and r["v_f64"] is None for r in errs)
+    ok = {r["field_key"]: r for r in rows if r["err"] is None}
+    assert (ok["a"]["v_i64"], ok["b"]["v_i64"]) == (-5, 7)
+    assert (ok["c"]["v_f64"], ok["d"]["v_f64"], ok["e"]["v_f64"]) == (
+        -1500.0, 0.5, 2.0)
+    assert ok["a"][proto.TIME_INDEX].microsecond == 3
 
 
 def test_influx_precision_and_errors(spark):
@@ -310,6 +331,55 @@ def test_loki_null_timestamp_quarantined(spark):
                for r in rows if r["err"] is None)
     assert [r["err"] for r in rows if r["err"] is not None] == [
         "invalid loki timestamp: null"] * 2
+
+
+_OTLP_ALL_KINDS = (
+    '{"resourceMetrics":[{"resource":{"attributes":[{"key":"host",'
+    '"value":{"stringValue":"h"}}]},"scopeMetrics":[{"metrics":['
+    '{"name":"g","gauge":{"dataPoints":[{"timeUnixNano":"1663840496000000000",'
+    '"asDouble":12.5}]}},'
+    '{"name":"s","sum":{"dataPoints":[{"timeUnixNano":"1663840497000000000",'
+    '"asInt":"42"}]}},'
+    '{"name":"h","histogram":{"dataPoints":[{"timeUnixNano":"1663840497000000000",'
+    '"count":"3","sum":6.0,"bucketCounts":["1","2"],"explicitBounds":[1.0]}]}},'
+    '{"name":"q","summary":{"dataPoints":[{"timeUnixNano":"1663840497000000000",'
+    '"count":"2","sum":3.0,"quantileValues":[{"quantile":0.5,"value":1.5}]}]}}'
+    ']}]}]}')
+
+
+def _mutated(text: str) -> list[str]:
+    """``text`` truncated at every position, with one '=' or ':' deleted,
+    and with each number swapped for a word."""
+    return ([text[:p] for p in range(len(text))]
+            + [text[:p] + text[p + 1:] for p, c in enumerate(text) if c in "=:"]
+            + [text[:m.start()] + "nine" + text[m.end():]
+               for m in re.finditer(r"\d+(?:\.\d+)?", text)])
+
+
+@pytest.mark.parametrize("parse, col, inputs", [
+    (proto.parse_opentsdb_puts, "line",
+     ["put sys.cpu.user 1663840496 42.5 host=web01 dc=lax",
+      "put m 1663840496123 -7 a=b"]),
+    (proto.parse_loki_push, "payload",
+     ['{"streams":[{"stream":{"app":"web"},"values":[["1663840496000000000",'
+      '"first line"]]},{"stream":{"app":"db"},"values":[["1663840498000000000",'
+      '"third"]]}]}']),
+    (proto.parse_otlp_metrics_json, "payload", [_OTLP_ALL_KINDS]),
+], ids=["opentsdb", "loki", "otlp_metrics"])
+def test_column_algebra_parsers_quarantine_mutated_input(spark, parse, col, inputs):
+    """Every mutation of a well-formed input, parsed in one job: no row
+    raises, and every row either parses (no ``err``, a time index) or is
+    quarantined (``err`` set, every other column NULL)."""
+    df = spark.createDataFrame([(m,) for t in inputs for m in _mutated(t)],
+                               f"{col} string")
+    rows = [r.asDict() for r in parse(df).collect()]
+    assert any(r["err"] is None for r in rows)
+    assert any(r["err"] is not None for r in rows)
+    for r in rows:
+        if r["err"] is None:
+            assert r[proto.TIME_INDEX] is not None, r
+        else:
+            assert all(v is None for k, v in r.items() if k != "err"), r
 
 
 def test_elasticsearch_bulk(spark):

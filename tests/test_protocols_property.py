@@ -80,14 +80,19 @@ _SUFFIXES = ("i", "u", '"', "t")
 
 
 def _mutations(line: str):
-    """``line`` truncated at every position, with one '=' deleted, and with a
+    """``line`` truncated at every position, with one '=' deleted, with a
     type suffix swapped: every 'i'/'u'/'"'/'t' replaced by each other one,
-    and each suffix appended to every token that ends in a digit."""
+    and each suffix appended to every token that ends in a digit, and with
+    a '_' or '+' inserted before a digit or the digit made full-width."""
     for p in range(len(line)):
         yield line[:p]
     for p, c in enumerate(line):
         if c == "=":
             yield line[:p] + line[p + 1:]
+        if "0" <= c <= "9":
+            yield line[:p] + "_" + line[p:]
+            yield line[:p] + "+" + line[p:]
+            yield line[:p] + chr(ord(c) + 0xFEE0) + line[p + 1:]
         if c in _SUFFIXES:
             for s in _SUFFIXES:
                 if s != c:

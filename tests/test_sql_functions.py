@@ -311,3 +311,37 @@ def test_percentile_bounded_state_is_bounded(spark, sf_dir):
     for k, v in out.items():
         lo, hi = brackets[k]
         assert lo - 1e-9 <= v <= hi + 1e-9
+
+
+def test_quoted_parens_and_commas_inside_rewritten_calls(spark, tmp_path):
+    """A string literal holding ')' or '(' inside a construct the front door
+    rewrites (FIELD, ELT, count_hash, arrow_cast, RANGE's BY, DISTINCT ON)
+    is plain text: each statement runs as its quote-free form does."""
+    from greptimedb_spark.catalog import Catalog
+
+    g = GreptimeSQL(spark, catalog=Catalog(spark, str(tmp_path / "lex")))
+    g.sql("CREATE TABLE t (ts TIMESTAMP(3) TIME INDEX, h STRING PRIMARY KEY, "
+          "v DOUBLE)")
+    g.sql("INSERT INTO t VALUES (0, 'a', 1.0), (5000, 'a', 2.0), "
+          "(0, 'q)', 3.0), (0, 'z)', 4.0), (5000, 'b', 5.0)")
+
+    def one(q):
+        return [tuple(r) for r in g.sql(q).collect()]
+
+    assert one("SELECT FIELD('a)', 'x', 'a)')") == [(2,)]
+    assert one("SELECT ELT(2, 'x)', 'y')") == [("y",)]
+    assert one("SELECT count_hash(')')") == [(1,)]
+    assert one("SELECT arrow_cast('(5', 'LargeUtf8')") == [("(5",)]
+    got = one("SELECT ts, max(v) RANGE '5s' FROM t WHERE h <> 'q)' "
+              "ALIGN '5s' BY (concat(h, ')')) ORDER BY ts")
+    assert sorted((int(ts.timestamp()), v) for ts, v in got) == [
+        (0, 1.0), (0, 4.0), (5, 2.0), (5, 5.0)]
+    assert one("SELECT DISTINCT ON (h) h, v FROM t WHERE h <> 'z)' "
+               "ORDER BY h, ts") == [("a", 1.0), ("b", 5.0), ("q)", 3.0)]
+
+
+def test_arrow_string_type_names(spark):
+    g = GreptimeSQL(spark)
+    row = g.sql("SELECT arrow_cast('5', 'Utf8') AS a, "
+                "arrow_cast(5, 'Utf8View') AS b, '7'::LargeUtf8 AS c").collect()[0]
+    assert (row.a, row.b, row.c) == ("5", "5", "7")

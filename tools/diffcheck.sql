@@ -180,4 +180,17 @@ SELECT to_unixtime('2024-01-01 00:00:00') AS u;
 SET TIME_ZONE = 'UTC';
 SELECT to_unixtime('2024-01-01 00:00:00') AS u;
 
+-- family: lexical
+-- quoted text holding commas, quotes, parens and comment markers, in
+-- statements the front door already reads right
+CREATE TABLE lex (ts TIMESTAMP(3) TIME INDEX, host STRING PRIMARY KEY, note STRING, val DOUBLE) WITH ('greptime.semantic.entity.process.id' = 'service_name,host', ttl = '7d');
+INSERT INTO lex VALUES (0, 'a,b', 'it''s, fine', 1.5), (5000, 'a,b', 'x -- not a comment', 2.5), (0, 'c', '/* not a comment */', 3.5), (5000, 'c', 'a (paren', 4.5);
+SELECT host, note, val FROM lex ORDER BY host, ts;
+SELECT "host", count(*) AS "n, rows", sum(val) AS "s,um" FROM lex GROUP BY "host" ORDER BY "host";
+SELECT note FROM lex WHERE note LIKE '%--%' OR note LIKE '/*%' ORDER BY note;
+SELECT ts, max(val) RANGE '5s' AS m FROM lex ALIGN '5s' BY (substr(upper(host), 1, 1)) ORDER BY ts, m;
+SELECT ts, host, min(val) RANGE '10s' AS m FROM lex WHERE note <> 'it''s, fine' ALIGN '5s' BY (host) ORDER BY host, ts;
+SHOW CREATE TABLE lex;
+SELECT host, length(note) AS l FROM lex WHERE host IN ('a,b', 'c') AND note <> '' ORDER BY host, l;
+
 -- family: userbench (the 8 dashboard panels, from userbench/workloads.py)
