@@ -9,6 +9,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from greptimedb_spark.datatypes import JSON2_HINTS
 
 
 def _c(col) -> Column:
@@ -319,27 +322,11 @@ def register(spark) -> None:
         if doc is None:
             return None
         v = _json.loads(doc)
-        checks = {
-            "bigint": lambda x: isinstance(x, int) and not isinstance(x, bool),
-            "int": lambda x: isinstance(x, int) and not isinstance(x, bool),
-            "integer": lambda x: isinstance(x, int) and not isinstance(x, bool),
-            "smallint": lambda x: isinstance(x, int) and not isinstance(x, bool),
-            "tinyint": lambda x: isinstance(x, int) and not isinstance(x, bool),
-            "double": lambda x: isinstance(x, (int, float)) and not isinstance(x, bool),
-            "float": lambda x: isinstance(x, (int, float)) and not isinstance(x, bool),
-            "real": lambda x: isinstance(x, (int, float)) and not isinstance(x, bool),
-            "string": lambda x: isinstance(x, str),
-            "text": lambda x: isinstance(x, str),
-            "varchar": lambda x: isinstance(x, str),
-            "boolean": lambda x: isinstance(x, bool),
-            "bool": lambda x: isinstance(x, bool),
-        }
-        names = {"bigint": "Int64", "int": "Int32", "integer": "Int32",
-                 "smallint": "Int16", "tinyint": "Int8", "double": "Float64",
-                 "float": "Float32", "real": "Float32", "string": "Utf8",
-                 "text": "Utf8", "varchar": "Utf8", "boolean": "Boolean",
-                 "bool": "Boolean"}
         for path, ty, not_null, default in _json.loads(hints_json):
+            hint = JSON2_HINTS[ty]
+            frac = isinstance(hint.spark, T.FractionalType)
+            kind = {T.StringType: str, T.BooleanType: bool}.get(
+                type(hint.spark), (int, float) if frac else int)
             segs = path.split(".")
             node = v
             ok_path = isinstance(node, dict)
@@ -364,16 +351,16 @@ def register(spark) -> None:
                         node[leaf] = float(default)
                     else:
                         dv = int(default)
-                        node[leaf] = float(dv) if ty in (
-                            "double", "float", "real") else dv
+                        node[leaf] = float(dv) if frac else dv
                 elif not_null:
                     raise ValueError(
                         "Invalid JSON: missing non-null JSON2 type hint "
                         f"path {path}")
-            elif not checks[ty](cur):
+            elif not isinstance(cur, kind) or (
+                    isinstance(cur, bool) and kind is not bool):
                 raise ValueError(
                     f"Invalid JSON: JSON value at {path} does not match "
-                    f"JSON2 type hint {names[ty]}")
+                    f"JSON2 type hint {hint.arrow}")
         return _json.dumps(v, separators=(",", ":"))
 
     spark.udf.register("gt_json2_hints", _map2(_apply_hints, "string"))

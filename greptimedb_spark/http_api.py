@@ -32,37 +32,23 @@ from decimal import Decimal
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from greptimedb_spark.datatypes import wire_name
+
 # Spark type -> the reference's ConcreteDataType display name. Spark
 # timestamps are µs-resolution, so the honest column type is
 # TimestampMicrosecond (values below are emitted as epoch-µs integers,
 # matching the reference's convention of raw integers in the column's own
 # unit — its ms columns show epoch-ms ints in http.rs test goldens).
-_TYPE_NAMES = {
-    T.StringType: "String",
-    T.BooleanType: "Boolean",
-    T.ByteType: "Int8",
-    T.ShortType: "Int16",
-    T.IntegerType: "Int32",
-    T.LongType: "Int64",
-    T.FloatType: "Float32",
-    T.DoubleType: "Float64",
-    T.TimestampType: "TimestampMicrosecond",
-    T.TimestampNTZType: "TimestampMicrosecond",
-    T.DateType: "Date",
-    T.BinaryType: "Binary",
-}
 
 
 def greptime_type_name(dt: T.DataType) -> str:
     """Reference type name for a Spark type (Json for nested types the
     reference would shred or store as JSON)."""
-    if isinstance(dt, T.DecimalType):
-        return f"Decimal128({dt.precision}, {dt.scale})"
     if isinstance(dt, T.ArrayType):
         return f"List<{greptime_type_name(dt.elementType)}>"
     if isinstance(dt, (T.MapType, T.StructType)):
         return "Json"
-    return _TYPE_NAMES.get(type(dt), dt.simpleString())
+    return wire_name(dt)
 
 
 def _epoch_us(v: datetime, ntz: bool) -> int:

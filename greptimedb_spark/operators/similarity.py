@@ -349,6 +349,8 @@ def _train_ivf(c: DataFrame, n_centroids: int, iters: int):
     ).select("centroid_id", "cvec", vec_norm(F.col("cvec")).alias("cn"))
 
     def assign(df: DataFrame) -> DataFrame:
+        # min(struct(-csim, id)): tie-deterministic, lower centroid id wins
+        # (matches the oracle's strict comparison; max_by leaves ties open)
         scored = df.crossJoin(broadcast(cent)).select(
             "cid", "cv", "cvn", "centroid_id",
             (vec_dot_product(F.col("cv"), F.col("cvec"))
@@ -503,40 +505,8 @@ def _train_ivfpq(c: DataFrame, n_centroids: int, n_codes: int, m_sub: int,
     keys, the (sub, code, cbv) codebooks, and the (cid, sub, code) codes —
     exactly what build_ivfpq_index persists and search consumes."""
     # ---- coarse cells (identical shape to ivf_topk) -------------------
-    sample = c.orderBy(F.xxhash64(F.col("cid").cast("string"))).limit(n_centroids)
-    cent = sample.select(
-        (F.row_number().over(Window.orderBy("cid")) - 1).alias("centroid_id"),
-        F.col("cv").alias("cvec"),
-    ).select("centroid_id", "cvec", vec_norm(F.col("cvec")).alias("cn"))
-
-    def coarse_assign(df: DataFrame) -> DataFrame:
-        # min(struct(-csim, id)): tie-deterministic, lower centroid id wins
-        # (matches the oracle's strict comparison; max_by leaves ties open)
-        scored = df.crossJoin(broadcast(cent)).select(
-            "cid", "cv", "cvn", "centroid_id",
-            (vec_dot_product(F.col("cv"), F.col("cvec"))
-             / (F.col("cvn") * F.col("cn"))).alias("csim"),
-        )
-        return scored.groupBy("cid").agg(
-            F.min(F.struct((-F.col("csim")).alias("n"),
-                           F.col("centroid_id").alias("c"))).alias("b"),
-            F.first("cv").alias("cv"), F.first("cvn").alias("cvn"),
-        ).select("cid", F.col("b.c").alias("centroid_id"), "cv", "cvn")
-
-    for _ in range(max(0, iters)):
-        assigned = coarse_assign(c)
-        cent = (
-            assigned.select("centroid_id", F.posexplode("cv").alias("pos", "x"))
-            .groupBy("centroid_id", "pos").agg(F.avg("x").alias("m"))
-            .groupBy("centroid_id")
-            .agg(F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s["m"]).alias("cvec"))
-        ).select("centroid_id", "cvec", vec_norm(F.col("cvec")).alias("cn"))
-    # materialize trained centroids once (see _train_ivf): referenced by the
-    # final assignment below AND by the search-side probe broadcast
-    cent = cent.localCheckpoint(eager=True)
-    corpus_cells = coarse_assign(c).select("cid", "centroid_id")
+    cent, cells = _train_ivf(c, n_centroids, iters)
+    corpus_cells = cells.select("cid", "centroid_id")
 
     # ---- PQ codebooks --------------------------------------------------
     cb_sample = c.orderBy(F.xxhash64(F.col("cid").cast("string"))).limit(n_codes)

@@ -38,6 +38,7 @@ from __future__ import annotations
 import math
 
 from greptimedb_spark.promql.parser import (
+    DURATION_UNITS_MS,
     Aggregate,
     BinaryOp,
     Call,
@@ -54,8 +55,8 @@ MAX_CHARS_PER_LINE = 100  # prometheus prettier.go maxCharactersPerLine
 
 # ---- canonical string form (Prometheus Expr.String()) ---------------------
 
-_DUR_STEPS = [("y", 31_536_000_000), ("w", 604_800_000), ("d", 86_400_000),
-              ("h", 3_600_000), ("m", 60_000), ("s", 1000), ("ms", 1)]
+_DUR_STEPS = sorted(((u, n) for u, n in DURATION_UNITS_MS.items() if n >= 1),
+                    key=lambda step: -step[1])
 
 
 def _dur(ms: int) -> str:

@@ -101,10 +101,11 @@ AGG_OPS = {
     "quantile", "count_values", "topk", "bottomk",
 }
 
-_DUR_RE = re.compile(r"^([0-9]+(?:\.[0-9]+)?)(ms|s|m|h|d|w|y)$")
-_DUR_UNITS = {
-    "ms": 1, "s": 1000, "m": 60_000, "h": 3_600_000,
-    "d": 86_400_000, "w": 604_800_000, "y": 31_536_000_000,
+# compact duration units → milliseconds, y = 365 d: PromQL takes ms…y, and
+# RANGE and TQL read the same table (RANGE also takes ns and us)
+DURATION_UNITS_MS = {
+    "ns": 1e-6, "us": 1e-3, "ms": 1, "s": 1000, "m": 60_000, "h": 3_600_000,
+    "d": 86_400_000, "w": 7 * 86_400_000, "y": 365 * 86_400_000,
 }
 
 
@@ -112,7 +113,7 @@ def parse_duration(text: str) -> int:
     """'5m' / '1h30m' / '90s' → milliseconds."""
     total = 0.0
     for num, unit in re.findall(r"([0-9]+(?:\.[0-9]+)?)(ms|s|m|h|d|w|y)", text):
-        total += float(num) * _DUR_UNITS[unit]
+        total += float(num) * DURATION_UNITS_MS[unit]
     if total == 0 and not re.fullmatch(r"0(ms|s|m|h|d|w|y)?", text):
         raise ValueError(f"bad duration {text!r}")
     return int(total)

@@ -36,12 +36,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from greptimedb_spark.promql.parser import DURATION_UNITS_MS
 from greptimedb_spark.sqltext import close_paren, split_top
-
-_UNITS_MS = {
-    "ns": 1e-6, "us": 1e-3, "ms": 1, "s": 1000, "m": 60_000, "h": 3_600_000,
-    "d": 86_400_000, "w": 7 * 86_400_000, "y": 365 * 86_400_000,
-}
 
 
 def parse_duration_ms(text) -> int:
@@ -76,7 +72,7 @@ def parse_duration_ms(text) -> int:
         if m.start() != pos:
             raise ValueError(f"cannot parse duration: {text!r}")
         pos = m.end()
-        total += float(m.group(1)) * _UNITS_MS[m.group(2)]
+        total += float(m.group(1)) * DURATION_UNITS_MS[m.group(2)]
     if total == 0 or pos != len(t):
         raise ValueError(f"cannot parse duration: {text!r}")
     return int(total)

@@ -39,7 +39,7 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 TIME_INDEX = "greptime_timestamp"  # reference default time-index column name
@@ -759,6 +759,13 @@ _OTLP_LOGS_SCHEMA = (
 )
 
 
+def _quarantined(err: Column, **cols: Column) -> Column:
+    """struct(cols..., err) whose columns are all NULL where ``err`` is set:
+    a quarantined row carries only its error."""
+    return F.struct(*[F.when(err.isNull(), c).alias(n) for n, c in cols.items()],
+                    err.cast("string").alias("err"))
+
+
 def parse_otlp_logs_json(
     payloads: DataFrame, payload_col: str = "payload"
 ) -> DataFrame:
@@ -802,19 +809,17 @@ def parse_otlp_logs_json(
                 F.nullif(r["timeUnixNano"].try_cast("long"), F.lit(0)),
                 r["observedTimeUnixNano"].try_cast("long"),
             )
-            return F.struct(
-                _ns_to_ts(ts_ns).alias("timestamp"),
-                r["traceId"].alias("trace_id"),
-                r["spanId"].alias("span_id"),
-                r["severityText"].alias("severity_text"),
-                r["severityNumber"].alias("severity_number"),
-                r["body"]["stringValue"].alias("body"),
-                _attrs_json(r["attributes"]).alias("log_attributes"),
-                sl["scope"]["name"].alias("scope_name"),
-                res_json.alias("resource_attributes"),
-                F.when(ts_ns.isNull(),
-                       F.lit("missing log record timestamp"))
-                .cast("string").alias("err"),
+            return _quarantined(
+                F.when(ts_ns.isNull(), F.lit("missing log record timestamp")),
+                timestamp=_ns_to_ts(ts_ns),
+                trace_id=r["traceId"],
+                span_id=r["spanId"],
+                severity_text=r["severityText"],
+                severity_number=r["severityNumber"],
+                body=r["body"]["stringValue"],
+                log_attributes=_attrs_json(r["attributes"]),
+                scope_name=sl["scope"]["name"],
+                resource_attributes=res_json,
             )
 
         return F.flatten(F.transform(
@@ -1342,25 +1347,22 @@ def parse_otlp_traces_json(
         def span_row(ss, s):
             start_ns = s["startTimeUnixNano"].try_cast("long")
             end_ns = s["endTimeUnixNano"].try_cast("long")
-            return F.struct(
-                _ns_to_ts(start_ns).alias("timestamp"),
-                _ns_to_ts(end_ns).alias("timestamp_end"),
-                (end_ns - start_ns).alias("duration_nano"),
-                s["traceId"].alias("trace_id"),
-                s["spanId"].alias("span_id"),
-                s["parentSpanId"].alias("parent_span_id"),
-                s["name"].alias("span_name"),
-                F.coalesce(s["kind"], F.lit("SPAN_KIND_UNSPECIFIED"))
-                .alias("span_kind"),
-                F.coalesce(s["status"]["code"], F.lit("STATUS_CODE_UNSET"))
-                .alias("span_status_code"),
-                service.alias("service_name"),
-                _attrs_json(s["attributes"]).alias("span_attributes"),
-                res_json.alias("resource_attributes"),
-                ss["scope"]["name"].alias("scope_name"),
-                F.when(start_ns.isNull(),
-                       F.lit("missing span start timestamp"))
-                .cast("string").alias("err"),
+            return _quarantined(
+                F.when(start_ns.isNull(), F.lit("missing span start timestamp")),
+                timestamp=_ns_to_ts(start_ns),
+                timestamp_end=_ns_to_ts(end_ns),
+                duration_nano=end_ns - start_ns,
+                trace_id=s["traceId"],
+                span_id=s["spanId"],
+                parent_span_id=s["parentSpanId"],
+                span_name=s["name"],
+                span_kind=F.coalesce(s["kind"], F.lit("SPAN_KIND_UNSPECIFIED")),
+                span_status_code=F.coalesce(s["status"]["code"],
+                                            F.lit("STATUS_CODE_UNSET")),
+                service_name=service,
+                span_attributes=_attrs_json(s["attributes"]),
+                resource_attributes=res_json,
+                scope_name=ss["scope"]["name"],
             )
 
         return F.flatten(F.transform(

@@ -30,7 +30,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from greptimedb_spark.catalog import TableNotFoundError
+from greptimedb_spark.datatypes import (
+    JSON2_HINTS, PG_NAMES, arrow_name, cast_trunc, desc_name, pg_oid, precision, sink_spelling,
+    spark_type, sql_name, timestamp_rule,
+)
 from greptimedb_spark.functions import register_all
+from greptimedb_spark.promql.parser import parse_duration
 from greptimedb_spark.sqltext import (
     close_paren, map_outside_strings, open_paren, rewrite_calls, split_top,
     strip_comments,
@@ -619,7 +624,7 @@ def _rewrite_arrow_cast(text: str) -> str:
     def fn(args: list[str]) -> str | None:
         if len(args) < 2:
             return None
-        typ = _map_type(args[-1].strip().strip("'\""))
+        typ = spark_type(args[-1].strip().strip("'\""))
         return f"CAST({','.join(args[:-1])} AS {typ})"
 
     return rewrite_calls(text, "arrow_cast", fn)
@@ -677,19 +682,11 @@ def _render_colon_cast(val: str, typ: str) -> str:
         # epoch-integer::timestamp means epoch MILLISECONDS in the
         # reference dialect; Spark's bigint→timestamp cast is seconds
         return f"timestamp_millis({val})"
-    tl = re.sub(r"\s+", "", typ.lower())
-    trunc = {
-        "timestamp_s": "SECOND", "timestampsecond": "SECOND",
-        "timestamp_sec": "SECOND", "timestamp(0)": "SECOND",
-        "timestamp": "MILLISECOND",  # bare TIMESTAMP = precision 3
-        "timestamp_ms": "MILLISECOND", "timestampmillisecond": "MILLISECOND",
-        "timestamp(3)": "MILLISECOND",
-        "timestamp(6)": "MICROSECOND", "timestamp(9)": "MICROSECOND",
-    }.get(tl)
+    trunc = cast_trunc(typ)
     if trunc:
         # precision-typed casts TRUNCATE the fractional part (arrow cast)
         return f"date_trunc('{trunc}', CAST({val} AS TIMESTAMP))"
-    return f"CAST({val} AS {_map_type(typ)})"
+    return f"CAST({val} AS {spark_type(typ)})"
 
 
 def _rewrite_colon_cast(text: str) -> str:
@@ -929,98 +926,6 @@ _BY_ARITY = {
     # DataFusion 3-arg regexp_replace replaces the FIRST match only
     "regexp_replace": {3: "gt_regexp_replace"},
 }
-
-_TYPE_MAP = {
-    # greptime type → spark type (SURVEY.md §1.2)
-    # int2/int4/int8 are Postgres width-in-BYTES aliases (reference
-    # create_type_alias.result: i8 → Int64)
-    "tinyint": "tinyint", "smallint": "smallint", "int16": "smallint", "int2": "smallint",
-    "int": "int", "int32": "int", "integer": "int", "int4": "int",
-    "bigint": "bigint", "int64": "bigint", "int8": "bigint",
-    "uint8": "smallint", "uint16": "int", "uint32": "bigint", "uint64": "decimal(20,0)",
-    "tinyint unsigned": "smallint", "smallint unsigned": "int",
-    "int unsigned": "bigint", "bigint unsigned": "decimal(20,0)",
-    "float": "float", "float32": "float", "float4": "float",
-    "double": "double", "float64": "double", "float8": "double",
-    "string": "string", "varchar": "string", "text": "string", "char": "string",
-    # arrow string type names (arrow_cast(x, 'Utf8'), x::Utf8)
-    "utf8": "string", "largeutf8": "string", "utf8view": "string",
-    "tinytext": "string", "mediumtext": "string", "longtext": "string",
-    "binary": "binary", "varbinary": "binary", "bytea": "binary",
-    "blob": "binary", "mediumblob": "binary", "longblob": "binary",
-    "tinyblob": "binary",
-    "boolean": "boolean", "bool": "boolean",
-    "date": "date", "datetime": "timestamp",
-    "json": "string",  # reference JSONB column ↔ canonical JSON text
-    # json2: the reference's variant storage (flat SST format, RFC json2) ↔
-    # Spark VARIANT (binary variant encoding, same design point)
-    "json2": "variant",
-    # arrow cast shorthands (TimestampSecond etc. appear via ::casts)
-    "timestamp_s": "timestamp", "timestamp_ms": "timestamp",
-    "timestamp_us": "timestamp", "timestamp_ns": "timestamp",
-    "timestampsecond": "timestamp", "timestampmillisecond": "timestamp",
-    "timestampmicrosecond": "timestamp", "timestampnanosecond": "timestamp",
-}
-
-
-def _map_type(t: str) -> str:
-    t = t.strip().lower()
-    m = re.match(r"timestamp(?:\((\d)\))?", t)
-    if m:
-        return "timestamp"
-    if t.startswith("decimal"):
-        # bare DECIMAL is Decimal128(38, 10) in DataFusion; Spark's default
-        # would be (10, 0)
-        return "decimal(38,10)" if t == "decimal" else t
-    if t.startswith("vector"):
-        # the reference's vector type is packed little-endian f32 bytes —
-        # raw column scans print the hex form (types/vector/vector.result)
-        return "binary"
-    if re.match(r"(var)?char\s*\(", t):
-        # length-parameterized char types are plain UTF-8 strings in the
-        # reference; Spark's CHAR/VARCHAR padding semantics don't apply
-        return "string"
-    return _TYPE_MAP.get(t, t)
-
-
-_TS_ALIAS_PRECISION = {
-    # reference type aliases (src/sql/src/type_alias.rs): TimestampSecond /
-    # Timestamp_s / Timestamp_sec etc. → precision digit
-    "second": "0", "_s": "0", "_sec": "0",
-    "millisecond": "3", "_ms": "3",
-    "microsecond": "6", "_us": "6",
-    "nanosecond": "9", "_ns": "9",
-}
-
-
-def _ts_precision(t: str) -> str | None:
-    """Precision digit ('0'/'3'/'6'/'9') of a declared timestamp type, or
-    None if not a timestamp type. Bare `timestamp` defaults to '3'."""
-    t = t.strip().lower()
-    m = re.fullmatch(r"timestamp\s*(?:\((\d)\))?", t)
-    if m:
-        return m.group(1) or "3"
-    m = re.fullmatch(r"timestamp(\w+)", t)
-    if m:
-        return _TS_ALIAS_PRECISION.get(m.group(1))
-    return None
-
-
-def _ts_unit(t: str) -> str:
-    """Integer-literal unit for a greptime timestamp type: timestamp(0)=s,
-    (3)=ms, (6)=µs, (9)=ns; bare timestamp defaults to ms."""
-    return {"0": "s", "3": "ms", "6": "us", "9": "ns", None: "ms"}.get(
-        _ts_precision(t), "ms")
-
-
-# epoch integer → TIMESTAMP expression per _ts_unit
-_INT_TO_TS = {
-    "s": "timestamp_seconds({v})",
-    "ms": "timestamp_millis({v})",
-    "us": "timestamp_micros({v})",
-    "ns": "timestamp_micros(CAST({v} / 1000 AS BIGINT))",
-}
-
 
 class GreptimeSQL:
     """Session facade: spark.sql + dialect rewrites + PromQL metric registry.
@@ -1288,14 +1193,6 @@ class GreptimeSQL:
                 pmeta0 = self.catalog.meta(phys)
                 pcols0 = {e[0]: e for e in (pmeta0.columns or [])}
 
-                def _canon_decl(d: str) -> str:
-                    d = str(d).lower().strip()
-                    if d in ("text", "string"):
-                        return "string"
-                    if d == "timestamp":
-                        return "timestamp(3)"  # default millisecond precision
-                    return d
-
                 for c in cols:
                     pe = pcols0.get(c[0])
                     if pe is None:
@@ -1303,14 +1200,14 @@ class GreptimeSQL:
                             raise ValueError(
                                 f"Adding field column {c[0]} to physical table")
                         continue
-                    if _canon_decl(pe[2] if len(pe) > 2 else pe[1]) != \
-                            _canon_decl(c[2] if len(c) > 2 else c[1]):
+                    if sql_name(str(pe[2] if len(pe) > 2 else pe[1])).lower() != \
+                            sql_name(str(c[2] if len(c) > 2 else c[1])).lower():
                         raise ValueError(
                             f"Column type mismatch for {c[0]}")
                 ti_entry = next((c for c in cols if c[0] == time_index), None)
                 p_ti = pcols0.get(pmeta0.time_index)
                 if ti_entry is not None and p_ti is not None:
-                    if (_ts_precision(ti_entry[2]) or 3) != (_ts_precision(p_ti[2]) or 3):
+                    if (precision(ti_entry[2]) or 3) != (precision(p_ti[2]) or 3):
                         raise ValueError(
                             "Metric has different time unit than the "
                             "physical region")
@@ -1581,8 +1478,7 @@ class GreptimeSQL:
                     is_int = [re.fullmatch(r"-?\d+L?", v) is not None
                               for v in vals]
                     if any(is_int) and not all(is_int):
-                        tpl = _INT_TO_TS[_ts_unit(
-                            entry[2] if len(entry) > 2 else "timestamp")]
+                        tpl = timestamp_rule(entry[2] if len(entry) > 2 else None).from_epoch
                         for a, ii in zip(args_per, is_int):
                             if ii:
                                 a[j] = tpl.format(
@@ -1609,23 +1505,20 @@ class GreptimeSQL:
                 v = f"col{i + 1}"
                 if t == "timestamp":
                     if dict(raw.dtypes)[v] in ("bigint", "int", "smallint", "tinyint"):
-                        tpl = _INT_TO_TS[_ts_unit(entry[2] if len(entry) > 2 else "timestamp")]
+                        tpl = timestamp_rule(entry[2] if len(entry) > 2 else None).from_epoch
                         e = tpl.format(v=f"CAST({v} AS BIGINT)")
                     else:
                         # numeric STRINGS are epoch values in the declared
                         # precision too ('3' ≡ 3 — insert/mysql_insert.sql)
                         s0 = f"CAST({v} AS STRING)"
-                        tpl0 = _INT_TO_TS[_ts_unit(
-                            entry[2] if len(entry) > 2 else "timestamp")]
+                        tpl0 = timestamp_rule(entry[2] if len(entry) > 2 else None).from_epoch
                         e = (f"CASE WHEN {s0} RLIKE '^[+-]?[0-9]+$' THEN "
                              f"{tpl0.format(v=f'CAST({s0} AS BIGINT)')} "
                              f"ELSE CAST({s0} AS TIMESTAMP) END")
                         # the declared precision truncates at storage time
                         # (timestamp_precision.result: a timestamp(0) column
                         # stores whole seconds)
-                        prec = _ts_precision(entry[2]) if len(entry) > 2 else None
-                        tr = {"0": "SECOND", "3": "MILLISECOND"}.get(
-                            str(prec) if prec is not None else "")
+                        tr = cast_trunc(entry[2]) if len(entry) > 2 else None
                         if tr:
                             e = f"date_trunc('{tr}', {e})"
                     d = _default_sql(entry)
@@ -1745,7 +1638,7 @@ class GreptimeSQL:
                 if entry[1] == "timestamp" and src_types[scol] in (
                     "bigint", "int", "smallint", "tinyint", "double", "float",
                 ):
-                    tpl = _INT_TO_TS[_ts_unit(entry[2] if len(entry) > 2 else "timestamp")]
+                    tpl = timestamp_rule(entry[2] if len(entry) > 2 else None).from_epoch
                     sel.append(
                         F.expr(tpl.format(v=f"CAST(`{scol}` AS BIGINT)")).alias(entry[0])
                     )
@@ -1797,12 +1690,8 @@ class GreptimeSQL:
             except Exception:
                 # `ts = 0`-style integer comparisons against the timestamp
                 # column: rewrite the time index to its declared integer unit
-                conv = {
-                    "s": "unix_seconds({c})",
-                    "ms": "unix_millis({c})",
-                    "us": "unix_micros({c})",
-                    "ns": "unix_micros({c}) * 1000",
-                }[self._unit_of(name, meta.time_index)].format(c=meta.time_index)
+                conv = self._ts_rule_of(name, meta.time_index).to_epoch.format(
+                    c=meta.time_index)
                 pred2 = re.sub(rf"\b{meta.time_index}\b", f"({conv})", pred)
                 self.catalog.delete(name, pred2)
             return self.spark.createDataFrame([], "result string")
@@ -2055,11 +1944,9 @@ class GreptimeSQL:
             raise ValueError(f"table {name!r} does not exist")
         return [tuple(c) for c in meta_cols]
 
-    def _unit_of(self, name: str, col: str) -> str:
-        for entry in self._col_entries(name):
-            if entry[0] == col and len(entry) > 2:
-                return _ts_unit(entry[2])
-        return "ms"
+    def _ts_rule_of(self, name: str, col: str):
+        return timestamp_rule(next((e[2] for e in self._col_entries(name)
+                                    if e[0] == col and len(e) > 2), None))
 
     def _empty_ok(self):
         return self.spark.createDataFrame([], "result string")
@@ -2069,15 +1956,6 @@ class GreptimeSQL:
     # pg_database to POSTGRES-protocol sessions only
     # (src/catalog/src/system_schema/pg_catalog.rs); other protocols get
     # TableNotFound. ``self.protocol = "postgres"`` opts a session in.
-
-    # PostgreSQL's public type oids for the greptime column types that can
-    # appear in pg_attribute joins
-    _PG_TYPE_OIDS = {
-        "boolean": 16, "binary": 17, "bigint": 20, "long": 20,
-        "smallint": 21, "tinyint": 21, "int": 23, "integer": 23,
-        "string": 25, "text": 25, "json": 114, "float": 700, "double": 701,
-        "date": 1082, "timestamp": 1114, "interval": 1186, "decimal": 1700,
-    }
 
     @staticmethod
     def _pg_oid(kind: str, name: str) -> int:
@@ -2120,9 +1998,8 @@ class GreptimeSQL:
             except Exception:
                 tix = None
             for pos, e in enumerate(self._col_entries(phys), start=1):
-                ty = str(e[1]).lower() if len(e) > 1 else "string"
-                attrs.append((rid, e[0],
-                              self._PG_TYPE_OIDS.get(ty, 25), pos,
+                ty = str(e[1]) if len(e) > 1 else "string"
+                attrs.append((rid, e[0], pg_oid(ty), pos,
                               e[0] == tix, False, False, "", ""))
         self.spark.createDataFrame(
             attrs, "attrelid int, attname string, atttypid int, attnum int, "
@@ -2279,11 +2156,7 @@ class GreptimeSQL:
         if re.search(r"(?i)\bformat_type\s*\(", text):
             arms = " ".join(
                 f"WHEN {oid} THEN '{name}'" for oid, name in sorted(
-                    {16: "boolean", 17: "bytea", 20: "bigint",
-                     21: "smallint", 23: "integer", 25: "text",
-                     114: "json", 700: "real", 701: "double precision",
-                     1082: "date", 1114: "timestamp without time zone",
-                     1186: "interval", 1700: "numeric"}.items()))
+                    PG_NAMES.items()))
             text = re.sub(
                 r"(?i)\b(?:pg_catalog\s*\.\s*)?format_type\s*\(([^,()]+),[^()]*\)",
                 lambda m: f"(CASE {m.group(1)} {arms} ELSE 'text' END)",
@@ -2846,15 +2719,15 @@ class GreptimeSQL:
                 key = "TIME INDEX" if is_ti else ("PRI" if c in meta.tags else "")
                 base = {
                     "Field": c,
-                    "Type": _gt_sql_type(decl).lower(),
+                    "Type": sql_name(decl).lower(),
                     "Null": "NO" if (not_null or is_ti) else "YES",
                     "Key": key,
                     "Default": _render_default(default) if default else "",
                     "Extra": "",
-                    "Greptime_type": _gt_display_type(decl),
+                    "Greptime_type": desc_name(decl),
                 }
                 if full:
-                    is_str = _gt_display_type(decl) == "String"
+                    is_str = base["Greptime_type"] == "String"
                     base = {
                         "Field": base["Field"], "Type": base["Type"],
                         "Collation": "utf8_bin" if is_str else "",
@@ -3048,13 +2921,6 @@ class GreptimeSQL:
     # the conformance corpus; the streaming/flow.py engine is the incremental
     # Structured-Streaming path for production pipelines.)
 
-    _SPARK_TO_DECL = {
-        "tinyint": "int8", "smallint": "int16", "int": "int32", "bigint": "int64",
-        "float": "float32", "double": "float64", "string": "string",
-        "boolean": "boolean", "date": "date", "timestamp": "timestamp(3)",
-        "binary": "binary",
-    }
-
     def _flow_df(self, select_text: str):
         """Evaluate a flow query; rename auto-aliased aggregate columns the
         way DataFusion does (`sum(number)` → `sum(tbl.number)`) so golden
@@ -3076,9 +2942,6 @@ class GreptimeSQL:
 
     _FLOW_OPTIONS = ("defer_on_missing_source", "experimental_enable_incremental_read",
                      "flow_type")
-
-    _TQL_RANGE_MS = {"s": 1000, "m": 60000, "h": 3600000, "d": 86400000,
-                     "w": 604800000}
 
     def _tql_flow_schema(self, select_text: str):
         """For a `CREATE FLOW … AS TQL EVAL (…) expr` body, derive the
@@ -3137,7 +3000,7 @@ class GreptimeSQL:
             field = field_of(metric)
             if not field:
                 return None
-            ms = int(mm.group(3)) * self._TQL_RANGE_MS[mm.group(4)]
+            ms = parse_duration(mm.group(3) + mm.group(4))
             return (f"prom_{fn}(ts_range,{field},ts,Int64({ms}))", False)
         return None
 
@@ -3433,7 +3296,7 @@ class GreptimeSQL:
             df = self._flow_df(select_text)
             ts_cols = [c for c, t in df.dtypes if t.startswith("timestamp")]
             entries = [
-                [c, t, self._SPARK_TO_DECL.get(t, t), None, False] for c, t in df.dtypes
+                [c, t, sink_spelling(t), None, False] for c, t in df.dtypes
             ]
             time_index = ts_cols[0] if ts_cols else "__ts_placeholder"
             if ts_cols and re.search(
@@ -3693,7 +3556,7 @@ class GreptimeSQL:
             is_ti = c == meta.time_index
             rows.append((
                 c,
-                _gt_display_type(decl),
+                desc_name(decl),
                 "PRI" if (is_ti or c in meta.tags) else "",
                 "NO" if (is_ti or not_null) else "YES",
                 _render_default(default),
@@ -3885,7 +3748,7 @@ class GreptimeSQL:
                     for t2 in referenced if t2 != t
                     for e2 in self._col_entries(t2)
                 )
-                tpl = _INT_TO_TS[_ts_unit(e[2] if len(e) > 2 else "timestamp")]
+                tpl = timestamp_rule(e[2] if len(e) > 2 else None).from_epoch
                 c = re.escape(e[0])
                 qual = rf"{re.escape(t)}\." if ambiguous else r"(?:\w+\.)?"
 
@@ -3973,7 +3836,7 @@ class GreptimeSQL:
             def _tvg(m: "re.Match[str]") -> str:
                 return (f"try_variant_get({m.group(1)}, "
                         f"'{_vg_path(m.group(2))}', "
-                        f"'{_map_type(m.group(3))}')")
+                        f"'{spark_type(m.group(3))}')")
 
             text = re.sub(
                 rf"\bjson_get\(\s*((?:\w+\.)?{re.escape(c)})\s*,\s*"
@@ -3984,7 +3847,7 @@ class GreptimeSQL:
             def _tvg_dot(m: "re.Match[str]") -> str:
                 path = m.group(2).lstrip(".")
                 return (f"try_variant_get({m.group(1)}{c}, "
-                        f"'{_vg_path(path)}', '{_map_type(m.group(3))}')")
+                        f"'{_vg_path(path)}', '{spark_type(m.group(3))}')")
 
             text = map_outside_strings(text, lambda seg: re.sub(
                 rf"((?:\w+\.)?)\b{re.escape(c)}"
@@ -4206,7 +4069,7 @@ class GreptimeSQL:
                 dt = self.spark.sql(f"SELECT {','.join(args)}").schema[0]
             except Exception:
                 return None
-            return f"'{_arrow_type_name(dt.dataType)}'"
+            return f"'{arrow_name(dt.dataType)}'"
 
         return rewrite_calls(text, "arrow_typeof", fn)
 
@@ -4523,7 +4386,8 @@ class GreptimeSQL:
     def _info_columns(self):
         # built-in numbers table (single UInt32 tag column)
         rows = [("greptime", "public", "numbers", "number", 1,
-                 "int unsigned", "UInt32", "TAG", "NO", None, None, "PRI",
+                 sql_name("uint32").lower(), desc_name("uint32"), "TAG", "NO",
+                 None, None, "PRI",
                  "select,insert")]
         for t in sorted(self.catalog.list_tables()):
             meta = self.catalog.meta(t)
@@ -4539,7 +4403,7 @@ class GreptimeSQL:
                 key = ("TIME INDEX" if is_ti else ("PRI" if is_tag else ""))
                 rows.append((
                     "greptime", sch, self._display_name(t, meta), c, pos,
-                    _gt_sql_type(decl).lower(), _gt_display_type(decl), sem,
+                    sql_name(decl).lower(), desc_name(decl), sem,
                     "NO" if (not_null or is_ti) else "YES",
                     _canon_default(default) if default else None,
                     comment, key, "select,insert",
@@ -5281,19 +5145,19 @@ class GreptimeSQL:
                 hlines = []
                 for path, ty, h_nn, h_def in hints:
                     qpath = ".".join(f'"{s}"' for s in path.split("."))
-                    hl = (f"    {qpath} {_gt_sql_type(ty)} "
+                    hl = (f"    {qpath} {sql_name(ty)} "
                           + ("NOT NULL" if h_nn else "NULL"))
                     if h_def is not None:
                         hl += f" DEFAULT {h_def}"
                     hlines.append(hl)
                 type_text = "JSON2(\n" + ",\n".join(hlines) + "\n  )"
             else:
-                type_text = _gt_sql_type(decl)
+                type_text = sql_name(decl)
             line = f'  "{c}" {type_text} ' + (
                 "NOT NULL" if (not_null or is_ti) else "NULL")
             if default is not None:
                 d = _canon_default(default)
-                if (_ts_precision(decl) is not None
+                if (precision(decl) is not None
                         and re.fullmatch(r"'\d{4}-\d{2}-\d{2}[ T][\d:.]+'", d)):
                     # timestamp literal defaults display with the UTC offset
                     d = d[:-1] + "+0000'"
@@ -5699,13 +5563,13 @@ class GreptimeSQL:
                     try:
                         # castability probe: pure analysis, no job
                         self.spark.sql(f"SELECT CAST(CAST(NULL AS "
-                                       f"{entry[1]}) AS {_map_type(typ)})")
+                                       f"{entry[1]}) AS {spark_type(typ)})")
                     except Exception:
                         raise ValueError(
                             f"Invalid alter table({name}) request: column "
                             f"'{col}' cannot be cast automatically to type "
                             f"'{typ.capitalize()}'") from None
-                    self.catalog.modify_column(name, col, _map_type(typ), typ)
+                    self.catalog.modify_column(name, col, spark_type(typ), typ)
                     continue
                 raise ValueError(f"unsupported MODIFY COLUMN clause {clause!r}")
             return self._empty_ok()
@@ -6794,7 +6658,7 @@ class GreptimeSQL:
             # NULL-on-mismatch in the reference (json_get.sql `'a'::double`
             # → NULL) and must map dialect type names (int8 → i64)
             def _jg_cast(m: "re.Match[str]") -> str:
-                ty = _map_type(m.group(2))
+                ty = spark_type(m.group(2))
                 x = m.group(1)
                 # json2 (variant) getters — recognizable by the CAST(col AS
                 # STRING) the path rewrite injected — coerce with the RFC's
@@ -6893,13 +6757,13 @@ class GreptimeSQL:
             # reference only implements the single-argument form
             # (count_hash.result:55); mirror its rejection so multi-arg
             # calls don't silently diverge
-            cm = re.search(r"\bcount_hash\s*\(([^()]*)\)", text,
-                           re.IGNORECASE)
-            if cm and "," in re.sub(r"\([^)]*\)", "", cm.group(1)):
-                raise ValueError("This feature is not implemented: "
-                                 "count_hash with multiple arguments")
-            text = rewrite_calls(text, "count_hash", lambda a: (
-                f"count(DISTINCT xxhash64({','.join(a)}))"))
+            def _count_hash(a: list[str]) -> str:
+                if len(a) > 1:
+                    raise ValueError("This feature is not implemented: "
+                                     "count_hash with multiple arguments")
+                return f"count(DISTINCT xxhash64({','.join(a)}))"
+
+            text = rewrite_calls(text, "count_hash", _count_hash)
         if re.search(r"\bINSERT\s*\(", text, re.IGNORECASE):
             # MySQL string INSERT(str,pos,len,new) — never INSERT INTO
             text = re.sub(r"\bINSERT\s*\(", "gt_mysql_insert(", text,
@@ -7084,24 +6948,6 @@ def _ts_or_none(epoch):
     return _dt.datetime.utcfromtimestamp(epoch)
 
 
-def _arrow_type_name(dt) -> str:
-    """Spark DataType → DataFusion/Arrow display name (arrow_typeof)."""
-    from pyspark.sql import types as T
-
-    if isinstance(dt, T.DecimalType):
-        return f"Decimal128({dt.precision}, {dt.scale})"
-    if isinstance(dt, T.TimestampType):
-        return "Timestamp(Microsecond, None)"
-    if "interval" in dt.simpleString().lower():
-        return "Interval(MonthDayNano)"
-    return {
-        "long": "Int64", "integer": "Int32", "short": "Int16",
-        "byte": "Int8", "double": "Float64", "float": "Float32",
-        "string": "Utf8", "boolean": "Boolean", "date": "Date32",
-        "binary": "Binary",
-    }.get(dt.typeName(), dt.simpleString())
-
-
 def _tz_offset_ms(tz: str) -> int:
     """'+08:00' / 'Asia/Shanghai' / 'UTC' → offset milliseconds."""
     tz = tz.strip()
@@ -7151,13 +6997,7 @@ def _default_sql(entry) -> str | None:
         # fixed instant, independent of the current session zone
         return f"timestamp_micros({int(entry[7])})"
     if t == "timestamp" and re.fullmatch(r"[-+]?\d+", d.strip()):
-        unit = _ts_unit(entry[2] if len(entry) > 2 else "timestamp")
-        return {
-            "s": f"timestamp_seconds({d})",
-            "ms": f"timestamp_millis({d})",
-            "us": f"timestamp_micros({d})",
-            "ns": f"timestamp_micros(CAST({d} / 1000 AS BIGINT))",
-        }[unit]
+        return timestamp_rule(entry[2] if len(entry) > 2 else None).from_epoch.format(v=d)
     return f"CAST({d} AS {t})"
 
 
@@ -7430,19 +7270,8 @@ def _parse_col_def(item: str):
         raise ValueError(
             f"Invalid column option, column name: {col}, error: "
             f"unrecognized option {leftover.strip()!r}")
-    return ((col, _map_type(typ), typ.lower(), default, not_null, comment,
+    return ((col, spark_type(typ), typ.lower(), default, not_null, comment,
              idx or None), is_ti, is_pk)
-
-
-# JSON2 hint types the reference accepts (RFC 2024-08-06-json-datatype;
-# json2_type_hints.result rejects TIMESTAMP)
-_JSON2_HINT_TYPES = {
-    "bigint": "Int64", "int": "Int32", "integer": "Int32",
-    "smallint": "Int16", "tinyint": "Int8",
-    "double": "Float64", "float": "Float32", "real": "Float32",
-    "string": "Utf8", "text": "Utf8", "varchar": "Utf8",
-    "boolean": "Boolean", "bool": "Boolean",
-}
 
 
 def _parse_json2_hints(body: str) -> list:
@@ -7469,7 +7298,7 @@ def _parse_json2_hints(body: str) -> list:
                 "Invalid SQL, error: JSON2 type hint path exceeds the "
                 f"maximum structured depth 50: {path}")
         ty, rest = m.group(2).lower(), m.group(3) or ""
-        if ty not in _JSON2_HINT_TYPES:
+        if ty not in JSON2_HINTS:
             raise ValueError(
                 "Invalid SQL, error: unsupported JSON2 type hint data "
                 f"type: {m.group(2).upper()}")
@@ -7502,79 +7331,6 @@ _INFO_SCHEMA_TABLES = [
     "ssts_storage", "statistics", "table_constraints", "table_privileges",
     "table_semantics", "tables", "views",
 ]
-
-_GT_TYPE_DISPLAY = {
-    # int2/4/8 are Postgres byte-width aliases (create_type_alias.result)
-    "tinyint": "Int8", "smallint": "Int16", "int16": "Int16", "int2": "Int16",
-    "int": "Int32", "int32": "Int32", "integer": "Int32", "int4": "Int32",
-    "bigint": "Int64", "int64": "Int64", "int8": "Int64",
-    "uint8": "UInt8", "uint16": "UInt16", "uint32": "UInt32", "uint64": "UInt64",
-    "tinyint unsigned": "UInt8", "smallint unsigned": "UInt16",
-    "int unsigned": "UInt32", "bigint unsigned": "UInt64",
-    "float": "Float32", "float32": "Float32", "float4": "Float32",
-    "double": "Float64", "float64": "Float64", "float8": "Float64",
-    "string": "String", "varchar": "String", "text": "String", "char": "String",
-    "tinytext": "String", "mediumtext": "String", "longtext": "String",
-    "binary": "Binary", "varbinary": "Binary",
-    "boolean": "Boolean", "bool": "Boolean",
-    "date": "Date", "datetime": "TimestampMicrosecond", "json": "Json",
-    "json2": "Json2",
-}
-
-# declared type → the canonical SQL spelling SHOW CREATE TABLE prints
-# (reference src/sql/src/statements.rs concrete_data_type_to_sql_data_type)
-_GT_SQL_TYPE = {
-    "tinyint": "TINYINT", "smallint": "SMALLINT", "int16": "SMALLINT",
-    "int2": "SMALLINT", "int": "INT", "int32": "INT", "integer": "INT",
-    "int4": "INT", "bigint": "BIGINT", "int64": "BIGINT", "int8": "BIGINT",
-    "uint8": "TINYINT UNSIGNED", "uint16": "SMALLINT UNSIGNED",
-    "uint32": "INT UNSIGNED", "uint64": "BIGINT UNSIGNED",
-    "tinyint unsigned": "TINYINT UNSIGNED",
-    "smallint unsigned": "SMALLINT UNSIGNED",
-    "int unsigned": "INT UNSIGNED", "bigint unsigned": "BIGINT UNSIGNED",
-    "float": "FLOAT", "float32": "FLOAT", "float4": "FLOAT",
-    "double": "DOUBLE", "float64": "DOUBLE", "float8": "DOUBLE",
-    "string": "STRING", "varchar": "STRING", "text": "STRING", "char": "STRING",
-    "tinytext": "STRING", "mediumtext": "STRING", "longtext": "STRING",
-    "binary": "VARBINARY", "varbinary": "VARBINARY",
-    "boolean": "BOOLEAN", "bool": "BOOLEAN",
-    "date": "DATE", "datetime": "TIMESTAMP(6)", "json": "JSON",
-}
-
-
-def _gt_sql_type(decl: str) -> str:
-    t = decl.strip().lower()
-    p = _ts_precision(t)
-    if p is not None:
-        return f"TIMESTAMP({p})"
-    m = re.match(r"decimal\((\d+)\s*,\s*(\d+)\)", t)
-    if m:
-        return f"DECIMAL({m.group(1)}, {m.group(2)})"
-    m = re.match(r"vector\((\d+)\)", t)
-    if m:
-        return f"VECTOR({m.group(1)})"
-    if re.match(r"(var)?char\s*\(", t):
-        return "STRING"
-    return _GT_SQL_TYPE.get(t, decl.upper())
-
-
-def _gt_display_type(decl: str) -> str:
-    """Greptime's DESCRIBE type names (reference ConcreteDataType display,
-    src/datatypes/src/data_type.rs)."""
-    t = decl.strip().lower()
-    p = _ts_precision(t)
-    if p is not None:
-        unit = {"0": "Second", "3": "Millisecond",
-                "6": "Microsecond", "9": "Nanosecond"}[p]
-        return f"Timestamp{unit}"
-    m = re.match(r"decimal\((\d+)\s*,\s*(\d+)\)", t)
-    if m:
-        return f"Decimal({m.group(1)}, {m.group(2)})"
-    m = re.match(r"vector\((\d+)\)", t)
-    if m:
-        return f"Vector({m.group(1)})"
-    return _GT_TYPE_DISPLAY.get(t, t.capitalize())
-
 
 def _codec_streams(codec: str):
     """(compress_bytes, decompress_bytes) for a COPY compression_type.
@@ -7799,6 +7555,4 @@ def _parse_step(step: str) -> int:
     s = step.strip().strip("'\"")
     if re.fullmatch(r"\d+(\.\d+)?", s):
         return int(float(s) * 1000)
-    from greptimedb_spark.promql.parser import parse_duration
-
     return parse_duration(s)

@@ -356,20 +356,42 @@ def _mutated(text: str) -> list[str]:
                for m in re.finditer(r"\d+(?:\.\d+)?", text)])
 
 
-@pytest.mark.parametrize("parse, col, inputs", [
+@pytest.mark.parametrize("parse, col, inputs, parsed", [
     (proto.parse_opentsdb_puts, "line",
      ["put sys.cpu.user 1663840496 42.5 host=web01 dc=lax",
-      "put m 1663840496123 -7 a=b"]),
+      "put m 1663840496123 -7 a=b"], [proto.TIME_INDEX]),
     (proto.parse_loki_push, "payload",
      ['{"streams":[{"stream":{"app":"web"},"values":[["1663840496000000000",'
       '"first line"]]},{"stream":{"app":"db"},"values":[["1663840498000000000",'
-      '"third"]]}]}']),
-    (proto.parse_otlp_metrics_json, "payload", [_OTLP_ALL_KINDS]),
-], ids=["opentsdb", "loki", "otlp_metrics"])
-def test_column_algebra_parsers_quarantine_mutated_input(spark, parse, col, inputs):
+      '"third"]]}]}'], [proto.TIME_INDEX]),
+    (proto.parse_otlp_metrics_json, "payload", [_OTLP_ALL_KINDS],
+     [proto.TIME_INDEX]),
+    (proto.parse_elasticsearch_bulk, "payload",
+     ['{"create":{"_index":"logs"}}\n{"msg":"hello","n":1}\n'
+      '{"index":{"_index":"m2"}}\n{"msg":"world"}'], ["table", "document"]),
+    (proto.parse_otlp_logs_json, "payload",
+     ['{"resourceLogs":[{"resource":{"attributes":[{"key":"host",'
+      '"value":{"stringValue":"h"}}]},"scopeLogs":[{"logRecords":['
+      '{"timeUnixNano":"1663840496000000000","severityNumber":9,'
+      '"body":{"stringValue":"hello 1"}}]}]}]}'], ["timestamp", "body"]),
+    (proto.parse_otlp_traces_json, "payload",
+     ['{"resourceSpans":[{"resource":{"attributes":[{"key":"service.name",'
+      '"value":{"stringValue":"svc"}}]},"scopeSpans":[{"spans":['
+      '{"traceId":"0af7","spanId":"b7ad","name":"GET",'
+      '"startTimeUnixNano":"1663840496000000000",'
+      '"endTimeUnixNano":"1663840496250000000"}]}]}]}'],
+     ["timestamp", "span_name"]),
+    (proto.parse_splunk_hec, "payload",
+     ['{"event":"plain text","time":1447828325,"index":"main"}'
+      '{"event":{"m":1},"fields":{"r":"e"},"host":"web"}'],
+     ["table", "event"]),
+], ids=["opentsdb", "loki", "otlp_metrics", "elasticsearch_bulk", "otlp_logs",
+        "otlp_traces", "splunk_hec"])
+def test_column_algebra_parsers_quarantine_mutated_input(spark, parse, col,
+                                                         inputs, parsed):
     """Every mutation of a well-formed input, parsed in one job: no row
-    raises, and every row either parses (no ``err``, a time index) or is
-    quarantined (``err`` set, every other column NULL)."""
+    raises, and every row either parses (no ``err``, its ``parsed`` columns
+    set) or is quarantined (``err`` set, every other column NULL)."""
     df = spark.createDataFrame([(m,) for t in inputs for m in _mutated(t)],
                                f"{col} string")
     rows = [r.asDict() for r in parse(df).collect()]
@@ -377,7 +399,7 @@ def test_column_algebra_parsers_quarantine_mutated_input(spark, parse, col, inpu
     assert any(r["err"] is not None for r in rows)
     for r in rows:
         if r["err"] is None:
-            assert r[proto.TIME_INDEX] is not None, r
+            assert all(r[k] is not None for k in parsed), r
         else:
             assert all(v is None for k, v in r.items() if k != "err"), r
 

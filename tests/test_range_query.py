@@ -270,3 +270,20 @@ def test_range_parts_leave_no_views(spark, host_table):
         assert host_table.sql(sub).count() == 3
     assert not [t.name for t in spark.catalog.listTables()
                 if t.name.startswith("__range")]
+
+
+def test_compact_duration_units_read_one_table():
+    """RANGE, PromQL and the PromQL printer share one unit table (y = 365 d);
+    PromQL takes ms…y, RANGE also ns and us."""
+    from greptimedb_spark.promql.api import _dur
+    from greptimedb_spark.promql.parser import parse_duration
+
+    ms = {"ms": 1, "s": 1000, "m": 60_000, "h": 3_600_000, "d": 86_400_000,
+          "w": 604_800_000, "y": 31_536_000_000}
+    for unit, n in ms.items():
+        assert parse_duration_ms(f"3{unit}") == parse_duration(f"3{unit}") == 3 * n
+        assert _dur(3 * n) == f"3{unit}"
+    assert parse_duration_ms("2000000ns") == 2 and parse_duration_ms("3000us") == 3
+    for unit in ("ns", "us"):
+        with pytest.raises(ValueError):
+            parse_duration(f"3{unit}")

@@ -340,6 +340,23 @@ def test_quoted_parens_and_commas_inside_rewritten_calls(spark, tmp_path):
                "ORDER BY h, ts") == [("a", 1.0), ("b", 5.0), ("q)", 3.0)]
 
 
+def test_count_hash_rejects_multiple_arguments(spark, tmp_path):
+    """The reference implements only one-argument count_hash: every
+    multi-argument call fails, nested calls in the arguments included."""
+    from greptimedb_spark.catalog import Catalog
+
+    g = GreptimeSQL(spark, catalog=Catalog(spark, str(tmp_path / "ch")))
+    g.sql("CREATE TABLE t (ts TIMESTAMP(3) TIME INDEX, h STRING PRIMARY KEY, "
+          "v DOUBLE)")
+    g.sql("INSERT INTO t VALUES (0, 'a', 1.0), (0, 'b', 2.0), (5000, 'a', 3.0)")
+    for q in ("SELECT count_hash(h, v) FROM t",
+              "SELECT count_hash(upper(h), v) FROM t"):
+        with pytest.raises(ValueError,
+                           match="count_hash with multiple arguments"):
+            g.sql(q)
+    assert g.sql("SELECT count_hash(upper(h)) AS n FROM t").collect()[0].n == 2
+
+
 def test_arrow_string_type_names(spark):
     g = GreptimeSQL(spark)
     row = g.sql("SELECT arrow_cast('5', 'Utf8') AS a, "

@@ -193,4 +193,30 @@ SELECT ts, host, min(val) RANGE '10s' AS m FROM lex WHERE note <> 'it''s, fine' 
 SHOW CREATE TABLE lex;
 SELECT host, length(note) AS l FROM lex WHERE host IN ('a,b', 'c') AND note <> '' ORDER BY host, l;
 
+-- family: types
+-- every spelling whose rendering holds steady, declared, described, cast and
+-- written through a flow sink
+CREATE TABLE ty (ts TIMESTAMP(3) TIME INDEX, s STRING PRIMARY KEY, i8 TINYINT, i16 SMALLINT, i16b INT16, i16c INT2, i32 INT, i32b INTEGER, i32c INT32, i32d INT4, i64 BIGINT, i64b INT64, i64c INT8, u8 UINT8, u8b TINYINT UNSIGNED, u16 UINT16, u16b SMALLINT UNSIGNED, u32 UINT32, u32b INT UNSIGNED, u64 UINT64, u64b BIGINT UNSIGNED, f32 FLOAT, f32b FLOAT32, f32c FLOAT4, f64 DOUBLE, f64b FLOAT64, f64c FLOAT8, s2 TEXT, s3 VARCHAR, s4 CHAR, s5 TINYTEXT, s6 MEDIUMTEXT, s7 LONGTEXT, b BINARY, b2 VARBINARY, bo BOOLEAN, bo2 BOOL, d DATE, dt DATETIME, t0 TIMESTAMP(0), t3 TIMESTAMP(3), t6 TIMESTAMP(6), t9 TIMESTAMP(9), t_s TIMESTAMP_S, t_sec TIMESTAMP_SEC, t_ms TIMESTAMP_MS, t_us TIMESTAMP_US, t_ns TIMESTAMP_NS, tsec TIMESTAMPSECOND, tms TIMESTAMPMILLISECOND, tus TIMESTAMPMICROSECOND, tns TIMESTAMPNANOSECOND, dec DECIMAL(10, 2), j JSON, v VECTOR(3));
+DESC TABLE ty;
+SHOW CREATE TABLE ty;
+SHOW FULL COLUMNS FROM ty;
+SELECT * FROM information_schema.columns WHERE table_name = 'ty';
+INSERT INTO ty (ts, s, i8, u64, dec, b, bo, d, t0, t3, t6, t9, t_s, t_ms, t_us, t_ns, dt) VALUES (1500, 'a', 1, 18446744073709551615, 1.25, 'x', true, '2024-01-02', 1500, 1500, 1500, 1500, 1500, 1500, 1500, 1500, 1500);
+INSERT INTO ty (ts, s, i8, u64, dec, b, bo, d, t0, t3, t6, t9, t_s, t_ms, t_us, t_ns, dt) VALUES (61500, 'a', 2, 2, 2.5, 'y', false, '2024-01-03', '2024-01-01 00:00:01.123456', '2024-01-01 00:00:01.123456', '2024-01-01 00:00:01.123456', '2024-01-01 00:00:01.123456', '2024-01-01 00:00:01.123456', '2024-01-01 00:00:01.123456', '2024-01-01 00:00:01.123456', '2024-01-01 00:00:01.123456', '2024-01-01 00:00:01.123456');
+SELECT ts, s, i8, u64, dec, b, bo, d, t0, t3, t6, t9, t_s, t_ms, t_us, t_ns, dt FROM ty ORDER BY ts;
+SELECT '1'::TINYINT, '1'::SMALLINT, '1'::INT16, '1'::INT2, '1'::INT, '1'::INTEGER, '1'::INT32, '1'::INT4, '1'::BIGINT, '1'::INT64, '1'::INT8, '1'::UINT8, '1'::UINT16, '1'::UINT32, '1'::UINT64;
+SELECT '1.5'::FLOAT, '1.5'::FLOAT32, '1.5'::FLOAT4, '1.5'::DOUBLE, '1.5'::FLOAT64, '1.5'::FLOAT8, '1.5'::DECIMAL(10, 2), 'nan'::DOUBLE, 'nan'::FLOAT64;
+SELECT 1::STRING, 1::TEXT, 1::VARCHAR, 1::CHAR, 1::TINYTEXT, 1::MEDIUMTEXT, 1::LONGTEXT, 1::UTF8, 1::LARGEUTF8, 1::UTF8VIEW, 'x'::BINARY, 'x'::VARBINARY, 'x'::BYTEA, 'x'::BLOB, 'true'::BOOLEAN, 'true'::BOOL, '2024-01-02'::DATE, '{"a": 1}'::JSON;
+SELECT '2024-01-01 00:00:01.123456'::TIMESTAMP, '2024-01-01 00:00:01.123456'::TIMESTAMP(0), '2024-01-01 00:00:01.123456'::TIMESTAMP(3), '2024-01-01 00:00:01.123456'::TIMESTAMP(6), '2024-01-01 00:00:01.123456'::TIMESTAMP(9), '2024-01-01 00:00:01.123456'::DATETIME;
+SELECT '2024-01-01 00:00:01.123456'::TIMESTAMP_S, '2024-01-01 00:00:01.123456'::TIMESTAMP_SEC, '2024-01-01 00:00:01.123456'::TIMESTAMP_MS, '2024-01-01 00:00:01.123456'::TIMESTAMP_US, '2024-01-01 00:00:01.123456'::TIMESTAMP_NS, '2024-01-01 00:00:01.123456'::TIMESTAMPSECOND, '2024-01-01 00:00:01.123456'::TIMESTAMPMILLISECOND, '2024-01-01 00:00:01.123456'::TIMESTAMPMICROSECOND, '2024-01-01 00:00:01.123456'::TIMESTAMPNANOSECOND, 1704067201123::TIMESTAMP;
+SELECT arrow_cast('1', 'Int8'), arrow_cast('1', 'Int16'), arrow_cast('1', 'Int32'), arrow_cast('1', 'Int64'), arrow_cast('1', 'UInt8'), arrow_cast('1', 'UInt16'), arrow_cast('1', 'UInt32'), arrow_cast('1', 'UInt64'), arrow_cast('1', 'Float32'), arrow_cast('1', 'Float64'), arrow_cast('1', 'Decimal(10, 2)'), arrow_cast('1', 'Int2'), arrow_cast('1', 'Int4'), arrow_cast('1', 'Float4'), arrow_cast('1', 'Float8');
+SELECT arrow_cast(1, 'Utf8'), arrow_cast(1, 'LargeUtf8'), arrow_cast(1, 'Utf8View'), arrow_cast(1, 'String'), arrow_cast(1, 'Text'), arrow_cast('x', 'Binary'), arrow_cast('x', 'Varbinary'), arrow_cast('x', 'Bytea'), arrow_cast('true', 'Boolean'), arrow_cast('2024-01-02', 'Date'), arrow_cast('2024-01-01 00:00:01.123456', 'Timestamp'), arrow_cast('2024-01-01 00:00:01.123456', 'Timestamp_ms'), arrow_cast('2024-01-01 00:00:01.123456', 'TimestampNanosecond'), arrow_cast('2024-01-01 00:00:01.123456', 'Datetime');
+SELECT arrow_typeof(CAST(1 AS TINYINT)), arrow_typeof(CAST(1 AS SMALLINT)), arrow_typeof(1), arrow_typeof(CAST(1 AS BIGINT)), arrow_typeof(CAST(1 AS FLOAT)), arrow_typeof(1.5e0), arrow_typeof(1.25), arrow_typeof('a'), arrow_typeof(CAST('a' AS BINARY)), arrow_typeof(true), arrow_typeof(DATE '2024-01-02'), arrow_typeof(TIMESTAMP '2024-01-02 00:00:00'), arrow_typeof(INTERVAL '1' DAY);
+SELECT json_get_string(parse_json('{"a": "7"}'), 'a')::INT8, json_get_string(parse_json('{"a": "7"}'), 'a')::FLOAT4, json_get_string(parse_json('{"a": "7"}'), 'a')::TEXT;
+CREATE FLOW ty_flow SINK TO ty_sink AS SELECT s, max(i16) AS i16, max(i32) AS i32, max(i64) AS i64, max(f32) AS f32, max(f64) AS f64, max(dec) AS dec, max(b) AS b, max(bo) AS bo, max(d) AS d, max(t6) AS t6, max(s2) AS s2, date_bin(INTERVAL '1 minute', ts) AS w FROM ty GROUP BY s, w;
+ADMIN FLUSH_FLOW('ty_flow');
+DESC TABLE ty_sink;
+SHOW CREATE TABLE ty_sink;
+SELECT s, i16, i32, i64, f32, f64, dec, b, bo, d, t6, s2, w FROM ty_sink ORDER BY w;
+
 -- family: userbench (the 8 dashboard panels, from userbench/workloads.py)
