@@ -93,6 +93,42 @@ _META_FILE = "_greptime_meta.json"
 
 
 @dataclass
+class ColumnDef:
+    """One declared column (reference ``ColumnMetadata``,
+    src/store-api/src/metadata.rs:51-58)."""
+
+    name: str
+    spark_type: str
+    decl: str | None = None  # the type as declared (``timestamp(3)``)
+    default: str | None = None  # DEFAULT as SQL text
+    not_null: bool = False
+    comment: str | None = None
+    # FULLTEXT/SKIPPING/INVERTED options by kind (and json2 type hints)
+    index: dict = field(default_factory=dict)
+    # a timestamp DEFAULT literal pinned to its instant at ALTER time
+    default_epoch_us: int | None = None
+
+    @property
+    def declared(self) -> str:
+        return self.decl or self.spark_type
+
+    @staticmethod
+    def of(entry) -> "ColumnDef":
+        """A record from a stored entry: a ``ColumnDef``, its JSON dict, or
+        the positional list metas held before (``[name, spark_type, decl,
+        default, not_null, comment, index, default_epoch_us]``, any
+        prefix of it)."""
+        if isinstance(entry, ColumnDef):
+            return entry
+        if isinstance(entry, dict):
+            return ColumnDef(**entry)
+        name, spark, decl, default, not_null, comment, index, epoch = (
+            list(entry) + [None] * 8)[:8]
+        return ColumnDef(name, spark, decl, default, bool(not_null), comment,
+                         index if isinstance(index, dict) else {}, epoch)
+
+
+@dataclass
 class TableMeta:
     """Table-level semantic metadata (reference RegionMetadata + RegionOptions)."""
 
@@ -103,9 +139,9 @@ class TableMeta:
     append_mode: bool = False
     ttl: str | None = None  # e.g. "7 days" (SQL interval literal)
     partition_granularity: str = "day"  # hour | day | month — physical layout
-    # Declared schema: [name, spark_type, decl_type, default_sql|None,
-    # not_null] per column (short legacy entries [name, spark_type] accepted).
-    columns: list | None = None
+    # declared schema, one ColumnDef per column; empty: none declared (the
+    # schema is whatever the stored files hold)
+    columns: list[ColumnDef] = field(default_factory=list)
     batch_no: int = 0  # ingest batch counter (strict write ordering)
     # bumped by every meta or data rewrite: with table_id it tells a reader
     # whether its binding is current (batch_no orders __seq, kept apart)
@@ -153,6 +189,10 @@ class TableMeta:
     # column name so parquet schemas never conflict across files.
     col_history: dict = field(default_factory=dict)
 
+    def __post_init__(self):
+        self.columns = [ColumnDef.of(c) for c in self.columns or []]
+        self.schema_name = self.schema_name or "public"
+
     def to_json(self) -> str:
         return json.dumps(asdict(self), indent=2)
 
@@ -176,7 +216,7 @@ class Catalog:
     def _effective_ttl(self, meta: TableMeta) -> str | None:
         if meta.ttl:
             return meta.ttl
-        db = (getattr(meta, "schema_name", "public") or "public").lower()
+        db = meta.schema_name.lower()
         return (self.db_options.get(db) or {}).get("ttl") or None
 
     # -- DDL ---------------------------------------------------------------
@@ -193,7 +233,7 @@ class Catalog:
             import zlib
 
             meta.table_id = uuid.uuid4().hex
-            if getattr(meta, "on_physical", None):
+            if meta.on_physical:
                 # __table_id (crc32 of the uuid) keys this logical table's
                 # rows inside the shared physical region — a 32-bit collision
                 # with a sibling would silently merge their rows, so re-roll
@@ -201,8 +241,7 @@ class Catalog:
                 sibling_ids = {
                     self._logical_table_id(self.meta(t))
                     for t in self.list_tables()
-                    if getattr(self.meta(t), "on_physical", None)
-                    == meta.on_physical
+                    if self.meta(t).on_physical == meta.on_physical
                 }
                 while zlib.crc32(meta.table_id.encode()) in sibling_ids:
                     meta.table_id = uuid.uuid4().hex
@@ -223,7 +262,7 @@ class Catalog:
         # a physical metric table refuses to drop while logical tables are
         # still attached (engine/create.rs physical-region busy check)
         for t in self.list_tables():
-            if t != name and getattr(self.meta(t), "on_physical", None) == name:
+            if t != name and self.meta(t).on_physical == name:
                 raise ValueError(
                     "Physical region is busy, there are still some logical "
                     "regions using it")
@@ -250,7 +289,7 @@ class Catalog:
         assigned on the input partitioning, before the write's exchange,
         which decides the winner between duplicate keys of one batch."""
         meta = self.meta(name)
-        if getattr(meta, "on_physical", None):
+        if meta.on_physical:
             # metric-engine logical write: rows land in the physical table
             # with __table_id and the per-row label-hash __tsid filled in
             # (row_modifier.rs fill_internal_columns)
@@ -282,11 +321,10 @@ class Catalog:
             self.insert(meta.on_physical, df)
             return
         batch_no = meta.batch_no + 1
-        if meta.columns:
-            for entry in meta.columns:
-                p = self._cur_phys(meta, entry[0])
-                if p != entry[0] and entry[0] in df.columns:
-                    df = df.withColumnRenamed(entry[0], p)
+        for c in meta.columns:
+            p = self._cur_phys(meta, c.name)
+            if p != c.name and c.name in df.columns:
+                df = df.withColumnRenamed(c.name, p)
         seq = (F.lit(batch_no).cast("long") * F.lit(1 << _BATCH_SHIFT)
                + F.monotonically_increasing_id() % F.lit(1 << _BATCH_SHIFT))
         self._write(meta, df.withColumn(SEQ_COL, seq), batch_no=batch_no)
@@ -297,6 +335,7 @@ class Catalog:
         meta = self.meta(table)
         for k, v in kv.items():
             setattr(meta, k, v)
+        meta.__post_init__()  # columns given as lists become ColumnDefs
         meta.write_version += 1
         with open(os.path.join(self._table_path(table), _META_FILE), "w") as f:
             f.write(meta.to_json())
@@ -345,7 +384,7 @@ class Catalog:
                 shutil.rmtree(tmp)
                 if not meta.columns:
                     kv.setdefault("columns", [
-                        [c, t] for c, t in df.dtypes
+                        ColumnDef(c, t) for c, t in df.dtypes
                         if c not in (SEQ_COL, BUCKET_COL)])
         self._update_meta(meta.name, **kv)
 
@@ -361,58 +400,52 @@ class Catalog:
         ``CREATE FLOW``, reference src/flow/src/batching_mode/task.rs).
         """
         meta = self.meta(name)
-        if getattr(meta, "on_physical", None):
+        if meta.on_physical:
             # logical view over the physical table: its own rows, its own
             # columns (name-sorted), nothing materialized
             base = self.read(meta.on_physical, raw=raw, at=at,
                              min_batch=min_batch)
             tid = self._logical_table_id(meta)
-            cols = [e[0] for e in (meta.columns or [])]
+            cols = [c.name for c in meta.columns]
             return base.filter(F.col("__table_id") == tid).select(*cols)
         df = self._scan(name)
         if df is None:
             return self._empty_df(meta)
         if min_batch is not None:
             df = df.filter(since_batch(min_batch))
-        hist = getattr(meta, "col_history", None) or {}
-        if meta.columns:
-            for entry in meta.columns:
-                if entry[0] in hist:
-                    # type-modified column: render every stored generation
-                    # with a DIRECT stored→current try_cast (the reference's
-                    # lazy column cast); rows carry exactly one generation.
-                    # Generations before a drop sentinel stay invisible (a
-                    # re-added column must not resurrect dropped data).
-                    cur = self._cur_phys(meta, entry[0])
-                    all_g = [g[0] for g in hist[entry[0]] if g[0]] + [cur]
-                    live = [g[0] for g in _live_gens(hist[entry[0]])] + [cur]
-                    present = [g for g in live if g in df.columns]
-                    rendered = (
-                        F.coalesce(*[F.col(g).try_cast(entry[1])
-                                     for g in present])
-                        if present else F.lit(None).cast(entry[1])
-                    )
-                    df = df.withColumn(entry[0], rendered).drop(
-                        *[g for g in all_g
-                          if g in df.columns and g != entry[0]])
-                    continue
-                p = _phys_name(entry[0])
-                if p != entry[0] and p in df.columns:
-                    df = df.withColumnRenamed(p, entry[0])
+        hist = meta.col_history
+        for c in meta.columns:
+            if c.name in hist:
+                # type-modified column: render every stored generation
+                # with a DIRECT stored→current try_cast (the reference's
+                # lazy column cast); rows carry exactly one generation.
+                # Generations before a drop sentinel stay invisible (a
+                # re-added column must not resurrect dropped data).
+                cur = self._cur_phys(meta, c.name)
+                all_g = [g[0] for g in hist[c.name] if g[0]] + [cur]
+                live = [g[0] for g in _live_gens(hist[c.name])] + [cur]
+                present = [g for g in live if g in df.columns]
+                rendered = (
+                    F.coalesce(*[F.col(g).try_cast(c.spark_type)
+                                 for g in present])
+                    if present else F.lit(None).cast(c.spark_type)
+                )
+                df = df.withColumn(c.name, rendered).drop(
+                    *[g for g in all_g if g in df.columns and g != c.name])
+                continue
+            p = _phys_name(c.name)
+            if p != c.name and p in df.columns:
+                df = df.withColumnRenamed(p, c.name)
         # columns added by ALTER that no file carries yet must exist BEFORE
         # the merge (they may be tags the dedup groups on)
-        if meta.columns and all(len(c) >= 2 for c in meta.columns):
-            for entry in meta.columns:
-                if entry[0] not in df.columns:
-                    df = df.withColumn(entry[0], F.lit(None).cast(entry[1]))
+        for c in meta.columns:
+            if c.name not in df.columns:
+                df = df.withColumn(c.name, F.lit(None).cast(c.spark_type))
         # flat-format json2 columns render per-SST union schemas (reference
         # RFC 2024-08-06-json-datatype; sqlness types/json/json2): rewrite
         # each document against its segment's union skeleton
-        j2cols = [
-            e[0] for e in (meta.columns or [])
-            if len(e) > 2 and str(e[2]).lower() == "json2"
-            and e[0] in df.columns
-        ]
+        j2cols = [c.name for c in meta.columns
+                  if str(c.decl).lower() == "json2" and c.name in df.columns]
         if j2cols and str((meta.with_opts or {}).get(
                 "sst_format", "")).strip("'\"").lower() == "flat":
             from greptimedb_spark.functions.json2_shred import (
@@ -420,8 +453,7 @@ class Catalog:
             )
 
             df = apply_sst_union_schema(
-                df, j2cols, getattr(meta, "flush_batches", []) or [],
-                batch_of())
+                df, j2cols, meta.flush_batches, batch_of())
         if raw or meta.append_mode:
             df = df.drop(SEQ_COL, BUCKET_COL)
         else:
@@ -450,11 +482,11 @@ class Catalog:
         """Apply the declared schema (order, casts, columns added/dropped by
         ALTER): missing columns read as NULL (ADD COLUMN ... DEFAULT backfills
         at alter time), dropped columns vanish, MODIFY COLUMN casts."""
-        if not meta.columns or any(len(c) < 2 for c in meta.columns):
+        if not meta.columns:
             return df
         out = []
-        for entry in meta.columns:
-            cname, styp = entry[0], entry[1]
+        for c in meta.columns:
+            cname, styp = c.name, c.spark_type
             if cname in df.columns:
                 safe = cname.replace("`", "``")
                 out.append(F.col(f"`{safe}`").cast(styp).alias(cname))
@@ -469,53 +501,53 @@ class Catalog:
             raise FileNotFoundError(
                 f"table {meta.name} has no data and no declared schema"
             )
-        schema = ", ".join(f"`{c[0]}` {c[1]}" for c in meta.columns)
+        schema = ", ".join(f"`{c.name}` {c.spark_type}" for c in meta.columns)
         return self.spark.createDataFrame([], schema)
 
     # -- schema evolution (reference AlterTable, src/sql/src/statements/
     # alter.rs; sqlness common/alter/) --------------------------------------
 
-    def add_column(self, name: str, entry: list, position: str | None = None,
+    def add_column(self, name: str, col: ColumnDef, position: str | None = None,
                    after: str | None = None, is_tag: bool = False) -> None:
         """ADD COLUMN: meta update; a DEFAULT backfills existing rows by a
         one-time copy-on-write rewrite (the reference stores the default in
         region metadata and applies it to pre-alter SSTs at read — same
         observable result; the rewrite keeps read-side plans branch-free).
         At scale the rewrite is per-bucket and only for defaulted adds."""
+        col = ColumnDef.of(col)
         meta = self.meta(name)
-        cols = [list(c) for c in (meta.columns or [])]
-        if any(c[0] == entry[0] for c in cols):
+        cols = meta.columns
+        if any(c.name == col.name for c in cols):
             return  # IF NOT EXISTS semantics handled by caller; idempotent
         if meta.sorted_columns:
-            cols.append(list(entry))
-            cols.sort(key=lambda c: c[0])
+            cols.append(col)
+            cols.sort(key=lambda c: c.name)
         elif position == "first":
-            cols.insert(0, list(entry))
+            cols.insert(0, col)
         elif after is not None:
-            idx = next(i for i, c in enumerate(cols) if c[0] == after)
-            cols.insert(idx + 1, list(entry))
+            idx = next(i for i, c in enumerate(cols) if c.name == after)
+            cols.insert(idx + 1, col)
         else:
-            cols.append(list(entry))
+            cols.append(col)
         kv = {"columns": cols}
         if is_tag:
-            kv["tags"] = meta.tags + [entry[0]]
-        default = entry[3] if len(entry) > 3 else None
-        df = self._scan(name) if default is not None else None
+            kv["tags"] = meta.tags + [col.name]
+        df = self._scan(name) if col.default is not None else None
         if df is None:
             self._update_meta(name, **kv)
             return
         # backfill the CURRENT generation's physical column: a re-added
         # column (post-drop sentinel) renders from its fresh __gN name, so
         # writing the base name would leave old rows NULL
-        phys = self._cur_phys(meta, entry[0])
-        self._write(meta, df.withColumn(phys, F.expr(default).cast(entry[1])),
-                    replace=True, **kv)
+        phys = self._cur_phys(meta, col.name)
+        self._write(meta, df.withColumn(
+            phys, F.expr(col.default).cast(col.spark_type)), replace=True, **kv)
 
     @staticmethod
     def _resolve_col(meta: TableMeta, col: str) -> str:
         """Resolve a column reference case-insensitively (the reference's
         parser lowercases unquoted identifiers)."""
-        names = [c[0] for c in (meta.columns or [])]
+        names = [c.name for c in meta.columns]
         if col in names:
             return col
         for n in names:
@@ -528,25 +560,23 @@ class Catalog:
         col = self._resolve_col(meta, col)
         if col == meta.time_index or col in meta.tags:
             raise ValueError(f"cannot drop key column {col!r}")
-        hist = dict(getattr(meta, "col_history", None) or {})
+        hist = meta.col_history
         # Seal the current generation and mark the drop boundary ([None,
         # None] sentinel) UNCONDITIONALLY — also for never-modified columns,
         # whose stored base physical column would otherwise be resurrected by
         # a later re-ADD of the same name (the reference assigns a fresh
         # column id on re-add). A future re-ADD starts a FRESH generation and
         # the read path never coalesces pre-drop generations back in.
-        entry = next((c for c in (meta.columns or []) if c[0] == col), None)
-        hist[col] = list(hist.get(col, [])) + [
-            [self._cur_phys(meta, col), entry[1] if entry else "string"],
-            [None, None],
-        ]
-        cols = [list(c) for c in (meta.columns or []) if c[0] != col]
+        entry = next(c for c in meta.columns if c.name == col)
+        hist[col] = hist.get(col, []) + [
+            [self._cur_phys(meta, col), entry.spark_type], [None, None]]
+        cols = [c for c in meta.columns if c.name != col]
         self._update_meta(name, columns=cols, col_history=hist)
 
     def _cur_phys(self, meta: TableMeta, col: str) -> str:
         """Physical parquet column of the CURRENT type generation: the base
         name for never-modified columns, ``<base>__gN`` after N MODIFYs."""
-        gens = (getattr(meta, "col_history", None) or {}).get(col)
+        gens = meta.col_history.get(col)
         base = _phys_name(col)
         return f"{base}__g{len(gens)}" if gens else base
 
@@ -561,20 +591,16 @@ class Catalog:
         (f64 0.1 → BOOLEAN true → INT 1, alter_table.result DESC golden)."""
         meta = self.meta(name)
         col = self._resolve_col(meta, col)
-        hist = dict(getattr(meta, "col_history", None) or {})
-        cols = [list(c) for c in (meta.columns or [])]
-        for c in cols:
-            if c[0] == col:
-                old_type = c[1]
-                if old_type != spark_type:
-                    hist[col] = list(hist.get(col, [])) + [
-                        [self._cur_phys(meta, col), old_type]]
-                c[1] = spark_type
-                if len(c) > 2:
-                    c[2] = decl_type
-                if len(c) > 3 and c[3] is not None and old_type != spark_type:
-                    c[3] = self._recast_default(c[3], old_type, spark_type)
-        self._update_meta(name, columns=cols, col_history=hist)
+        hist = meta.col_history
+        c = next(c for c in meta.columns if c.name == col)
+        old_type = c.spark_type
+        if old_type != spark_type:
+            hist[col] = hist.get(col, []) + [
+                [self._cur_phys(meta, col), old_type]]
+            if c.default is not None:
+                c.default = self._recast_default(c.default, old_type, spark_type)
+        c.spark_type, c.decl = spark_type, decl_type
+        self._update_meta(name, columns=meta.columns, col_history=hist)
 
     def _recast_default(self, lit: str, old_type: str, new_type: str):
         """One step of the DEFAULT adaptation chain; renders the cast result
@@ -596,13 +622,8 @@ class Catalog:
     def set_default(self, name: str, col: str, default: str | None) -> None:
         meta = self.meta(name)
         col = self._resolve_col(meta, col)
-        cols = [list(c) for c in (meta.columns or [])]
-        for c in cols:
-            if c[0] == col:
-                while len(c) < 5:
-                    c.append(None if len(c) != 4 else False)
-                c[3] = default
-        self._update_meta(name, columns=cols)
+        next(c for c in meta.columns if c.name == col).default = default
+        self._update_meta(name, columns=meta.columns)
 
     def rename_table(self, old: str, new: str) -> None:
         if os.path.exists(self._table_path(new)):
@@ -619,14 +640,14 @@ class Catalog:
         matches (predicate → partition pruning); here the table is rewritten
         whole. Reference: DELETE statement, src/sql/src/statements/delete.rs."""
         meta = self.meta(name)
-        if getattr(meta, "on_physical", None):
+        if meta.on_physical:
             # logical metric delete: scope the predicate to this table's rows
             # in the physical region
             pred = F.expr(predicate) if isinstance(predicate, str) else predicate
             scoped = pred & (F.col("__table_id") == self._logical_table_id(meta))
             return self.delete(meta.on_physical, scoped, _from_logical=True)
         if not _from_logical and any(
-                getattr(self.meta(t), "on_physical", None) == name
+                self.meta(t).on_physical == name
                 for t in self.list_tables() if t != name):
             # the reference ignores DELETE FROM a physical metric table
             # ("Affected Rows: 0", basic.result:114-117)
@@ -699,7 +720,7 @@ class Catalog:
         df = self._scan(name)
         if df is None:
             return None
-        ren = {_phys_name(e[0]): e[0] for e in self.meta(name).columns or []}
+        ren = {_phys_name(c.name): c.name for c in self.meta(name).columns}
         return df.withColumnsRenamed(
             {p: c for p, c in ren.items() if p != c and p in df.columns}
         ).withColumn("__batch", batch_of())

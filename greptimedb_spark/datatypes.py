@@ -14,8 +14,8 @@ digit p, bare ``TIMESTAMP`` declares 3, and a unit alias (``timestamp_s``,
 DESC unit, the unit of an integer literal (0 s, 3 ms, 6 µs, 9 ns) and the
 unit that a cast or a stored value truncates to. Spark keeps microseconds,
 so nanoseconds truncate to microseconds, and the µs and ns unit aliases cast
-without truncating. ``DATETIME`` displays as microseconds but declares no
-precision, so its integer literals are milliseconds.
+without truncating. ``DATETIME`` is an alias of the microsecond row, so its
+integer literals are microseconds.
 """
 
 from __future__ import annotations
@@ -162,7 +162,7 @@ def precision(decl: str) -> str | None:
     if m:
         return m.group(1) or DEFAULT_PRECISION
     row = _SPELLINGS.get(t)
-    return row.precision if row and t.startswith("timestamp") else None
+    return row.precision if row else None
 
 
 def timestamp_rule(decl: str | None) -> Precision:

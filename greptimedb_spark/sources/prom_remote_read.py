@@ -53,7 +53,9 @@ from greptimedb_spark.sources.protocols import (
     TIME_INDEX,
     VALUE_COL,
     _decode_fields,
+    _ld,
     _read_varint,
+    _varint,
     snappy_decompress,
 )
 
@@ -79,20 +81,6 @@ def is_database_selection_label(label: str) -> bool:
 
 
 # ---- wire codecs ----------------------------------------------------------
-
-def _varint(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        out.append(b | (0x80 if n else 0))
-        if not n:
-            return bytes(out)
-
-
-def _ld(fnum: int, body: bytes) -> bytes:
-    return _varint((fnum << 3) | 2) + _varint(len(body)) + body
-
 
 def _i64(v: int) -> int:
     """Two's-complement read of a varint-decoded int64."""

@@ -902,6 +902,21 @@ def _read_varint(buf: bytes, i: int) -> tuple[int, int]:
             raise ValueError("varint too long")
 
 
+def _varint(n: int) -> bytes:
+    out = bytearray()
+    while True:
+        b = n & 0x7F
+        n >>= 7
+        out.append(b | (0x80 if n else 0))
+        if not n:
+            return bytes(out)
+
+
+def _ld(fnum: int, body: bytes) -> bytes:
+    """A length-delimited protobuf field."""
+    return _varint((fnum << 3) | 2) + _varint(len(body)) + body
+
+
 def snappy_decompress(buf: bytes) -> bytes:
     """Raw snappy block decompression via pyarrow's bundled codec; the
     block's own uncompressed-length preamble supplies the size pyarrow
@@ -1019,28 +1034,16 @@ def encode_write_request(series: list[tuple[dict, list]]) -> bytes:
 
     import pyarrow as pa
 
-    def varint(n: int) -> bytes:
-        out = bytearray()
-        while True:
-            b = n & 0x7F
-            n >>= 7
-            out.append(b | (0x80 if n else 0))
-            if not n:
-                return bytes(out)
-
-    def ld(fnum: int, body: bytes) -> bytes:
-        return varint((fnum << 3) | 2) + varint(len(body)) + body
-
     msg = bytearray()
     for labels, samples in series:
         ts_body = bytearray()
         for k, v in labels.items():
-            ts_body += ld(1, ld(1, k.encode()) + ld(2, v.encode()))
+            ts_body += _ld(1, _ld(1, k.encode()) + _ld(2, v.encode()))
         for val, ts_ms in samples:
-            sample = (varint((1 << 3) | 1) + struct.pack("<d", val)
-                      + varint(2 << 3) + varint(ts_ms & 0xFFFFFFFFFFFFFFFF))
-            ts_body += ld(2, bytes(sample))
-        msg += ld(1, bytes(ts_body))
+            sample = (_varint((1 << 3) | 1) + struct.pack("<d", val)
+                      + _varint(2 << 3) + _varint(ts_ms & 0xFFFFFFFFFFFFFFFF))
+            ts_body += _ld(2, bytes(sample))
+        msg += _ld(1, bytes(ts_body))
     return bytes(pa.Codec("snappy").compress(bytes(msg)))
 
 
@@ -1553,18 +1556,6 @@ def encode_write_request_v2(series: list[tuple[dict, list]],
 
     import pyarrow as pa
 
-    def varint(n: int) -> bytes:
-        b = bytearray()
-        while True:
-            c = n & 0x7F
-            n >>= 7
-            b.append(c | (0x80 if n else 0))
-            if not n:
-                return bytes(b)
-
-    def ld(fnum: int, body: bytes) -> bytes:
-        return varint((fnum << 3) | 2) + varint(len(body)) + body
-
     table: dict[str, int] = {"": 0}
 
     def sym(s: str) -> int:
@@ -1576,18 +1567,18 @@ def encode_write_request_v2(series: list[tuple[dict, list]],
     for labels, samples in series:
         refs = bytearray()
         for k, v in labels.items():
-            refs += varint(sym(k)) + varint(sym(v))
-        body = ld(1, bytes(refs))
+            refs += _varint(sym(k)) + _varint(sym(v))
+        body = _ld(1, bytes(refs))
         for val, ts_ms in samples:
-            body += ld(2, varint((1 << 3) | 1) + struct.pack("<d", val)
-                       + varint(2 << 3)
-                       + varint(ts_ms & 0xFFFFFFFFFFFFFFFF))
+            body += _ld(2, _varint((1 << 3) | 1) + struct.pack("<d", val)
+                       + _varint(2 << 3)
+                       + _varint(ts_ms & 0xFFFFFFFFFFFFFFFF))
         ts_bufs.append(body)
     msg = bytearray()
     for s, _ in sorted(table.items(), key=lambda kv: kv[1]):
-        msg += ld(4, s.encode("utf-8"))
+        msg += _ld(4, s.encode("utf-8"))
     for b in ts_bufs:
-        msg += ld(5, b)
+        msg += _ld(5, b)
     codec = pa.Codec("zstd" if zstd else "snappy")
     return bytes(codec.compress(bytes(msg)))
 

@@ -21,6 +21,7 @@ Supported statements:
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import re
@@ -29,10 +30,10 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from greptimedb_spark.catalog import TableNotFoundError
+from greptimedb_spark.catalog import ColumnDef, TableMeta, TableNotFoundError
 from greptimedb_spark.datatypes import (
-    JSON2_HINTS, PG_NAMES, arrow_name, cast_trunc, desc_name, pg_oid, precision, sink_spelling,
-    spark_type, sql_name, timestamp_rule,
+    JSON2_HINTS, PG_NAMES, PRECISIONS, arrow_name, cast_trunc, desc_name,
+    pg_oid, precision, sink_spelling, spark_type, sql_name, timestamp_rule,
 )
 from greptimedb_spark.functions import register_all
 from greptimedb_spark.promql.parser import parse_duration
@@ -977,8 +978,6 @@ class GreptimeSQL:
     def _ddl(self, text: str):
         if self.catalog is None:
             return None
-        from greptimedb_spark.catalog import TableMeta
-
         # PARTITION ON COLUMNS (...) (...) — the reference's range-sharding
         # clause; region placement maps to Parquet bucket layout + hash
         # shuffles here, so the clause is accepted, kept for SHOW CREATE
@@ -1033,20 +1032,15 @@ class GreptimeSQL:
             r"^\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?(\w+)\s+LIKE\s+(\w+)\s*$",
             text.strip().rstrip(";"), re.IGNORECASE)
         if lm:
-            import copy as _copy
-
             try:
                 src_meta = self.catalog.meta(
                     self._resolve_table(lm.group(3).lower()))
             except (KeyError, FileNotFoundError, TableNotFoundError):
                 raise ValueError(
                     f"Table not found: {lm.group(3).lower()}") from None
-            new_meta = _copy.deepcopy(src_meta)
-            new_meta.name = lm.group(2).lower()
-            new_meta.table_id = ""
-            new_meta.batch_no = 0
-            new_meta.flush_batches = []
-            new_meta.skip_wal_since = None
+            new_meta = dataclasses.replace(
+                src_meta, name=lm.group(2).lower(), table_id="", batch_no=0,
+                flush_batches=[], skip_wal_since=None)
             self.catalog.create_table(new_meta, if_not_exists=bool(lm.group(1)))
             return self.spark.createDataFrame([], "result string")
         # CREATE parsed by paren-depth (trailing ENGINE=/WITH() clauses make
@@ -1108,16 +1102,16 @@ class GreptimeSQL:
                             "Invalid time index: expected only one time "
                             "index constraint but actual 2")
                     if not re.search(r"timestamp|datetime",
-                                     f"{entry[1]} {entry[2] if len(entry) > 2 else ''}",
+                                     f"{entry.spark_type} {entry.decl}",
                                      re.IGNORECASE):
                         raise ValueError(
-                            f"Invalid column option, column name: {entry[0]}"
+                            f"Invalid column option, column name: {entry.name}"
                             ", error: time index column data type should be"
                             " timestamp")
-                    time_index = entry[0]
+                    time_index = entry.name
                 if is_pk:
                     pk_sites += 1
-                    tags.append(entry[0])
+                    tags.append(entry.name)
             if pk_sites > 1:
                 # one PRIMARY KEY definition only — inline or constraint,
                 # never both / twice (create/create.sql goldens)
@@ -1125,15 +1119,14 @@ class GreptimeSQL:
                     "Illegal primary keys definition: found definitions of "
                     "primary keys in multiple places")
             for entry in cols:
-                idx6 = entry[6] if len(entry) > 6 and isinstance(entry[6], dict) else None
-                if idx6 and "fulltext" in idx6:
+                if "fulltext" in entry.index:
                     # CREATE-time fulltext validation: string columns only,
                     # option values checked (create_with_fulltext.sql)
-                    if entry[1] != "string":
+                    if entry.spark_type != "string":
                         raise ValueError(
-                            f"Invalid column option, column name: {entry[0]}"
+                            f"Invalid column option, column name: {entry.name}"
                             ", error: FULLTEXT index only supports string type")
-                    self._validate_fulltext_opts(idx6["fulltext"])
+                    self._validate_fulltext_opts(entry.index["fulltext"])
             opts = {}
             if with_text:
                 for kv in split_top(with_text):
@@ -1169,12 +1162,12 @@ class GreptimeSQL:
             if is_metric:
                 seen_names: dict[str, int] = {}
                 for i, c in enumerate(cols):
-                    if c[0] in seen_names:
+                    if c.name in seen_names:
                         raise ValueError(
-                            f"Invalid SQL, error: column name `{c[0]}` is "
-                            f"duplicated at index {seen_names[c[0]]} and {i}")
-                    seen_names[c[0]] = i
-                cols = sorted(cols, key=lambda c: c[0])
+                            f"Invalid SQL, error: column name `{c.name}` is "
+                            f"duplicated at index {seen_names[c.name]} and {i}")
+                    seen_names[c.name] = i
+                cols = sorted(cols, key=lambda c: c.name)
             if any(k.startswith("compaction.") for k in opts):
                 # CREATE-time compaction options shadow the database's and
                 # record the override marker (create_database_opts.result;
@@ -1191,23 +1184,24 @@ class GreptimeSQL:
                 # table BEFORE creating anything (reference CREATE is atomic;
                 # engine/create.rs column checks)
                 pmeta0 = self.catalog.meta(phys)
-                pcols0 = {e[0]: e for e in (pmeta0.columns or [])}
+                pcols0 = {c.name: c for c in pmeta0.columns}
 
                 for c in cols:
-                    pe = pcols0.get(c[0])
+                    pe = pcols0.get(c.name)
                     if pe is None:
-                        if c[0] not in tags and c[0] != time_index:
+                        if c.name not in tags and c.name != time_index:
                             raise ValueError(
-                                f"Adding field column {c[0]} to physical table")
+                                f"Adding field column {c.name} to physical table")
                         continue
-                    if sql_name(str(pe[2] if len(pe) > 2 else pe[1])).lower() != \
-                            sql_name(str(c[2] if len(c) > 2 else c[1])).lower():
+                    if sql_name(pe.declared).lower() != \
+                            sql_name(c.declared).lower():
                         raise ValueError(
-                            f"Column type mismatch for {c[0]}")
-                ti_entry = next((c for c in cols if c[0] == time_index), None)
+                            f"Column type mismatch for {c.name}")
+                ti_entry = next((c for c in cols if c.name == time_index), None)
                 p_ti = pcols0.get(pmeta0.time_index)
                 if ti_entry is not None and p_ti is not None:
-                    if (precision(ti_entry[2]) or 3) != (precision(p_ti[2]) or 3):
+                    if (precision(ti_entry.declared) or 3) != \
+                            (precision(p_ti.declared) or 3):
                         raise ValueError(
                             "Metric has different time unit than the "
                             "physical region")
@@ -1239,15 +1233,14 @@ class GreptimeSQL:
                                      pmeta0.partition_sql)
                     for pc in ([c.strip().strip('"`') for c in
                                 pc_m.group(1).split(",")] if pc_m else []):
-                        if not any(c[0] == pc for c in cols):
+                        if not any(c.name == pc for c in cols):
                             pe = pcols0.get(pc)
-                            cols.append([
-                                pc, pe[1] if pe else "string",
-                                pe[2] if pe and len(pe) > 2 else "STRING",
-                                None, False])
+                            cols.append(ColumnDef(
+                                pc, pe.spark_type, pe.decl) if pe else
+                                ColumnDef(pc, "string", "STRING"))
                         if pc not in tags and pc != time_index:
                             tags.append(pc)
-                    cols = sorted(cols, key=lambda c: c[0])
+                    cols = sorted(cols, key=lambda c: c.name)
                     tags = sorted(tags)
                     partition_sql = pmeta0.partition_sql
             # merge/append semantics inherit from the database options when
@@ -1256,9 +1249,7 @@ class GreptimeSQL:
             # DATABASE ttl affects existing tables
             _dbo = getattr(self, "_databases", {}).get(
                 getattr(self, "_current_db", "public"), {}) or {}
-            j2col = next((c[0] for c in cols
-                          if len(c) > 2 and str(c[2]).lower() == "json2"),
-                         None)
+            j2col = next((c.name for c in cols if c.decl == "json2"), None)
             if j2col is not None and opts.get(
                     "append_mode",
                     _dbo.get("append_mode", "false")).lower() != "true":
@@ -1290,7 +1281,7 @@ class GreptimeSQL:
                     "append_mode",
                     _dbo.get("append_mode", "false")).lower() == "true",
                 ttl=opts.get("ttl") or None,
-                columns=[list(c) for c in cols],
+                columns=cols,
                 sorted_columns=is_metric,
                 comment=opts.get("comment") or None,
                 partition_sql=partition_sql,
@@ -1305,9 +1296,8 @@ class GreptimeSQL:
                 clash = self.catalog.meta(name)
             except (FileNotFoundError, TableNotFoundError):
                 clash = None
-            if clash is not None and (
-                    getattr(clash, "schema_name", "public") or "public"
-            ) != getattr(self, "_current_db", "public"):
+            if clash is not None and clash.schema_name != getattr(
+                    self, "_current_db", "public"):
                 # same table name in a DIFFERENT schema: store under a
                 # schema-scoped key; displays strip the prefix
                 # (information_schema/tables.sql: abc.t and abcde.t coexist)
@@ -1325,13 +1315,15 @@ class GreptimeSQL:
                 except (FileNotFoundError, TableNotFoundError):
                     pmeta = None
                 if pmeta is not None:
-                    existing = {e[0] for e in (pmeta.columns or [])}
-                    newcols = [list(c) for c in (pmeta.columns or [])]
+                    existing = {c.name for c in pmeta.columns}
+                    newcols = pmeta.columns
                     new_tags = list(pmeta.tags)
                     grew = False
                     if "__table_id" not in existing:
-                        newcols.append(["__table_id", "long", "UInt32", None, True])
-                        newcols.append(["__tsid", "long", "UInt64", None, True])
+                        newcols.append(ColumnDef("__table_id", "long", "UInt32",
+                                                 not_null=True))
+                        newcols.append(ColumnDef("__tsid", "long", "UInt64",
+                                                 not_null=True))
                         new_tags = ["__table_id", "__tsid"] + new_tags
                         grew = True
                     # grown tags inherit the physical table's index options
@@ -1346,16 +1338,13 @@ class GreptimeSQL:
                             f",granularity="
                             f"{popts.get('index.granularity', '10240')}")}
                     for c in cols:
-                        if c[0] not in existing:
-                            entry = list(c)
-                            if c[0] in meta.tags and tag_idx is not None:
-                                while len(entry) < 7:
-                                    entry.append(None)
-                                entry[6] = dict(tag_idx)
-                            newcols.append(entry)
+                        if c.name not in existing:
+                            if c.name in meta.tags and tag_idx is not None:
+                                c = dataclasses.replace(c, index=dict(tag_idx))
+                            newcols.append(c)
                             grew = True
-                            if c[0] in meta.tags:
-                                new_tags.append(c[0])
+                            if c.name in meta.tags:
+                                new_tags.append(c.name)
                     if grew:
                         self.catalog._update_meta(
                             phys, columns=newcols, tags=new_tags)
@@ -1365,8 +1354,7 @@ class GreptimeSQL:
             name, col_list, values_text = m.groups()
             name = self._resolve_table(name)
             meta_t = self.catalog.meta(name)
-            if getattr(meta_t, "engine", "mito") == "metric" and \
-                    not getattr(meta_t, "on_physical", None):
+            if meta_t.engine == "metric" and not meta_t.on_physical:
                 # rows reach a physical metric region only through its
                 # logical tables (insert/physical_metric_table_insert.sql)
                 raise ValueError(
@@ -1392,12 +1380,12 @@ class GreptimeSQL:
                 cols = [
                     next(
                         c for c in full_cols
-                        if c[0] == o or c[0].lower() == o.lower()
+                        if c.name == o or c.name.lower() == o.lower()
                     )
                     for o in order
                 ]
-            if getattr(meta_t, "on_physical", None) and \
-                    meta_t.time_index not in {e[0] for e in cols}:
+            if meta_t.on_physical and \
+                    meta_t.time_index not in {c.name for c in cols}:
                 # logical metric tables require the time index explicitly
                 # (insert/logical_metric_table.sql t_default golden)
                 raise ValueError(
@@ -1457,12 +1445,11 @@ class GreptimeSQL:
                         if _v.strip().upper() != "DEFAULT" or _j >= len(cols):
                             continue
                         _e = cols[_j]
-                        _has_default = len(_e) > 3 and _e[3] is not None
-                        _required = (len(_e) > 4 and _e[4]) or _e[0] == _ti
-                        if _required and not _has_default:
+                        _required = _e.not_null or _e.name == _ti
+                        if _required and _e.default is None:
                             raise ValueError(
                                 "No valid default value can be built "
-                                f"automatically, column: {_e[0]}")
+                                f"automatically, column: {_e.name}")
                 values_text = re.sub(r"\bDEFAULT\b", "NULL", values_text, flags=re.IGNORECASE)
             if re.search(r"(?i)\bnow\s*\(", values_text):
                 # rows mixing now() and epoch-int literals in a timestamp
@@ -1472,13 +1459,13 @@ class GreptimeSQL:
                 args_per = _rows()
                 changed = False
                 for j, entry in enumerate(cols):
-                    if entry[1] != "timestamp" or j >= min(map(len, args_per), default=0):
+                    if entry.spark_type != "timestamp" or j >= min(map(len, args_per), default=0):
                         continue
                     vals = [a[j].strip() for a in args_per]
                     is_int = [re.fullmatch(r"-?\d+L?", v) is not None
                               for v in vals]
                     if any(is_int) and not all(is_int):
-                        tpl = timestamp_rule(entry[2] if len(entry) > 2 else None).from_epoch
+                        tpl = timestamp_rule(entry.decl).from_epoch
                         for a, ii in zip(args_per, is_int):
                             if ii:
                                 a[j] = tpl.format(
@@ -1501,36 +1488,36 @@ class GreptimeSQL:
             raw = raw.toDF(*[f"col{i + 1}" for i in range(len(cols))])
             exprs = []
             for i, entry in enumerate(cols):
-                c, t = entry[0], entry[1]
+                c, t = entry.name, entry.spark_type
                 v = f"col{i + 1}"
                 if t == "timestamp":
                     if dict(raw.dtypes)[v] in ("bigint", "int", "smallint", "tinyint"):
-                        tpl = timestamp_rule(entry[2] if len(entry) > 2 else None).from_epoch
+                        tpl = timestamp_rule(entry.decl).from_epoch
                         e = tpl.format(v=f"CAST({v} AS BIGINT)")
                     else:
                         # numeric STRINGS are epoch values in the declared
                         # precision too ('3' ≡ 3 — insert/mysql_insert.sql)
                         s0 = f"CAST({v} AS STRING)"
-                        tpl0 = timestamp_rule(entry[2] if len(entry) > 2 else None).from_epoch
+                        tpl0 = timestamp_rule(entry.decl).from_epoch
                         e = (f"CASE WHEN {s0} RLIKE '^[+-]?[0-9]+$' THEN "
                              f"{tpl0.format(v=f'CAST({s0} AS BIGINT)')} "
                              f"ELSE CAST({s0} AS TIMESTAMP) END")
                         # the declared precision truncates at storage time
                         # (timestamp_precision.result: a timestamp(0) column
                         # stores whole seconds)
-                        tr = cast_trunc(entry[2]) if len(entry) > 2 else None
+                        tr = cast_trunc(entry.decl) if entry.decl else None
                         if tr:
                             e = f"date_trunc('{tr}', {e})"
                     d = _default_sql(entry)
                     if has_default_kw and d:
                         e = f"COALESCE({e}, {d})"
                     exprs.append(f"{e} AS `{c}`")
-                elif len(entry) > 2 and str(entry[2]).lower().startswith("vector"):
+                elif str(entry.decl).lower().startswith("vector"):
                     # vector literals ('[1.0, 2.0]') or parse_vec() arrays
                     # pack into the binary f32 representation; a declared
                     # VECTOR(n) validates the dimension at ingest like the
                     # reference (types/vector/vector.sql errgold)
-                    vm = re.match(r"vector\((\d+)\)", str(entry[2]).lower())
+                    vm = re.match(r"vector\((\d+)\)", entry.decl.lower())
                     if vm:
                         exprs.append(
                             f"gt_vec_pack_dim({v}, {vm.group(1)}) AS `{c}`")
@@ -1546,9 +1533,7 @@ class GreptimeSQL:
                     # by the jsonb-canonical-text UDF in json_fns.py).
                     # Typed field hints apply at ingest: defaults fill,
                     # NOT NULL and type mismatches raise.
-                    hints = (entry[6] or {}).get("json2_hints") \
-                        if len(entry) > 6 and isinstance(entry[6], dict) \
-                        else None
+                    hints = entry.index.get("json2_hints")
                     src = f"CAST({v} AS STRING)"
                     # the reference accepts only non-empty top-level OBJECT
                     # documents into json2 columns (json2_limit.sql):
@@ -1593,12 +1578,12 @@ class GreptimeSQL:
                     else:
                         exprs.append(f"CAST({v} AS {t}) AS `{c}`")
             df = raw.selectExpr(*exprs)
-            if {e[0] for e in cols} != {e[0] for e in full_cols}:
+            if {c.name for c in cols} != {c.name for c in full_cols}:
                 df = _with_defaults(df, cols, full_cols)
             # explicit NULL into a NOT NULL column is rejected up front
             # (drop_col_not_null_next.sql). Gated on a literal NULL in the
             # statement text so the probe job doesn't tax the common path.
-            nn = [e[0] for e in cols if len(e) > 4 and e[4]]
+            nn = [c.name for c in cols if c.not_null]
             if nn and re.search(r"(?i)\bNULL\b", text):
                 probe = df.select([
                     F.sum(F.col(f"`{c}`").isNull().cast("int")).alias(c)
@@ -1619,7 +1604,8 @@ class GreptimeSQL:
             if col_list:
                 order = [c.strip().strip('"`') for c in col_list.split(",")]
                 cols = [
-                    next(c for c in full_cols if c[0] == o or c[0].lower() == o.lower())
+                    next(c for c in full_cols
+                         if c.name == o or c.name.lower() == o.lower())
                     for o in order
                 ]
             src = self.sql(select_text)
@@ -1635,16 +1621,16 @@ class GreptimeSQL:
             for i in range(len(cols)):
                 entry = cols[i]
                 scol = src.columns[i]
-                if entry[1] == "timestamp" and src_types[scol] in (
+                if entry.spark_type == "timestamp" and src_types[scol] in (
                     "bigint", "int", "smallint", "tinyint", "double", "float",
                 ):
-                    tpl = timestamp_rule(entry[2] if len(entry) > 2 else None).from_epoch
-                    sel.append(
-                        F.expr(tpl.format(v=f"CAST(`{scol}` AS BIGINT)")).alias(entry[0])
-                    )
+                    tpl = timestamp_rule(entry.decl).from_epoch
+                    sel.append(F.expr(tpl.format(
+                        v=f"CAST(`{scol}` AS BIGINT)")).alias(entry.name))
                 else:
                     safe = scol.replace("`", "``")
-                    sel.append(F.col(f"`{safe}`").cast(entry[1]).alias(entry[0]))
+                    sel.append(F.col(f"`{safe}`").cast(
+                        entry.spark_type).alias(entry.name))
             picked = src.select(*sel)
             self.catalog.insert(name, _with_defaults(picked, cols, full_cols))
             return self.spark.createDataFrame([], "result string")
@@ -1680,7 +1666,7 @@ class GreptimeSQL:
             name, pred = m.groups()
             name = self._resolve_table(name)
             meta = self.catalog.meta(name)
-            if getattr(meta, "append_mode", False):
+            if meta.append_mode:
                 # append-mode tables are write-once (insert/append_mode.sql)
                 raise ValueError("Invalid request to region, reason: "
                                  "DELETE is not allowed under append mode")
@@ -1929,24 +1915,24 @@ class GreptimeSQL:
                         meta = self.catalog.meta(key)
                     except (FileNotFoundError, TableNotFoundError):
                         return key
-                if (getattr(meta, "schema_name", "public") or "public") == sch:
+                if meta.schema_name == sch:
                     return rest
         return key
 
-    def _col_entries(self, name: str) -> list:
-        """Declared column entries [name, spark_type, decl, default, not_null]
-        from the catalog meta."""
+    def _col_entries(self, name: str) -> list[ColumnDef]:
+        """The declared columns of a table (freshly loaded: callers may
+        change them)."""
         try:
-            meta_cols = self.catalog.meta(self._resolve_table(name)).columns
+            cols = self.catalog.meta(self._resolve_table(name)).columns
         except (FileNotFoundError, TableNotFoundError):
-            meta_cols = None
-        if not meta_cols:
+            cols = None
+        if not cols:
             raise ValueError(f"table {name!r} does not exist")
-        return [tuple(c) for c in meta_cols]
+        return cols
 
     def _ts_rule_of(self, name: str, col: str):
-        return timestamp_rule(next((e[2] for e in self._col_entries(name)
-                                    if e[0] == col and len(e) > 2), None))
+        return timestamp_rule(next((c.decl for c in self._col_entries(name)
+                                    if c.name == col), None))
 
     def _empty_ok(self):
         return self.spark.createDataFrame([], "result string")
@@ -1968,8 +1954,7 @@ class GreptimeSQL:
         if m:
             return m.group(1), m.group(2)
         try:
-            db = getattr(self.catalog.meta(phys), "schema_name",
-                         "public") or "public"
+            db = self.catalog.meta(phys).schema_name
         except Exception:
             db = "public"
         return db, phys
@@ -1994,13 +1979,12 @@ class GreptimeSQL:
         for phys, _db, _rel, _k in rels[1:]:
             rid = self._pg_oid("rel", phys)
             try:
-                tix = getattr(self.catalog.meta(phys), "time_index", None)
+                tix = self.catalog.meta(phys).time_index
             except Exception:
                 tix = None
-            for pos, e in enumerate(self._col_entries(phys), start=1):
-                ty = str(e[1]) if len(e) > 1 else "string"
-                attrs.append((rid, e[0], pg_oid(ty), pos,
-                              e[0] == tix, False, False, "", ""))
+            for pos, c in enumerate(self._col_entries(phys), start=1):
+                attrs.append((rid, c.name, pg_oid(c.spark_type), pos,
+                              c.name == tix, False, False, "", ""))
         self.spark.createDataFrame(
             attrs, "attrelid int, attname string, atttypid int, attnum int, "
                    "attnotnull boolean, attisdropped boolean, "
@@ -2056,11 +2040,8 @@ class GreptimeSQL:
                 meta = self.catalog.meta(phys)
             except Exception:
                 continue
-            entries = self._col_entries(phys)
-            names = [e[0] for e in entries]
-            pk = [c for c in (list(getattr(meta, "tags", []) or [])
-                              + [getattr(meta, "time_index", None)])
-                  if c in names]
+            names = [c.name for c in self._col_entries(phys)]
+            pk = [c for c in [*meta.tags, meta.time_index] if c in names]
             if not pk:
                 continue
             iid = self._pg_oid("idx", phys)
@@ -2243,13 +2224,13 @@ class GreptimeSQL:
                     f"{fpr}, expected: positive float less than or equal "
                     "to 1")
 
-    def _check_fulltext_change(self, entry: list, idx: dict,
+    def _check_fulltext_change(self, entry: ColumnDef, idx: dict,
                                opts_text: str | None) -> None:
         """Column-type + analyzer/case_sensitive immutability checks
         (1004(InvalidArguments) messages)."""
-        if str(entry[1]).lower() != "string":
+        if entry.spark_type.lower() != "string":
             raise ValueError(
-                f"Invalid column option, column name: {entry[0]}, error: "
+                f"Invalid column option, column name: {entry.name}, error: "
                 "FULLTEXT index only supports string type")
         if "fulltext" not in idx:
             return
@@ -2260,7 +2241,7 @@ class GreptimeSQL:
                 or new.get("case_sensitive", prev["case_sensitive"])
                 != prev["case_sensitive"]):
             raise ValueError(
-                f"Invalid column option, column name: {entry[0]}, error: "
+                f"Invalid column option, column name: {entry.name}, error: "
                 "Cannot change analyzer or case_sensitive if FULLTEXT "
                 f"index is set before. Previous analyzer: "
                 f"{prev['analyzer']}, previous case_sensitive: "
@@ -2441,22 +2422,21 @@ class GreptimeSQL:
             # create_postgres_foreign_table; show_create.result:49-63)
             name = self._resolve_table(m.group(1).strip('"`'))
             meta = self.catalog.meta(name)
-            pg = {"int": "INT4", "integer": "INT4", "bigint": "INT8",
-                  "smallint": "INT2", "tinyint": "INT2",
-                  "string": "VARCHAR", "varchar": "VARCHAR",
-                  "text": "VARCHAR", "double": "FLOAT8", "float": "FLOAT4",
-                  "real": "FLOAT4", "boolean": "BOOL", "date": "DATE",
-                  "binary": "BYTEA"}
+            # keyed by the SHOW CREATE spelling of each column's type
+            pg = {"int": "INT4", "bigint": "INT8", "smallint": "INT2",
+                  "tinyint": "INT2", "string": "VARCHAR", "double": "FLOAT8",
+                  "float": "FLOAT4", "real": "FLOAT4", "boolean": "BOOL",
+                  "date": "DATE", sql_name("binary").lower(): "BYTEA"}
             lines = []
             hide = _is_metric_engine(meta)
-            for e in self._col_entries(name):
-                if hide and e[0].startswith("__"):
+            for c in self._col_entries(name):
+                if hide and c.name.startswith("__"):
                     continue
-                decl = str(e[2] if len(e) > 2 else e[1]).lower()
+                decl = sql_name(c.declared).lower()
                 base = decl.split("(")[0].replace(" unsigned", "").strip()
-                t = ("TIMESTAMP" if decl.startswith(("timestamp", "datetime"))
+                t = ("TIMESTAMP" if base == "timestamp"
                      else pg.get(base, base.upper()))
-                lines.append(f'  "{e[0]}" {t}')
+                lines.append(f'  "{c.name}" {t}')
             text_out = (f"CREATE FOREIGN TABLE ft_{name} (\n"
                         + ",\n".join(lines)
                         + f"\n)\nSERVER greptimedb\n"
@@ -2498,12 +2478,10 @@ class GreptimeSQL:
             if kind == "COLUMN":
                 tname, _, cname = target.rpartition(".")
                 name = self._resolve_table(tname)
-                cols = [list(c) for c in self._col_entries(name)]
+                cols = self._col_entries(name)
                 for c in cols:
-                    if c[0].lower() == cname.lower():
-                        while len(c) < 6:
-                            c.append(None)
-                        c[5] = comment
+                    if c.name.lower() == cname.lower():
+                        c.comment = comment
                         break
                 else:
                     raise ValueError(f"column {cname} not found in {name}")
@@ -2574,15 +2552,13 @@ class GreptimeSQL:
             else:
                 rows_src = [("numbers", "test_engine")]
                 for n in self.catalog.list_tables():
-                    tdb = (getattr(self.catalog.meta(n), "schema_name",
-                                   "public") or "public").lower()
+                    tdb = self.catalog.meta(n).schema_name.lower()
                     if tdb == db or (db == "public"
                                      and tdb not in getattr(
                                          self, "_databases", {})):
                         rows_src.append(
                             (self._display_name(n),
-                             getattr(self.catalog.meta(n), "engine",
-                                     "mito")))
+                             self.catalog.meta(n).engine))
             if m.group(2):
                 pat = ("^" + m.group(2).replace("%", ".*")
                        .replace("_", ".") + "$")
@@ -2618,8 +2594,7 @@ class GreptimeSQL:
                 known_dbs = getattr(self, "_databases", {})
                 kinds = {}
                 for n in self.catalog.list_tables():
-                    tdb = (getattr(self.catalog.meta(n), "schema_name",
-                                   "public") or "public").lower()
+                    tdb = self.catalog.meta(n).schema_name.lower()
                     # tables created before their schema was registered (or
                     # under a since-dropped schema) surface in public
                     if tdb != "public" and tdb not in known_dbs:
@@ -2711,16 +2686,14 @@ class GreptimeSQL:
             name = self._resolve_table(tname)
             meta = self.catalog.meta(name)
             rows = []
-            for e in sorted(self._col_entries(name), key=lambda e: e[0]):
-                c, decl = e[0], (e[2] if len(e) > 2 else e[1])
-                default = e[3] if len(e) > 3 else None
-                not_null = bool(e[4]) if len(e) > 4 else False
+            for e in sorted(self._col_entries(name), key=lambda e: e.name):
+                c, decl, default = e.name, e.declared, e.default
                 is_ti = c == meta.time_index
                 key = "TIME INDEX" if is_ti else ("PRI" if c in meta.tags else "")
                 base = {
                     "Field": c,
                     "Type": sql_name(decl).lower(),
-                    "Null": "NO" if (not_null or is_ti) else "YES",
+                    "Null": "NO" if (e.not_null or is_ti) else "YES",
                     "Key": key,
                     "Default": _render_default(default) if default else "",
                     "Extra": "",
@@ -2969,8 +2942,7 @@ class GreptimeSQL:
             except Exception:
                 return None
             tagset = set(meta.tags) | {meta.time_index}
-            fields = [e[0] for e in (meta.columns or [])
-                      if e[0] not in tagset]
+            fields = [c.name for c in meta.columns if c.name not in tagset]
             if len(fields) > 1:
                 # the reference rejects TQL flows over multi-field metrics
                 # (flow_tql.sql "should failed with two value columns error")
@@ -3006,8 +2978,6 @@ class GreptimeSQL:
 
     def _create_flow(self, name: str, sink: str, expire, with_opts, select_text: str,
                      stmt: str = ""):
-        from greptimedb_spark.catalog import TableMeta
-
         opts = []
         if with_opts:
             for km in re.finditer(r"(\w+)\s*=\s*\[?'?([\w.]+)'?\]?", with_opts):
@@ -3148,8 +3118,8 @@ class GreptimeSQL:
             for t in sources:
                 try:
                     sm = self.catalog.meta(t)
-                    e = next(c for c in sm.columns if c[0] == sm.time_index)
-                    return e[2] if len(e) > 2 else "timestamp(3)"
+                    e = next(c for c in sm.columns if c.name == sm.time_index)
+                    return e.decl or "timestamp(3)"
                 except Exception:
                     continue
             return "timestamp(3)"
@@ -3169,9 +3139,9 @@ class GreptimeSQL:
             df = self.sql(select_text)
             labels = [c for c in df.columns if c not in ("ts", "value")]
             ts_decl = source_ts_decl()
-            val_e = [vname, "double", "Float64", None, False]
-            ts_e = ["ts", "timestamp", ts_decl, None, True]
-            lab_es = [[c, "string", "STRING", None, False] for c in labels]
+            val_e = ColumnDef(vname, "double", "Float64")
+            ts_e = ColumnDef("ts", "timestamp", ts_decl, not_null=True)
+            lab_es = [ColumnDef(c, "string", "STRING") for c in labels]
             create_sink("ts", labels, [val_e, ts_e] + lab_es if value_first
                         else [ts_e, val_e] + lab_es)
             sink_exists = True
@@ -3192,12 +3162,13 @@ class GreptimeSQL:
             entries, labels = [], []
             for c, t in df.dtypes:
                 if c == time_index:
-                    entries.append([c, "timestamp", ts_decl, None, True])
+                    entries.append(ColumnDef(c, "timestamp", ts_decl,
+                                             not_null=True))
                 elif t in ("string", "varchar"):
-                    entries.append([c, "string", "STRING", None, False])
+                    entries.append(ColumnDef(c, "string", "STRING"))
                     labels.append(c)
                 else:
-                    entries.append([c, "double", "Float64", None, False])
+                    entries.append(ColumnDef(c, "double", "Float64"))
             create_sink(time_index, labels, entries)
             sink_exists = True
             auto_sink = True
@@ -3216,12 +3187,11 @@ class GreptimeSQL:
                 pdtypes, sink_cols = None, []
             if pdtypes is not None and sink_cols:
                 flow_names = [c.lower() for c, _ in pdtypes]
-                sink_names = [str(e[0]).lower() for e in sink_cols]
+                sink_names = [c.name.lower() for c in sink_cols]
                 sink_set, flow_set = set(sink_names), set(flow_names)
                 try:
                     smeta = self.catalog.meta(sink)
-                    lnn = getattr(smeta, "merge_mode",
-                                  "last_row") == "last_non_null"
+                    lnn = smeta.merge_mode == "last_non_null"
                 except Exception:
                     smeta, lnn = None, False
                 extras = [c for c in flow_names if c not in sink_set]
@@ -3231,8 +3201,8 @@ class GreptimeSQL:
                 # declared DEFAULT (show_create_flow.result: a sink ts
                 # DEFAULT CURRENT_TIMESTAMP absent from the flow output is
                 # accepted) — none of those count as "missing"
-                defaulted = {str(e[0]).lower() for e in sink_cols
-                             if len(e) > 3 and e[3] is not None}
+                defaulted = {c.name.lower() for c in sink_cols
+                             if c.default is not None}
                 missing = [c for c in sink_names
                            if c not in flow_set
                            and c not in ("update_at", "__ts_placeholder")
@@ -3246,7 +3216,7 @@ class GreptimeSQL:
                             "missing sink columns from flow output: "
                             f"{sorted(set(missing))}")
                 if lnn and smeta is not None:
-                    required = {t.lower() for t in (smeta.tags or [])}
+                    required = {t.lower() for t in smeta.tags}
                     required.add(str(smeta.time_index).lower())
                     req_missing = sorted(c for c in missing if c in required)
                     if req_missing:
@@ -3265,8 +3235,7 @@ class GreptimeSQL:
             is_tql = bool(tql_info or tql_cte_name or re.match(
                 r"\s*TQL\b", select_text, re.IGNORECASE))
             if pdtypes is not None and sink_cols and not is_tql and \
-                    not all(c.lower() in {str(e[0]).lower()
-                                          for e in sink_cols}
+                    not all(c.lower() in {e.name.lower() for e in sink_cols}
                             for c, _ in pdtypes):
                 # positional aliasing (non-TQL flows, as before): a
                 # timestamp/non-timestamp clash at any position is the
@@ -3276,14 +3245,14 @@ class GreptimeSQL:
                 for i, (fc, ft) in enumerate(pdtypes):
                     if i >= len(sink_cols):
                         break
-                    s_is_ts = str(sink_cols[i][1]).lower().startswith(
-                        "timestamp")
+                    sc = sink_cols[i]
+                    s_is_ts = sc.spark_type.lower().startswith("timestamp")
                     if s_is_ts != ft.startswith("timestamp"):
                         raise ValueError(
                             f"Invalid query: Column {i}(name is "
-                            f"'{sink_cols[i][0]}', flow inferred name is "
+                            f"'{sc.name}', flow inferred name is "
                             f"'{fc}')'s data type mismatch, expect "
-                            f"{sink_cols[i][1]} got {ft}")
+                            f"{sc.spark_type} got {ft}")
         if not sink_exists:
             auto_sink = True
             # Auto-create the sink the way the reference does
@@ -3295,9 +3264,7 @@ class GreptimeSQL:
             # last-row merge IS the upsert.
             df = self._flow_df(select_text)
             ts_cols = [c for c, t in df.dtypes if t.startswith("timestamp")]
-            entries = [
-                [c, t, sink_spelling(t), None, False] for c, t in df.dtypes
-            ]
+            entries = [ColumnDef(c, t, sink_spelling(t)) for c, t in df.dtypes]
             time_index = ts_cols[0] if ts_cols else "__ts_placeholder"
             if ts_cols and re.search(
                     r"\b(gt_)?date_bin\s*\([^()]*,[^()]*,\s*'[^']*'\s*\)",
@@ -3307,8 +3274,8 @@ class GreptimeSQL:
                 # TIMESTAMP(9); 2-arg keeps the source precision
                 # (flow_basic SHOW CREATE goldens)
                 for e in entries:
-                    if e[0] == time_index:
-                        e[2] = "timestamp(9)"
+                    if e.name == time_index:
+                        e.decl = "timestamp(9)"
             gb = re.search(
                 r"\bGROUP\s+BY\s+(.*?)(?:\bHAVING\b|\bORDER\b|\bLIMIT\b|$)",
                 select_text, re.IGNORECASE | re.DOTALL,
@@ -3323,11 +3290,11 @@ class GreptimeSQL:
             else:
                 key_cols = []
             tags = [c for c in key_cols if c != time_index]
-            if "update_at" not in {e[0] for e in entries}:
-                entries.append(["update_at", "timestamp", "timestamp(3)", None, False])
+            if "update_at" not in {e.name for e in entries}:
+                entries.append(ColumnDef("update_at", "timestamp", "timestamp(3)"))
             if not ts_cols:
                 entries.append(
-                    ["__ts_placeholder", "timestamp", "timestamp(3)", None, False])
+                    ColumnDef("__ts_placeholder", "timestamp", "timestamp(3)"))
             create_sink(time_index, tags, entries)
         # batching vs streaming mode (reference determine_flow_type,
         # src/operator/src/statement/ddl.rs:796): pending → batching;
@@ -3503,7 +3470,7 @@ class GreptimeSQL:
                 # column named after the DataFusion expression
                 df = df.withColumnRenamed("value", fl["tql_value_col"])
             sink_cols = self._col_entries(fl["sink"])
-            sink_names = [e[0] for e in sink_cols]
+            sink_names = [c.name for c in sink_cols]
             # map flow output onto the declared sink schema BY NAME when all
             # output names exist in the sink (a flow may produce a column
             # subset, e.g. (time_window, update_at, bb)); else positionally
@@ -3519,15 +3486,15 @@ class GreptimeSQL:
             # sink columns the flow doesn't produce take their declared
             # DEFAULT (e.g. __ts_placeholder TIMESTAMP DEFAULT 0), else NULL
             for entry in sink_cols:
-                if entry[0] not in df.columns:
-                    if entry[0] == "__ts_placeholder":
+                if entry.name not in df.columns:
+                    if entry.name == "__ts_placeholder":
                         df = df.withColumn(
-                            entry[0], F.timestamp_seconds(F.lit(0)))
+                            entry.name, F.timestamp_seconds(F.lit(0)))
                         continue
                     d = _default_sql(entry)
                     df = df.withColumn(
-                        entry[0],
-                        F.expr(d) if d else F.lit(None).cast(entry[1]),
+                        entry.name,
+                        F.expr(d) if d else F.lit(None).cast(entry.spark_type),
                     )
             # Plain INSERT is the whole story: the sink's (tags, time-index)
             # last-row merge upserts recomputed groups, and results computed
@@ -3549,17 +3516,14 @@ class GreptimeSQL:
         meta = self.catalog.meta(name)
         rows = []
         for entry in self._col_entries(name):
-            c = entry[0]
-            decl = entry[2] if len(entry) > 2 else entry[1]
-            default = entry[3] if len(entry) > 3 else None
-            not_null = bool(entry[4]) if len(entry) > 4 else False
+            c = entry.name
             is_ti = c == meta.time_index
             rows.append((
                 c,
-                desc_name(decl),
+                desc_name(entry.declared),
                 "PRI" if (is_ti or c in meta.tags) else "",
-                "NO" if (is_ti or not_null) else "YES",
-                _render_default(default),
+                "NO" if (is_ti or entry.not_null) else "YES",
+                _render_default(entry.default),
                 "TIMESTAMP" if is_ti else ("TAG" if c in meta.tags else "FIELD"),
             ))
         return self.spark.createDataFrame(
@@ -3665,8 +3629,7 @@ class GreptimeSQL:
             src = r.load(files)
             cols = []
             for e in entries:
-                c, styp = e[0], e[1]
-                default = e[3] if len(e) > 3 else None
+                c, styp, default = e.name, e.spark_type, e.default
                 if c in src.columns:
                     cols.append(F.col(c).cast(styp).alias(c))
                 elif default is not None:
@@ -3703,7 +3666,7 @@ class GreptimeSQL:
             df = ts_filter(self.catalog.read(name),
                            self.catalog.meta(name).time_index)
             # declared column order (reads come back ordered)
-            df = df.select(*[e[0] for e in self._col_entries(name)])
+            df = df.select(*[c.name for c in self._col_entries(name)])
             write_one(df, path)
             return self._empty_ok()
         if _os.path.isdir(path) or path.endswith("/"):
@@ -3738,18 +3701,18 @@ class GreptimeSQL:
                       if re.search(rf"\b{re.escape(t)}\b", text)]
         for t in referenced:
             for e in self._col_entries(t):
-                if len(e) < 2 or e[1] != "timestamp":
+                if e.spark_type != "timestamp":
                     continue
                 # if another referenced table has a NON-timestamp column of
                 # the same name, an unqualified ref could resolve to it —
                 # only rewrite refs explicitly qualified with this table
                 ambiguous = any(
-                    len(e2) >= 2 and e2[0] == e[0] and e2[1] != "timestamp"
+                    e2.name == e.name and e2.spark_type != "timestamp"
                     for t2 in referenced if t2 != t
                     for e2 in self._col_entries(t2)
                 )
-                tpl = timestamp_rule(e[2] if len(e) > 2 else None).from_epoch
-                c = re.escape(e[0])
+                tpl = timestamp_rule(e.decl).from_epoch
+                c = re.escape(e.name)
                 qual = rf"{re.escape(t)}\." if ambiguous else r"(?:\w+\.)?"
 
                 def repl(m: "re.Match[str]") -> str:
@@ -3820,9 +3783,8 @@ class GreptimeSQL:
         for t in self.catalog.list_tables():
             if not re.search(rf"\b{re.escape(t)}\b", text):
                 continue
-            for e in self._col_entries(t):
-                if len(e) > 2 and str(e[2]).lower() == "json2":
-                    vcols.append(e[0])
+            vcols += [c.name for c in self._col_entries(t)
+                      if str(c.decl).lower() == "json2"]
         def _vg_path(p: str) -> str:
             if not p or p in (".", "$", "$."):
                 return "$"
@@ -4113,8 +4075,8 @@ class GreptimeSQL:
             try:
                 meta = self.catalog.meta(
                     self._resolve_table(fm.group(1).lower()))
-                int_cols = {e[0] for e in (meta.columns or [])
-                            if str(e[1]).lower() in (
+                int_cols = {c.name for c in meta.columns
+                            if c.spark_type.lower() in (
                                 "long", "bigint", "int", "integer",
                                 "smallint", "tinyint")}
             except Exception:
@@ -4175,8 +4137,8 @@ class GreptimeSQL:
             meta = self.catalog.meta(self._resolve_table(fm.group(1).lower()))
         except Exception:
             return text
-        int_cols = {e[0] for e in (meta.columns or [])
-                    if str(e[1]).lower() in ("long", "bigint", "int",
+        int_cols = {c.name for c in meta.columns
+                    if c.spark_type.lower() in ("long", "bigint", "int",
                                              "integer", "smallint", "tinyint")}
 
         def rep(m):
@@ -4296,6 +4258,7 @@ class GreptimeSQL:
             "views": self._info_views,
             "table_constraints": self._info_table_constraints,
             "table_semantics": self._info_table_semantics,
+            "flows": self._info_flows,
             "flow_statistics": self._info_flow_statistics,
             "key_column_usage": self._info_key_column_usage,
             "schemata": self._info_schemata,
@@ -4353,7 +4316,7 @@ class GreptimeSQL:
         for i, t in enumerate(sorted(self.catalog.list_tables())):
             meta = self.catalog.meta(t)
             rows.append(row(
-                getattr(meta, "schema_name", "public") or "public",
+                meta.schema_name,
                 self._display_name(t, meta),
                 "BASE TABLE", 1024 + i,
                 "metric" if _is_metric_engine(meta) else "mito",
@@ -4391,22 +4354,18 @@ class GreptimeSQL:
                  "select,insert")]
         for t in sorted(self.catalog.list_tables()):
             meta = self.catalog.meta(t)
-            sch = getattr(meta, "schema_name", "public") or "public"
             for pos, e in enumerate(self._col_entries(t), start=1):
-                c, decl = e[0], (e[2] if len(e) > 2 else e[1])
-                default = e[3] if len(e) > 3 else None
-                not_null = bool(e[4]) if len(e) > 4 else False
-                comment = e[5] if len(e) > 5 else None
+                c, decl, default = e.name, e.declared, e.default
                 is_ti = c == meta.time_index
                 is_tag = c in meta.tags
                 sem = "TIMESTAMP" if is_ti else ("TAG" if is_tag else "FIELD")
                 key = ("TIME INDEX" if is_ti else ("PRI" if is_tag else ""))
                 rows.append((
-                    "greptime", sch, self._display_name(t, meta), c, pos,
-                    sql_name(decl).lower(), desc_name(decl), sem,
-                    "NO" if (not_null or is_ti) else "YES",
+                    "greptime", meta.schema_name, self._display_name(t, meta),
+                    c, pos, sql_name(decl).lower(), desc_name(decl), sem,
+                    "NO" if (e.not_null or is_ti) else "YES",
                     _canon_default(default) if default else None,
-                    comment, key, "select,insert",
+                    e.comment, key, "select,insert",
                 ))
         return self.spark.createDataFrame(
             rows,
@@ -4439,7 +4398,7 @@ class GreptimeSQL:
                  "PRIMARY KEY", "YES")]
         for t in sorted(self.catalog.list_tables()):
             meta = self.catalog.meta(t)
-            sch = getattr(meta, "schema_name", "public") or "public"
+            sch = meta.schema_name
             rows.append(("def", sch, "TIME INDEX", sch, t, "TIME INDEX", "YES"))
             if meta.tags:
                 rows.append(("def", sch, "PRIMARY", sch, t, "PRIMARY KEY", "YES"))
@@ -4459,7 +4418,7 @@ class GreptimeSQL:
                  "numbers", "number", 1, None, None, None, None, "dense")]
         for t in sorted(self.catalog.list_tables()):
             meta = self.catalog.meta(t)
-            sch = getattr(meta, "schema_name", "public") or "public"
+            sch = meta.schema_name
             rows.append(("def", sch, "TIME INDEX", "def", "greptime", sch,
                          t, meta.time_index, 1, None, None, None, None, None))
             for i, tag in enumerate(meta.tags):
@@ -4558,7 +4517,7 @@ class GreptimeSQL:
         out = []
         for t in sorted(self.catalog.list_tables()):
             meta = self.catalog.meta(t)
-            sch = getattr(meta, "schema_name", "public") or "public"
+            sch = meta.schema_name
             psql = meta.partition_sql or ""
             pm = re.search(r"(?is)ON\s+COLUMNS\s*\(([^)]*)\)\s*\((.*)\)\s*$",
                            psql)
@@ -4629,23 +4588,20 @@ class GreptimeSQL:
             if only_table and t != only_table:
                 continue
             meta = self.catalog.meta(t)
-            sch = getattr(meta, "schema_name", "public") or "public"
             rows = []
-            for e in (meta.columns or []):
-                idx = e[6] if len(e) > 6 and isinstance(e[6], dict) else {}
-                not_null = bool(e[4]) if len(e) > 4 else False
-                nullable = not (not_null or e[0] == meta.time_index)
-                if "fulltext" in idx:
-                    rows.append((1, f"FULLTEXT_INDEX_{e[0]}", 1, e[0],
+            for e in meta.columns:
+                c = e.name
+                nullable = not (e.not_null or c == meta.time_index)
+                if "fulltext" in e.index:
+                    rows.append((1, f"FULLTEXT_INDEX_{c}", 1, c,
                                  "FULLTEXT", "fulltext_bloom", nullable))
-                if "inverted" in idx:
-                    rows.append((1, f"INVERTED_INDEX_{e[0]}", 1, e[0],
+                if "inverted" in e.index:
+                    rows.append((1, f"INVERTED_INDEX_{c}", 1, c,
                                  "INVERTED", "inverted", nullable))
-                if "skipping" in idx:
-                    rows.append((1, f"SKIPPING_INDEX_{e[0]}", 1, e[0],
+                if "skipping" in e.index:
+                    rows.append((1, f"SKIPPING_INDEX_{c}", 1, c,
                                  "SKIPPING", "bloom_filter", nullable))
-            col_not_null = {e[0]: (bool(e[4]) if len(e) > 4 else False)
-                            for e in (meta.columns or [])}
+            col_not_null = {e.name: e.not_null for e in meta.columns}
             for i, tag in enumerate(meta.tags):
                 rows.append((0, "PRIMARY", i + 1, tag, "PRIMARY", "dense",
                              not col_not_null.get(tag, False)))
@@ -4653,7 +4609,8 @@ class GreptimeSQL:
                          False))
             for nu, kn, seq, col, ity, gty, nullable in sorted(
                     rows, key=lambda r: (r[1], r[2])):
-                out.append((sch, t, nu, kn, seq, col, ity, gty, nullable))
+                out.append((meta.schema_name, t, nu, kn, seq, col, ity, gty,
+                            nullable))
         return out
 
     def _info_statistics(self):
@@ -4703,25 +4660,21 @@ class GreptimeSQL:
         out = []
         for i, t in enumerate(sorted(self.catalog.list_tables())):
             meta = self.catalog.meta(t)
-            fbs = list(getattr(meta, "flush_batches", []) or [])
-            if not fbs or getattr(meta, "on_physical", None):
+            fbs = meta.flush_batches
+            if not fbs or meta.on_physical:
                 continue
             raw = self.catalog.stored_rows(t)
             if raw is None:
                 continue
             tid = 1024 + i
-            cols = meta.columns or []
-            col_pos = {e[0]: j for j, e in enumerate(cols)}
-            tag_types = []
-            for tag in meta.tags:
-                e = next((c for c in cols if c[0] == tag), None)
-                tag_types.append((e[1] if e and len(e) > 1 else "string")
-                                 .lower())
+            cols = meta.columns
+            col_pos = {e.name: j for j, e in enumerate(cols)}
+            types = {e.name: e.spark_type.lower() for e in cols}
+            tag_types = [types.get(tag, "string") for tag in meta.tags]
             parts = [(int(p[2][1:]), p[4]) for p in self._table_partitions()
                      if p[1] == t] or [(0, None)]
             sel = [c for c in ([meta.time_index] + meta.tags) if c in raw.columns]
-            indexed = [(e[0], e[6]) for e in cols
-                       if len(e) > 6 and isinstance(e[6], dict) and e[6]]
+            indexed = [(e.name, e.index) for e in cols if e.index]
 
             # per-file stats via TWO bounded aggregations (one per (flush
             # batch, region), one per flush batch) — never a full-row
@@ -5013,7 +4966,7 @@ class GreptimeSQL:
         rows = []
         for i, t in enumerate(sorted(self.catalog.list_tables())):
             meta = self.catalog.meta(t)
-            if getattr(meta, "on_physical", None):
+            if meta.on_physical:
                 continue
             tid = 1024 + i
             parts = [int(p[2][1:]) for p in self._table_partitions()
@@ -5078,7 +5031,7 @@ class GreptimeSQL:
             options = (_json.dumps(dict(sorted(extra.items())),
                                    separators=(",", ":")) if extra else None)
             rows.append((
-                "greptime", getattr(meta, "schema_name", "public") or "public",
+                "greptime", meta.schema_name,
                 t, 1024 + i, signal, source, source_version, pipeline,
                 quality, options,
             ))
@@ -5088,6 +5041,33 @@ class GreptimeSQL:
             "table_id int, signal_type string, source string, "
             "source_version string, pipeline string, metadata_quality string, "
             "semantic_options string",
+        )
+
+    def _info_flows(self):
+        """information_schema.flows (reference
+        src/catalog/src/system_schema/information_schema/flows.rs)."""
+        rows = [
+            (n, i, 0, "greptime", fl.get("definition", ""), fl.get("comment"),
+             fl.get("expire"), "[]", fl["sink"], "{}",
+             json.dumps(
+                 dict(fl.get("opts") or [])
+                 | {"flow_type": fl.get("flow_type", "batching")},
+                 separators=(",", ":"),
+             ),
+             ",".join(f"greptime.public.{t}" for t in sorted(fl.get("sources", {}))),
+             _ts_or_none(fl.get("created")), _ts_or_none(fl.get("updated")),
+             _ts_or_none(fl.get("last_exec")), None)
+            for i, (n, fl) in enumerate(sorted(getattr(self, "_flows", {}).items()))
+        ]
+        return self.spark.createDataFrame(
+            rows,
+            "flow_name string, flow_id int, state_size bigint, "
+            "table_catalog string, flow_definition string, comment string, "
+            "expire_after string, source_table_ids string, "
+            "sink_table_name string, flownode_ids string, options string, "
+            "source_table_names string, created_time timestamp, "
+            "updated_time timestamp, last_execution_time timestamp, "
+            "flownode_addrs string",
         )
 
     def _info_flow_statistics(self):
@@ -5113,7 +5093,7 @@ class GreptimeSQL:
 
         for t in self.catalog.list_tables():
             meta = self.catalog.meta(t)
-            since = getattr(meta, "skip_wal_since", None)
+            since = meta.skip_wal_since
             if since is None:
                 continue
             floor = max(since, meta.flush_batches[-1]
@@ -5129,16 +5109,11 @@ class GreptimeSQL:
         col_lines = []
         hide_internal = _is_metric_engine(meta)
         for e in self._col_entries(name):
-            c, decl = e[0], (e[2] if len(e) > 2 else e[1])
+            c, decl, default, idx = e.name, e.declared, e.default, e.index
             if hide_internal and c.startswith("__"):
                 continue  # metric-engine internal columns stay out of DDL
-            default = e[3] if len(e) > 3 else None
-            not_null = bool(e[4]) if len(e) > 4 else False
-            comment = e[5] if len(e) > 5 else None
-            idx = e[6] if len(e) > 6 else None
             is_ti = c == meta.time_index
-            hints = (idx or {}).get("json2_hints") \
-                if isinstance(idx, dict) else None
+            hints = idx.get("json2_hints")
             if hints:
                 # JSON2 typed-hint block renders multi-line
                 # (json2_type_hints.result SHOW CREATE golden)
@@ -5154,7 +5129,7 @@ class GreptimeSQL:
             else:
                 type_text = sql_name(decl)
             line = f'  "{c}" {type_text} ' + (
-                "NOT NULL" if (not_null or is_ti) else "NULL")
+                "NOT NULL" if (e.not_null or is_ti) else "NULL")
             if default is not None:
                 d = _canon_default(default)
                 if (precision(decl) is not None
@@ -5162,8 +5137,8 @@ class GreptimeSQL:
                     # timestamp literal defaults display with the UTC offset
                     d = d[:-1] + "+0000'"
                 line += f" DEFAULT {d}"
-            if comment:
-                line += f" COMMENT '{comment}'"
+            if e.comment:
+                line += f" COMMENT '{e.comment}'"
             if idx:
                 line += _render_index_clauses(idx)
             col_lines.append(line)
@@ -5185,7 +5160,7 @@ class GreptimeSQL:
         # (ttl/show_ttl.result; alter_database.result monitor golden — the
         # compaction.* options do NOT project into table DDL)
         db_opts = getattr(self, "_databases", {}).get(
-            getattr(meta, "schema_name", "public") or "public") or {}
+            meta.schema_name) or {}
         for inherit_key in ("ttl", "sst_format", "append_mode",
                             "memtable.type", "merge_mode", "skip_wal"):
             if inherit_key not in opts and db_opts.get(inherit_key):
@@ -5316,8 +5291,7 @@ class GreptimeSQL:
             rules = [norm(r) for _pc, r in parts if r]
             for e in srcs:
                 if e not in rules:
-                    sch = getattr(self.catalog.meta(name), "schema_name",
-                                  "public") or "public"
+                    sch = self.catalog.meta(name).schema_name
                     raise ValueError(
                         f"Invalid partition rule: partition expression "
                         f"'{e}' does not exist in table "
@@ -5355,55 +5329,51 @@ class GreptimeSQL:
                 entry, _is_ti, is_pk = _parse_col_def(clause.strip())
                 if entry is None:
                     raise ValueError(f"cannot parse column definition {clause!r}")
-                if len(entry) > 4 and entry[4] and not entry[3]:
+                if entry.not_null and not entry.default:
                     # NOT NULL without DEFAULT cannot backfill existing rows
                     # (add_incorrect_col.sql golden)
                     raise ValueError(
                         f"Invalid alter table({name}) request: no default "
-                        f"value for column {entry[0]}")
+                        f"value for column {entry.name}")
                 parsed.append((entry, if_not_exists, pos, after, is_pk))
             meta0 = self.catalog.meta(name)
-            if getattr(meta0, "engine", "mito") == "metric" and \
-                    not getattr(meta0, "on_physical", None):
+            if meta0.engine == "metric" and not meta0.on_physical:
                 # columns reach a physical metric table only via its logical
                 # tables (alter_physical_table.sql golden)
                 raise ValueError(
                     "Alter request to physical region is forbidden")
             for entry, *_rest in parsed:
-                if len(entry) > 2 and str(entry[2]).lower().startswith("json2") \
-                        and not getattr(meta0, "append_mode", False):
+                if entry.decl.startswith("json2") and not meta0.append_mode:
                     # same rule as CREATE (types/json/json2_limit.sql)
                     raise ValueError(
-                        f"Invalid SQL, error: JSON2 column `{entry[0]}` "
+                        f"Invalid SQL, error: JSON2 column `{entry.name}` "
                         "requires append_mode='true'")
-            existing = {e[0] for e in self._col_entries(name)}
+            existing = {c.name for c in self._col_entries(name)}
             pending = set()
             for entry, if_not_exists, _pos, _after, _pk in parsed:
-                if entry[0] in existing or entry[0] in pending:
+                if entry.name in existing or entry.name in pending:
                     if not if_not_exists:
-                        raise ValueError(f"column {entry[0]} already exists")
+                        raise ValueError(f"column {entry.name} already exists")
                 else:
-                    pending.add(entry[0])
+                    pending.add(entry.name)
             for entry, if_not_exists, pos, after, is_pk in parsed:
-                if entry[0] in existing:
+                if entry.name in existing:
                     continue
-                entry = list(entry)
-                if entry[1] == "timestamp" and len(entry) > 3 and entry[3] \
-                        and str(entry[3]).strip().startswith("'"):
+                if entry.spark_type == "timestamp" and entry.default \
+                        and entry.default.strip().startswith("'"):
                     # a timestamp DEFAULT literal binds to the session zone
                     # at ALTER time, not at each later INSERT
                     # (alter_table_default.sql: ts1 added under UTC keeps its
                     # UTC instant after SET time_zone='+8:00') — pin the
                     # concrete epoch now
                     epoch = self.spark.sql(
-                        f"SELECT unix_micros(CAST({entry[3]} AS TIMESTAMP))"
+                        f"SELECT unix_micros(CAST({entry.default} AS TIMESTAMP))"
                     ).collect()[0][0]
                     if epoch is not None:
-                        while len(entry) < 8:
-                            entry.append(None)
-                        entry[7] = int(epoch)
-                self.catalog.add_column(name, list(entry), position=pos, after=after, is_tag=is_pk)
-                existing.add(entry[0])
+                        entry.default_epoch_us = int(epoch)
+                self.catalog.add_column(name, entry, position=pos, after=after,
+                                        is_tag=is_pk)
+                existing.add(entry.name)
                 # metric-engine logical tables propagate new columns to
                 # their physical table (alter/alter_format goldens)
                 phys = (self.catalog.meta(name).with_opts or {}).get(
@@ -5413,22 +5383,19 @@ class GreptimeSQL:
                         pmeta = self.catalog.meta(phys)
                     except (FileNotFoundError, TableNotFoundError):
                         pmeta = None
-                    if pmeta is not None and entry[0] not in {
-                            e[0] for e in (pmeta.columns or [])}:
-                        pcols = [list(c) for c in (pmeta.columns or [])]
-                        pcols.append(list(entry))
-                        ptags = list(pmeta.tags) + ([entry[0]] if is_pk else [])
+                    if pmeta is not None and entry.name not in {
+                            c.name for c in pmeta.columns}:
+                        ptags = pmeta.tags + ([entry.name] if is_pk else [])
                         self.catalog._update_meta(
-                            phys, columns=pcols, tags=ptags)
+                            phys, columns=pmeta.columns + [entry], tags=ptags)
             return self._empty_ok()
         dm = re.match(r"DROP\s+COLUMN\s+(\"[^\"]+\"|\w+)\s*$", action, re.IGNORECASE)
         if dm:
             col = _ident_case(dm.group(1))
             meta0 = self.catalog.meta(name)
-            if col not in {e[0] for e in self._col_entries(name)}:
+            if col not in {c.name for c in self._col_entries(name)}:
                 raise ValueError(f"Column {col} not exists in table {name}")
-            if col == getattr(meta0, "time_index", None) or \
-                    col in (meta0.tags or []):
+            if col == meta0.time_index or col in meta0.tags:
                 # drop_col.sql / alter_physical_table.sql index-column goldens
                 raise ValueError(
                     f"Not allowed to remove index column {col} "
@@ -5461,7 +5428,7 @@ class GreptimeSQL:
                     col = _ident_case(sd.group(1))
                     if sd.group(2).strip().lower() == "null":
                         for e in self._col_entries(name):
-                            if e[0] == col and len(e) > 4 and e[4]:
+                            if e.name == col and e.not_null:
                                 raise ValueError(
                                     "Default value should not be null for "
                                     "non null column")
@@ -5471,7 +5438,7 @@ class GreptimeSQL:
                 if dd:
                     col = _ident_case(dd.group(1))
                     for e in self._col_entries(name):
-                        if e[0] == col and len(e) > 4 and e[4]:
+                        if e.name == col and e.not_null:
                             # a NOT NULL column must keep a default — there
                             # is nothing valid to fall back to
                             raise ValueError(
@@ -5505,12 +5472,10 @@ class GreptimeSQL:
                         self._validate_fulltext_opts(im.group(4))
                     if kind == "skipping" and im.group(2).upper() == "SET":
                         self._validate_skipping_opts(im.group(4))
-                    cols = [list(c) for c in self._col_entries(name)]
+                    cols = self._col_entries(name)
                     for c in cols:
-                        if c[0] == col:
-                            while len(c) < 7:
-                                c.append(None)
-                            idx = dict(c[6] or {})
+                        if c.name == col:
+                            idx = c.index
                             if kind == "fulltext" and \
                                     im.group(2).upper() == "SET":
                                 self._check_fulltext_change(
@@ -5524,7 +5489,6 @@ class GreptimeSQL:
                                 idx[kind] = im.group(4) or default
                             else:
                                 idx.pop(kind, None)
-                            c[6] = idx or None
                             break
                     else:
                         raise ValueError(f"column {col} not found")
@@ -5538,24 +5502,23 @@ class GreptimeSQL:
                     # up-front validations, matching the reference's order
                     # and messages (change_col_type.sql,
                     # change_col_type_not_null.sql error goldens)
-                    entries = self._col_entries(name)
-                    names_ = [e[0] for e in entries]
+                    entry = next((c for c in self._col_entries(name)
+                                  if c.name == col), None)
                     meta = self.catalog.meta(self._resolve_table(name))
-                    if col not in names_:
+                    if entry is None:
                         raise ValueError(
                             f"Column {col} not exists in table {name}")
-                    if col in (meta.tags or []):
+                    if col in meta.tags:
                         raise ValueError(
                             f"Invalid alter table({name}) request: Not "
                             "allowed to change primary key index column "
                             f"'{col}'")
-                    if col == getattr(meta, "time_index", None):
+                    if col == meta.time_index:
                         raise ValueError(
                             f"Invalid alter table({name}) request: Not "
                             f"allowed to change timestamp index column "
                             f"'{col}' datatype")
-                    entry = entries[names_.index(col)]
-                    if len(entry) > 4 and entry[4]:
+                    if entry.not_null:
                         raise ValueError(
                             f"Invalid alter table({name}) request: column "
                             f"'{col}' must be nullable to ensure safe "
@@ -5563,7 +5526,7 @@ class GreptimeSQL:
                     try:
                         # castability probe: pure analysis, no job
                         self.spark.sql(f"SELECT CAST(CAST(NULL AS "
-                                       f"{entry[1]}) AS {spark_type(typ)})")
+                                       f"{entry.spark_type}) AS {spark_type(typ)})")
                     except Exception:
                         raise ValueError(
                             f"Invalid alter table({name}) request: column "
@@ -5578,7 +5541,7 @@ class GreptimeSQL:
             key, val = sm.group(1), sm.group(2)
             if not re.fullmatch(r"[A-Za-z0-9_.]+", key):
                 raise ValueError(f"invalid table option key {key!r}")
-            if getattr(self.catalog.meta(name), "on_physical", None):
+            if self.catalog.meta(name).on_physical:
                 # metric-engine logical tables accept only ADD COLUMN alters
                 # (alter_format.sql sst_format golden)
                 raise ValueError("Alter logical tables invalid arguments: "
@@ -5632,7 +5595,7 @@ class GreptimeSQL:
                 self.catalog._update_meta(name, merge_mode=val or "last_row")
             elif key == "skip_wal" and (val or "").lower() == "true":
                 m0 = self.catalog.meta(name)
-                if getattr(m0, "skip_wal_since", None) is None:
+                if m0.skip_wal_since is None:
                     # rows from here on bypass the WAL; a restart before the
                     # next flush loses them (reference skip_wal semantics —
                     # the loss persists even after UNSET, skip_wal.result)
@@ -6318,10 +6281,8 @@ class GreptimeSQL:
                     # dropping a database drops its tables (logical metric
                     # tables first so the physical busy-check releases)
                     victims = [t for t in self.catalog.list_tables()
-                               if (getattr(self.catalog.meta(t), "schema_name",
-                                           "public") or "public").lower() == dbname]
-                    victims.sort(key=lambda t: not getattr(
-                        self.catalog.meta(t), "on_physical", None))
+                               if self.catalog.meta(t).schema_name.lower() == dbname]
+                    victims.sort(key=lambda t: not self.catalog.meta(t).on_physical)
                     for t in victims:
                         self.catalog.drop_table(t)
                         self._unbind(t)
@@ -6436,38 +6397,6 @@ class GreptimeSQL:
                 F.col("id").cast("int").alias("number")
             ).createOrReplaceTempView("numbers")
         text = re.sub(r"\bpublic\.(\w)", r"\1", text)  # single default schema
-        if re.search(r"\bINFORMATION_SCHEMA\s*\.\s*FLOWS\b", text, re.IGNORECASE):
-            # information_schema.flows (reference
-            # src/catalog/src/system_schema/information_schema/flows.rs)
-            import json as _json
-
-            rows = [
-                (n, i, 0, "greptime", fl.get("definition", ""), fl.get("comment"),
-                 fl.get("expire"), "[]", fl["sink"], "{}",
-                 _json.dumps(
-                     dict(fl.get("opts") or [])
-                     | {"flow_type": fl.get("flow_type", "batching")},
-                     separators=(",", ":"),
-                 ),
-                 ",".join(f"greptime.public.{t}" for t in sorted(fl.get("sources", {}))),
-                 _ts_or_none(fl.get("created")), _ts_or_none(fl.get("updated")),
-                 _ts_or_none(fl.get("last_exec")), None)
-                for i, (n, fl) in enumerate(sorted(getattr(self, "_flows", {}).items()))
-            ]
-            self.spark.createDataFrame(
-                rows,
-                "flow_name string, flow_id int, state_size bigint, "
-                "table_catalog string, flow_definition string, comment string, "
-                "expire_after string, source_table_ids string, "
-                "sink_table_name string, flownode_ids string, options string, "
-                "source_table_names string, created_time timestamp, "
-                "updated_time timestamp, last_execution_time timestamp, "
-                "flownode_addrs string",
-            ).createOrReplaceTempView("__information_schema_flows")
-            text = re.sub(
-                r"\bINFORMATION_SCHEMA\s*\.\s*FLOWS\b",
-                "__information_schema_flows", text, flags=re.IGNORECASE,
-            )
         text = self._register_info_schema(text)
         ddl = self._ddl(text)
         if ddl is not None:
@@ -6964,40 +6893,41 @@ def _tz_offset_ms(tz: str) -> int:
     return int(off.total_seconds() * 1000)
 
 
-def _with_defaults(df: DataFrame, cols: list, full_cols: list) -> DataFrame:
+def _with_defaults(df: DataFrame, cols: list[ColumnDef],
+                   full_cols: list[ColumnDef]) -> DataFrame:
     """Column-list INSERT: project ``df`` (holding ``cols``) onto every
     declared column in declared order, so every parquet file shares one
     schema; an unlisted column takes its DEFAULT, else NULL."""
-    listed = {e[0] for e in cols}
+    listed = {c.name for c in cols}
     out = []
-    for entry in full_cols:
-        c, t = entry[0], entry[1]
-        d = _default_sql(entry)
+    for col in full_cols:
+        c, t = col.name, col.spark_type
+        d = _default_sql(col)
         if c in listed:
             out.append(F.col(f"`{c}`"))
-        elif d and len(entry) > 2 and str(entry[2]).lower().startswith("vector"):
+        elif d and str(col.decl).lower().startswith("vector"):
             # vector DEFAULT literals pack to binary f32 (raw literal —
             # CAST AS BINARY would utf8-encode)
-            out.append(F.expr(f"gt_vec_pack({entry[3]})").alias(c))
+            out.append(F.expr(f"gt_vec_pack({col.default})").alias(c))
         else:
             out.append((F.expr(d).cast(t) if d else F.lit(None).cast(t)).alias(c))
     return df.select(*out)
 
 
-def _default_sql(entry) -> str | None:
+def _default_sql(col: ColumnDef) -> str | None:
     """SQL expression for a column's declared DEFAULT, honouring the
     timestamp column's integer-epoch unit."""
-    d = entry[3] if len(entry) > 3 else None
+    d = col.default
     if d is None:
         return None
-    t = entry[1]
-    if t == "timestamp" and len(entry) > 7 and entry[7] is not None \
+    t = col.spark_type
+    if t == "timestamp" and col.default_epoch_us is not None \
             and str(d).strip().startswith("'"):
         # epoch pinned at ALTER time (see ADD COLUMN): the default is a
         # fixed instant, independent of the current session zone
-        return f"timestamp_micros({int(entry[7])})"
+        return f"timestamp_micros({int(col.default_epoch_us)})"
     if t == "timestamp" and re.fullmatch(r"[-+]?\d+", d.strip()):
-        return timestamp_rule(entry[2] if len(entry) > 2 else None).from_epoch.format(v=d)
+        return timestamp_rule(col.decl).from_epoch.format(v=d)
     return f"CAST({d} AS {t})"
 
 
@@ -7091,9 +7021,8 @@ def _is_metric_engine(meta) -> bool:
     """Metric-engine tables by their DDL ENGINE clause (a mito table may
     carry a physical_metric_table option without being one); legacy metas
     without the engine field fall back to the sorted-columns marker."""
-    return (getattr(meta, "engine", "") == "metric"
-            or bool(meta.sorted_columns)
-            or bool(getattr(meta, "on_physical", None)))
+    return (meta.engine == "metric" or meta.sorted_columns
+            or bool(meta.on_physical))
 
 
 def _rewrite_unnest_zip(text: str) -> str:
@@ -7187,9 +7116,9 @@ def _ident_case(tok: str) -> str:
 
 
 def _parse_col_def(item: str):
-    """Parse one column definition from CREATE/ALTER: returns
-    ((name, spark_type, decl_type, default_sql|None, not_null), is_time_index,
-    is_primary_key), or (None, False, False) for non-column items.
+    """Parse one column definition from CREATE/ALTER: returns (ColumnDef,
+    is_time_index, is_primary_key), or (None, False, False) for non-column
+    items.
 
     Unquoted column names are LOWERCASED (the reference's parser does this
     for all unquoted identifiers); quoted/backticked names keep their case."""
@@ -7216,6 +7145,13 @@ def _parse_col_def(item: str):
         typ = "json2"
     typ = re.sub(r"\s+", " ", typ)
     typ = re.sub(r"\s+\(", "(", typ)  # 'TIMESTAMP (9)' → 'TIMESTAMP(9)'
+    tp = re.fullmatch(r"(?i)timestamp\(\s*(\d+)\s*\)", typ)
+    if tp and tp.group(1) not in PRECISIONS:
+        # the timestamp type has four units only (s, ms, µs, ns)
+        raise ValueError(
+            f"Invalid column option, column name: {col}, error: unsupported "
+            f"data type {typ.upper()}, timestamp precision must be one of "
+            "0, 3, 6, 9")
     dm = re.search(
         r"\bDEFAULT\s+('(?:[^']*)'|[-+]?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?|\w+(?:\([^)]*\))?)",
         rest, re.IGNORECASE,
@@ -7270,8 +7206,8 @@ def _parse_col_def(item: str):
         raise ValueError(
             f"Invalid column option, column name: {col}, error: "
             f"unrecognized option {leftover.strip()!r}")
-    return ((col, spark_type(typ), typ.lower(), default, not_null, comment,
-             idx or None), is_ti, is_pk)
+    return (ColumnDef(col, spark_type(typ), typ.lower(), default, not_null,
+                      comment, idx), is_ti, is_pk)
 
 
 def _parse_json2_hints(body: str) -> list:

@@ -239,3 +239,55 @@ def test_rewrite_keeps_later_generation(spark, tmp_path, alter, rewrite):
         cat.flush_table("gen")  # expires a and b (older than 7 days)
         want = {"c": want["c"]}
     assert {r.k: r[col] for r in cat.read("gen").collect()} == want
+
+
+def test_column_records_from_every_stored_form(spark, tmp_path):
+    """Legacy short lists, a list-format meta file as earlier versions wrote
+    it, and raw lists appended through _update_meta all come back as
+    ColumnDef records with the record's defaults."""
+    import json
+    import os
+
+    from greptimedb_spark.catalog import _META_FILE, ColumnDef
+
+    short = TableMeta(name="s", time_index="ts",
+                      columns=[["ts", "timestamp"], ["v", "double"]])
+    assert short.columns == [ColumnDef("ts", "timestamp"),
+                             ColumnDef("v", "double")]
+    ts = short.columns[0]
+    assert (ts.decl, ts.default, ts.not_null, ts.comment, ts.index,
+            ts.default_epoch_us) == (None, None, False, None, {}, None)
+    assert ts.declared == "timestamp"
+
+    cat = Catalog(spark, str(tmp_path))
+    os.makedirs(tmp_path / "old")
+    (tmp_path / "old" / _META_FILE).write_text(json.dumps({
+        "name": "old", "time_index": "ts", "tags": ["h"],
+        "schema_name": None,
+        "columns": [
+            ["ts", "timestamp", "timestamp(3)", None, True],
+            ["h", "string", "string", None, False, "host", None],
+            ["msg", "string", "string", None, False, None,
+             {"fulltext": ""}],
+            ["at", "timestamp", "timestamp(3)", "'2024-01-01 00:00:00'",
+             False, None, None, 1704067200000000],
+        ]}))
+    meta = cat.meta("old")
+    assert meta.schema_name == "public"
+    assert meta.columns == [
+        ColumnDef("ts", "timestamp", "timestamp(3)", None, True),
+        ColumnDef("h", "string", "string", comment="host"),
+        ColumnDef("msg", "string", "string", index={"fulltext": ""}),
+        ColumnDef("at", "timestamp", "timestamp(3)", "'2024-01-01 00:00:00'",
+                  default_epoch_us=1704067200000000),
+    ]
+
+    cat._update_meta("old", columns=meta.columns + [["n", "int", "INT"]])
+    again = cat.meta("old")
+    assert again.columns[:4] == meta.columns
+    assert again.columns[4] == ColumnDef("n", "int", "INT")
+    stored = json.loads((tmp_path / "old" / _META_FILE).read_text())
+    assert stored["columns"][4] == {
+        "name": "n", "spark_type": "int", "decl": "INT", "default": None,
+        "not_null": False, "comment": None, "index": {},
+        "default_epoch_us": None}

@@ -147,3 +147,44 @@ def test_flow_sink_tinyint_column_stays_int8(g):
           "date_bin(INTERVAL '1 minute', ts) AS w FROM fsrc GROUP BY k, w")
     assert _desc(g, "fsink")["m"] == "Int8"
     assert '"m" TINYINT NULL' in g.sql("SHOW CREATE TABLE fsink").collect()[0][1]
+
+
+def test_foreign_table_prints_each_spelling_as_its_canonical_type(g):
+    """SHOW CREATE TABLE ... FOR POSTGRES_FOREIGN_TABLE maps a column through
+    its type's SHOW CREATE spelling, so every alias prints the PostgreSQL
+    type its canonical spelling prints."""
+    g.sql("CREATE TABLE fdw (ts TIMESTAMP TIME INDEX, i64 INT64, "
+          "big BIGINT, f64 FLOAT64, dbl DOUBLE, tt TINYTEXT, s STRING, "
+          "u8 UINT8, u8b TINYINT UNSIGNED, bl BLOB, bi BINARY, "
+          "dt DATETIME)")
+    ddl = g.sql("SHOW CREATE TABLE fdw FOR POSTGRES_FOREIGN_TABLE"
+                ).collect()[0][1]
+    types = dict(line.strip().rstrip(",").replace('"', "").split(" ", 1)
+                 for line in ddl.splitlines() if line.startswith('  "'))
+    assert types["i64"] == types["big"] == "INT8"
+    assert types["f64"] == types["dbl"] == "FLOAT8"
+    assert types["tt"] == types["s"] == "VARCHAR"
+    assert types["u8"] == types["u8b"] == "INT2"
+    assert types["bl"] == types["bi"] == "BYTEA"
+    assert types["dt"] == types["ts"] == "TIMESTAMP"
+
+
+def test_datetime_integer_literals_are_microseconds(g):
+    """DATETIME is the microsecond timestamp row: integer literals and
+    integer DEFAULTs read as µs, as they do for TIMESTAMP(6)."""
+    g.sql("CREATE TABLE dtl (ts DATETIME TIME INDEX, c DATETIME, "
+          "d DATETIME DEFAULT 2500, v INT)")
+    g.sql("INSERT INTO dtl (ts, c, v) VALUES (0, 1500, 1)")
+    row = g.sql("SELECT CAST(c AS STRING) AS c, CAST(d AS STRING) AS d "
+                "FROM dtl").collect()[0]
+    assert row.c == "1970-01-01 00:00:00.0015"
+    assert row.d == "1970-01-01 00:00:00.0025"
+
+
+@pytest.mark.parametrize("p", ["1", "2", "4", "5", "7", "8", "12"])
+def test_timestamp_precision_outside_the_four_units_is_rejected(g, p):
+    with pytest.raises(ValueError, match=rf"column name: t, .*TIMESTAMP\({p}\)"):
+        g.sql(f"CREATE TABLE tp{p} (ts TIMESTAMP TIME INDEX, t TIMESTAMP({p}))")
+    g.sql("CREATE TABLE IF NOT EXISTS tp_alter (ts TIMESTAMP TIME INDEX)")
+    with pytest.raises(ValueError, match=rf"column name: t, .*TIMESTAMP\({p}\)"):
+        g.sql(f"ALTER TABLE tp_alter ADD COLUMN t TIMESTAMP({p})")

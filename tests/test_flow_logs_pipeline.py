@@ -456,3 +456,24 @@ def test_multimodal_audio_features(spark, sf_dir):
     # deterministic: same payload -> same features
     again = MM.extract_audio_features(MM.attach_binary(d, "text")).collect()
     assert sorted(map(tuple, feats)) == sorted(map(tuple, again))
+
+
+def test_information_schema_flows_resolves_like_other_tables(spark, tmp_path):
+    """information_schema.flows is one of the system tables: qualified, or
+    by its bare name after USE information_schema."""
+    from greptimedb_spark.catalog import Catalog
+    from greptimedb_spark.sql import GreptimeSQL
+
+    g = GreptimeSQL(spark, catalog=Catalog(spark, str(tmp_path)))
+    g.sql("CREATE TABLE fsrc (ts TIMESTAMP TIME INDEX, k STRING PRIMARY KEY, "
+          "v DOUBLE)")
+    g.sql("CREATE FLOW fl SINK TO fsink AS SELECT k, max(v) AS m, "
+          "date_bin(INTERVAL '1 minute', ts) AS w FROM fsrc GROUP BY k, w")
+    q = "SELECT flow_name, sink_table_name, source_table_names FROM {}flows"
+    want = [("fl", "fsink", "greptime.public.fsrc")]
+    assert [tuple(r) for r in g.sql(q.format("information_schema.")).collect()] == want
+    g.sql("USE information_schema")
+    try:
+        assert [tuple(r) for r in g.sql(q.format("")).collect()] == want
+    finally:
+        g.sql("USE public")

@@ -201,7 +201,7 @@ DESC TABLE ty;
 SHOW CREATE TABLE ty;
 SHOW FULL COLUMNS FROM ty;
 SELECT * FROM information_schema.columns WHERE table_name = 'ty';
-INSERT INTO ty (ts, s, i8, u64, dec, b, bo, d, t0, t3, t6, t9, t_s, t_ms, t_us, t_ns, dt) VALUES (1500, 'a', 1, 18446744073709551615, 1.25, 'x', true, '2024-01-02', 1500, 1500, 1500, 1500, 1500, 1500, 1500, 1500, 1500);
+INSERT INTO ty (ts, s, i8, u64, dec, b, bo, d, t0, t3, t6, t9, t_s, t_ms, t_us, t_ns) VALUES (1500, 'a', 1, 18446744073709551615, 1.25, 'x', true, '2024-01-02', 1500, 1500, 1500, 1500, 1500, 1500, 1500, 1500);
 INSERT INTO ty (ts, s, i8, u64, dec, b, bo, d, t0, t3, t6, t9, t_s, t_ms, t_us, t_ns, dt) VALUES (61500, 'a', 2, 2, 2.5, 'y', false, '2024-01-03', '2024-01-01 00:00:01.123456', '2024-01-01 00:00:01.123456', '2024-01-01 00:00:01.123456', '2024-01-01 00:00:01.123456', '2024-01-01 00:00:01.123456', '2024-01-01 00:00:01.123456', '2024-01-01 00:00:01.123456', '2024-01-01 00:00:01.123456', '2024-01-01 00:00:01.123456');
 SELECT ts, s, i8, u64, dec, b, bo, d, t0, t3, t6, t9, t_s, t_ms, t_us, t_ns, dt FROM ty ORDER BY ts;
 SELECT '1'::TINYINT, '1'::SMALLINT, '1'::INT16, '1'::INT2, '1'::INT, '1'::INTEGER, '1'::INT32, '1'::INT4, '1'::BIGINT, '1'::INT64, '1'::INT8, '1'::UINT8, '1'::UINT16, '1'::UINT32, '1'::UINT64;
@@ -218,5 +218,51 @@ ADMIN FLUSH_FLOW('ty_flow');
 DESC TABLE ty_sink;
 SHOW CREATE TABLE ty_sink;
 SELECT s, i16, i32, i64, f32, f64, dec, b, bo, d, t6, s2, w FROM ty_sink ORDER BY w;
+
+-- family: columns
+-- every path that reads or changes a declared column: CREATE options, LIKE,
+-- ALTER ADD/MODIFY/DEFAULT/COMMENT/INDEX, a metric table's tag growth, and
+-- DESC, SHOW CREATE, information_schema and a defaults-taking INSERT
+CREATE TABLE col_t (ts TIMESTAMP(3) TIME INDEX, host STRING PRIMARY KEY COMMENT 'the host', msg STRING NOT NULL DEFAULT 'none' FULLTEXT INDEX WITH (analyzer = 'English', case_sensitive = 'false'), region STRING SKIPPING INDEX WITH (granularity = '8192'), dc STRING INVERTED INDEX, cpu DOUBLE DEFAULT 0.5, n BIGINT DEFAULT 7 COMMENT 'count');
+DESC TABLE col_t;
+SHOW CREATE TABLE col_t;
+SELECT column_name, ordinal_position, data_type, greptime_data_type, semantic_type, is_nullable, column_default, column_comment, column_key FROM information_schema.columns WHERE table_name = 'col_t';
+SHOW INDEX FROM col_t;
+INSERT INTO col_t (ts, host) VALUES (1000, 'a');
+INSERT INTO col_t (ts, host, msg, cpu) VALUES (2000, 'b', 'hello', 1.5);
+SELECT * FROM col_t;
+CREATE TABLE col_like LIKE col_t;
+SHOW CREATE TABLE col_like;
+INSERT INTO col_like (ts, host) VALUES (1000, 'z');
+SELECT * FROM col_like;
+ALTER TABLE col_t ADD COLUMN first_c INT FIRST;
+ALTER TABLE col_t ADD COLUMN after_c STRING DEFAULT 'x' AFTER host;
+SET time_zone = '+08:00';
+ALTER TABLE col_t ADD COLUMN at TIMESTAMP(3) DEFAULT '2024-01-01 00:00:00';
+SET time_zone = 'UTC';
+INSERT INTO col_t (ts, host) VALUES (3000, 'c');
+SELECT ts, host, first_c, after_c, at FROM col_t;
+DESC TABLE col_t;
+ALTER TABLE col_t MODIFY COLUMN cpu STRING;
+ALTER TABLE col_t MODIFY COLUMN n SET DEFAULT 9;
+ALTER TABLE col_t MODIFY COLUMN after_c DROP DEFAULT;
+COMMENT ON COLUMN col_t.cpu IS 'load';
+ALTER TABLE col_t MODIFY COLUMN region UNSET SKIPPING INDEX;
+ALTER TABLE col_t MODIFY COLUMN dc SET SKIPPING INDEX WITH (granularity = '4096');
+ALTER TABLE col_t MODIFY COLUMN host SET FULLTEXT INDEX;
+SHOW CREATE TABLE col_t;
+SELECT column_name, ordinal_position, data_type, column_default, column_comment FROM information_schema.columns WHERE table_name = 'col_t';
+SHOW INDEX FROM col_t;
+INSERT INTO col_t (ts, host) VALUES (4000, 'd');
+SELECT ts, host, cpu, n, after_c, at FROM col_t;
+CREATE TABLE col_phy (ts TIMESTAMP TIME INDEX, val DOUBLE) ENGINE = metric WITH ("physical_metric_table" = "", "index.type" = "skipping");
+CREATE TABLE col_l1 (ts TIMESTAMP TIME INDEX, val DOUBLE, host STRING PRIMARY KEY) ENGINE = metric WITH ("on_physical_table" = "col_phy");
+CREATE TABLE col_l2 (ts TIMESTAMP TIME INDEX, val DOUBLE, host STRING, job STRING, PRIMARY KEY (host, job)) ENGINE = metric WITH ("on_physical_table" = "col_phy");
+SHOW CREATE TABLE col_phy;
+DESC TABLE col_l2;
+SHOW INDEX FROM col_phy;
+INSERT INTO col_l2 (ts, val, host, job) VALUES (1000, 1.0, 'h', 'j');
+SELECT * FROM col_l2;
+SELECT table_name, column_name, semantic_type FROM information_schema.columns WHERE table_name LIKE 'col_%' AND table_name <> 'col_t';
 
 -- family: userbench (the 8 dashboard panels, from userbench/workloads.py)
