@@ -83,10 +83,12 @@ def _ttl_interval(ttl: str) -> str:
     return f"INTERVAL {parse_duration_ms(ttl)} MILLISECOND"
 
 
-def _has_parquet(path: str) -> bool:
-    """Whether ``path`` (a table's data directory) holds any Parquet file."""
-    return any(f.endswith(".parquet")
-               for _root, _dirs, files in os.walk(path) for f in files)
+def _parquet_bytes(path: str) -> int:
+    """The summed size of the Parquet files under ``path`` (a table's data
+    directory); 0 when it holds none."""
+    return sum(os.path.getsize(os.path.join(root, f))
+               for root, _dirs, files in os.walk(path)
+               for f in files if f.endswith(".parquet"))
 
 
 _META_FILE = "_greptime_meta.json"
@@ -346,11 +348,23 @@ class Catalog:
         """The stored rows as written (physical column names, ``__seq`` and
         the bucket column), or None when the table has no file. Schemas are
         merged: an ALTER generation's columns exist only in files written
-        after it, and a first-file schema would silently drop them."""
+        after it, and a first-file schema would silently drop them.
+
+        A table whose files together cost no more than opening one file
+        (``spark.sql.files.openCostInBytes``, Spark's own split estimate)
+        is read as one partition. One partition satisfies every
+        distribution above it, so the merge window, GROUP BY, ORDER BY and
+        self-joins plan with no exchange, and a statement over a small
+        table runs as one stage; filters and column pruning still reach
+        the Parquet scan through the coalesce. Larger tables keep Spark's
+        split scan."""
         path = os.path.join(self._table_path(name), "data")
-        if not _has_parquet(path):
+        size = _parquet_bytes(path)
+        if not size:
             return None
-        return self.spark.read.option("mergeSchema", "true").parquet(path)
+        df = self.spark.read.option("mergeSchema", "true").parquet(path)
+        conf = self.spark._jsparkSession.sessionState().conf()
+        return df.coalesce(1) if size <= conf.filesOpenCostInBytes() else df
 
     def _write(self, meta: TableMeta, df: DataFrame, replace: bool = False,
                **kv) -> None:
@@ -378,7 +392,7 @@ class Catalog:
             tmp = path + ".rewrite"
             out.mode("overwrite").parquet(tmp)
             shutil.rmtree(path)
-            if _has_parquet(tmp):
+            if _parquet_bytes(tmp):
                 os.rename(tmp, path)
             else:
                 shutil.rmtree(tmp)

@@ -35,6 +35,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampNTZType, TimestampType
 
 from greptimedb_spark.functions import native_histogram as nh
 from greptimedb_spark.promql.parser import (
@@ -43,6 +44,7 @@ from greptimedb_spark.promql.parser import (
 )
 
 DEFAULT_LOOKBACK_MS = 300_000  # 5m, reference src/query/src/parser.rs:40
+_MAX_MS = (1 << 62) // 1000  # clamp for window bounds: past any stored time
 
 
 @dataclass
@@ -207,7 +209,9 @@ class PromQLEngine:
 
     # -- selectors ----------------------------------------------------------
 
-    def _metric_base(self, sel: VectorSelector):
+    def _metric_base(self, sel: VectorSelector, ctx: _Ctx, window_ms: int):
+        """The selector's samples ``(__x, *tags, value)`` that can serve a
+        step of ``ctx`` with a ``window_ms`` lookback or range."""
         # bare {__name__="m"} selectors name the metric via matcher; the
         # __schema__/__database__ matchers are single-catalog no-ops here
         metric = sel.metric
@@ -276,6 +280,7 @@ class PromQLEngine:
                 df = df.filter(c.rlike(f"^(?:{m.value})$"))
             else:
                 df = df.filter(~c.rlike(f"^(?:{m.value})$"))
+        df = self._in_window(df, mt, sel, ctx, window_ms)
         ts_ms = (F.unix_micros(F.col(mt.time_index)) / 1000).cast("long")
         if sel.offset_ms:
             ts_ms = ts_ms + F.lit(sel.offset_ms)
@@ -285,7 +290,7 @@ class PromQLEngine:
         vref = F.col(f"`{value_col}`") if re.search(r"[.()]", value_col) \
             else F.col(value_col)
         val = (vref
-               if nh.is_native_histogram_type(df.schema[value_col].dataType)
+               if nh.is_native_histogram_type(mt.df.schema[value_col].dataType)
                else vref.cast("double"))
         base = df.select(
             ts_ms.alias("__x"),
@@ -293,6 +298,26 @@ class PromQLEngine:
             val.alias("value"),
         )
         return base, list(mt.tags)
+
+    @staticmethod
+    def _in_window(df: DataFrame, mt: MetricTable, sel: VectorSelector,
+                   ctx: _Ctx, window_ms: int) -> DataFrame:
+        """Keep the rows whose time index can serve a step of ``ctx``: a
+        sample at x (after offset) serves the steps t in [start, end] with
+        x in (t - window, t]. The filter is on the raw time index, widened
+        1 ms each side for the µs → ms truncation, so it reaches the
+        Parquet scan and sits below the merge window; _explode_steps still
+        does the exact windowing. The column type is read from the
+        table's own frame, whose schema PySpark caches."""
+        ti = mt.df.schema[mt.time_index].dataType
+        if not isinstance(ti, (TimestampType, TimestampNTZType)):
+            return df
+        lo = ctx.start - window_ms - sel.offset_ms - 1
+        hi = ctx.end - sel.offset_ms + 1
+        lo, hi = (F.timestamp_millis(F.lit(max(min(b, _MAX_MS), -_MAX_MS)))
+                  .cast(ti) for b in (lo, hi))
+        ts = F.col(mt.time_index)
+        return df.filter((ts > lo) & (ts <= hi))
 
     def _explode_steps(self, df: DataFrame, window_ms: int, ctx: _Ctx) -> DataFrame:
         """Attach ``__t``: every aligned eval step this sample is visible at —
@@ -311,7 +336,7 @@ class PromQLEngine:
         return df.withColumn("__t", F.explode(steps))
 
     def _instant_selector(self, sel: VectorSelector, ctx: _Ctx) -> VectorResult:
-        base, tags = self._metric_base(sel)
+        base, tags = self._metric_base(sel, ctx, ctx.lookback)
         exploded = self._explode_steps(base, ctx.lookback, ctx)
         out = exploded.groupBy("__t", *tags).agg(
             F.expr("max_by(value, __x)").alias("value")
@@ -353,7 +378,7 @@ class PromQLEngine:
             return base, list(inner.labels), rng
         if not isinstance(arg, VectorSelector) or arg.range_ms is None:
             raise ValueError("range function needs a range vector")
-        base, tags = self._metric_base(arg)
+        base, tags = self._metric_base(arg, ctx, arg.range_ms)
         return base, tags, arg.range_ms
 
     def _range_fn(self, fn: str, sel, ctx: _Ctx, extra=None) -> VectorResult:
@@ -936,7 +961,7 @@ class PromQLEngine:
             sel = node.args[0]
             if isinstance(sel, VectorSelector) and sel.range_ms is None:
                 # value := the selected sample's own timestamp (seconds)
-                base, tags = self._metric_base(sel)
+                base, tags = self._metric_base(sel, ctx, ctx.lookback)
                 ex = self._explode_steps(base, ctx.lookback, ctx)
                 out = ex.groupBy("__t", *tags).agg((F.max("__x") / 1000.0).alias("value"))
                 return VectorResult(out, tags)

@@ -1816,6 +1816,22 @@ class GreptimeSQL:
             ("is_nullable", "String", False), ("column_type", "String", False),
             ("column_comment", "String", True), ("srs_id", "Int64", True),
         ],
+        # names and order as _info_flows serves them; types in this
+        # engine's spelling of those columns (flows.rs not checked)
+        "flows": [
+            ("flow_name", "String", False), ("flow_id", "Int32", False),
+            ("state_size", "Int64", False), ("table_catalog", "String", False),
+            ("flow_definition", "String", False), ("comment", "String", True),
+            ("expire_after", "String", True),
+            ("source_table_ids", "String", False),
+            ("sink_table_name", "String", False),
+            ("flownode_ids", "String", False), ("options", "String", False),
+            ("source_table_names", "String", False),
+            ("created_time", "TimestampMillisecond", True),
+            ("updated_time", "TimestampMillisecond", True),
+            ("last_execution_time", "TimestampMillisecond", True),
+            ("flownode_addrs", "String", True),
+        ],
         "check_constraints": [
             ("constraint_catalog", "String", False),
             ("constraint_schema", "String", False),
@@ -1921,14 +1937,21 @@ class GreptimeSQL:
 
     def _col_entries(self, name: str) -> list[ColumnDef]:
         """The declared columns of a table (freshly loaded: callers may
-        change them)."""
+        change them). A table created through the Catalog API without
+        declared columns reports the columns its stored files hold (none
+        before its first write)."""
         try:
-            cols = self.catalog.meta(self._resolve_table(name)).columns
+            table = self._resolve_table(name)
+            cols = self.catalog.meta(table).columns
         except (FileNotFoundError, TableNotFoundError):
-            cols = None
-        if not cols:
-            raise ValueError(f"table {name!r} does not exist")
-        return cols
+            raise ValueError(f"table {name!r} does not exist") from None
+        if cols:
+            return cols
+        try:
+            return [ColumnDef(c, t) for c, t
+                    in self.catalog.read(table, raw=True).dtypes]
+        except FileNotFoundError:
+            return []
 
     def _ts_rule_of(self, name: str, col: str):
         return timestamp_rule(next((c.decl for c in self._col_entries(name)
@@ -5793,10 +5816,11 @@ class GreptimeSQL:
         nature (the sqlness battery pattern-skips these goldens on both
         engines). ANALYZE runs the query first, so its physical plan is the
         executed AQE-final one, mirroring the reference's plan-with-metrics
-        semantics."""
-        if analyze:
-            df.foreach(lambda _r: None)
+        semantics. The run stays on the JVM (a row count over the same
+        query execution), so no row crosses into a Python worker."""
         qe = df._jdf.queryExecution()
+        if analyze:
+            qe.toRdd().count()
         rows = [("analyzed_plan", qe.analyzed().toString())] if verbose else []
         rows += [("logical_plan", qe.optimizedPlan().toString()),
                  ("physical_plan", qe.executedPlan().toString())]

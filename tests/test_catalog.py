@@ -291,3 +291,24 @@ def test_column_records_from_every_stored_form(spark, tmp_path):
         "name": "n", "spark_type": "int", "decl": "INT", "default": None,
         "not_null": False, "comment": None, "index": {},
         "default_epoch_us": None}
+
+
+def test_information_schema_columns_lists_api_created_table(spark, tmp_path):
+    """A table created through the Catalog API without declared columns
+    lists the columns its stored files hold (and none before its first
+    write), so information_schema.columns serves the whole catalog."""
+    from greptimedb_spark.sql import GreptimeSQL
+
+    cat = Catalog(spark, str(tmp_path))
+    cat.create_table(TableMeta(name="api_t", time_index="ts",
+                               tags=["sensor_id"]))
+    cat.create_table(TableMeta(name="api_empty", time_index="ts"))
+    cat.insert("api_t", spark.createDataFrame(
+        [(TS(0), "s1", 20.0, 50.0)], SCHEMA))
+    g = GreptimeSQL(spark, catalog=cat)
+    rows = g.sql("SELECT table_name, column_name, semantic_type "
+                 "FROM information_schema.columns WHERE table_name "
+                 "LIKE 'api%' ORDER BY ordinal_position").collect()
+    assert [tuple(r) for r in rows] == [
+        ("api_t", "ts", "TIMESTAMP"), ("api_t", "sensor_id", "TAG"),
+        ("api_t", "temperature", "FIELD"), ("api_t", "humidity", "FIELD")]

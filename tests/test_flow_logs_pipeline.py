@@ -477,3 +477,17 @@ def test_information_schema_flows_resolves_like_other_tables(spark, tmp_path):
         assert [tuple(r) for r in g.sql(q.format("")).collect()] == want
     finally:
         g.sql("USE public")
+
+
+def test_desc_information_schema_flows(spark, tmp_path):
+    """DESC information_schema.flows lists the columns SELECT serves, in
+    the same order."""
+    from greptimedb_spark.catalog import Catalog
+    from greptimedb_spark.sql import GreptimeSQL
+
+    g = GreptimeSQL(spark, catalog=Catalog(spark, str(tmp_path)))
+    desc = g.sql("DESC information_schema.flows").collect()
+    served = g.sql("SELECT * FROM information_schema.flows").columns
+    assert [r.Column for r in desc] == served and len(served) == 16
+    assert {r.Column: r.Type for r in desc}["created_time"] == \
+        "TimestampMillisecond"
