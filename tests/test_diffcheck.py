@@ -39,7 +39,7 @@ def test_corpus_covers_every_family():
     assert len(families) == len(set(families))
     for f in ("dml", "alter", "ttl", "range", "tql", "flow", "metric",
               "json2", "information_schema", "functions", "lexical",
-              "types", dc.USERBENCH):
+              "types", "session", "views", dc.USERBENCH):
         assert f in families
 
 

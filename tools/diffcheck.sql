@@ -112,6 +112,14 @@ CREATE OR REPLACE VIEW big AS SELECT host, max(val) AS m FROM src GROUP BY host;
 SELECT * FROM big ORDER BY host;
 DROP VIEW big;
 SELECT * FROM big;
+COMMENT ON FLOW per_min IS 'per minute rollup';
+SHOW CREATE FLOW per_min;
+SELECT flow_name, flow_id, table_catalog, flow_definition, comment, expire_after, sink_table_name, options, source_table_names FROM information_schema.flows;
+COMMENT ON FLOW missing_flow IS 'x';
+CREATE OR REPLACE FLOW per_min SINK TO sink AS SELECT count(val) AS cnt, sum(val) AS total, date_bin(INTERVAL '1 minute', ts) AS time_window FROM src GROUP BY time_window;
+SHOW CREATE FLOW per_min;
+SELECT flow_name, comment, flow_definition FROM information_schema.flows;
+SHOW CREATE FLOW missing_flow;
 DROP FLOW per_min;
 SHOW FLOWS;
 
@@ -264,5 +272,105 @@ SHOW INDEX FROM col_phy;
 INSERT INTO col_l2 (ts, val, host, job) VALUES (1000, 1.0, 'h', 'j');
 SELECT * FROM col_l2;
 SELECT table_name, column_name, semantic_type FROM information_schema.columns WHERE table_name LIKE 'col_%' AND table_name <> 'col_t';
+
+-- family: session
+SELECT database();
+SELECT timezone();
+SHOW VARIABLES time_zone;
+SET TIME_ZONE = '+08:00';
+SELECT CAST(TIMESTAMP '1970-01-01 00:00:00' AS BIGINT) AS t;
+SELECT timezone();
+SHOW VARIABLES time_zone;
+CREATE TABLE ses (ts TIMESTAMP(3) TIME INDEX, host STRING PRIMARY KEY, val DOUBLE);
+INSERT INTO ses VALUES (0, 'a', 1.0), (3600000, 'a', 2.0), (57600000, 'b', 3.0), (90000000, 'b', 4.0);
+SELECT ts, host, max(val) RANGE '1d' AS mx FROM ses ALIGN '1d' BY (host) ORDER BY host, ts;
+SET TIME_ZONE = 'UTC';
+SELECT CAST(TIMESTAMP '1970-01-01 00:00:00' AS BIGINT) AS t;
+SELECT @@version_comment;
+SELECT @@max_execution_time;
+SET MAX_EXECUTION_TIME = 1000;
+SELECT @@max_execution_time;
+SET MAX_EXECUTION_TIME = -1;
+SELECT read_preference();
+SET read_preference = 'follower';
+SELECT read_preference();
+SET read_preference = 'nowhere';
+SET some_unknown_var = 1;
+SHOW WARNINGS;
+SELECT 1 AS one;
+SHOW WARNINGS;
+PREPARE st FROM 'SELECT host, val FROM ses WHERE val > ? ORDER BY val';
+EXECUTE st USING 1.5;
+DEALLOCATE st;
+EXECUTE st USING 1.5;
+DECLARE c1 CURSOR FOR SELECT host, val FROM ses ORDER BY val;
+FETCH 3 FROM c1;
+FETCH 3 FROM c1;
+DECLARE c1 CURSOR FOR SELECT 1;
+CLOSE c1;
+FETCH 1 FROM c1;
+CREATE DATABASE sdb WITH (ttl = '7d');
+CREATE DATABASE sdb;
+SHOW CREATE DATABASE sdb;
+ALTER DATABASE sdb SET 'ttl' = '1d';
+SHOW CREATE DATABASE sdb;
+SHOW FULL DATABASES;
+USE sdb;
+SELECT database();
+CREATE TABLE in_sdb (ts TIMESTAMP(3) TIME INDEX, k STRING PRIMARY KEY, v BIGINT);
+SHOW TABLES;
+SHOW CREATE TABLE in_sdb;
+DROP DATABASE sdb;
+USE public;
+SHOW TABLES;
+SET search_path TO sdb;
+SHOW search_path;
+DROP DATABASE sdb;
+USE public;
+SHOW DATABASES;
+
+-- family: views
+CREATE TABLE vbase (ts TIMESTAMP(3) TIME INDEX, host STRING PRIMARY KEY, val DOUBLE);
+INSERT INTO vbase VALUES (0, 'a', 1.0), (1000, 'b', 2.0), (2000, 'c', 3.0);
+CREATE VIEW v_all AS SELECT host, val FROM vbase;
+SELECT * FROM v_all ORDER BY host;
+CREATE VIEW v_cols (h, v) AS SELECT host, val FROM vbase WHERE val > 1;
+SELECT h, v FROM v_cols ORDER BY h;
+CREATE VIEW v_bad (h) AS SELECT host, val FROM vbase;
+CREATE VIEW IF NOT EXISTS v_all AS SELECT host FROM vbase;
+SELECT * FROM v_all ORDER BY host;
+CREATE VIEW v_all AS SELECT host FROM vbase;
+CREATE OR REPLACE VIEW v_all AS SELECT host, val * 2 AS dbl FROM vbase;
+SELECT * FROM v_all ORDER BY host;
+CREATE VIEW v_nested AS SELECT h FROM v_cols WHERE v > 2;
+SELECT * FROM v_nested;
+INSERT INTO vbase VALUES (3000, 'd', 4.0);
+SELECT * FROM v_nested ORDER BY h;
+SELECT count(*) AS n FROM v_all;
+SHOW VIEWS;
+SHOW TABLES;
+SHOW FULL TABLES;
+SHOW CREATE VIEW v_cols;
+SHOW CREATE VIEW v_all;
+SHOW CREATE VIEW v_missing;
+SHOW CREATE TABLE v_all;
+SHOW COLUMNS FROM v_all;
+SELECT table_schema, table_name, view_definition FROM information_schema.views ORDER BY table_name;
+SELECT table_schema, table_name, table_type FROM information_schema.tables WHERE table_type = 'VIEW' ORDER BY table_name;
+CREATE DATABASE vdb;
+USE vdb;
+CREATE VIEW v_db AS SELECT 1 AS one;
+SELECT * FROM v_db;
+USE public;
+SELECT table_schema, table_name FROM information_schema.views ORDER BY table_name;
+DROP VIEW v_cols;
+SELECT * FROM v_cols;
+SELECT * FROM v_nested;
+DROP VIEW v_cols;
+DROP VIEW IF EXISTS v_cols;
+CREATE VIEW v_cols AS SELECT host, val FROM vbase WHERE val > 3;
+SELECT * FROM v_cols;
+SHOW CREATE VIEW v_cols;
+SHOW VIEWS;
 
 -- family: userbench (the 8 dashboard panels, from userbench/workloads.py)
