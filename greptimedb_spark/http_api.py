@@ -388,7 +388,8 @@ def arrow_response(result) -> bytes:
 def null_response(result) -> str:
     """`null` response format: execute for effect, emit nothing (the
     reference's null_result.rs still runs the query — callers use it for
-    benchmarking transfer-free execution)."""
+    benchmarking transfer-free execution). The plan runs on the JVM, so no
+    row is pickled into a Python worker."""
     if isinstance(result, DataFrame):
-        result.foreach(lambda _row: None)  # materialize without transfer
+        result._jdf.queryExecution().toRdd().count()
     return ""

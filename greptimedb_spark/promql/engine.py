@@ -85,6 +85,8 @@ class PromQLEngine:
         self.tables = tables
         self.lookback_ms = lookback_ms
         self._field_slot = 0  # current field position in multi-field passes
+        self._n_slots = 1  # field positions of the expression being evaluated
+        self._join_n = 0  # numbers the aliases of each binary-op join
 
     def evaluate(self, query: str, start_ms: int, end_ms: int, step_ms: int) -> DataFrame:
         """Range-query evaluation; returns (ts timestamp, *labels, value)."""
@@ -766,7 +768,7 @@ class PromQLEngine:
     # -- aggregation operators ----------------------------------------------------
 
     def _aggregate(self, node: Aggregate, ctx: _Ctx) -> VectorResult:
-        if getattr(self, "_n_slots", 1) > 1:
+        if self._n_slots > 1:
             # multi-field inputs: the reference rejects these operators
             # (promql/topk_bottomk.result:172, promql/group_by.result)
             if node.op in ("topk", "bottomk"):
@@ -1382,7 +1384,7 @@ class PromQLEngine:
                 )
             return cond
 
-        self._join_n = getattr(self, "_join_n", 0) + 1
+        self._join_n += 1
         la, ra = f"lbin{self._join_n}", f"rbin{self._join_n}"
         l = lhs.df.alias(la)
         r = rhs.df.alias(ra)

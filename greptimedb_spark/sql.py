@@ -292,6 +292,13 @@ def _idents(text: str) -> set:
     return set(re.findall(r"\w+", _SQ_STRING_RE.sub(" ", text)))
 
 
+def _like(pattern: str):
+    """SQL LIKE ``pattern`` as a predicate on a whole name: ``%`` matches
+    any run of characters, ``_`` any one, every other character itself."""
+    rx = re.compile(re.escape(pattern).replace("%", ".*").replace("_", "."))
+    return lambda name: rx.fullmatch(name) is not None
+
+
 _BINDINGS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
@@ -301,6 +308,18 @@ def _session_bindings(spark) -> dict:
     its temp views are: a view one instance drops or pins (DROP TABLE, a
     flow's watermark read) must not look current to another."""
     return _BINDINGS.setdefault(spark, {})
+
+
+@dataclasses.dataclass
+class ViewDef:
+    """One user view: its query text, the positional column aliases of
+    ``CREATE VIEW v (a, b)``, the schema it was created in and the CREATE
+    clause that SHOW CREATE VIEW echoes."""
+
+    query: str
+    cols: list[str] | None
+    schema: str
+    prefix: str
 
 
 def _rawify_strings(text: str) -> str:
@@ -950,6 +969,25 @@ class GreptimeSQL:
         self.promql_tables = promql_tables or {}
         self.lookback_ms = lookback_ms
         self.catalog = catalog
+        # the connection's state (the reference keeps it in a QueryContext),
+        # each field declared here with its default
+        self.protocol: str | None = None  # "postgres" exposes pg_catalog
+        self._current_db = "public"
+        self._via_search_path = False  # chosen by SET search_path, not USE
+        self._databases: dict[str, dict] = {}  # CREATE DATABASE → options
+        self._views: dict[str, ViewDef] = {}
+        self._flows: dict[str, dict] = {}  # built whole by _create_flow
+        self._cursors: dict[str, tuple] = {}  # name → (schema, row iterator)
+        self._prepared: dict[str, str] = {}  # PREPARE name → statement
+        self._session_vars: dict[str, str] = {}
+        self._warnings: list[tuple] = []  # queued by an unsupported SET
+        self._external_tables: set[str] = set()
+        self._tz_display = "UTC"  # as SELECT timezone() shows it
+        self.tz_offset_ms = 0  # RANGE's default ALIGN TO origin
+        self._read_pref = "LEADER"
+        self._subq_no = 0  # numbers materialized RANGE parts
+        self._tql_cte_n = 0  # numbers TQL CTE views
+        self._pg_type_built = False
         # session timezone is per-GreptimeSQL state; reset the shared Spark
         # session to UTC so a prior session's SET TIME_ZONE can't leak
         if spark.conf.get("spark.sql.session.timeZone", "UTC") != "UTC":
@@ -1023,7 +1061,6 @@ class GreptimeSQL:
             loc = self._resolve_copy_path(opts.get("location", ""))
             sources.external_table(
                 self.spark, loc, opts.get("format", "parquet"), name=name)
-            self._external_tables = getattr(self, "_external_tables", set())
             self._external_tables.add(name)
             return self._empty_ok()
         # CREATE TABLE x LIKE y: clone the source table's declared schema and
@@ -1247,8 +1284,7 @@ class GreptimeSQL:
             # the table doesn't set them (create_database_opts.result); ttl
             # inheritance stays dynamic (catalog.db_options) so ALTER
             # DATABASE ttl affects existing tables
-            _dbo = getattr(self, "_databases", {}).get(
-                getattr(self, "_current_db", "public"), {}) or {}
+            _dbo = self._databases.get(self._current_db) or {}
             j2col = next((c.name for c in cols if c.decl == "json2"), None)
             if j2col is not None and opts.get(
                     "append_mode",
@@ -1286,7 +1322,7 @@ class GreptimeSQL:
                 comment=opts.get("comment") or None,
                 partition_sql=partition_sql,
                 with_opts=opts or None,
-                schema_name=getattr(self, "_current_db", "public"),
+                schema_name=self._current_db,
                 on_physical=phys or None,
                 engine="metric" if is_metric else "mito",
                 skip_wal_since=0 if str(opts.get("skip_wal", "")
@@ -1296,12 +1332,11 @@ class GreptimeSQL:
                 clash = self.catalog.meta(name)
             except (FileNotFoundError, TableNotFoundError):
                 clash = None
-            if clash is not None and clash.schema_name != getattr(
-                    self, "_current_db", "public"):
+            if clash is not None and clash.schema_name != self._current_db:
                 # same table name in a DIFFERENT schema: store under a
                 # schema-scoped key; displays strip the prefix
                 # (information_schema/tables.sql: abc.t and abcde.t coexist)
-                meta.name = f"__{getattr(self, '_current_db', 'public')}__{name}"
+                meta.name = f"__{self._current_db}__{name}"
                 name = meta.name
             self.catalog.create_table(meta, if_not_exists="IF NOT EXISTS" in text.upper())
             if phys:
@@ -1643,7 +1678,7 @@ class GreptimeSQL:
             todo = []
             for raw_name in m.group(1).split(","):
                 bare = raw_name.strip().strip('"').lower()
-                if bare in getattr(self, "_external_tables", set()):
+                if bare in self._external_tables:
                     todo.append(("ext", bare))
                     continue
                 try:
@@ -1904,7 +1939,7 @@ class GreptimeSQL:
         ``__{schema}__{name}``, information_schema/tables.sql), then exact,
         then case-insensitive (unquoted identifiers are lowercased by the
         reference's parser)."""
-        cur = getattr(self, "_current_db", "public")
+        cur = self._current_db
         if cur != "public" and not name.startswith("__"):
             try:
                 self.catalog.meta(f"__{cur}__{name}")
@@ -1984,7 +2019,7 @@ class GreptimeSQL:
 
     def _build_pg_catalog_views(self) -> None:
         ns = ["greptime_private", "information_schema", "public"] + sorted(
-            k for k in (getattr(self, "_databases", {}) or {})
+            k for k in self._databases
             if k not in ("public", "greptime"))
         self.spark.createDataFrame(
             [(self._pg_oid("ns", n), n, 10, None, None) for n in ns],
@@ -2014,7 +2049,7 @@ class GreptimeSQL:
                    "atthasdef boolean, attidentity string, "
                    "attgenerated string"
         ).createOrReplaceTempView("__pg_attribute")
-        if not getattr(self, "_pg_type_built", False):
+        if not self._pg_type_built:
             # Full static pg_type dump: PostgreSQL's public system-catalog
             # constants (the reference serves the same vendored data via
             # datafusion-postgres's PgCatalogStaticTables,
@@ -2108,7 +2143,7 @@ class GreptimeSQL:
         ).createOrReplaceTempView("__pg_attrdef")
 
     def _rewrite_pg_catalog(self, text: str) -> str:
-        cur = getattr(self, "_current_db", "public")
+        cur = self._current_db
         text = re.sub(r"(?i)\bpg_catalog\s*\.\s*(pg_\w+)", r"\1", text)
         text = re.sub(
             r"(?i)(?<![\w.])(pg_namespace|pg_class|pg_attribute|pg_type"
@@ -2393,7 +2428,7 @@ class GreptimeSQL:
                 # quoted identifiers are case-SENSITIVE: no lowercase
                 # fallback (rename_table.sql DESC TABLE "JkLmN" golden)
                 nm = raw[1:-1]
-                cur = getattr(self, "_current_db", "public")
+                cur = self._current_db
                 keys = ([f"__{cur}__{nm}"] if cur != "public" else []) + [nm]
                 for k in keys:
                     try:
@@ -2405,8 +2440,8 @@ class GreptimeSQL:
             m = self._DESC_RE.match(stmt.replace('"', ""))
             pg = _PG_CATALOG_DESC.get(m.group(1).lower())
             if pg is not None and (
-                    getattr(self, "_current_db", "public") == "pg_catalog"
-                    or getattr(self, "protocol", None) == "postgres") \
+                    self._current_db == "pg_catalog"
+                    or self.protocol == "postgres") \
                     and not self._table_exists(m.group(1)):
                 # DESC of the pg_catalog tables renders PostgreSQL's
                 # standard catalog layout (system/pg_catalog.result)
@@ -2432,7 +2467,7 @@ class GreptimeSQL:
         )
         if m:
             name = m.group(1).strip('"`')
-            if name in getattr(self, "_views", {}):
+            if name in self._views:
                 raise ValueError(f"{name} is a view, use SHOW CREATE VIEW")
             return self._show_create_table(self._resolve_table(name))
         m = re.match(
@@ -2469,21 +2504,19 @@ class GreptimeSQL:
                 "`Table` string, `Create Table` string")
         m = re.match(r"^\s*SHOW\s+CREATE\s+VIEW\s+(\w+)\s*$", stmt, re.IGNORECASE)
         if m:
-            views = getattr(self, "_views", {})
-            if m.group(1) not in views:
+            view = self._views.get(m.group(1))
+            if view is None:
                 raise ValueError(f"view {m.group(1)} does not exist")
-            body = _upper_keywords(views[m.group(1)].strip().rstrip(";"))
+            body = _upper_keywords(view.query.strip().rstrip(";"))
             # the reference re-renders through sqlparser, which spaces
             # binary operators (`n+1` → `n + 1`)
             body = map_outside_strings(
                 body,
                 lambda s: re.sub(r"(\w)\s*([+\-*/])\s*(\w)", r"\1 \2 \3", s))
-            prefix = getattr(self, "_view_prefix", {}).get(
-                m.group(1), "CREATE VIEW")
-            cols = getattr(self, "_view_cols", {}).get(m.group(1))
-            col_part = f" ({', '.join(cols)})" if cols else ""
+            col_part = f" ({', '.join(view.cols)})" if view.cols else ""
             return self.spark.createDataFrame(
-                [(m.group(1), f"{prefix} {m.group(1)}{col_part} AS {body}")],
+                [(m.group(1),
+                  f"{view.prefix} {m.group(1)}{col_part} AS {body}")],
                 "`View` string, `Create View` string",
             )
         m = re.match(
@@ -2510,10 +2543,9 @@ class GreptimeSQL:
                     raise ValueError(f"column {cname} not found in {name}")
                 self.catalog._update_meta(name, columns=cols)
                 return self._empty_ok()
-            flows = getattr(self, "_flows", {})
-            if target not in flows:
+            if target not in self._flows:
                 raise ValueError(f"flow {target} does not exist")
-            flows[target]["comment"] = comment
+            self._flows[target]["comment"] = comment
             return self._empty_ok()
         m = self._ALTER_RE.match(stmt_q)
         if m:
@@ -2569,7 +2601,7 @@ class GreptimeSQL:
         if m:
             # MySQL-compat SHOW TABLE STATUS (show_databases_tables.result;
             # runtime stats zero, times redacted by the golden REPLACE)
-            db = (m.group(1) or getattr(self, "_current_db", "public")).lower()
+            db = (m.group(1) or self._current_db).lower()
             if db == "information_schema":
                 rows_src = [(n, "") for n in _INFO_SCHEMA_TABLES]
             else:
@@ -2577,15 +2609,13 @@ class GreptimeSQL:
                 for n in self.catalog.list_tables():
                     tdb = self.catalog.meta(n).schema_name.lower()
                     if tdb == db or (db == "public"
-                                     and tdb not in getattr(
-                                         self, "_databases", {})):
+                                     and tdb not in self._databases):
                         rows_src.append(
                             (self._display_name(n),
                              self.catalog.meta(n).engine))
             if m.group(2):
-                pat = ("^" + m.group(2).replace("%", ".*")
-                       .replace("_", ".") + "$")
-                rows_src = [r for r in rows_src if re.match(pat, r[0])]
+                like = _like(m.group(2))
+                rows_src = [r for r in rows_src if like(r[0])]
             elif m.group(3):
                 rows_src = [r for r in rows_src if r[0] == m.group(3)]
             dtv = "2024-01-01T00:00:00.000"
@@ -2608,30 +2638,28 @@ class GreptimeSQL:
         m = self._SHOW_TABLES_RE.match(stmt)
         if m:
             full = bool(re.match(r"^\s*SHOW\s+FULL\s", stmt, re.IGNORECASE))
-            db = (m.group(1) or getattr(self, "_current_db", "public")).lower()
+            db = (m.group(1) or self._current_db).lower()
             if db == "information_schema":
                 # the system schema's fixed table inventory (reference
                 # show_databases_tables.result)
                 kinds = {n: "LOCAL TEMPORARY" for n in _INFO_SCHEMA_TABLES}
             else:
-                known_dbs = getattr(self, "_databases", {})
                 kinds = {}
                 for n in self.catalog.list_tables():
                     tdb = self.catalog.meta(n).schema_name.lower()
                     # tables created before their schema was registered (or
                     # under a since-dropped schema) surface in public
-                    if tdb != "public" and tdb not in known_dbs:
+                    if tdb != "public" and tdb not in self._databases:
                         tdb = "public"
                     if tdb == db:
                         kinds[self._display_name(n)] = "BASE TABLE"
                 if db == "public":
                     kinds["numbers"] = "LOCAL TEMPORARY"  # built-in table
-                    for v in getattr(self, "_views", {}):
+                    for v in self._views:
                         kinds[v] = "VIEW"
             names = sorted(kinds)
             if m.group(2):
-                pat = "^" + m.group(2).replace("%", ".*").replace("_", ".") + "$"
-                names = [n for n in names if re.match(pat, n)]
+                names = list(filter(_like(m.group(2)), names))
             elif m.group(3):
                 names = [n for n in names if n == m.group(3)]
             elif m.group(5):
@@ -2649,17 +2677,14 @@ class GreptimeSQL:
         if dbm:
             full = bool(re.match(r"^\s*SHOW\s+FULL\s", stmt, re.IGNORECASE))
             dbs = sorted({"greptime_private", "information_schema", "public"}
-                         | set(getattr(self, "_databases", {})))
+                         | set(self._databases))
             if dbm.group(1):
-                pat = ("^" + dbm.group(1).replace("%", ".*").replace("_", ".")
-                       + "$")
-                dbs = [d for d in dbs if re.match(pat, d)]
+                dbs = list(filter(_like(dbm.group(1)), dbs))
             elif dbm.group(2):
                 dbs = [d for d in dbs if d == dbm.group(2)]
             if full:
-                opts_by_db = getattr(self, "_databases", {})
                 return self.spark.createDataFrame(
-                    [(d, _render_db_options(opts_by_db.get(d) or {}))
+                    [(d, _render_db_options(self._databases.get(d) or {}))
                      for d in dbs],
                     "Database string, Options string")
             return self.spark.createDataFrame([(d,) for d in dbs], "Database string")
@@ -2681,8 +2706,8 @@ class GreptimeSQL:
                           "`Default collation` string, `Maxlen` bigint")
                 key = 0
             if like is not None:
-                pat = "^" + re.escape(like).replace("%", ".*").replace("_", ".") + "$"
-                rows = [r for r in rows if re.match(pat, r[key])]
+                keep = _like(like)
+                rows = [r for r in rows if keep(r[key])]
             if re.search(r"WHERE", stmt, re.IGNORECASE):
                 wm = re.search(r"WHERE\s+(.*)$", stmt, re.IGNORECASE | re.DOTALL)
                 df = self.spark.createDataFrame(rows, schema)
@@ -2692,7 +2717,7 @@ class GreptimeSQL:
                     return df
             return self.spark.createDataFrame(rows, schema)
         if self._SHOW_VIEWS_RE.match(stmt):
-            views = sorted(getattr(self, "_views", {}))
+            views = sorted(self._views)
             return self.spark.createDataFrame([(v,) for v in views], "Views string")
         cm = re.match(
             r"^\s*SHOW\s+(FULL\s+)?COLUMNS\s+(?:FROM|IN)\s+(`?\w+`?)"
@@ -2703,7 +2728,7 @@ class GreptimeSQL:
         if cm:
             full, tname, _db, like, where = cm.groups()
             tname = tname.strip("`")
-            if tname in getattr(self, "_views", {}):
+            if tname in self._views:
                 # the reference's SHOW COLUMNS covers tables only
                 return self.spark.createDataFrame([], "Field string")
             name = self._resolve_table(tname)
@@ -2734,8 +2759,8 @@ class GreptimeSQL:
                     }
                 rows.append(base)
             if like is not None:
-                pat = "^" + re.escape(like).replace("%", ".*").replace("_", ".") + "$"
-                rows = [r for r in rows if re.match(pat, r["Field"])]
+                keep = _like(like)
+                rows = [r for r in rows if keep(r["Field"])]
             cols = list(rows[0].keys()) if rows else ["Field"]
             df = self.spark.createDataFrame(
                 [tuple(r.values()) for r in rows] if rows else [],
@@ -2753,7 +2778,6 @@ class GreptimeSQL:
                 raise ValueError(
                     "Invalid SQL, error: syntax error Create Or Replace and "
                     "If Not Exist cannot be used together")
-            self._views = getattr(self, "_views", {})
             if self._table_exists(name):
                 raise ValueError(f"table {name} already exists")
             if name in self._views and not replace:
@@ -2771,26 +2795,17 @@ class GreptimeSQL:
                         f"Expect {len(df.columns)} columns for view {name}, "
                         f"but found {len(cols)}")
                 df = df.toDF(*cols)
-            self._views[name] = query
-            df.createOrReplaceTempView(name)
-            _session_bindings(self.spark)[name] = (self._view_key(name), df)
-            self._view_cols = getattr(self, "_view_cols", {})
-            if cols:
-                self._view_cols[name] = cols
-            else:
-                self._view_cols.pop(name, None)
-            self._view_schemas = getattr(self, "_view_schemas", {})
-            self._view_schemas[name] = getattr(self, "_current_db", "public")
-            self._view_prefix = getattr(self, "_view_prefix", {})
-            self._view_prefix[name] = (
+            self._views[name] = ViewDef(
+                query, cols, self._current_db,
                 "CREATE OR REPLACE VIEW" if replace
                 else "CREATE VIEW IF NOT EXISTS"
                 if "IF NOT EXISTS" in stmt.upper() else "CREATE VIEW")
+            df.createOrReplaceTempView(name)
+            _session_bindings(self.spark)[name] = (self._view_key(name), df)
             return self._empty_ok()
         m = self._DROP_VIEW_RE.match(stmt)
         if m:
             name = m.group(1)
-            self._views = getattr(self, "_views", {})
             if name not in self._views:
                 if "IF EXISTS" in stmt.upper():
                     return self._empty_ok()
@@ -2861,21 +2876,18 @@ class GreptimeSQL:
             return self._create_flow(*groups, stmt=stmt)
         m = self._DROP_FLOW_RE.match(stmt)
         if m:
-            flows = getattr(self, "_flows", {})
-            if m.group(1) not in flows:
+            if m.group(1) not in self._flows:
                 if "IF EXISTS" in stmt.upper():
                     return self._empty_ok()
                 raise ValueError(f"flow {m.group(1)} does not exist")
-            del flows[m.group(1)]
+            del self._flows[m.group(1)]
             return self._empty_ok()
         m = re.match(r"^\s*SHOW\s+FLOW\s+STATUS(?:\s+LIKE\s+'([^']*)')?\s*$",
                      stmt, re.IGNORECASE)
         if m:
-            flows = sorted(getattr(self, "_flows", {}))
+            flows = sorted(self._flows)
             if m.group(1) is not None:
-                pat = ("^" + re.escape(m.group(1)).replace("%", ".*")
-                       .replace("_", ".") + "$")
-                flows = [f for f in flows if re.match(pat, f)]
+                flows = list(filter(_like(m.group(1)), flows))
             return self.spark.createDataFrame(
                 [(i, f, 0, 0, None, None) for i, f in enumerate(flows)],
                 "flow_id int, flow_name string, processed_rows bigint, "
@@ -2883,18 +2895,16 @@ class GreptimeSQL:
             )
         m = self._SHOW_FLOWS_RE.match(stmt)
         if m:
-            flows = sorted(getattr(self, "_flows", {}))
+            flows = sorted(self._flows)
             if m.group(1):
-                pat = "^" + re.escape(m.group(1)).replace("%", ".*").replace("_", ".") + "$"
-                flows = [f for f in flows if re.match(pat, f)]
+                flows = list(filter(_like(m.group(1)), flows))
             return self.spark.createDataFrame([(f,) for f in flows], "Flows string")
         m = self._SHOW_CREATE_FLOW_RE.match(stmt)
         if m:
-            flows = getattr(self, "_flows", {})
-            if m.group(1) not in flows:
+            fl = self._flows.get(m.group(1))
+            if fl is None:
                 raise ValueError(f"flow {m.group(1)} does not exist")
-            definition = flows[m.group(1)]["definition"]
-            comment = flows[m.group(1)].get("comment")
+            definition, comment = fl["definition"], fl["comment"]
             if comment:
                 # COMMENT renders between SINK TO/EXPIRE and AS
                 # (reference CreateFlow Display; comment.result golden)
@@ -3010,7 +3020,6 @@ class GreptimeSQL:
                         + ", ".join(self._FLOW_OPTIONS)
                     )
                 opts.append((km.group(1), km.group(2)))
-        self._flows = getattr(self, "_flows", {})
         up = stmt.upper()
         or_replace = bool(re.search(r"\bOR\s+REPLACE\b", up))
         if_not_exists = "IF NOT EXISTS" in up
@@ -3101,7 +3110,7 @@ class GreptimeSQL:
             for g in tup if g
         }
         known = {t.lower() for t in self.catalog.list_tables()}
-        known |= {v.lower() for v in getattr(self, "_views", {})}
+        known |= {v.lower() for v in self._views}
         known |= {c.lower() for c in re.findall(
             r"\b(\w+)\s*(?:\([^)]*\))?\s+AS\s*\(", select_text,
             re.IGNORECASE)}  # CTE names, incl. column-list form cte(a,b) AS (
@@ -3365,7 +3374,8 @@ class GreptimeSQL:
         }
         import time as _time
 
-        prev = self._flows.get(name) or {}
+        now = _time.time()
+        prev = self._flows.get(name)
         self._flows[name] = {
             "sink": sink,
             "select": select_text,
@@ -3378,12 +3388,13 @@ class GreptimeSQL:
             "definition": _render_flow_def(name, sink, expire, select_text, opts),
             # OR REPLACE keeps the original created_time, bumps updated_time
             # (reference flow metadata; flow/flow_view.sql)
-            "created": prev.get("created") or _time.time(),
-            "updated": _time.time(),
-            "last_exec": prev.get("last_exec"),
+            "created": prev["created"] if prev else now,
+            "updated": now,
+            "last_exec": prev["last_exec"] if prev else None,
             "scheduled": bool(re.search(r"EVAL\s+INTERVAL", stmt or "",
                                         re.IGNORECASE)),
             "eval_every_s": self._parse_eval_interval_s(stmt or ""),
+            "comment": None,  # COMMENT ON FLOW sets it
         }
         return self._empty_ok()
 
@@ -3435,14 +3446,13 @@ class GreptimeSQL:
                 "negative")
 
     def _flush_flow(self, name: str, now_override: float | None = None) -> int:
-        flows = getattr(self, "_flows", {})
-        if name not in flows:
+        if name not in self._flows:
             raise ValueError(f"flow {name} does not exist")
-        fl = flows[name]
+        fl = self._flows[name]
         import time as _time
 
         fl["last_exec"] = _time.time()
-        sources = fl.get("sources", {})
+        sources = fl["sources"]
         # stale binding check: a source dropped or re-created under the same
         # name has a different table id — the flow sees nothing from it, so
         # the flush is a no-op and the sink keeps its state (flow_rebuild)
@@ -3455,7 +3465,7 @@ class GreptimeSQL:
                 return self.catalog.read(fl["sink"]).count()
         is_tql = bool(re.search(r"(?i)\bTQL\s+EVAL\b", fl["select"]))
         if sources and not is_tql and now_override is None and all(
-            self.catalog.meta(t).batch_no == b.get("seen", -1)
+            self.catalog.meta(t).batch_no == b["seen"]
             for t, b in sources.items()
         ):
             # nothing new since the last flush — no dirty windows, no-op
@@ -3480,7 +3490,7 @@ class GreptimeSQL:
                 ).strftime("%Y-%m-%d %H:%M:%S")
                 sel_text = re.sub(r"(?i)\b(now|current_timestamp)\s*\(\s*\)",
                                   f"timestamp '{iso}'", sel_text)
-            elif fl.get("scheduled") and not is_tql:
+            elif fl["scheduled"] and not is_tql:
                 # the engine fires scheduled evaluations at exact second
                 # boundaries, so now()/current_timestamp() inside the flow
                 # read as whole seconds (flow_scheduled_now_boundary checks
@@ -3488,7 +3498,7 @@ class GreptimeSQL:
                 sel_text = re.sub(r"(?i)\b(now|current_timestamp)\s*\(\s*\)",
                                   "date_trunc('second', now())", sel_text)
             df = self._flow_df(sel_text)
-            if fl.get("tql_value_col") and "value" in df.columns:
+            if fl["tql_value_col"] and "value" in df.columns:
                 # TQL flow: the plan's value column lands in the sink
                 # column named after the DataFusion expression
                 df = df.withColumnRenamed("value", fl["tql_value_col"])
@@ -3526,7 +3536,7 @@ class GreptimeSQL:
             self.catalog.insert(fl["sink"], df)
             for t, b in sources.items():
                 b["seen"] = self.catalog.meta(t).batch_no
-                if fl.get("flow_type") == "streaming":
+                if fl["flow_type"] == "streaming":
                     # streaming mode consumes each ingested batch exactly
                     # once (the stand-in for per-write incremental eval)
                     b["wm"] = b["seen"]
@@ -3760,7 +3770,7 @@ class GreptimeSQL:
         # aliased) names (view/view.sql `SELECT j FROM v1 WHERE j > 41`);
         # the declared precision is lost through the view — greptime's
         # default TIMESTAMP(3) milliseconds applies
-        for vn in getattr(self, "_views", {}):
+        for vn in self._views:
             if not re.search(rf"\b{re.escape(vn)}\b", text):
                 continue
             try:
@@ -4183,9 +4193,6 @@ class GreptimeSQL:
                 return m.group(0)
             safe = "gt" + re.sub(r"\W",
                                  lambda c: f"_x{ord(c.group(0)):02x}", inner)
-            if not hasattr(self, "_display_names"):
-                self._display_names = {}
-            self._display_names[safe] = inner
             return f"`{safe}`"
         return re.sub(r"`([^`]+)`", _enc, seg)
 
@@ -4214,8 +4221,7 @@ class GreptimeSQL:
         reg = _session_bindings(self.spark)
         tables = set(self.catalog.list_tables())
         lower = {t.lower(): t for t in tables}
-        views = getattr(self, "_views", {})
-        scoped = f"__{getattr(self, '_current_db', 'public')}__"
+        scoped = f"__{self._current_db}__"
         out = {}
         for tok in names:
             # the same lookup as _resolve_table: exact, case-insensitive,
@@ -4230,14 +4236,14 @@ class GreptimeSQL:
                     df.createOrReplaceTempView(name)
                     entry = reg[name] = (key, df)
                 out[name] = entry
-            if tok in views and tok not in _seen:
+            view = self._views.get(tok)
+            if view is not None and tok not in _seen:
                 key = self._view_key(tok, _seen)
                 entry = reg.get(tok)
                 if entry is None or entry[0] != key:
-                    df = self.sql(views[tok])
-                    cols = getattr(self, "_view_cols", {}).get(tok)
-                    if cols and len(cols) == len(df.columns):
-                        df = df.toDF(*cols)
+                    df = self.sql(view.query)
+                    if view.cols and len(view.cols) == len(df.columns):
+                        df = df.toDF(*view.cols)
                     df.createOrReplaceTempView(tok)
                     entry = reg[tok] = (key, df)
                 out[tok] = entry
@@ -4248,7 +4254,7 @@ class GreptimeSQL:
 
     def _view_key(self, name: str, _seen: tuple = ()) -> tuple:
         """A user view's binding key: its bound base names and their keys."""
-        base = self._bind(_idents(self._views[name]), _seen + (name,))
+        base = self._bind(_idents(self._views[name].query), _seen + (name,))
         return tuple(sorted((n, e[0]) for n, e in base.items()))
 
     def _pin(self, name: str, df: DataFrame) -> None:
@@ -4305,7 +4311,7 @@ class GreptimeSQL:
             "ssts_storage": self._info_ssts_storage,
             "ssts_index_meta": self._info_ssts_index_meta,
         }
-        in_is_db = getattr(self, "_current_db", "public") == "information_schema"
+        in_is_db = self._current_db == "information_schema"
         for key, builder in specs.items():
             pats = [rf"\bINFORMATION_SCHEMA\s*\.\s*{key}\b"]
             if in_is_db and re.match(r"^\s*SELECT\b", text, re.IGNORECASE):
@@ -4345,10 +4351,8 @@ class GreptimeSQL:
                 "metric" if _is_metric_engine(meta) else "mito",
                 meta.comment, "N",
             ))
-        schemas = getattr(self, "_view_schemas", {})
-        for v in sorted(getattr(self, "_views", {})):
-            rows.append(row(schemas.get(v, "public"), v, "VIEW", 1024,
-                            None, None, "N"))
+        for v, view in sorted(self._views.items()):
+            rows.append(row(view.schema, v, "VIEW", 1024, None, None, "N"))
         # built-in `numbers` test table (reference numbers.rs)
         rows.append(("greptime", "public", "numbers", "LOCAL TEMPORARY", 2,
                      0, 0, 0, 0, 0, "test_engine", 11, "Fixed", 0, 0, 0,
@@ -4400,12 +4404,12 @@ class GreptimeSQL:
         )
 
     def _info_views(self):
-        schemas = getattr(self, "_view_schemas", {})
         rows = [
-            ("greptime", schemas.get(v, "public"), v,
-             f"CREATE VIEW {v} AS {_upper_keywords(q.strip().rstrip(';'))}",
+            ("greptime", view.schema, v,
+             f"CREATE VIEW {v} AS "
+             f"{_upper_keywords(view.query.strip().rstrip(';'))}",
              None, None, None, None, None)
-            for v, q in sorted(getattr(self, "_views", {}).items())
+            for v, view in sorted(self._views.items())
         ]
         return self.spark.createDataFrame(
             rows,
@@ -4462,7 +4466,7 @@ class GreptimeSQL:
         """information_schema.schemata: fixed system schemas + registered
         databases (schemata.rs)."""
         names = {"public", "greptime_private", "information_schema"}
-        names |= set(getattr(self, "_databases", {}) or {})
+        names |= set(self._databases)
         rows = [("greptime", n, "utf8", "utf8_bin", None, None)
                 for n in sorted(names)]
         return self.spark.createDataFrame(
@@ -5070,17 +5074,14 @@ class GreptimeSQL:
         """information_schema.flows (reference
         src/catalog/src/system_schema/information_schema/flows.rs)."""
         rows = [
-            (n, i, 0, "greptime", fl.get("definition", ""), fl.get("comment"),
-             fl.get("expire"), "[]", fl["sink"], "{}",
-             json.dumps(
-                 dict(fl.get("opts") or [])
-                 | {"flow_type": fl.get("flow_type", "batching")},
-                 separators=(",", ":"),
-             ),
-             ",".join(f"greptime.public.{t}" for t in sorted(fl.get("sources", {}))),
-             _ts_or_none(fl.get("created")), _ts_or_none(fl.get("updated")),
-             _ts_or_none(fl.get("last_exec")), None)
-            for i, (n, fl) in enumerate(sorted(getattr(self, "_flows", {}).items()))
+            (n, i, 0, "greptime", fl["definition"], fl["comment"],
+             fl["expire"], "[]", fl["sink"], "{}",
+             json.dumps(dict(fl["opts"]) | {"flow_type": fl["flow_type"]},
+                        separators=(",", ":")),
+             ",".join(f"greptime.public.{t}" for t in sorted(fl["sources"])),
+             _ts_or_none(fl["created"]), _ts_or_none(fl["updated"]),
+             _ts_or_none(fl["last_exec"]), None)
+            for i, (n, fl) in enumerate(sorted(self._flows.items()))
         ]
         return self.spark.createDataFrame(
             rows,
@@ -5098,7 +5099,7 @@ class GreptimeSQL:
         flow_statistics; only flow_id/flow_name are deterministic)."""
         rows = [
             (i, n, 0, 0, None, None)
-            for i, n in enumerate(sorted(getattr(self, "_flows", {})))
+            for i, n in enumerate(sorted(self._flows))
         ]
         return self.spark.createDataFrame(
             rows,
@@ -5182,8 +5183,7 @@ class GreptimeSQL:
         # tables inherit database-level ttl and sst_format for display
         # (ttl/show_ttl.result; alter_database.result monitor golden — the
         # compaction.* options do NOT project into table DDL)
-        db_opts = getattr(self, "_databases", {}).get(
-            meta.schema_name) or {}
+        db_opts = self._databases.get(meta.schema_name) or {}
         for inherit_key in ("ttl", "sst_format", "append_mode",
                             "memtable.type", "merge_mode", "skip_wal"):
             if inherit_key not in opts and db_opts.get(inherit_key):
@@ -5690,9 +5690,8 @@ class GreptimeSQL:
             if re.match(r"\s*TQL\s+(ANALYZE|EXPLAIN)\b", body, re.IGNORECASE):
                 raise ValueError(
                     "TQL ANALYZE/EXPLAIN cannot be used inside a CTE")
-            n = getattr(self, "_tql_cte_n", 0)
-            self._tql_cte_n = n + 1
-            view = f"__tql_cte_{n}"
+            view = f"__tql_cte_{self._tql_cte_n}"
+            self._tql_cte_n += 1
             dfr = self.sql(body)
             # the reference emits (ts, value, tags…) for function-applied
             # vectors — the CTE alias list maps positionally, and
@@ -5715,8 +5714,6 @@ class GreptimeSQL:
     # front like the reference (Unable to convert … to datatype …).
 
     def _prepare_stmt(self, name: str, body: str) -> DataFrame:
-        if not hasattr(self, "_prepared"):
-            self._prepared = {}
         self._prepared[name] = body.strip().rstrip(";").strip()
         return self._empty_ok()
 
@@ -5762,11 +5759,10 @@ class GreptimeSQL:
         return out
 
     def _execute_stmt(self, name: str, using: str | None) -> DataFrame:
-        prepared = getattr(self, "_prepared", {})
-        if name not in prepared:
+        if name not in self._prepared:
             raise ValueError(f"Prepared statement not found: {name}")
         args = [a.strip() for a in split_top(using)] if using else []
-        return self.sql(self._bind_placeholders(prepared[name], args))
+        return self.sql(self._bind_placeholders(self._prepared[name], args))
 
     @staticmethod
     def _canon_cursor_name(name: str) -> str:
@@ -5783,14 +5779,13 @@ class GreptimeSQL:
         RecordBatchStreamCursor (rows stream to the driver partition-by-
         partition as FETCHes consume them, never all at once)."""
         name = self._canon_cursor_name(name)
-        cursors = self._cursors = getattr(self, "_cursors", {})
-        if name in cursors:
+        if name in self._cursors:
             # wire text per operator/src/error.rs:828
             raise ValueError(f"A cursor named {name} already exists")
         if not re.match(r"(?is)\s*(SELECT|WITH)\b", query):
             raise ValueError("Expect select query in cursor statement")
         df = self.sql(query)
-        cursors[name] = (df.schema, df.toLocalIterator())
+        self._cursors[name] = (df.schema, df.toLocalIterator())
         return self._empty_ok()
 
     def _fetch_cursor(self, name: str, n: int):
@@ -5801,7 +5796,7 @@ class GreptimeSQL:
         import itertools
 
         name = self._canon_cursor_name(name)
-        cur = getattr(self, "_cursors", {}).get(name)
+        cur = self._cursors.get(name)
         if cur is None:
             raise ValueError(f"Cursor {name} is not found")
         schema, it = cur
@@ -5888,7 +5883,7 @@ class GreptimeSQL:
 
     def sql(self, text: str, time_index: str = "ts") -> DataFrame:
         text = strip_comments(text)
-        cur_db = getattr(self, "_current_db", "public")
+        cur_db = self._current_db
         if cur_db in ("information_schema", "pg_catalog") and re.match(
                 r"(?is)\s*(CREATE\s+TABLE|DROP\s+TABLE|ALTER\s+TABLE"
                 r"|TRUNCATE|INSERT\s+INTO|DELETE\s+FROM)\b", text):
@@ -5908,7 +5903,7 @@ class GreptimeSQL:
         dm = re.match(r"(?is)\s*DEALLOCATE\s+(?:PREPARE\s+)?(\w+)\s*;?\s*$",
                       text)
         if dm:
-            getattr(self, "_prepared", {}).pop(dm.group(1), None)
+            self._prepared.pop(dm.group(1), None)
             return self._empty_ok()
         # Postgres cursor statements (reference statement.rs:155-159,
         # parser cursor_parser.rs, executor operator/statement/cursor.rs):
@@ -5926,8 +5921,7 @@ class GreptimeSQL:
             return self._fetch_cursor(fcm.group(2), int(fcm.group(1)))
         ccm = re.match(r"(?is)\s*CLOSE\s+([\w.\"]+)\s*;?\s*$", text)
         if ccm:
-            getattr(self, "_cursors", {}).pop(
-                self._canon_cursor_name(ccm.group(1)), None)
+            self._cursors.pop(self._canon_cursor_name(ccm.group(1)), None)
             return self._empty_ok()
         km = re.match(r"(?is)\s*KILL\s+(?:QUERY\s+)?'?([\w-]+)'?\s*;?\s*$",
                       text)
@@ -5948,8 +5942,7 @@ class GreptimeSQL:
         if sp:
             if sp.group(1).upper() == "SHOW":
                 return self.spark.createDataFrame(
-                    [(getattr(self, "_current_db", "public"),)],
-                    "search_path string")
+                    [(self._current_db,)], "search_path string")
             if sp.group(2):
                 self._current_db = sp.group(2).lower()
                 # unlike USE, a search_path selection does not pin the
@@ -5967,7 +5960,7 @@ class GreptimeSQL:
         if pgm and not re.match(r"(?i)\s*DESC(RIBE)?\b", text):
             # (DESC of the catalog tables renders their static layout in the
             # DESC handler — don't rewrite the name away from it)
-            if getattr(self, "protocol", None) == "postgres":
+            if self.protocol == "postgres":
                 # psql's connection-handshake probe gets the reference's
                 # exact DataFusion column names and postgres array rendering
                 # (pg_catalog.result golden — the table is REPLACE-munged, so
@@ -5978,7 +5971,7 @@ class GreptimeSQL:
                         r"current_schemas\(\s*false\s*\)\s*,\s*"
                         r"version\(\s*\)\s*,\s*current_database\(\s*\)\s*;?\s*",
                         text):
-                    cur = getattr(self, "_current_db", "public")
+                    cur = self._current_db
                     return self.spark.createDataFrame(
                         [(cur,
                           "{public,information_schema,pg_catalog,"
@@ -6079,7 +6072,7 @@ class GreptimeSQL:
                     "version_comment": "GreptimeDB",
                     "autocommit": "1", "session.auto_increment_increment": "1"}
             short = var.split(".")[-1]
-            stored = getattr(self, "_session_vars", {})
+            stored = self._session_vars
             if short == "max_execution_time":
                 val = stored.get(short, "0")
             else:
@@ -6101,8 +6094,6 @@ class GreptimeSQL:
             if int(expr) > 0xFFFFFFFFFFFFFFFF:
                 raise ValueError(f"Not supported: Invalid timeout expr "
                                  f"{expr} in set variable statement")
-            if not hasattr(self, "_session_vars"):
-                self._session_vars = {}
             self._session_vars["max_execution_time"] = expr
             self._warnings = []
             return self.spark.createDataFrame([], "result string")
@@ -6120,7 +6111,7 @@ class GreptimeSQL:
         if re.match(r"^\s*SELECT\s+read_preference\s*\(\s*\)\s*;?\s*$", text,
                     re.IGNORECASE):
             return self.spark.createDataFrame(
-                [(getattr(self, "_read_pref", "LEADER"),)],
+                [(self._read_pref,)],
                 "`read_preference()` string")
         m = re.match(r"^\s*SHOW\s+(FULL\s+)?PROCESSLIST\s*;?\s*$", text,
                      re.IGNORECASE)
@@ -6201,7 +6192,6 @@ class GreptimeSQL:
                 tz = f"{om.group(1)}{int(om.group(2)):02d}:{om.group(3)}"
             elif tz.upper() in ("", "SYSTEM"):
                 tz = "UTC"
-            self._session_tz = tz
             raw = m.group(1).strip()
             om2 = re.fullmatch(r"([+-])(\d{1,2}):(\d{2})", raw)
             self._tz_display = (f"{om2.group(1)}{int(om2.group(2)):02d}:{om2.group(3)}"
@@ -6223,7 +6213,7 @@ class GreptimeSQL:
                 ("Warning", 1000, f"Unsupported set variable {var}")]
             return self.spark.createDataFrame([], "result string")
         if re.match(r"^\s*SHOW\s+WARNINGS\s*;?\s*$", text, re.IGNORECASE):
-            rows = getattr(self, "_warnings", [])
+            rows = self._warnings
             return self.spark.createDataFrame(
                 rows, "Level string, Code int, Message string")
         self._warnings = []
@@ -6232,7 +6222,7 @@ class GreptimeSQL:
             var = m.group(1).lower()
             if var == "time_zone":
                 return self.spark.createDataFrame(
-                    [(getattr(self, "_tz_display", "UTC"),)], "`TIME_ZONE` string")
+                    [(self._tz_display,)], "`TIME_ZONE` string")
             if var == "system_time_zone":
                 return self.spark.createDataFrame(
                     [("UTC",)], "`SYSTEM_TIME_ZONE` string")
@@ -6249,7 +6239,7 @@ class GreptimeSQL:
                 [(1,)], f"`{m.group(1).lower()}()` bigint")
         if re.match(r"^\s*select\s+timezone\(\s*\)\s*;?\s*$", text, re.IGNORECASE):
             return self.spark.createDataFrame(
-                [(getattr(self, "_tz_display", "UTC"),)], "`timezone()` string")
+                [(self._tz_display,)], "`timezone()` string")
         if re.match(r"^\s*select\s+build\(\s*\)\s*;?\s*$", text, re.IGNORECASE):
             # one row per build attribute, the reference's rendering
             # (function/system.sql — the golden is REPLACE-redacted, so
@@ -6263,7 +6253,7 @@ class GreptimeSQL:
                 [("0.1.0",)], "`version()` string")
         if re.match(r"^\s*select\s+database\(\s*\)\s*;?\s*$", text, re.IGNORECASE):
             return self.spark.createDataFrame(
-                [(getattr(self, "_current_db", "public"),)], "`database()` string")
+                [(self._current_db,)], "`database()` string")
         # multi-database surface flattened onto the single default schema:
         # CREATE DATABASE registers a name; `db.tbl` / `db."tbl"` references
         # lose the prefix (the physical layout is one catalog directory)
@@ -6277,7 +6267,7 @@ class GreptimeSQL:
             dbname = (dbname[1:-1] if dbname[0] in "'\"" else dbname).lower()
             if not re.fullmatch(r"[\w\-]+", dbname):
                 raise ValueError(f"Invalid database name: {dbname}")
-            dbs = self._databases = dict(getattr(self, "_databases", {}))
+            dbs = self._databases = dict(self._databases)
             if m.group(1).upper() == "CREATE":
                 # built-in schemas always exist (catalog.rs pre-creates them;
                 # pg_catalog.sql / information_schema.sql error goldens)
@@ -6297,8 +6287,8 @@ class GreptimeSQL:
                 if dbname in ("information_schema", "pg_catalog",
                               "greptime_private"):
                     raise ValueError(f"Schema `{dbname}` is read-only")
-                if dbname == getattr(self, "_current_db", "public") and \
-                        not getattr(self, "_via_search_path", False):
+                if dbname == self._current_db and \
+                        not self._via_search_path:
                     raise ValueError(f"Schema `{dbname}` is in use")
                 dbs.pop(dbname, None)
                 if self.catalog is not None:
@@ -6319,7 +6309,7 @@ class GreptimeSQL:
             text, re.IGNORECASE,
         )
         if m:
-            dbs = self._databases = dict(getattr(self, "_databases", {}))
+            dbs = self._databases = dict(self._databases)
             name, action, key, val = (m.group(1).lower(), m.group(2).upper(),
                                       m.group(3), m.group(4))
             if name not in dbs:
@@ -6367,7 +6357,7 @@ class GreptimeSQL:
         m = re.match(r"\s*SHOW\s+CREATE\s+DATABASE\s+(\w+)\s*;?\s*$",
                      text, re.IGNORECASE)
         if m:
-            dbs = getattr(self, "_databases", {})
+            dbs = self._databases
             name = m.group(1).lower()
             if name not in dbs and name != "public":
                 raise ValueError(f"database {name} does not exist")
@@ -6384,7 +6374,7 @@ class GreptimeSQL:
             self._current_db = um.group(1).lower()
             self._via_search_path = False
             return self._empty_ok()
-        for d in set(getattr(self, "_databases", set())) | {"public", "greptime"}:
+        for d in set(self._databases) | {"public", "greptime"}:
             # bare, double-quoted, or backticked schema prefixes all drop
             # (keywords_expressions: `"SCHEMA"."TABLE"`)
             text = map_outside_strings(
@@ -6425,17 +6415,17 @@ class GreptimeSQL:
         ddl = self._ddl(text)
         if ddl is not None:
             return ddl
-        for fname, fl in list(getattr(self, "_flows", {}).items()):
+        for fname, fl in list(self._flows.items()):
             # EVAL INTERVAL flows run on the engine's own schedule; reading
             # the sink observes the post-interval state — evaluate lazily at
             # read time (flow_scheduled_* cases)
-            if fl.get("scheduled") and fl.get("sink") and re.search(
+            if fl["scheduled"] and re.search(
                     rf"\b{re.escape(fl['sink'])}\b", text):
                 try:
                     import time as _time
 
-                    every = fl.get("eval_every_s")
-                    base = fl.get("last_exec") or fl.get("created") or 0
+                    every = fl["eval_every_s"]
+                    base = fl["last_exec"] or fl["created"]
                     ticks = (int((_time.time() - base) // every)
                              if every else 0)
                     if 1 <= ticks <= 64:
@@ -6507,7 +6497,7 @@ class GreptimeSQL:
             # ({__name__="t"} names t)
             bound = self._bind(set(re.findall(r"\w+", promql)))
             for t, (_key, df) in bound.items():
-                if t in tables or t in getattr(self, "_views", {}):
+                if t in tables or t in self._views:
                     continue
                 meta = self.catalog.meta(t)
                 fields = [
@@ -6755,7 +6745,7 @@ class GreptimeSQL:
         def _materialize(body: str) -> str:
             # an internal name: a CTE name or subquery alias used as the
             # view name would shadow the catalog table bound under it
-            self._subq_no = getattr(self, "_subq_no", 0) + 1
+            self._subq_no += 1
             temps.append(f"__range_sub_{self._subq_no}")
             self.sql(body).createOrReplaceTempView(temps[-1])
             return temps[-1]
@@ -6836,7 +6826,7 @@ class GreptimeSQL:
                     pass
             return range_sql(
                 self.spark, text, time_index=time_index, default_by=default_by,
-                tz_offset_ms=getattr(self, "tz_offset_ms", 0),
+                tz_offset_ms=self.tz_offset_ms,
             )
         self._reject_reference_plan_errors(text)
         try:

@@ -248,5 +248,9 @@ def test_sql_http_dispatch(spark, tmp_path):
         g.sql_http("SELECT host FROM fmt_t", "arrow")).read_all()
     assert tbl.column("host").to_pylist() == ["h1"]
     assert g.sql_http("SELECT 1 AS one", "null") == ""
+    # rows Python cannot hold (past year 9999) still execute: the null
+    # format never pickles a row into a Python worker
+    assert g.sql_http("SELECT TIMESTAMP '9999-12-31 23:59:59' "
+                      "+ INTERVAL '1' DAY AS t", "null") == ""
     with pytest.raises(ValueError):
         g.sql_http("SELECT 1", "xml")

@@ -209,3 +209,37 @@ def test_only_the_binder_registers_catalog_reads():
                             isinstance(recv, ast.Name) and recv.id in from_catalog):
                         offenders.append(f"{path.name}:{n.lineno} in {fn.name}")
     assert offenders == [], offenders
+
+
+DECLARED_STATE = ("sql.py", "promql/engine.py")
+
+
+def test_instance_state_is_declared_in_init():
+    """Every attribute of the front door and the PromQL engine is declared
+    with its default in ``__init__`` and read directly: no
+    ``getattr(self, "x", default)`` / ``hasattr(self, "x")`` fallback and no
+    attribute first created by some later method."""
+    offenders = []
+    for rel in DECLARED_STATE:
+        path = PKG / rel
+        tree = ast.parse(path.read_text())
+        for n in ast.walk(tree):
+            if isinstance(n, ast.Call) and isinstance(n.func, ast.Name) \
+                    and n.func.id in ("getattr", "hasattr", "setattr") \
+                    and len(n.args) >= 2 \
+                    and isinstance(n.args[0], ast.Name) \
+                    and n.args[0].id == "self" \
+                    and isinstance(n.args[1], ast.Constant):
+                offenders.append(f"{rel}:{n.lineno} {ast.unparse(n)}")
+        for cls in (c for c in ast.walk(tree) if isinstance(c, ast.ClassDef)):
+            stores = [
+                (fn.name, a) for fn in cls.body
+                if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+                for a in ast.walk(fn)
+                if isinstance(a, ast.Attribute) and isinstance(a.ctx, ast.Store)
+                and isinstance(a.value, ast.Name) and a.value.id == "self"]
+            declared = {a.attr for fn, a in stores if fn == "__init__"}
+            offenders += [
+                f"{rel}:{a.lineno} {cls.name}.{fn} creates self.{a.attr}"
+                for fn, a in stores if a.attr not in declared]
+    assert offenders == [], "\n".join(offenders)
