@@ -209,9 +209,10 @@ class Catalog:
     def __init__(self, spark: SparkSession, base_path: str):
         self.spark = spark
         self.base_path = base_path
-        # database-level WITH(...) options (kept in sync by GreptimeSQL's
-        # CREATE/ALTER DATABASE handlers): tables without their own ttl
-        # inherit the database ttl at expiry time (options.rs:85)
+        # database → its WITH(...) options: the one database list, shared
+        # by every connection on this catalog (connection.Connection
+        # changes it in place); tables without their own ttl inherit the
+        # database ttl at expiry time (options.rs:85)
         self.db_options: dict[str, dict] = {}
         os.makedirs(base_path, exist_ok=True)
 

@@ -22,6 +22,7 @@ Supported statements:
 from __future__ import annotations
 
 import dataclasses
+import datetime
 import json
 import os
 import re
@@ -31,6 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from greptimedb_spark.catalog import ColumnDef, TableMeta, TableNotFoundError
+from greptimedb_spark.connection import (Connection, empty_ok,
+                                         unbound_placeholder)
 from greptimedb_spark.datatypes import (
     JSON2_HINTS, PG_NAMES, PRECISIONS, arrow_name, cast_trunc, desc_name,
     pg_oid, precision, sink_spelling, spark_type, sql_name, timestamp_rule,
@@ -969,29 +972,15 @@ class GreptimeSQL:
         self.promql_tables = promql_tables or {}
         self.lookback_ms = lookback_ms
         self.catalog = catalog
-        # the connection's state (the reference keeps it in a QueryContext),
-        # each field declared here with its default
         self.protocol: str | None = None  # "postgres" exposes pg_catalog
-        self._current_db = "public"
-        self._via_search_path = False  # chosen by SET search_path, not USE
-        self._databases: dict[str, dict] = {}  # CREATE DATABASE → options
+        # schema, time zone, variables, cursors, databases: connection.py
+        self.conn = Connection(spark, catalog, self.sql, self._unbind)
         self._views: dict[str, ViewDef] = {}
         self._flows: dict[str, dict] = {}  # built whole by _create_flow
-        self._cursors: dict[str, tuple] = {}  # name → (schema, row iterator)
-        self._prepared: dict[str, str] = {}  # PREPARE name → statement
-        self._session_vars: dict[str, str] = {}
-        self._warnings: list[tuple] = []  # queued by an unsupported SET
         self._external_tables: set[str] = set()
-        self._tz_display = "UTC"  # as SELECT timezone() shows it
-        self.tz_offset_ms = 0  # RANGE's default ALIGN TO origin
-        self._read_pref = "LEADER"
         self._subq_no = 0  # numbers materialized RANGE parts
         self._tql_cte_n = 0  # numbers TQL CTE views
         self._pg_type_built = False
-        # session timezone is per-GreptimeSQL state; reset the shared Spark
-        # session to UTC so a prior session's SET TIME_ZONE can't leak
-        if spark.conf.get("spark.sql.session.timeZone", "UTC") != "UTC":
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
         register_all(spark)
 
     # -- DDL/DML ----------------------------------------------------------
@@ -1062,7 +1051,7 @@ class GreptimeSQL:
             sources.external_table(
                 self.spark, loc, opts.get("format", "parquet"), name=name)
             self._external_tables.add(name)
-            return self._empty_ok()
+            return empty_ok(self.spark)
         # CREATE TABLE x LIKE y: clone the source table's declared schema and
         # options, no data (reference create.sql test_like_2; CreateTableLike)
         lm = re.match(
@@ -1079,7 +1068,7 @@ class GreptimeSQL:
                 src_meta, name=lm.group(2).lower(), table_id="", batch_no=0,
                 flush_batches=[], skip_wal_since=None)
             self.catalog.create_table(new_meta, if_not_exists=bool(lm.group(1)))
-            return self.spark.createDataFrame([], "result string")
+            return empty_ok(self.spark)
         # CREATE parsed by paren-depth (trailing ENGINE=/WITH() clauses make
         # a single greedy regex mis-capture the column list)
         cm0 = re.match(
@@ -1284,7 +1273,7 @@ class GreptimeSQL:
             # the table doesn't set them (create_database_opts.result); ttl
             # inheritance stays dynamic (catalog.db_options) so ALTER
             # DATABASE ttl affects existing tables
-            _dbo = self._databases.get(self._current_db) or {}
+            _dbo = self.conn.databases.get(self.conn.current_db) or {}
             j2col = next((c.name for c in cols if c.decl == "json2"), None)
             if j2col is not None and opts.get(
                     "append_mode",
@@ -1322,7 +1311,7 @@ class GreptimeSQL:
                 comment=opts.get("comment") or None,
                 partition_sql=partition_sql,
                 with_opts=opts or None,
-                schema_name=self._current_db,
+                schema_name=self.conn.current_db,
                 on_physical=phys or None,
                 engine="metric" if is_metric else "mito",
                 skip_wal_since=0 if str(opts.get("skip_wal", "")
@@ -1332,11 +1321,11 @@ class GreptimeSQL:
                 clash = self.catalog.meta(name)
             except (FileNotFoundError, TableNotFoundError):
                 clash = None
-            if clash is not None and clash.schema_name != self._current_db:
+            if clash is not None and clash.schema_name != self.conn.current_db:
                 # same table name in a DIFFERENT schema: store under a
                 # schema-scoped key; displays strip the prefix
                 # (information_schema/tables.sql: abc.t and abcde.t coexist)
-                meta.name = f"__{self._current_db}__{name}"
+                meta.name = f"__{self.conn.current_db}__{name}"
                 name = meta.name
             self.catalog.create_table(meta, if_not_exists="IF NOT EXISTS" in text.upper())
             if phys:
@@ -1383,7 +1372,7 @@ class GreptimeSQL:
                     if grew:
                         self.catalog._update_meta(
                             phys, columns=newcols, tags=new_tags)
-            return self.spark.createDataFrame([], "result string")
+            return empty_ok(self.spark)
         m = self._INSERT_RE.match(text.strip().rstrip(";"))
         if m:
             name, col_list, values_text = m.groups()
@@ -1629,7 +1618,7 @@ class GreptimeSQL:
                             "Invalid request to region, reason: column "
                             f"{c} is not null but input has null")
             self.catalog.insert(name, df)
-            return self.spark.createDataFrame([], "result string")
+            return empty_ok(self.spark)
         m = self._INSERT_SELECT_RE.match(text.strip().rstrip(";"))
         if m:
             name, col_list, select_text = m.groups()
@@ -1668,7 +1657,7 @@ class GreptimeSQL:
                         entry.spark_type).alias(entry.name))
             picked = src.select(*sel)
             self.catalog.insert(name, _with_defaults(picked, cols, full_cols))
-            return self.spark.createDataFrame([], "result string")
+            return empty_ok(self.spark)
         m = self._DROP_RE.match(text.strip().rstrip(";"))
         if m:
             if_exists = re.search(r"\bIF\s+EXISTS\b", text, re.IGNORECASE)
@@ -1695,7 +1684,7 @@ class GreptimeSQL:
                 else:
                     self.catalog.drop_table(name)
                     self._unbind(name)
-            return self.spark.createDataFrame([], "result string")
+            return empty_ok(self.spark)
         m = self._DELETE_RE.match(text.strip().rstrip(";"))
         if m:
             name, pred = m.groups()
@@ -1715,7 +1704,7 @@ class GreptimeSQL:
                     c=meta.time_index)
                 pred2 = re.sub(rf"\b{meta.time_index}\b", f"({conv})", pred)
                 self.catalog.delete(name, pred2)
-            return self.spark.createDataFrame([], "result string")
+            return empty_ok(self.spark)
         out = self._ddl_extended(text, text_q)
         if out is not None:
             return out
@@ -1939,7 +1928,7 @@ class GreptimeSQL:
         ``__{schema}__{name}``, information_schema/tables.sql), then exact,
         then case-insensitive (unquoted identifiers are lowercased by the
         reference's parser)."""
-        cur = self._current_db
+        cur = self.conn.current_db
         if cur != "public" and not name.startswith("__"):
             try:
                 self.catalog.meta(f"__{cur}__{name}")
@@ -1992,9 +1981,6 @@ class GreptimeSQL:
         return timestamp_rule(next((c.decl for c in self._col_entries(name)
                                     if c.name == col), None))
 
-    def _empty_ok(self):
-        return self.spark.createDataFrame([], "result string")
-
     # -- pg_catalog emulation (system/pg_catalog.sql) ------------------------
     # The reference exposes pg_class/pg_namespace/pg_attribute/pg_type/
     # pg_database to POSTGRES-protocol sessions only
@@ -2019,7 +2005,7 @@ class GreptimeSQL:
 
     def _build_pg_catalog_views(self) -> None:
         ns = ["greptime_private", "information_schema", "public"] + sorted(
-            k for k in self._databases
+            k for k in self.conn.databases
             if k not in ("public", "greptime"))
         self.spark.createDataFrame(
             [(self._pg_oid("ns", n), n, 10, None, None) for n in ns],
@@ -2143,7 +2129,7 @@ class GreptimeSQL:
         ).createOrReplaceTempView("__pg_attrdef")
 
     def _rewrite_pg_catalog(self, text: str) -> str:
-        cur = self._current_db
+        cur = self.conn.current_db
         text = re.sub(r"(?i)\bpg_catalog\s*\.\s*(pg_\w+)", r"\1", text)
         text = re.sub(
             r"(?i)(?<![\w.])(pg_namespace|pg_class|pg_attribute|pg_type"
@@ -2417,7 +2403,7 @@ class GreptimeSQL:
                     self.catalog.delete(name, cond)
             else:
                 self.catalog.delete(name, "true")
-            return self._empty_ok()
+            return empty_ok(self.spark)
         m = self._DESC_RE.match(stmt)
         if m:
             # the generic preprocessor strips double quotes from `text`;
@@ -2428,7 +2414,7 @@ class GreptimeSQL:
                 # quoted identifiers are case-SENSITIVE: no lowercase
                 # fallback (rename_table.sql DESC TABLE "JkLmN" golden)
                 nm = raw[1:-1]
-                cur = self._current_db
+                cur = self.conn.current_db
                 keys = ([f"__{cur}__{nm}"] if cur != "public" else []) + [nm]
                 for k in keys:
                     try:
@@ -2440,7 +2426,7 @@ class GreptimeSQL:
             m = self._DESC_RE.match(stmt.replace('"', ""))
             pg = _PG_CATALOG_DESC.get(m.group(1).lower())
             if pg is not None and (
-                    self._current_db == "pg_catalog"
+                    self.conn.current_db == "pg_catalog"
                     or self.protocol == "postgres") \
                     and not self._table_exists(m.group(1)):
                 # DESC of the pg_catalog tables renders PostgreSQL's
@@ -2530,7 +2516,7 @@ class GreptimeSQL:
             if kind == "TABLE":
                 name = self._resolve_table(target)
                 self.catalog._update_meta(name, comment=comment)
-                return self._empty_ok()
+                return empty_ok(self.spark)
             if kind == "COLUMN":
                 tname, _, cname = target.rpartition(".")
                 name = self._resolve_table(tname)
@@ -2542,11 +2528,11 @@ class GreptimeSQL:
                 else:
                     raise ValueError(f"column {cname} not found in {name}")
                 self.catalog._update_meta(name, columns=cols)
-                return self._empty_ok()
+                return empty_ok(self.spark)
             if target not in self._flows:
                 raise ValueError(f"flow {target} does not exist")
             self._flows[target]["comment"] = comment
-            return self._empty_ok()
+            return empty_ok(self.spark)
         m = self._ALTER_RE.match(stmt_q)
         if m:
             return self._alter(
@@ -2601,7 +2587,7 @@ class GreptimeSQL:
         if m:
             # MySQL-compat SHOW TABLE STATUS (show_databases_tables.result;
             # runtime stats zero, times redacted by the golden REPLACE)
-            db = (m.group(1) or self._current_db).lower()
+            db = (m.group(1) or self.conn.current_db).lower()
             if db == "information_schema":
                 rows_src = [(n, "") for n in _INFO_SCHEMA_TABLES]
             else:
@@ -2609,7 +2595,7 @@ class GreptimeSQL:
                 for n in self.catalog.list_tables():
                     tdb = self.catalog.meta(n).schema_name.lower()
                     if tdb == db or (db == "public"
-                                     and tdb not in self._databases):
+                                     and tdb not in self.conn.databases):
                         rows_src.append(
                             (self._display_name(n),
                              self.catalog.meta(n).engine))
@@ -2638,7 +2624,7 @@ class GreptimeSQL:
         m = self._SHOW_TABLES_RE.match(stmt)
         if m:
             full = bool(re.match(r"^\s*SHOW\s+FULL\s", stmt, re.IGNORECASE))
-            db = (m.group(1) or self._current_db).lower()
+            db = (m.group(1) or self.conn.current_db).lower()
             if db == "information_schema":
                 # the system schema's fixed table inventory (reference
                 # show_databases_tables.result)
@@ -2649,7 +2635,7 @@ class GreptimeSQL:
                     tdb = self.catalog.meta(n).schema_name.lower()
                     # tables created before their schema was registered (or
                     # under a since-dropped schema) surface in public
-                    if tdb != "public" and tdb not in self._databases:
+                    if tdb != "public" and tdb not in self.conn.databases:
                         tdb = "public"
                     if tdb == db:
                         kinds[self._display_name(n)] = "BASE TABLE"
@@ -2677,14 +2663,14 @@ class GreptimeSQL:
         if dbm:
             full = bool(re.match(r"^\s*SHOW\s+FULL\s", stmt, re.IGNORECASE))
             dbs = sorted({"greptime_private", "information_schema", "public"}
-                         | set(self._databases))
+                         | set(self.conn.databases))
             if dbm.group(1):
                 dbs = list(filter(_like(dbm.group(1)), dbs))
             elif dbm.group(2):
                 dbs = [d for d in dbs if d == dbm.group(2)]
             if full:
                 return self.spark.createDataFrame(
-                    [(d, _render_db_options(self._databases.get(d) or {}))
+                    [(d, _render_db_options(self.conn.databases.get(d) or {}))
                      for d in dbs],
                     "Database string, Options string")
             return self.spark.createDataFrame([(d,) for d in dbs], "Database string")
@@ -2782,7 +2768,7 @@ class GreptimeSQL:
                 raise ValueError(f"table {name} already exists")
             if name in self._views and not replace:
                 if "IF NOT EXISTS" in stmt.upper():
-                    return self._empty_ok()  # keep the existing definition
+                    return empty_ok(self.spark)  # keep the existing definition
                 raise ValueError(f"view {name} already exists")
             df = self.sql(query)
             cols = [c.strip().strip('"`') for c in col_list.split(",")] \
@@ -2796,23 +2782,23 @@ class GreptimeSQL:
                         f"but found {len(cols)}")
                 df = df.toDF(*cols)
             self._views[name] = ViewDef(
-                query, cols, self._current_db,
+                query, cols, self.conn.current_db,
                 "CREATE OR REPLACE VIEW" if replace
                 else "CREATE VIEW IF NOT EXISTS"
                 if "IF NOT EXISTS" in stmt.upper() else "CREATE VIEW")
             df.createOrReplaceTempView(name)
             _session_bindings(self.spark)[name] = (self._view_key(name), df)
-            return self._empty_ok()
+            return empty_ok(self.spark)
         m = self._DROP_VIEW_RE.match(stmt)
         if m:
             name = m.group(1)
             if name not in self._views:
                 if "IF EXISTS" in stmt.upper():
-                    return self._empty_ok()
+                    return empty_ok(self.spark)
                 raise ValueError(f"view {name} does not exist")
             del self._views[name]
             self._unbind(name)
-            return self._empty_ok()
+            return empty_ok(self.spark)
         sm = re.match(
             r"^\s*SELECT\s+((?:FLUSH|COMPACT)_TABLE|FLUSH_FLOW|BUILD_INDEX)"
             r"\s*\((.*)\)\s*;?\s*$", stmt, re.IGNORECASE | re.DOTALL)
@@ -2878,10 +2864,10 @@ class GreptimeSQL:
         if m:
             if m.group(1) not in self._flows:
                 if "IF EXISTS" in stmt.upper():
-                    return self._empty_ok()
+                    return empty_ok(self.spark)
                 raise ValueError(f"flow {m.group(1)} does not exist")
             del self._flows[m.group(1)]
-            return self._empty_ok()
+            return empty_ok(self.spark)
         m = re.match(r"^\s*SHOW\s+FLOW\s+STATUS(?:\s+LIKE\s+'([^']*)')?\s*$",
                      stmt, re.IGNORECASE)
         if m:
@@ -3029,7 +3015,7 @@ class GreptimeSQL:
             )
         if name in self._flows:
             if if_not_exists:
-                return self._empty_ok()
+                return empty_ok(self.spark)
             if not or_replace:
                 raise ValueError(f"Flow already exists: greptime.{name}")
         # the sink must not be one of the flow body's source tables —
@@ -3396,7 +3382,7 @@ class GreptimeSQL:
             "eval_every_s": self._parse_eval_interval_s(stmt or ""),
             "comment": None,  # COMMENT ON FLOW sets it
         }
-        return self._empty_ok()
+        return empty_ok(self.spark)
 
     @staticmethod
     def _parse_eval_interval_s(stmt: str) -> float | None:
@@ -3677,7 +3663,7 @@ class GreptimeSQL:
 
         if query is not None:
             write_one(self.sql(query), path)
-            return self._empty_ok()
+            return empty_ok(self.spark)
         if is_db:
             if direction.upper() == "TO":
                 for t in self.catalog.list_tables():
@@ -3692,7 +3678,7 @@ class GreptimeSQL:
                     except (FileNotFoundError, TableNotFoundError):
                         continue
                     read_into(t, f)
-            return self._empty_ok()
+            return empty_ok(self.spark)
 
         name = self._resolve_table(target)
         if direction.upper() == "TO":
@@ -3701,7 +3687,7 @@ class GreptimeSQL:
             # declared column order (reads come back ordered)
             df = df.select(*[c.name for c in self._col_entries(name)])
             write_one(df, path)
-            return self._empty_ok()
+            return empty_ok(self.spark)
         if _os.path.isdir(path) or path.endswith("/"):
             files = sorted(_glob.glob(_os.path.join(path, "*")))
             pat = opts.get("pattern")
@@ -3712,9 +3698,9 @@ class GreptimeSQL:
         else:
             files = [path]
         if not files:
-            return self._empty_ok()
+            return empty_ok(self.spark)
         read_into(name, files)
-        return self._empty_ok()
+        return empty_ok(self.spark)
 
     def _table_exists(self, name: str) -> bool:
         try:
@@ -4221,7 +4207,7 @@ class GreptimeSQL:
         reg = _session_bindings(self.spark)
         tables = set(self.catalog.list_tables())
         lower = {t.lower(): t for t in tables}
-        scoped = f"__{self._current_db}__"
+        scoped = f"__{self.conn.current_db}__"
         out = {}
         for tok in names:
             # the same lookup as _resolve_table: exact, case-insensitive,
@@ -4291,27 +4277,19 @@ class GreptimeSQL:
             "flow_statistics": self._info_flow_statistics,
             "key_column_usage": self._info_key_column_usage,
             "schemata": self._info_schemata,
-            "engines": self._info_engines,
-            "build_info": self._info_build_info,
-            "character_sets": self._info_character_sets,
-            "collations": self._info_collations,
-            "collation_character_set_applicability":
-                self._info_collation_charset_applicability,
-            "column_privileges": self._info_column_privileges,
-            "column_statistics": self._info_column_statistics,
-            "check_constraints": self._info_check_constraints,
             "partitions": self._info_partitions,
             "region_peers": self._info_region_peers,
             "statistics": self._info_statistics,
             "procedure_info": self._info_procedure_info,
-            "cluster_info": self._info_cluster_info,
             "region_info": self._info_region_info,
             "region_statistics": self._info_region_statistics,
             "ssts_manifest": self._info_ssts_manifest,
             "ssts_storage": self._info_ssts_storage,
             "ssts_index_meta": self._info_ssts_index_meta,
         }
-        in_is_db = self._current_db == "information_schema"
+        specs.update({k: lambda v=v: self.spark.createDataFrame(*v)
+                      for k, v in _INFO_FIXED.items()})
+        in_is_db = self.conn.current_db == "information_schema"
         for key, builder in specs.items():
             pats = [rf"\bINFORMATION_SCHEMA\s*\.\s*{key}\b"]
             if in_is_db and re.match(r"^\s*SELECT\b", text, re.IGNORECASE):
@@ -4466,7 +4444,7 @@ class GreptimeSQL:
         """information_schema.schemata: fixed system schemas + registered
         databases (schemata.rs)."""
         names = {"public", "greptime_private", "information_schema"}
-        names |= set(self._databases)
+        names |= set(self.conn.databases)
         rows = [("greptime", n, "utf8", "utf8_bin", None, None)
                 for n in sorted(names)]
         return self.spark.createDataFrame(
@@ -4474,68 +4452,6 @@ class GreptimeSQL:
             "catalog_name string, schema_name string, "
             "default_character_set_name string, "
             "default_collation_name string, sql_path string, options string",
-        )
-
-    def _info_engines(self):
-        """information_schema.engines: the two storage engines with the
-        reference's published descriptions (engines.rs display strings)."""
-        rows = [
-            ("mito", "DEFAULT", "Storage engine for time-series data",
-             "NO", "NO", "NO"),
-            ("metric", "YES",
-             "Storage engine for observability scenarios, which is adept at "
-             "handling a large number of small tables, making it "
-             "particularly suitable for cloud-native monitoring",
-             "NO", "NO", "NO"),
-        ]
-        return self.spark.createDataFrame(
-            rows,
-            "engine string, support string, comment string, "
-            "transactions string, xa string, savepoints string",
-        )
-
-    def _info_build_info(self):
-        """information_schema.build_info: one row of build constants (the
-        goldens only pin the shape/count, never the values)."""
-        return self.spark.createDataFrame(
-            [("main", "unknown", "unknown", "true", "0.0.0")],
-            "git_branch string, git_commit string, git_commit_short string, "
-            "git_clean string, pkg_version string",
-        )
-
-    def _info_character_sets(self):
-        return self.spark.createDataFrame(
-            [("utf8", "utf8_bin", "UTF-8 Unicode", 4)],
-            "character_set_name string, default_collate_name string, "
-            "description string, maxlen bigint",
-        )
-
-    def _info_collations(self):
-        return self.spark.createDataFrame(
-            [("utf8_bin", "utf8", 1, "Yes", "Yes", 1)],
-            "collation_name string, character_set_name string, id bigint, "
-            "is_default string, is_compiled string, sortlen bigint",
-        )
-
-    def _info_collation_charset_applicability(self):
-        return self.spark.createDataFrame(
-            [("utf8_bin", "utf8")],
-            "collation_name string, character_set_name string",
-        )
-
-    def _info_column_privileges(self):
-        return self.spark.createDataFrame(
-            [],
-            "grantee string, table_catalog string, table_schema string, "
-            "table_name string, column_name string, privilege_type string, "
-            "is_grantable string",
-        )
-
-    def _info_column_statistics(self):
-        return self.spark.createDataFrame(
-            [],
-            "schema_name string, table_name string, column_name string, "
-            "histogram string",
         )
 
     def _table_partitions(self):
@@ -4916,26 +4832,6 @@ class GreptimeSQL:
             "node_id bigint",
         )
 
-    def _info_cluster_info(self):
-        """information_schema.cluster_info (cluster_info.rs): the node
-        inventory — one STANDALONE row in this single-process emulation
-        (information_schema/cluster_info.result; the identifying cells are
-        REPLACE-redacted by the goldens)."""
-        import datetime as _dt
-
-        rows = [(0, "STANDALONE", None, None, 32000, 128 << 30, 100,
-                 1 << 30, "0.15.0", "abcdef12", _dt.datetime(2024, 1, 1),
-                 "1s", None, None)]
-        return self.spark.createDataFrame(
-            rows,
-            "peer_id bigint, peer_type string, peer_addr string, "
-            "peer_hostname string, total_cpu_millicores bigint, "
-            "total_memory_bytes bigint, cpu_usage_millicores bigint, "
-            "memory_usage_bytes bigint, version string, git_commit string, "
-            "start_time timestamp, uptime string, active_time string, "
-            "node_status string",
-        )
-
     def _info_procedure_info(self):
         """information_schema.procedure_info (procedure_info.rs): one Done
         CreateTable procedure per live table."""
@@ -5022,13 +4918,6 @@ class GreptimeSQL:
             "disk_size bigint, memtable_size bigint, manifest_size bigint, "
             "sst_size bigint, sst_num bigint, index_size bigint, "
             "engine string, region_role string",
-        )
-
-    def _info_check_constraints(self):
-        return self.spark.createDataFrame(
-            [],
-            "constraint_catalog string, constraint_schema string, "
-            "constraint_name string, check_clause string",
         )
 
     def _info_table_semantics(self):
@@ -5183,7 +5072,7 @@ class GreptimeSQL:
         # tables inherit database-level ttl and sst_format for display
         # (ttl/show_ttl.result; alter_database.result monitor golden — the
         # compaction.* options do NOT project into table DDL)
-        db_opts = self._databases.get(meta.schema_name) or {}
+        db_opts = self.conn.databases.get(meta.schema_name) or {}
         for inherit_key in ("ttl", "sst_format", "append_mode",
                             "memtable.type", "merge_mode", "skip_wal"):
             if inherit_key not in opts and db_opts.get(inherit_key):
@@ -5411,7 +5300,7 @@ class GreptimeSQL:
                         ptags = pmeta.tags + ([entry.name] if is_pk else [])
                         self.catalog._update_meta(
                             phys, columns=pmeta.columns + [entry], tags=ptags)
-            return self._empty_ok()
+            return empty_ok(self.spark)
         dm = re.match(r"DROP\s+COLUMN\s+(\"[^\"]+\"|\w+)\s*$", action, re.IGNORECASE)
         if dm:
             col = _ident_case(dm.group(1))
@@ -5424,7 +5313,7 @@ class GreptimeSQL:
                     f"Not allowed to remove index column {col} "
                     f"from table {name}")
             self.catalog.drop_column(name, col)
-            return self._empty_ok()
+            return empty_ok(self.spark)
         rm = re.match(r"RENAME\s+(?:TO\s+)?(\"[^\"]+\"|'[^']+'|[\w👋]+)\s*$", action, re.IGNORECASE)
         if rm:
             new = rm.group(1)
@@ -5439,7 +5328,7 @@ class GreptimeSQL:
                     f"Table already exists, table: greptime.public.{new}")
             self.catalog.rename_table(name, new)
             self._unbind(name)
-            return self._empty_ok()
+            return empty_ok(self.spark)
         if re.match(r"MODIFY\s+COLUMN\s+", action, re.IGNORECASE):
             for clause in split_top(action):
                 clause = re.sub(r"^\s*MODIFY\s+COLUMN\s+", "", clause.strip(), flags=re.IGNORECASE)
@@ -5558,7 +5447,7 @@ class GreptimeSQL:
                     self.catalog.modify_column(name, col, spark_type(typ), typ)
                     continue
                 raise ValueError(f"unsupported MODIFY COLUMN clause {clause!r}")
-            return self._empty_ok()
+            return empty_ok(self.spark)
         sm = re.match(r"SET\s+'?([^'=\s]+)'?\s*=\s*(?:'([^']*)'|NULL)\s*$", action, re.IGNORECASE)
         if sm:
             key, val = sm.group(1), sm.group(2)
@@ -5644,7 +5533,7 @@ class GreptimeSQL:
                     # it from the options (alter_append_mode.result)
                     opts.pop("merge_mode", None)
             self.catalog._update_meta(name, with_opts=opts or None)
-            return self._empty_ok()
+            return empty_ok(self.spark)
         um = re.match(r"UNSET\s+'?([^'\s]+)'?\s*$", action, re.IGNORECASE)
         if um:
             key = um.group(1)
@@ -5666,13 +5555,8 @@ class GreptimeSQL:
             opts = dict(meta.with_opts or {})
             opts.pop(key, None)
             self.catalog._update_meta(name, with_opts=opts or None)
-            return self._empty_ok()
+            return empty_ok(self.spark)
         raise ValueError(f"unsupported ALTER TABLE action: {action[:60]}")
-
-    _SET_TZ_RE = re.compile(
-        r"^\s*SET\s+(?:SESSION\s+|LOCAL\s+)?time_?zone\s*=\s*'([^']*)'\s*$",
-        re.IGNORECASE,
-    )
 
     def _rewrite_tql_ctes(self, text: str) -> str:
         """`WITH t AS (TQL EVAL (…) expr) SELECT …` — evaluate each TQL CTE
@@ -5706,102 +5590,6 @@ class GreptimeSQL:
             dfr.createOrReplaceTempView(view)
             text = text[:start + 1] + f"SELECT * FROM {view}" + text[i:]
         return text
-
-    # -- PREPARE / EXECUTE / DEALLOCATE (prepare/mysql_prepare.sql) ----------
-    # Server-side prepared statements: positional `?` placeholders bind the
-    # EXECUTE arguments as typed literals. A placeholder cast to an explicit
-    # type (``?::int`` / ``CAST(? AS INTEGER)``) validates convertibility up
-    # front like the reference (Unable to convert … to datatype …).
-
-    def _prepare_stmt(self, name: str, body: str) -> DataFrame:
-        self._prepared[name] = body.strip().rstrip(";").strip()
-        return self._empty_ok()
-
-    @staticmethod
-    def _bind_placeholders(body: str, args: list[str]) -> str:
-        """Substitute `?` outside string literals with the argument literals,
-        validating explicit int casts (the reference's early conversion)."""
-        n = 0
-
-        def bind(m: re.Match) -> str:
-            nonlocal n
-            if m.group() != "?":
-                return m.group()  # a double-quoted name or string
-            if n >= len(args):
-                raise ValueError(
-                    "Placeholder '?' was not provided a value for execution")
-            arg = args[n]
-            n += 1
-            tail = m.string[m.end():]
-            tm = re.match(r"\s*::\s*(\w+)", tail)
-            target = tm.group(1).upper() if tm else None
-            if target is None and re.search(r"(?is)CAST\s*\(\s*$",
-                                            m.string[:m.start()][-24:]):
-                # CAST(? AS T): the enclosing cast
-                am = re.match(r"\s*AS\s+(\w+)", tail)
-                target = am.group(1).upper() if am else None
-            if target in ("INT", "INTEGER", "BIGINT", "SMALLINT",
-                          "TINYINT") and arg.startswith("'"):
-                inner = arg.strip("'")
-                if not re.fullmatch(r"-?\d+", inner):
-                    raise ValueError(
-                        "Invalid request parameter: Unable to convert "
-                        f"{inner} to datatype Int32(Int32Type)")
-            return arg
-
-        out = map_outside_strings(
-            body, lambda seg: re.sub(r'"(?:[^"]|"")*"|\?', bind, seg))
-        if n < len(args):
-            # extra args are an error in the reference's binder
-            raise ValueError(
-                f"Invalid request parameter: expected {n} parameters, "
-                f"got {len(args)}")
-        return out
-
-    def _execute_stmt(self, name: str, using: str | None) -> DataFrame:
-        if name not in self._prepared:
-            raise ValueError(f"Prepared statement not found: {name}")
-        args = [a.strip() for a in split_top(using)] if using else []
-        return self.sql(self._bind_placeholders(self._prepared[name], args))
-
-    @staticmethod
-    def _canon_cursor_name(name: str) -> str:
-        """canonicalize_object_name semantics: unquoted identifiers fold to
-        lowercase, quoted keep their case (cursor_parser.rs:54)."""
-        if name.startswith('"') and name.endswith('"'):
-            return name[1:-1]
-        return name.lower()
-
-    def _declare_cursor(self, name: str, query: str):
-        """DECLARE <name> CURSOR FOR <select> (statement/cursor.rs:30-65):
-        rejects duplicates and non-SELECT bodies, executes the query, and
-        parks a toLocalIterator() — the Spark analog of the reference's
-        RecordBatchStreamCursor (rows stream to the driver partition-by-
-        partition as FETCHes consume them, never all at once)."""
-        name = self._canon_cursor_name(name)
-        if name in self._cursors:
-            # wire text per operator/src/error.rs:828
-            raise ValueError(f"A cursor named {name} already exists")
-        if not re.match(r"(?is)\s*(SELECT|WITH)\b", query):
-            raise ValueError("Expect select query in cursor statement")
-        df = self.sql(query)
-        self._cursors[name] = (df.schema, df.toLocalIterator())
-        return self._empty_ok()
-
-    def _fetch_cursor(self, name: str, n: int):
-        """FETCH <n> FROM <name> (statement/cursor.rs:68-88): the next n
-        rows as a result set; fewer (or zero) rows once the stream is
-        exhausted — fetch-past-end yields an empty set with the cursor's
-        schema, exactly like RecordBatchStreamCursor::take."""
-        import itertools
-
-        name = self._canon_cursor_name(name)
-        cur = self._cursors.get(name)
-        if cur is None:
-            raise ValueError(f"Cursor {name} is not found")
-        schema, it = cur
-        return self.spark.createDataFrame(
-            list(itertools.islice(it, n)), schema)
 
     def _plan_table(self, df: DataFrame, analyze: bool,
                     verbose: bool) -> DataFrame:
@@ -5882,74 +5670,23 @@ class GreptimeSQL:
                     f"received Timestamp for '{col}'")
 
     def sql(self, text: str, time_index: str = "ts") -> DataFrame:
+        self.conn.apply_zone()
         text = strip_comments(text)
-        cur_db = self._current_db
+        cur_db = self.conn.current_db
         if cur_db in ("information_schema", "pg_catalog") and re.match(
                 r"(?is)\s*(CREATE\s+TABLE|DROP\s+TABLE|ALTER\s+TABLE"
                 r"|TRUNCATE|INSERT\s+INTO|DELETE\s+FROM)\b", text):
             # system schemas reject every mutation (information_schema/
             # tables.sql read-only goldens)
             raise ValueError(f"Schema `{cur_db}` is read-only")
-        pm = re.match(
-            r"(?is)\s*PREPARE\s+(\w+)\s+FROM\s+'((?:[^']|'')*)'\s*;?\s*$",
-            text)
-        if pm:
-            return self._prepare_stmt(pm.group(1),
-                                      pm.group(2).replace("''", "'"))
-        em = re.match(
-            r"(?is)\s*EXECUTE\s+(\w+)(?:\s+USING\s+(.*?))?\s*;?\s*$", text)
-        if em:
-            return self._execute_stmt(em.group(1), em.group(2))
-        dm = re.match(r"(?is)\s*DEALLOCATE\s+(?:PREPARE\s+)?(\w+)\s*;?\s*$",
-                      text)
-        if dm:
-            self._prepared.pop(dm.group(1), None)
-            return self._empty_ok()
-        # Postgres cursor statements (reference statement.rs:155-159,
-        # parser cursor_parser.rs, executor operator/statement/cursor.rs):
-        # DECLARE runs the query and parks a streaming iterator; FETCH n
-        # takes the next n rows; CLOSE drops the cursor (idempotent).
-        dcm = re.match(
-            r"(?is)\s*DECLARE\s+([\w.\"]+)\s+CURSOR\s+FOR\s+(.+?);?\s*$",
-            text)
-        if dcm:
-            return self._declare_cursor(dcm.group(1), dcm.group(2))
-        fcm = re.match(
-            r"(?is)\s*FETCH\s+(\d+)\s+(?:(?:FROM|IN)\s+)?([\w.\"]+)\s*;?\s*$",
-            text)
-        if fcm:
-            return self._fetch_cursor(fcm.group(2), int(fcm.group(1)))
-        ccm = re.match(r"(?is)\s*CLOSE\s+([\w.\"]+)\s*;?\s*$", text)
-        if ccm:
-            self._cursors.pop(self._canon_cursor_name(ccm.group(1)), None)
-            return self._empty_ok()
-        km = re.match(r"(?is)\s*KILL\s+(?:QUERY\s+)?'?([\w-]+)'?\s*;?\s*$",
-                      text)
-        if km:
-            # KILL <process_id> / KILL QUERY <connection_id>
-            # (statement.rs:161, statements/kill.rs): parse-and-acknowledge
-            # parity — this engine has no remote process registry (the
-            # reference's process manager is distributed-frontend
-            # machinery); the statement parses and acks with no result set.
-            return self._empty_ok()
-        if "?" in re.sub(r"'[^']*'|\"[^\"]*\"", "", text):
+        answer = self.conn.answer(text)
+        if answer is not None:
+            return answer
+        if unbound_placeholder(text):
             # a bare placeholder outside PREPARE has no bound value
             # (mysql_prepare.result: SELECT ? → Placeholder error)
             raise ValueError(
                 "Placeholder '?' was not provided a value for execution")
-        sp = re.match(r"(?is)\s*(SHOW|SET)\s+search_path"
-                      r"(?:\s*(?:TO|=)\s*'?(\w+)'?)?\s*;?\s*$", text)
-        if sp:
-            if sp.group(1).upper() == "SHOW":
-                return self.spark.createDataFrame(
-                    [(self._current_db,)], "search_path string")
-            if sp.group(2):
-                self._current_db = sp.group(2).lower()
-                # unlike USE, a search_path selection does not pin the
-                # schema against DROP DATABASE (pg_catalog.result drops
-                # `test` right after search_path points at it)
-                self._via_search_path = True
-            return self._empty_ok()
         pgm = re.search(r"(?i)\bpg_catalog\s*\.\s*(pg_\w+)|(?<![\w.'])"
                         r"(pg_namespace|pg_class|pg_attribute|pg_database"
                         r"|pg_my_temp_schema|session_user|current_schemas?"
@@ -5971,7 +5708,7 @@ class GreptimeSQL:
                         r"current_schemas\(\s*false\s*\)\s*,\s*"
                         r"version\(\s*\)\s*,\s*current_database\(\s*\)\s*;?\s*",
                         text):
-                    cur = self._current_db
+                    cur = self.conn.current_db
                     return self.spark.createDataFrame(
                         [(cur,
                           "{public,information_schema,pg_catalog,"
@@ -6062,76 +5799,6 @@ class GreptimeSQL:
             # rewritten away (display parity needs the original literals);
             # in-context rewriting happens later (after date_add/date_sub)
             text = _rewrite_interval_literals(text, fold_only=True)
-        # MySQL session variables (mysql.result; fixed reference values,
-        # plus settable ones like max_execution_time)
-        m = re.match(r"^\s*SELECT\s+@@([\w.]+)\s*;?\s*$", text, re.IGNORECASE)
-        if m:
-            var = m.group(1).lower()
-            vals = {"tx_isolation": "REPEATABLE-READ",
-                    "transaction_isolation": "REPEATABLE-READ",
-                    "version_comment": "GreptimeDB",
-                    "autocommit": "1", "session.auto_increment_increment": "1"}
-            short = var.split(".")[-1]
-            stored = self._session_vars
-            if short == "max_execution_time":
-                val = stored.get(short, "0")
-            else:
-                val = vals.get(var, vals.get(short, stored.get(short, "")))
-            return self.spark.createDataFrame(
-                [(val,)], f"`@@{m.group(1)}` string")
-        m = re.match(
-            r"^\s*SET\s+(?:@@)?(?:SESSION\s+|LOCAL\s+|GLOBAL\s+)?"
-            r"(?:SESSION\.)?MAX_EXECUTION_TIME\s*=\s*(\S+?)\s*;?\s*$",
-            text, re.IGNORECASE)
-        if m:
-            expr = m.group(1)
-            # reference set.rs timeout binder: non-numeric (incl. negative)
-            # exprs are Unsupported, numerics past u64::MAX are Invalid
-            # (system/max_execution_time.result:171,192)
-            if not re.fullmatch(r"\d+", expr):
-                raise ValueError(f"Not supported: Unsupported timeout expr "
-                                 f"{expr} in set variable statement")
-            if int(expr) > 0xFFFFFFFFFFFFFFFF:
-                raise ValueError(f"Not supported: Invalid timeout expr "
-                                 f"{expr} in set variable statement")
-            self._session_vars["max_execution_time"] = expr
-            self._warnings = []
-            return self.spark.createDataFrame([], "result string")
-        m = re.match(r"^\s*SET\s+read_preference\s*=\s*'([^']*)'\s*;?\s*$",
-                     text, re.IGNORECASE)
-        if m:
-            # reference validates against ReadPreference::from_str
-            # (src/operator/src/statement/set.rs:40-66)
-            if m.group(1).lower() not in ("leader", "follower"):
-                raise ValueError(
-                    f"Not supported: Invalid read preference expr "
-                    f"{m.group(1)} in set variable statement")
-            self._read_pref = m.group(1).upper()
-            return self.spark.createDataFrame([], "result string")
-        if re.match(r"^\s*SELECT\s+read_preference\s*\(\s*\)\s*;?\s*$", text,
-                    re.IGNORECASE):
-            return self.spark.createDataFrame(
-                [(self._read_pref,)],
-                "`read_preference()` string")
-        m = re.match(r"^\s*SHOW\s+(FULL\s+)?PROCESSLIST\s*;?\s*$", text,
-                     re.IGNORECASE)
-        if m:
-            # one row for this session's current query (show_process_list.sql;
-            # ids/addresses/times are redacted by the goldens)
-            if m.group(1):
-                return self.spark.createDataFrame(
-                    [("127.0.0.1:4001/0", "greptime", "public",
-                      "unknown[unknown client addr]", "127.0.0.1:4001",
-                      "2024-01-01T00:00:00.000", "PT0.001S",
-                      "SHOW FULL PROCESSLIST")],
-                    "`Id` string, `Catalog` string, `Schema` string, "
-                    "`Client` string, `Frontend` string, `StartTime` string, "
-                    "`ElapsedTime` string, `Query` string")
-            return self.spark.createDataFrame(
-                [("127.0.0.1:4001/0", "greptime", "SHOW PROCESSLIST",
-                  "PT0.001S")],
-                "`Id` string, `Catalog` string, `Query` string, "
-                "`ElapsedTime` string")
         # DataFusion coerces mixed int/string literal UNION arms to string
         # (basic_setops.sql `SELECT 1 UNION ALL SELECT 'asdf'`)
         m = re.fullmatch(
@@ -6173,208 +5840,8 @@ class GreptimeSQL:
             text = rewrite_calls(text, "ELT", _elt)
         if re.search(r"\barrow_typeof\s*\(", text, re.IGNORECASE):
             text = self._rewrite_arrow_typeof(text)
-        m = self._SET_TZ_RE.match(text.strip().rstrip(";"))
-        if m:
-            self.tz_offset_ms = _tz_offset_ms(m.group(1))
-            # true session-timezone semantics: string-literal parsing and
-            # timestamp rendering follow the session zone (reference
-            # system/timezone.sql)
-            tz = m.group(1).strip()
-            om = re.fullmatch(r"([+-])(\d{1,2}):(\d{2})", tz)
-            if om and int(om.group(2)) > 18:
-                # beyond java.time.ZoneOffset's ±18h (range/to.sql +23:00):
-                # the session stays UTC — RANGE goldens render step labels in
-                # raw UTC anyway, only the ALIGN origin shifts (tz_offset_ms)
-                tz = "UTC"
-            elif om:
-                # bare ±HH:MM: java ZoneId and pyarrow both accept it, while
-                # 'GMT±HH:MM' breaks the Arrow→pandas path in pandas UDFs
-                tz = f"{om.group(1)}{int(om.group(2)):02d}:{om.group(3)}"
-            elif tz.upper() in ("", "SYSTEM"):
-                tz = "UTC"
-            raw = m.group(1).strip()
-            om2 = re.fullmatch(r"([+-])(\d{1,2}):(\d{2})", raw)
-            self._tz_display = (f"{om2.group(1)}{int(om2.group(2)):02d}:{om2.group(3)}"
-                                if om2 else (raw or "UTC"))
-            self.spark.conf.set("spark.sql.session.timeZone", tz)
-            # SQL temp functions (gt_to_unixtime, …) capture the session
-            # zone at definition — re-register under the new zone
-            register_all(self.spark)
-            return self.spark.createDataFrame([], "result string")
-        m = re.match(
-            r"^\s*SET\s+(?:@@)?(?:SESSION\s+|LOCAL\s+)?(?:SESSION\.)?"
-            r"([A-Za-z_][\w.]*)\s*=\s*.+$|^\s*SET\s+NAMES\s+\S+\s*$",
-            text.strip().rstrip(";"), re.IGNORECASE | re.DOTALL)
-        if m:
-            # unsupported session variables succeed with a queued warning
-            # (system/set_unsupported.sql); any later statement clears it
-            var = (m.group(1) or "NAMES").split(".")[-1].upper()
-            self._warnings = [
-                ("Warning", 1000, f"Unsupported set variable {var}")]
-            return self.spark.createDataFrame([], "result string")
-        if re.match(r"^\s*SHOW\s+WARNINGS\s*;?\s*$", text, re.IGNORECASE):
-            rows = self._warnings
-            return self.spark.createDataFrame(
-                rows, "Level string, Code int, Message string")
-        self._warnings = []
-        m = re.match(r"^\s*SHOW\s+VARIABLES\s+(\w+)\s*;?\s*$", text, re.IGNORECASE)
-        if m:
-            var = m.group(1).lower()
-            if var == "time_zone":
-                return self.spark.createDataFrame(
-                    [(self._tz_display,)], "`TIME_ZONE` string")
-            if var == "system_time_zone":
-                return self.spark.createDataFrame(
-                    [("UTC",)], "`SYSTEM_TIME_ZONE` string")
-            # unknown/unset variable: the mysql-protocol rendering is a
-            # Variable_name/Value table with one empty row (basic.result
-            # SHOW VARIABLES MAX_EXECUTION_TIME)
-            return self.spark.createDataFrame(
-                [(None, None)], "`Variable_name` string, `Value` string")
-        m = re.match(r"^\s*select\s+(pg_backend_pid|connection_id)\s*\(\s*\)\s*;?\s*$",
-                     text, re.IGNORECASE)
-        if m:
-            # session ids (function/system.sql; the goldens redact the value)
-            return self.spark.createDataFrame(
-                [(1,)], f"`{m.group(1).lower()}()` bigint")
-        if re.match(r"^\s*select\s+timezone\(\s*\)\s*;?\s*$", text, re.IGNORECASE):
-            return self.spark.createDataFrame(
-                [(self._tz_display,)], "`timezone()` string")
-        if re.match(r"^\s*select\s+build\(\s*\)\s*;?\s*$", text, re.IGNORECASE):
-            # one row per build attribute, the reference's rendering
-            # (function/system.sql — the golden is REPLACE-redacted, so
-            # only the `key:<space>` shapes must match)
-            return self.spark.createDataFrame(
-                [("branch: main",), ("commit: unknown",),
-                 ("commit_short: unknown",), ("clean: true",),
-                 ("version: 0.1.0",)], "`build()` string")
-        if re.match(r"^\s*select\s+version\(\s*\)\s*;?\s*$", text, re.IGNORECASE):
-            return self.spark.createDataFrame(
-                [("0.1.0",)], "`version()` string")
-        if re.match(r"^\s*select\s+database\(\s*\)\s*;?\s*$", text, re.IGNORECASE):
-            return self.spark.createDataFrame(
-                [(self._current_db,)], "`database()` string")
-        # multi-database surface flattened onto the single default schema:
-        # CREATE DATABASE registers a name; `db.tbl` / `db."tbl"` references
-        # lose the prefix (the physical layout is one catalog directory)
-        m = re.match(
-            r"\s*(CREATE|DROP)\s+(?:DATABASE|SCHEMA)\s+(IF\s+(?:NOT\s+)?EXISTS\s+)?"
-            r"('[^']*'|\"[^\"]*\"|\w+)\s*(?:WITH\s*\((.*)\))?\s*;?\s*$",
-            text, re.IGNORECASE | re.DOTALL,
-        )
-        if m:
-            dbname = m.group(3)
-            dbname = (dbname[1:-1] if dbname[0] in "'\"" else dbname).lower()
-            if not re.fullmatch(r"[\w\-]+", dbname):
-                raise ValueError(f"Invalid database name: {dbname}")
-            dbs = self._databases = dict(self._databases)
-            if m.group(1).upper() == "CREATE":
-                # built-in schemas always exist (catalog.rs pre-creates them;
-                # pg_catalog.sql / information_schema.sql error goldens)
-                builtin = {"greptime", "public", "information_schema",
-                           "pg_catalog", "greptime_private"}
-                if (dbname in dbs or dbname in builtin) and not m.group(2):
-                    raise ValueError(f"Schema {dbname} already exists")
-                opts = dict(re.findall(r"['\"]?([\w.]+)['\"]?\s*=\s*'([^']*)'",
-                                       m.group(4) or ""))
-                if opts.get("ttl", "").strip().lower() == "instant":
-                    # instant TTL is a table-level concept (write-skipping);
-                    # a database cannot inherit it (show_ttl.sql)
-                    raise ValueError(
-                        "Failed to parse value instant into key ttl")
-                dbs[dbname] = opts
-            else:
-                if dbname in ("information_schema", "pg_catalog",
-                              "greptime_private"):
-                    raise ValueError(f"Schema `{dbname}` is read-only")
-                if dbname == self._current_db and \
-                        not self._via_search_path:
-                    raise ValueError(f"Schema `{dbname}` is in use")
-                dbs.pop(dbname, None)
-                if self.catalog is not None:
-                    # dropping a database drops its tables (logical metric
-                    # tables first so the physical busy-check releases)
-                    victims = [t for t in self.catalog.list_tables()
-                               if self.catalog.meta(t).schema_name.lower() == dbname]
-                    victims.sort(key=lambda t: not self.catalog.meta(t).on_physical)
-                    for t in victims:
-                        self.catalog.drop_table(t)
-                        self._unbind(t)
-            if self.catalog is not None:
-                self.catalog.db_options = dbs
-            return self._empty_ok()
-        m = re.match(
-            r"\s*ALTER\s+DATABASE\s+(\w+)\s+(SET|UNSET)\s+'?([\w.]+)'?"
-            r"(?:\s*=\s*'([^']*)')?\s*;?\s*$",
-            text, re.IGNORECASE,
-        )
-        if m:
-            dbs = self._databases = dict(self._databases)
-            name, action, key, val = (m.group(1).lower(), m.group(2).upper(),
-                                      m.group(3), m.group(4))
-            if name not in dbs:
-                raise ValueError(f"database {name} does not exist")
-            # the reference validates option keys (and the ttl value) up
-            # front — alter_database.sql error goldens
-            allowed = re.fullmatch(
-                r"ttl|sst_format|compaction\.type"
-                r"|compaction\.twcs\.(?:time_window|trigger_file_num"
-                r"|max_output_file_size|fallback_to_local)", key) is not None
-            if action == "SET":
-                if not allowed:
-                    raise ValueError("Invalid set database option, "
-                                     f"key: {key}, value: {val or ''}")
-                if key == "ttl" and (val or "").strip():
-                    v = val.strip().lower()
-                    if v == "instant":
-                        # same rule as CREATE: no instant TTL on databases
-                        raise ValueError("Invalid set database option, "
-                                         "key: ttl, value: instant")
-                    if v != "forever":
-                        from greptimedb_spark.range_query import \
-                            parse_duration_ms
-
-                        try:
-                            # zero is a valid ttl ('0s' clears it —
-                            # show_ttl.sql); the shared parser rejects it
-                            if not re.fullmatch(r"0+\s*[a-zµ]*", v):
-                                parse_duration_ms(v)
-                        except Exception:
-                            raise ValueError(
-                                "Invalid set database option, "
-                                f"key: ttl, value: {val}") from None
-                # empty ttl normalizes to 'forever' (alter_database.result)
-                dbs[name][key] = ("forever" if key == "ttl" and not val
-                                  else val or "")
-            else:
-                if not allowed:
-                    raise ValueError(
-                        f"Invalid unset database option, key: {key}")
-                dbs[name].pop(key, None)
-            if self.catalog is not None:
-                self.catalog.db_options = dbs
-            return self._empty_ok()
-        m = re.match(r"\s*SHOW\s+CREATE\s+DATABASE\s+(\w+)\s*;?\s*$",
-                     text, re.IGNORECASE)
-        if m:
-            dbs = self._databases
-            name = m.group(1).lower()
-            if name not in dbs and name != "public":
-                raise ValueError(f"database {name} does not exist")
-            body = f"CREATE DATABASE IF NOT EXISTS {name}"
-            opts = dbs.get(name) or {}
-            if opts:
-                body += "\n" + _render_with_opts(opts)
-            return self.spark.createDataFrame(
-                [(name, body)], "`Database` string, `Create Database` string")
-        um = re.match(r"\s*USE\s+(\w+)\s*;?\s*$", text, re.IGNORECASE)
-        if um:
-            # single physical schema; the name is tracked so the
-            # information_schema surface reports it (tables.result)
-            self._current_db = um.group(1).lower()
-            self._via_search_path = False
-            return self._empty_ok()
-        for d in set(self._databases) | {"public", "greptime"}:
+        self.conn.warnings = []  # any statement past here clears them
+        for d in set(self.conn.databases) | {"public", "greptime"}:
             # bare, double-quoted, or backticked schema prefixes all drop
             # (keywords_expressions: `"SCHEMA"."TABLE"`)
             text = map_outside_strings(
@@ -6826,7 +6293,7 @@ class GreptimeSQL:
                     pass
             return range_sql(
                 self.spark, text, time_index=time_index, default_by=default_by,
-                tz_offset_ms=self.tz_offset_ms,
+                tz_offset_ms=self.conn.tz_offset_ms,
             )
         self._reject_reference_plan_errors(text)
         try:
@@ -6889,22 +6356,6 @@ def _ts_or_none(epoch):
     if epoch is None:
         return None
     return _dt.datetime.utcfromtimestamp(epoch)
-
-
-def _tz_offset_ms(tz: str) -> int:
-    """'+08:00' / 'Asia/Shanghai' / 'UTC' → offset milliseconds."""
-    tz = tz.strip()
-    m = re.fullmatch(r"([+-])(\d{1,2}):(\d{2})", tz)
-    if m:
-        sign = 1 if m.group(1) == "+" else -1
-        return sign * (int(m.group(2)) * 3600 + int(m.group(3)) * 60) * 1000
-    if tz.upper() in ("UTC", "GMT", ""):
-        return 0
-    import datetime as dt
-    from zoneinfo import ZoneInfo
-
-    off = dt.datetime(1970, 1, 1, tzinfo=ZoneInfo(tz)).utcoffset()
-    return int(off.total_seconds() * 1000)
 
 
 def _with_defaults(df: DataFrame, cols: list[ColumnDef],
@@ -7269,6 +6720,61 @@ def _parse_json2_hints(body: str) -> list:
 # the system schema's fixed table inventory (reference
 # src/catalog/src/system_schema/information_schema; SHOW TABLES golden in
 # show/show_databases_tables.result)
+# information_schema tables with fixed contents: name → (rows, schema)
+_INFO_FIXED = {
+    # the two storage engines with the reference's published descriptions
+    # (engines.rs display strings)
+    "engines": (
+        [("mito", "DEFAULT", "Storage engine for time-series data",
+          "NO", "NO", "NO"),
+         ("metric", "YES",
+          "Storage engine for observability scenarios, which is adept at "
+          "handling a large number of small tables, making it "
+          "particularly suitable for cloud-native monitoring",
+          "NO", "NO", "NO")],
+        "engine string, support string, comment string, "
+        "transactions string, xa string, savepoints string"),
+    # build constants (the goldens only pin the shape/count, never values)
+    "build_info": (
+        [("main", "unknown", "unknown", "true", "0.0.0")],
+        "git_branch string, git_commit string, git_commit_short string, "
+        "git_clean string, pkg_version string"),
+    "character_sets": (
+        [("utf8", "utf8_bin", "UTF-8 Unicode", 4)],
+        "character_set_name string, default_collate_name string, "
+        "description string, maxlen bigint"),
+    "collations": (
+        [("utf8_bin", "utf8", 1, "Yes", "Yes", 1)],
+        "collation_name string, character_set_name string, id bigint, "
+        "is_default string, is_compiled string, sortlen bigint"),
+    "collation_character_set_applicability": (
+        [("utf8_bin", "utf8")],
+        "collation_name string, character_set_name string"),
+    "column_privileges": (
+        [], "grantee string, table_catalog string, table_schema string, "
+        "table_name string, column_name string, privilege_type string, "
+        "is_grantable string"),
+    "column_statistics": (
+        [], "schema_name string, table_name string, column_name string, "
+        "histogram string"),
+    "check_constraints": (
+        [], "constraint_catalog string, constraint_schema string, "
+        "constraint_name string, check_clause string"),
+    # the node inventory (cluster_info.rs): one STANDALONE row in this
+    # single-process emulation (cluster_info.result REPLACE-redacts the
+    # identifying cells)
+    "cluster_info": (
+        [(0, "STANDALONE", None, None, 32000, 128 << 30, 100, 1 << 30,
+          "0.15.0", "abcdef12", datetime.datetime(2024, 1, 1), "1s", None,
+          None)],
+        "peer_id bigint, peer_type string, peer_addr string, "
+        "peer_hostname string, total_cpu_millicores bigint, "
+        "total_memory_bytes bigint, cpu_usage_millicores bigint, "
+        "memory_usage_bytes bigint, version string, git_commit string, "
+        "start_time timestamp, uptime string, active_time string, "
+        "node_status string"),
+}
+
 _INFO_SCHEMA_TABLES = [
     "build_info", "character_sets", "check_constraints", "cluster_info",
     "collation_character_set_applicability", "collations", "column_privileges",

@@ -46,11 +46,12 @@ def test_time_zone_change_recreates_sql_functions(spark, calls):
     a.sql("SET TIME_ZONE = '+08:00'")
     assert a.sql(_UNIXTIME).first().u == 1704038400
     calls.update(udf=0, sql_fn=0)
-    # B resets the shared session to UTC: the functions A's SET re-created
-    # under +08:00 must follow, or B would read 1704038400
+    # B's statement moves the shared session back to B's zone (UTC): the
+    # functions A's SET re-created under +08:00 must follow, or B would
+    # read 1704038400
     b = GreptimeSQL(spark)
-    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     assert b.sql(_UNIXTIME).first().u == 1704067200
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
     assert calls["udf"] == 0 and calls["sql_fn"] > 0
 
 
