@@ -21,6 +21,9 @@ from greptimedb_spark.sqltext import map_outside_strings, split_top
 
 _TZ_CONF = "spark.sql.session.timeZone"
 _OFFSET_RE = re.compile(r"([+-])(\d{1,2}):(\d{2})")
+# the server's zone: what SET TIME_ZONE = 'SYSTEM' selects and SHOW VARIABLES
+# system_time_zone reports
+_SYSTEM_ZONE = "UTC"
 _WORD_RE = re.compile(r"\w+")
 
 # statements with a fixed answer: (rows, schema)
@@ -87,12 +90,19 @@ def unbound_placeholder(text: str) -> bool:
     return "?" in text and "?" in re.sub(r"'[^']*'|\"[^\"]*\"", "", text)
 
 
+def _named_zone(tz: str) -> str:
+    """A SET TIME_ZONE value with 'SYSTEM' (any case) read as the server's
+    zone, the one SHOW VARIABLES system_time_zone reports."""
+    tz = tz.strip()
+    return _SYSTEM_ZONE if tz.upper() == "SYSTEM" else tz
+
+
 def _zone_forms(tz: str) -> tuple[str, str]:
     """A SET TIME_ZONE value → (its display form, the Spark session zone).
     ±H:MM becomes ±HH:MM, which java ZoneId and pyarrow both accept (not
     'GMT±HH:MM': it breaks pandas UDFs). Past ZoneOffset's ±18h (range/to.sql
     +23:00) the session stays UTC and only the ALIGN origin shifts."""
-    tz = tz.strip() or "UTC"
+    tz = _named_zone(tz) or "UTC"
     m = _OFFSET_RE.fullmatch(tz)
     if m is None:
         return tz, tz
@@ -101,8 +111,8 @@ def _zone_forms(tz: str) -> tuple[str, str]:
 
 
 def _offset_ms(tz: str) -> int:
-    """'+08:00' / 'Asia/Shanghai' / 'UTC' → offset milliseconds."""
-    tz = tz.strip()
+    """'+08:00' / 'Asia/Shanghai' / 'UTC' / 'SYSTEM' → offset milliseconds."""
+    tz = _named_zone(tz)
     m = _OFFSET_RE.fullmatch(tz)
     if m:
         sign = 1 if m.group(1) == "+" else -1
@@ -352,7 +362,8 @@ class Connection:
     def _show_variable(self, m: re.Match) -> DataFrame:
         var = m.group(1).lower()
         if var in ("time_zone", "system_time_zone"):
-            zone = self.display_zone if var == "time_zone" else "UTC"
+            zone = (self.display_zone if var == "time_zone"
+                    else _SYSTEM_ZONE)
             return self._table([(zone,)], f"`{var.upper()}` string")
         # an unknown or unset variable: one empty Variable_name/Value row,
         # the mysql-protocol rendering (basic.result)

@@ -23,21 +23,26 @@ takes over. Semantics parity:
   batch (a server rejects one request; a 100 TB backfill must quarantine bad
   lines and keep going).
 
-Parsing influx lines is a character-level tokenizer (escapes make it
-non-regular), so it runs as an Arrow-batched ``mapInPandas`` — the slow path
-is confined to the ingest edge, with no shuffle. Each batch is parsed once:
+Influx lines are parsed by JVM column expressions, no Python worker: a
+plain line (no backslash or quote) by literal splits, any other by one Java
+regex of the grammar. Only rejected lines reach Python, in a union branch
+whose other columns are NULL literals, where the scanner
+``_parse_influx_line`` words their ``err``; a filter on those columns (as
+``influx_pivot``'s) prunes that branch. Each batch is parsed once:
 ``influx_pivot`` materializes the parsed rows and learns the field keys in
 the same job, and the pivot and the write read the materialized rows.
-OpenTSDB's whitespace-split grammar stays in pure column algebra.
+OpenTSDB's whitespace-split grammar is column algebra too.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 import re
 from typing import Iterator
 
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
@@ -48,11 +53,13 @@ VALUE_COL = "greptime_value"       # reference default value column name
 # Long-format output: one row per field so heterogeneous field types survive
 # without a per-measurement schema. `influx_pivot` turns one measurement's
 # rows into a wide table.
-_INFLUX_SCHEMA = (
-    "table string, tags map<string,string>, field_key string, "
-    "field_type string, v_f64 double, v_i64 long, v_str string, v_bool boolean, "
-    f"{TIME_INDEX} timestamp, err string"
+_INFLUX_COLUMNS = (
+    ("table", "string"), ("tags", "map<string,string>"),
+    ("field_key", "string"), ("field_type", "string"), ("v_f64", "double"),
+    ("v_i64", "long"), ("v_str", "string"), ("v_bool", "boolean"),
+    (TIME_INDEX, "timestamp"), ("err", "string"),
 )
+_INFLUX_SCHEMA = ", ".join(f"{n} {t}" for n, t in _INFLUX_COLUMNS)
 
 
 def _scan_escaped(line: str, i: int, stops: str) -> tuple[str, int]:
@@ -208,6 +215,237 @@ def _parse_influx_line(line: str, precision: str):
                  f"invalid line protocol: {e}: {line[:120]}")]
 
 
+# ---- influx line protocol as column algebra ----
+# Java-regex forms of the scanner's grammar. A backslash escapes only its
+# section's stop characters and is a literal before anything else, so a token
+# is "escape pair, else any non-stop char"; possessive quantifiers keep the
+# regex from backtracking into another tokenisation than the scanner's.
+_TOKEN = r"(?:\\[=, ]|[^=, ])++"            # tag key, tag value, field key
+_MEASUREMENT = r"(?:\\[, ]|[^, ])++"
+_QUOTED = r'"(?:\\["\\]|[^"])*+"'          # only \" and \\ escape
+_RAW = r'[^", ][^, ]*+'                     # checked by _value_ok
+_FIELD = rf"{_TOKEN}=(?:{_QUOTED}|{_RAW})"
+# groups: 1 measurement, 2 tag set (",k=v" pairs), 3 field set, 4 timestamp
+_LINE_RE = (rf"^({_MEASUREMENT})((?:,{_TOKEN}={_TOKEN})*+) ++"
+            rf"({_FIELD}(?:,{_FIELD})*+)(?: [ \t\r\n]*+(-?[0-9]++))?\z")
+_TAG_RE = rf",({_TOKEN})=({_TOKEN})"        # groups: key, value
+_FIELD_KEY_RE = rf"(?:^|,)({_TOKEN})=(?:{_QUOTED}|{_RAW})"
+_FIELD_VALUE_RE = rf"(?:^|,){_TOKEN}=({_QUOTED}|{_RAW})"
+# A plain line has no backslash or quote, single spaces between its
+# sections, and numbers too short to overflow (digit runs of at most 18,
+# exponents of at most 2 digits): it is split with literal `split` and
+# `substring_index`, and its values need no further check. Every other line
+# takes _LINE_RE.
+_PLAIN_TEXT = r'[^=, \\"]+'
+_SHORT_VALUE = (r"(?:-?[0-9]{1,18}(?:i|(?:\.[0-9]{0,18})?(?:[eE][-+]?[0-9]{1,2})?)"
+                r"|[0-9]{1,18}u|-?\.[0-9]{1,18}(?:[eE][-+]?[0-9]{1,2})?"
+                r"|[tT](?:rue)?|TRUE|[fF](?:alse)?|FALSE)")
+_PLAIN_FIELD = rf"{_PLAIN_TEXT}={_SHORT_VALUE}"
+_PLAIN_LINE_RE = (rf'^[^, \\"]+(?:,{_PLAIN_TEXT}={_PLAIN_TEXT})* '
+                  rf"{_PLAIN_FIELD}(?:,{_PLAIN_FIELD})*(?: -?[0-9]+)?\z")
+_TRUE = ("t", "T", "true", "True", "TRUE")
+_FALSE = ("f", "F", "false", "False", "FALSE")
+_MIN_US = -(1 << 63)  # pandas reads it as NaT: the scanner's time is NULL
+_WS = " \t\r\n"  # what the scanner strips; F.btrim(c) alone strips only " "
+
+
+def _unescape(c: Column, chars: str) -> Column:
+    """Drop the backslash of each escape pair ``\\x`` with x in ``chars``,
+    left to right as the scanner reads them."""
+    return F.regexp_replace(c, rf"\\([{chars}])", "$1")
+
+
+def _value_ok(val: Column) -> Column:
+    """The raw value text ``val`` (quotes included) is a value as
+    ``_parse_field_value`` reads it: ASCII digits, i64 range, finite."""
+    body = val.substr(F.lit(1), F.length(val) - 1)  # minus the type suffix
+    return (F.when(val.startswith('"') | val.isin(*_TRUE, *_FALSE), True)
+            .when(val.endswith("i"), body.rlike(rf"^{_INT_RE.pattern}\z")
+                  & body.try_cast("long").isNotNull())
+            .when(val.endswith("u"), body.rlike(rf"^{_UINT_RE.pattern}\z")
+                  & body.try_cast("long").isNotNull())
+            .otherwise(val.rlike(rf"^(?:{_FLOAT_RE.pattern})\z")
+                       & (F.abs(val.try_cast("double")) != F.lit(math.inf))))
+
+
+def _typed_value(val: Column) -> list[Column]:
+    """An accepted field's value text -> its _INFLUX_SCHEMA value columns
+    (field_type, v_f64, v_i64, v_str, v_bool)."""
+    quoted = val.startswith('"')
+    ftype = (F.when(quoted, "string")
+             .when(val.isin(*_TRUE, *_FALSE), "boolean")
+             .when(val.endswith("i"), "int64")
+             .when(val.endswith("u"), "uint64")
+             .otherwise("float64"))
+    body = val.substr(F.lit(1), F.length(val) - 1)
+    return [
+        ftype.alias("field_type"),
+        F.when(ftype == "float64", val.try_cast("double")).alias("v_f64"),
+        F.when(ftype.isin("int64", "uint64"), body.try_cast("long"))
+        .alias("v_i64"),
+        F.when(quoted, _unescape(val.substr(F.lit(2), F.length(val) - 2),
+                                 '"\\\\')).alias("v_str"),
+        F.when(ftype == "boolean", val.isin(*_TRUE)).alias("v_bool"),
+    ]
+
+
+def _last_wins_map(keys: Column, vals: Column) -> Column:
+    """``map(keys -> vals)`` in which a repeated key keeps its last value at
+    its first position, as the scanner's dict does; ``map_from_arrays``
+    itself raises on a repeated key."""
+    uniq = F.array_distinct(keys)
+    last = F.transform(uniq, lambda k: F.element_at(
+        vals, (F.size(keys) + 1 - F.array_position(F.reverse(keys), k))
+        .cast("int")))
+    return F.when(F.size(uniq) == F.size(keys), F.map_from_arrays(keys, vals)
+                  ).otherwise(F.map_from_arrays(uniq, last))
+
+
+def _micros(ts_raw: str, precision: str) -> Column:
+    """µs since the epoch of the timestamp text in column ``ts_raw``, as
+    the scanner computes it (``floor(ts * precision_ns / 1000)``), or NULL
+    where that falls outside i64. No step overflows where the scanner's
+    does not: a text beyond i64 can still be in range at ``ns``, so that case
+    takes exact decimal division."""
+    v = f"try_cast({ts_raw} AS BIGINT)"
+    return F.expr({
+        "ns": f"CASE WHEN {v} IS NOT NULL THEN {v} div 1000"
+              f" - IF({v} % 1000 < 0, 1, 0) ELSE try_cast(floor("
+              f"try_cast({ts_raw} AS DECIMAL(25, 0)) / 1000) AS BIGINT) END",
+        "us": v,
+        "ms": f"try_multiply({v}, 1000)",
+        "s": f"try_multiply({v}, 1000000)",
+    }[precision])
+
+
+@functools.lru_cache(maxsize=None)
+def _influx_line_layers(precision: str) -> tuple[list[Column], ...]:
+    """The select lists that take a frame of one string column ``line`` to
+    one row per line: the line, ``skip`` (blank or comment), ``ok`` (the
+    column parser accepts it), ``plain``, the table, the tags, the time and
+    ``items``: a plain line's ``key=value`` texts, else its raw value texts
+    beside its unescaped field keys ``rkeys``.
+
+    Each layer is its own select, so that an expression that a later layer
+    reads several times is computed once per line. The last layer is an
+    ``inline`` of the line's own row: a filter on its columns (``table =
+    t``) stops there instead of being pushed down and evaluating the parse
+    a second time. The lists are built once per precision, so a batch costs
+    a few JVM calls per layer, not one per expression node."""
+    line, s = F.col("line"), F.col("s")
+    plain = s.rlike(_PLAIN_LINE_RE)
+    layers = [
+        [line, F.btrim(line, F.lit(_WS)).alias("s")],
+        [line, s, (s.isNull() | (s == "") | s.startswith("#")).alias("skip"),
+         plain.alias("plain"),
+         F.when(plain, F.split(s, " ")).alias("parts")],
+    ]
+    plain, parts = F.col("plain"), F.col("parts")
+    head = F.get(parts, 0)
+    grp = [F.regexp_extract(s, _LINE_RE, i) for i in range(1, 5)]
+    layers.append([
+        line, "skip", plain,
+        F.when(plain, F.substring_index(head, ",", 1)).otherwise(
+            _unescape(grp[0], ", ")).alias("table"),
+        F.when(plain, head).otherwise(grp[1]).alias("tag_set"),
+        F.when(plain, F.split(F.get(parts, 1), ",")).otherwise(
+            F.regexp_extract_all(grp[2], F.lit(_FIELD_VALUE_RE), F.lit(1))
+        ).alias("items"),
+        F.when(~plain, F.regexp_extract_all(
+            grp[2], F.lit(_FIELD_KEY_RE), F.lit(1))).alias("rkeys"),
+        F.when(plain, F.coalesce(F.get(parts, 2), F.lit(""))).otherwise(
+            grp[3]).alias("ts_raw"),
+        (plain | s.rlike(_LINE_RE)).alias("matched"),
+    ])
+    items, tag_set = F.col("items"), F.col("tag_set")
+    keys, vals = (F.regexp_extract_all(tag_set, F.lit(_TAG_RE), F.lit(i))
+                  for i in (1, 2))
+
+    def unescaped(tokens: Column) -> Column:
+        return F.when(plain, tokens).otherwise(
+            F.transform(tokens, lambda t: _unescape(t, "=, ")))
+
+    layers.append([
+        line, "skip", plain, "table", items,
+        F.transform("rkeys", lambda k: _unescape(k, "=, ")).alias("rkeys"),
+        unescaped(keys).alias("keys"), unescaped(vals).alias("vals"),
+        (F.col("ts_raw") == "").alias("no_ts"),
+        _micros("ts_raw", precision).alias("us"),
+        (plain | F.forall(items, _value_ok)).alias("values_ok"),
+        "matched",
+    ])
+    us = F.col("us")
+    ok = (~F.col("skip") & F.col("matched") & F.col("values_ok")
+          & (F.col("no_ts") | us.isNotNull()))
+    layers.append([F.inline(F.array(F.struct(
+        line, "skip", F.coalesce(ok, F.lit(False)).alias("ok"), plain,
+        "table", items, "rkeys",
+        _last_wins_map(F.col("keys"), F.col("vals")).alias("tags"),
+        F.when(us != _MIN_US, F.timestamp_micros(us)).alias(TIME_INDEX),
+    )))])
+    return tuple(layers)
+
+
+@functools.lru_cache(maxsize=None)
+def _influx_row_layers() -> tuple[list[Column], ...]:
+    """The select lists that take ``_influx_line_layers``' rows to one
+    _INFLUX_SCHEMA row per field of each accepted line."""
+    plain, item = F.col("plain"), F.col("item")
+    return (
+        ["plain", "table", "tags", TIME_INDEX, "rkeys",
+         F.posexplode(F.when(F.col("ok"), F.col("items"))).alias(
+             "pos", "item")],
+        ["table", "tags", TIME_INDEX,
+         F.when(plain, F.substring_index(item, "=", 1)).otherwise(
+             F.get("rkeys", "pos")).alias("field_key"),
+         F.when(plain, F.substring_index(item, "=", -1)).otherwise(
+             item).alias("val")],
+        ["table", "tags", "field_key", *_typed_value(F.col("val")),
+         TIME_INDEX, F.lit(None).cast("string").alias("err")],
+    )
+
+
+def _select_layers(df: DataFrame, layers) -> DataFrame:
+    for cols in layers:
+        df = df.select(*cols)
+    return df
+
+
+def _influx_err(line: str, precision: str) -> str:
+    """The scanner's ``err`` for a line the column parser rejected; a line
+    the scanner accepts gets an error naming the disagreement instead of
+    being dropped."""
+    rows = _parse_influx_line(line, precision)
+    if rows and rows[0][-1] is not None:
+        return rows[0][-1]
+    return ("invalid line protocol: the column parser rejects a line the "
+            f"scanner accepts: {line.strip(_WS)[:120]}")
+
+
+@functools.lru_cache(maxsize=8)
+def _influx_err_layers(sc: SparkContext,
+                       precision: str) -> tuple[Column, list[Column]]:
+    """The filter and the select list that take ``_influx_line_layers``'
+    rows to one err row per line the column parser rejected, worded by the
+    scanner in an Arrow-batched UDF.
+
+    Every column but ``err`` is a typed NULL literal, so a filter on any of
+    them (``influx_pivot``'s ``table = t``) folds this branch to an empty
+    relation and no Python worker starts. The UDF is marked nondeterministic
+    so that no filter is pushed below it, apart from that literal; a
+    deterministic one lets the optimizer push the filter's conjuncts apart
+    and keep the Python node in the plan. One per Spark context and
+    precision: a UDF pickles its function once, when first applied, and is
+    bound to that context."""
+    @F.pandas_udf("string")
+    def word(lines: pd.Series) -> pd.Series:
+        return pd.Series([_influx_err(line, precision) for line in lines])
+
+    return ~F.col("ok") & ~F.col("skip"), [
+        *(F.lit(None).cast(t).alias(n) for n, t in _INFLUX_COLUMNS[:-1]),
+        word.asNondeterministic()("line").alias("err")]
+
+
 def parse_influx_lines(
     lines: DataFrame, line_col: str = "line", precision: str = "ns"
 ) -> DataFrame:
@@ -216,29 +454,25 @@ def parse_influx_lines(
 
     ``precision`` mirrors the protocol's ``precision=`` query param; the
     default is nanoseconds like the reference (influxdb.rs:28). Malformed
-    lines come back with ``err`` set and everything else NULL. Runs as one
-    Arrow-batched ``mapInPandas`` pass — no shuffle; downstream
-    ``influx_pivot`` or an aggregation decides the layout.
+    lines come back with ``err`` set and everything else NULL. No shuffle;
+    downstream ``influx_pivot`` or an aggregation decides the layout.
+
+    Accepted lines are parsed by JVM column expressions, each line once
+    before the explode into field rows: a plain line by literal splits, any
+    other by ``_LINE_RE``. Only rejected lines reach Python, in a union
+    branch that words their ``err`` with ``_parse_influx_line``; a query
+    that filters on any other column, as ``influx_pivot`` does, prunes that
+    branch and runs no Python worker.
     """
     if precision not in _PRECISION_NS:
         raise ValueError(f"unsupported precision: {precision}")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["table", "tags", "field_key", "field_type", "v_f64", "v_i64",
-                "v_str", "v_bool", TIME_INDEX, "err"]
-        for pdf in batches:
-            out = []
-            for line in pdf[line_col]:
-                if line is not None:
-                    out.extend(_parse_influx_line(str(line), precision))
-            # dtype=object blocks pandas' None-mixed-int → float64 inference,
-            # which cannot hold values near i64::MAX exactly; the nullable
-            # Int64 column then carries them to Arrow losslessly
-            res = pd.DataFrame(out, columns=cols, dtype=object)
-            res["v_i64"] = res["v_i64"].astype("Int64")
-            yield res
-
-    return lines.mapInPandas(gen, schema=_INFLUX_SCHEMA)
+    per_line = _select_layers(
+        lines.select(F.col(line_col).cast("string").alias("line")),
+        _influx_line_layers(precision))
+    rows = _select_layers(per_line, _influx_row_layers())
+    rejected, err_cols = _influx_err_layers(
+        lines.sparkSession.sparkContext, precision)
+    return rows.union(per_line.filter(rejected).select(*err_cols))
 
 
 def influx_pivot(parsed: DataFrame, table: str) -> DataFrame:

@@ -34,6 +34,19 @@ def test_time_zone_belongs_to_the_connection(spark, utc_after):
     assert g2.sql(_EPOCH).first().t == 0
 
 
+def test_system_time_zone_is_the_server_zone(spark, utc_after):
+    """SET TIME_ZONE = 'SYSTEM' (any case) selects the server's zone, the
+    one SHOW VARIABLES system_time_zone reports: UTC."""
+    g = GreptimeSQL(spark)
+    g.sql("SET TIME_ZONE = '+08:00'")
+    g.sql("SET TIME_ZONE = 'system'")
+    assert g.sql(_EPOCH).first().t == 0
+    assert g.sql("SELECT timezone()").first()[0] == "UTC"
+    assert g.conn.tz_offset_ms == 0
+    assert (g.sql("SHOW VARIABLES time_zone").first()[0]
+            == g.sql("SHOW VARIABLES system_time_zone").first()[0] == "UTC")
+
+
 def test_connections_on_a_catalog_share_its_databases(spark, tmp_path):
     cat = Catalog(spark, str(tmp_path))
     g1 = GreptimeSQL(spark, catalog=cat)

@@ -492,7 +492,8 @@ def test_otlp_logs_json(spark):
 
 def test_influx_streaming_ingest(spark, tmp_path):
     """The codec composes with Structured Streaming: text-file stream ->
-    parse_influx_lines (mapInPandas works on streaming DFs) -> parquet sink.
+    parse_influx_lines (column expressions, plus the Python UDF that words
+    the malformed line) -> parquet sink.
     This is the continuous-ingest shape the reference's /influxdb/write
     endpoint feeds; one availableNow micro-batch keeps it deterministic."""
     src = tmp_path / "lines"
@@ -515,6 +516,8 @@ def test_influx_streaming_ingest(spark, tmp_path):
     errs = [r for r in rows if r["err"] is not None]
     assert len(ok) == 3 and len(errs) == 1
     assert {r["field_key"] for r in ok} == {"cpu", "memory"}
+    assert errs[0]["err"] == proto._parse_influx_line(
+        "this is not line protocol", "ns")[0][-1]
 
 
 def test_splunk_hec_streaming_ingest(spark, tmp_path):
