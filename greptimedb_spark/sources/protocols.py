@@ -24,14 +24,16 @@ takes over. Semantics parity:
   lines and keep going).
 
 Influx lines are parsed by JVM column expressions, no Python worker: a
-plain line (no backslash or quote) by literal splits, any other by one Java
-regex of the grammar. Only rejected lines reach Python, in a union branch
-whose other columns are NULL literals, where the scanner
+plain line (no backslash or quote) by literal splits, any other by one pass
+of a Java regex of the grammar. Only rejected lines reach Python, in a union
+branch whose other columns are NULL literals, where the scanner
 ``_parse_influx_line`` words their ``err``; a filter on those columns (as
-``influx_pivot``'s) prunes that branch. Each batch is parsed once:
-``influx_pivot`` materializes the parsed rows and learns the field keys in
-the same job, and the pivot and the write read the materialized rows.
-OpenTSDB's whitespace-split grammar is column algebra too.
+``influx_pivot``'s) prunes that branch. A consumer that keeps the err rows
+runs both branches, so it reads its source twice (see
+``parse_influx_lines``). Each batch is parsed once: ``influx_pivot``
+materializes the parsed rows and learns the field keys in the same job, and
+the pivot and the write read the materialized rows. OpenTSDB's
+whitespace-split grammar is column algebra too.
 """
 
 from __future__ import annotations
@@ -228,6 +230,11 @@ _FIELD = rf"{_TOKEN}=(?:{_QUOTED}|{_RAW})"
 # groups: 1 measurement, 2 tag set (",k=v" pairs), 3 field set, 4 timestamp
 _LINE_RE = (rf"^({_MEASUREMENT})((?:,{_TOKEN}={_TOKEN})*+) ++"
             rf"({_FIELD}(?:,{_FIELD})*+)(?: [ \t\r\n]*+(-?[0-9]++))?\z")
+# A matched line is rewritten to its four groups, each after _SEP, and split
+# once. A NUL of the line is written _NUL_ESC first, so _SEP, whose second
+# char is not the escape's, cannot occur in the line itself.
+_SEP, _NUL, _NUL_ESC = "\x00\x02", "\x00", "\x00\x01"
+_LINE_GROUPS = "".join(f"{_SEP}${i}" for i in range(1, 5))
 _TAG_RE = rf",({_TOKEN})=({_TOKEN})"        # groups: key, value
 _FIELD_KEY_RE = rf"(?:^|,)({_TOKEN})=(?:{_QUOTED}|{_RAW})"
 _FIELD_VALUE_RE = rf"(?:^|,){_TOKEN}=({_QUOTED}|{_RAW})"
@@ -321,88 +328,101 @@ def _micros(ts_raw: str, precision: str) -> Column:
 @functools.lru_cache(maxsize=None)
 def _influx_line_layers(precision: str) -> tuple[list[Column], ...]:
     """The select lists that take a frame of one string column ``line`` to
-    one row per line: the line, ``skip`` (blank or comment), ``ok`` (the
-    column parser accepts it), ``plain``, the table, the tags, the time and
+    one row per line, parsed by the column parser: the line, ``skip`` (blank
+    or comment), ``plain``, ``matched`` (the line has the grammar's shape),
+    the table, the tag keys and values, the time ``us`` and ``no_ts``, and
     ``items``: a plain line's ``key=value`` texts, else its raw value texts
     beside its unescaped field keys ``rkeys``.
 
     Each layer is its own select, so that an expression that a later layer
-    reads several times is computed once per line. The last layer is an
-    ``inline`` of the line's own row: a filter on its columns (``table =
-    t``) stops there instead of being pushed down and evaluating the parse
-    a second time. The lists are built once per precision, so a batch costs
-    a few JVM calls per layer, not one per expression node."""
-    line, s = F.col("line"), F.col("s")
-    plain = s.rlike(_PLAIN_LINE_RE)
-    layers = [
-        [line, F.btrim(line, F.lit(_WS)).alias("s")],
-        [line, s, (s.isNull() | (s == "") | s.startswith("#")).alias("skip"),
-         plain.alias("plain"),
-         F.when(plain, F.split(s, " ")).alias("parts")],
-    ]
-    plain, parts = F.col("plain"), F.col("parts")
+    reads several times is computed once per line, and a layer's columns
+    that no later one reads are pruned. The lists are built once per
+    precision, so a batch costs a few JVM calls per layer, not one per
+    expression node."""
+    line, s, skip, plain, parts = map(
+        F.col, ("line", "s", "skip", "plain", "parts"))
+    groups = F.regexp_replace(F.replace(s, F.lit(_NUL), F.lit(_NUL_ESC)),
+                              _LINE_RE, _LINE_GROUPS)
     head = F.get(parts, 0)
-    grp = [F.regexp_extract(s, _LINE_RE, i) for i in range(1, 5)]
-    layers.append([
-        line, "skip", plain,
-        F.when(plain, F.substring_index(head, ",", 1)).otherwise(
-            _unescape(grp[0], ", ")).alias("table"),
-        F.when(plain, head).otherwise(grp[1]).alias("tag_set"),
-        F.when(plain, F.split(F.get(parts, 1), ",")).otherwise(
-            F.regexp_extract_all(grp[2], F.lit(_FIELD_VALUE_RE), F.lit(1))
-        ).alias("items"),
-        F.when(~plain, F.regexp_extract_all(
-            grp[2], F.lit(_FIELD_KEY_RE), F.lit(1))).alias("rkeys"),
-        F.when(plain, F.coalesce(F.get(parts, 2), F.lit(""))).otherwise(
-            grp[3]).alias("ts_raw"),
-        (plain | s.rlike(_LINE_RE)).alias("matched"),
-    ])
-    items, tag_set = F.col("items"), F.col("tag_set")
-    keys, vals = (F.regexp_extract_all(tag_set, F.lit(_TAG_RE), F.lit(i))
-                  for i in (1, 2))
+
+    def group(i: int) -> Column:
+        return F.replace(F.get(parts, i), F.lit(_NUL_ESC), F.lit(_NUL))
 
     def unescaped(tokens: Column) -> Column:
         return F.when(plain, tokens).otherwise(
             F.transform(tokens, lambda t: _unescape(t, "=, ")))
 
-    layers.append([
-        line, "skip", plain, "table", items,
-        F.transform("rkeys", lambda k: _unescape(k, "=, ")).alias("rkeys"),
-        unescaped(keys).alias("keys"), unescaped(vals).alias("vals"),
-        (F.col("ts_raw") == "").alias("no_ts"),
-        _micros("ts_raw", precision).alias("us"),
-        (plain | F.forall(items, _value_ok)).alias("values_ok"),
-        "matched",
-    ])
-    us = F.col("us")
-    ok = (~F.col("skip") & F.col("matched") & F.col("values_ok")
-          & (F.col("no_ts") | us.isNotNull()))
-    layers.append([F.inline(F.array(F.struct(
-        line, "skip", F.coalesce(ok, F.lit(False)).alias("ok"), plain,
-        "table", items, "rkeys",
-        _last_wins_map(F.col("keys"), F.col("vals")).alias("tags"),
-        F.when(us != _MIN_US, F.timestamp_micros(us)).alias(TIME_INDEX),
-    )))])
-    return tuple(layers)
+    tag_set = F.when(plain, head).otherwise(group(2))
+    keys, vals = (F.regexp_extract_all(tag_set, F.lit(_TAG_RE), F.lit(i))
+                  for i in (1, 2))
+    ts_raw = "coalesce(get(parts, IF(plain, 2, 4)), '')"
+    return (
+        [line, F.btrim(line, F.lit(_WS)).alias("s")],
+        [line, s, (s.isNull() | (s == "") | s.startswith("#")).alias("skip"),
+         s.rlike(_PLAIN_LINE_RE).alias("plain")],
+        [line, skip, plain,
+         F.when(plain, F.split(s, " ")).otherwise(F.split(groups, _SEP))
+         .alias("parts")],
+        [line, skip, plain,
+         F.when(plain, F.substring_index(head, ",", 1)).otherwise(
+             _unescape(group(1), ", ")).alias("table"),
+         F.when(plain, F.split(F.get(parts, 1), ",")).otherwise(
+             F.regexp_extract_all(group(3), F.lit(_FIELD_VALUE_RE), F.lit(1))
+         ).alias("items"),
+         F.when(~plain, F.transform(
+             F.regexp_extract_all(group(3), F.lit(_FIELD_KEY_RE), F.lit(1)),
+             lambda k: _unescape(k, "=, "))).alias("rkeys"),
+         unescaped(keys).alias("keys"), unescaped(vals).alias("vals"),
+         F.expr(f"{ts_raw} = ''").alias("no_ts"),
+         _micros(ts_raw, precision).alias("us"),
+         # a match has the empty text before its first _SEP and four groups
+         (plain | (F.size(parts) == 5)).alias("matched")],
+    )
+
+
+def _line_row(*cols: Column) -> list[Column]:
+    """The select list that ends ``_influx_line_layers``: ``cols``, with
+    ``ok`` (the column parser accepts the line), as an ``inline`` of the
+    line's own row. A filter on these columns (``table = t``, ``NOT ok``)
+    stops at the ``inline`` instead of being pushed down into the layers,
+    where it would evaluate the parse a second time."""
+    plain = F.col("plain")
+    ok = (~F.col("skip") & F.col("matched")
+          & (plain | F.forall("items", _value_ok))
+          & (F.col("no_ts") | F.col("us").isNotNull()))
+    return [F.inline(F.array(F.struct(
+        F.coalesce(ok, F.lit(False)).alias("ok"), *cols)))]
 
 
 @functools.lru_cache(maxsize=None)
 def _influx_row_layers() -> tuple[list[Column], ...]:
     """The select lists that take ``_influx_line_layers``' rows to one
     _INFLUX_SCHEMA row per field of each accepted line."""
-    plain, item = F.col("plain"), F.col("item")
+    plain, item, us, table, tags, ts, rkeys = map(F.col, (
+        "plain", "item", "us", "table", "tags", TIME_INDEX, "rkeys"))
     return (
-        ["plain", "table", "tags", TIME_INDEX, "rkeys",
+        _line_row(
+            plain, table, F.col("items"), rkeys,
+            _last_wins_map(F.col("keys"), F.col("vals")).alias("tags"),
+            F.when(us != _MIN_US, F.timestamp_micros(us)).alias(TIME_INDEX)),
+        [plain, table, tags, ts, rkeys,
          F.posexplode(F.when(F.col("ok"), F.col("items"))).alias(
              "pos", "item")],
-        ["table", "tags", TIME_INDEX,
+        [table, tags, ts,
          F.when(plain, F.substring_index(item, "=", 1)).otherwise(
-             F.get("rkeys", "pos")).alias("field_key"),
+             F.get(rkeys, F.col("pos"))).alias("field_key"),
          F.when(plain, F.substring_index(item, "=", -1)).otherwise(
              item).alias("val")],
-        ["table", "tags", "field_key", *_typed_value(F.col("val")),
-         TIME_INDEX, F.lit(None).cast("string").alias("err")],
+        [table, tags, F.col("field_key"), *_typed_value(F.col("val")), ts,
+         F.lit(None).cast("string").alias("err")],
     )
+
+
+@functools.lru_cache(maxsize=None)
+def _rejected_row() -> list[Column]:
+    """The select list that takes ``_influx_line_layers``' rows to the
+    ``line``, ``skip`` and ``ok`` that ``_influx_err_layers`` reads."""
+    return _line_row(F.col("line"), F.col("skip"))
 
 
 def _select_layers(df: DataFrame, layers) -> DataFrame:
@@ -422,28 +442,37 @@ def _influx_err(line: str, precision: str) -> str:
             f"scanner accepts: {line.strip(_WS)[:120]}")
 
 
-@functools.lru_cache(maxsize=8)
+# precision -> (the Spark context, _influx_err_layers' lists for it)
+_ERR_LAYERS: dict[str, tuple[SparkContext, tuple[Column, list[Column]]]] = {}
+
+
 def _influx_err_layers(sc: SparkContext,
                        precision: str) -> tuple[Column, list[Column]]:
-    """The filter and the select list that take ``_influx_line_layers``'
-    rows to one err row per line the column parser rejected, worded by the
-    scanner in an Arrow-batched UDF.
+    """The filter and the select list that take rows of ``line``, ``skip``
+    and ``ok`` to one err row per line the column parser rejected, worded by
+    the scanner in an Arrow-batched UDF.
 
     Every column but ``err`` is a typed NULL literal, so a filter on any of
     them (``influx_pivot``'s ``table = t``) folds this branch to an empty
     relation and no Python worker starts. The UDF is marked nondeterministic
     so that no filter is pushed below it, apart from that literal; a
     deterministic one lets the optimizer push the filter's conjuncts apart
-    and keep the Python node in the plan. One per Spark context and
-    precision: a UDF pickles its function once, when first applied, and is
-    bound to that context."""
+    and keep the Python node in the plan. A UDF pickles its function once,
+    when first applied, and is bound to that Spark context: the lists are
+    kept for the last context only, so a stopped one is not held."""
+    cached = _ERR_LAYERS.get(precision)
+    if cached is not None and cached[0] is sc:
+        return cached[1]
+
     @F.pandas_udf("string")
     def word(lines: pd.Series) -> pd.Series:
         return pd.Series([_influx_err(line, precision) for line in lines])
 
-    return ~F.col("ok") & ~F.col("skip"), [
+    layers = ~F.col("ok") & ~F.col("skip"), [
         *(F.lit(None).cast(t).alias(n) for n, t in _INFLUX_COLUMNS[:-1]),
         word.asNondeterministic()("line").alias("err")]
+    _ERR_LAYERS[precision] = sc, layers
+    return layers
 
 
 def parse_influx_lines(
@@ -459,10 +488,23 @@ def parse_influx_lines(
 
     Accepted lines are parsed by JVM column expressions, each line once
     before the explode into field rows: a plain line by literal splits, any
-    other by ``_LINE_RE``. Only rejected lines reach Python, in a union
-    branch that words their ``err`` with ``_parse_influx_line``; a query
-    that filters on any other column, as ``influx_pivot`` does, prunes that
-    branch and runs no Python worker.
+    other by one pass of ``_LINE_RE``. Only rejected lines reach Python, in
+    a union branch that words their ``err`` with ``_parse_influx_line``. A
+    query that filters on any column but ``err``, as ``influx_pivot`` does,
+    prunes that branch: it reads the lines once and runs no Python worker.
+
+    A query that keeps the err rows (a streaming sink, an unfiltered
+    ``collect``) runs both branches. Spark does not share a subplan between
+    them: the source is read twice (for a ``createDataFrame`` of a Python
+    list, that is two passes through PySpark's own re-serialisation worker),
+    and the second branch evaluates the part of the parse that decides
+    whether a line is accepted a second time, without the tags and the field
+    rows. On 10k-line ``createDataFrame`` batches on 4 vCPUs that
+    unfiltered job is slower than the single-pass ``mapInPandas`` parse it
+    replaced: +18% for plain lines, +61% when no line is plain
+    (``tools/influx_parse_bench.py``, shape ``all``). A consumer that reads
+    an expensive source more than once can ``localCheckpoint`` the lines
+    first.
     """
     if precision not in _PRECISION_NS:
         raise ValueError(f"unsupported precision: {precision}")
@@ -472,7 +514,8 @@ def parse_influx_lines(
     rows = _select_layers(per_line, _influx_row_layers())
     rejected, err_cols = _influx_err_layers(
         lines.sparkSession.sparkContext, precision)
-    return rows.union(per_line.filter(rejected).select(*err_cols))
+    return rows.union(per_line.select(*_rejected_row()).filter(rejected)
+                      .select(*err_cols))
 
 
 def influx_pivot(parsed: DataFrame, table: str) -> DataFrame:

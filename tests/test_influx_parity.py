@@ -159,6 +159,9 @@ _HAND = [
     'm f=""', 'm f="\\"', 'm f="a\nb"', 'm f="a",g="b",h=1', 'm f=a"b',
     'm,"k"="v" "f"=1', '"m f=1', 'm "f=1', 'm f="x" "', 'm f="x"  5',
     'm f="\u00e9\\\u2603"', "m,k=\"v f=1",
+    # NUL and the chars next to it are ordinary characters
+    "m\x00x f=1", "m,k=a\x00\x02b f=\"x\x00\x02y\"", 'm f="\x00\x01"',
+    "m\x00\x02 f=1\x00", "m f=1 \x00\x025",
     # duplicate tag keys keep the last value; duplicate fields give two rows
     "m,a=1,a=2 f=1", "m,a=1,b=2,a=3 f=1", "m,a=x,a=x f=1", "m f=1,f=2",
     "m f=1,f=2i,f=t", "m,a\\ b=1,a\\ b=2 f=1",
