@@ -309,11 +309,11 @@ def _last_wins_map(keys: Column, vals: Column) -> Column:
 
 
 def _micros(ts_raw: str, precision: str) -> Column:
-    """µs since the epoch of the timestamp text in column ``ts_raw``, as
-    the scanner computes it (``floor(ts * precision_ns / 1000)``), or NULL
-    where that falls outside i64. No step overflows where the scanner's
-    does not: a text beyond i64 can still be in range at ``ns``, so that case
-    takes exact decimal division."""
+    """µs since the epoch of the timestamp text that the SQL expression
+    ``ts_raw`` gives, as the scanner computes it (``floor(ts *
+    precision_ns / 1000)``), or NULL where that falls outside i64. No step
+    overflows where the scanner's does not: a text beyond i64 can still be
+    in range at ``ns``, so that case takes exact decimal division."""
     v = f"try_cast({ts_raw} AS BIGINT)"
     return F.expr({
         "ns": f"CASE WHEN {v} IS NOT NULL THEN {v} div 1000"
